@@ -1,9 +1,8 @@
 package graft.algos
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.graph.{CsrBlock, CsrBlocks}
+import graft.graph.{CsrBlocks, Edges}
 
 /** PageRank over per-partition CSR blocks with a broadcast rank vector —
   * the V << E regime engine (north_star: "adjacency as per-partition CSR
@@ -27,10 +26,6 @@ object PageRankCsr {
 
   case class Result(ranks: DataFrame, iterations: Int, err: Double,
                     edgesPerSecPerSuperstep: Double)
-
-  /** Int-packed per-partition CSR (dense ids < 2^31). */
-  case class PackedCsr(partId: Int, vertexIds: Array[Int],
-                       rowPtr: Array[Int], colIdx: Array[Int])
 
   /** Run over canonical (src < dst) edges with DENSE vertex ids
     * 0..n-1 (use Ids.dense / UrlDictionary first otherwise).
@@ -60,25 +55,9 @@ object PageRankCsr {
   private def runImpl(spark: SparkSession, edges: DataFrame, maxIter: Int,
                       tol: Double, alpha: Double, partitions: Int,
                       requireDense: Boolean): Option[Result] = {
-    // cache the blocks as JVM OBJECTS (RDD cache), not encoder rows: a
-    // Dataset cache would deserialize both index arrays on every
-    // superstep's pass. The column index is packed to Int — dense ids
-    // after densification fit 2^31 here, and halving the bytes streamed
-    // per edge-direction matters on a memory-bound kernel. (The general
-    // CsrBlock keeps Long ids for the 10^12-vertex regime.)
-    val built = CsrBlocks.build(spark, edges, partitions).rdd
-    val blocks = built
-      .map { b =>
-        val mx = math.max(
-          if (b.vertexIds.isEmpty) 0L else b.vertexIds.max,
-          if (b.colIdx.isEmpty) 0L else b.colIdx.max)
-        require(mx < Int.MaxValue,
-          "PageRankCsr requires dense vertex ids < 2^31 (densify first); " +
-            "use the relational PageRank.run beyond that")
-        PackedCsr(b.partId, b.vertexIds.map(_.toInt),
-          b.rowPtr, b.colIdx.map(_.toInt))
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // dense ids after densification fit 2^31 here (the general CsrBlock
+    // keeps Long ids for the 10^12-vertex regime)
+    val blocks = CsrBlocks.packed(spark, Edges.neighbors(edges), partitions)
     val sc = spark.sparkContext
 
     // n, m and the degree vector in one pass over the blocks
@@ -124,10 +103,8 @@ object PageRankCsr {
         contrib(ci) = if (deg(ci) > 0) x(ci) / deg(ci) else 0.0
         ci += 1
       }
-      val bx = sc.broadcast(contrib)
       // per-block partial: (partId, gathered sums) — P small arrays
-      val parts = blocks.map { b =>
-        val xv = bx.value
+      val parts = CsrBlocks.pass(blocks, contrib) { (b, xv) =>
         val sums = new Array[Double](b.vertexIds.length)
         var i = 0
         while (i < b.vertexIds.length) {
@@ -142,7 +119,7 @@ object PageRankCsr {
           i += 1
         }
         (b.partId, sums)
-      }.collect()
+      }
       val next = new Array[Double](n)
       java.util.Arrays.fill(next, base) // isolated ids don't occur in edge-derived graphs
       parts.foreach { case (pid, sums) =>
@@ -159,10 +136,6 @@ object PageRankCsr {
       while (i < n) { e += math.abs(next(i) - x(i)); i += 1 }
       err = e
       x = next
-      // async: a blocking destroy() here stalls the driver ~0.3-0.5s per
-      // superstep; executor copies are dropped in the background and the
-      // driver copy is GC'd once bx goes out of scope
-      bx.unpersist(false)
       iter += 1
     }
     val secs = (System.nanoTime() - t0) / 1e9

@@ -78,14 +78,9 @@ object SpectralInit {
       return Seq.empty[(Long, Seq[Double])].toDF("id", "pos")
     }
     if (eCount <= localEdgeCap) {
-      val dbg = sys.env.contains("GRAFT_LAYOUT_DEBUG")
-      def ph[A](l: String)(f: => A): A = if (!dbg) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[spectral] $l: ${(System.nanoTime()-t0)/1e9}%.3f s"); r
-      }
       // two primitive long arrays — no per-row tuple boxing (same
       // posture as PathCentralitySmall.Adj)
-      val rows = ph("edge collect")(edges.select("src", "dst").collect())
+      val rows = edges.select("src", "dst").collect()
       val srcA = new Array[Long](rows.length)
       val dstA = new Array[Long](rows.length)
       var i = 0
@@ -99,7 +94,7 @@ object SpectralInit {
         s.size
       }
       if (nV <= localCap)
-        return ph("runLocal")(runLocal(spark, srcA, dstA, d, maxIter, seed, gramTol))
+        return runLocal(spark, srcA, dstA, d, maxIter, seed, gramTol)
     }
     val nbrs = Edges.neighbors(edges)
     val deg = Edges.degrees(edges)
@@ -299,11 +294,6 @@ object SpectralInit {
                        dstA: Array[Long], d: Int,
                        maxIter: Int, seed: Long, gramTol: Double): DataFrame = {
     val k = d + 1
-    val dbg = sys.env.contains("GRAFT_LAYOUT_DEBUG")
-    def ph2[A](l: String)(f: => A): A = if (!dbg) f else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[runLocal] $l: ${(System.nanoTime()-t0)/1e9}%.3f s"); r
-    }
     val ids: Array[Long] = {
       val all = new Array[Long](srcA.length * 2)
       System.arraycopy(srcA, 0, all, 0, srcA.length)
@@ -396,7 +386,6 @@ object SpectralInit {
     var iter = 0
     var prevGram: Option[DenseMatrix[Double]] = None
     var done = false
-    val loopT0 = System.nanoTime()
     // SpMV vertex-range chunks, balanced by EDGE count: each vertex's
     // accumulators are chunk-private, so running chunks on parallel
     // driver threads leaves every per-vertex, per-column sum adding the
@@ -419,9 +408,7 @@ object SpectralInit {
       b += n
       b.result()
     }
-    var tSpmv = 0L; var tGram = 0L; var tChol = 0L; var tXn = 0L
     while (iter < maxIter && !done) {
-      val t0 = System.nanoTime()
       // y = (x + Mx)/2, M = D^-1/2 A D^-1/2. k == 3 (d = 2) is the
       // engine's layout default — unrolled registers instead of the
       // k-length accumulator loop; term order per column is identical.
@@ -467,7 +454,6 @@ object SpectralInit {
             }
           }
         }
-      val t1 = System.nanoTime(); tSpmv += t1 - t0
       val gm = DenseMatrix.zeros[Double](k, k)
       for (a <- 0 until k; b <- a until k) {
         var s = 0.0
@@ -475,9 +461,7 @@ object SpectralInit {
         while (vv < n) { s += y(vv * k + a) * y(vv * k + b); vv += 1 }
         gm(a, b) = s; gm(b, a) = s
       }
-      val t2 = System.nanoTime(); tGram += t2 - t1
       val lInvT = cholInvT(gm, k)
-      val t3 = System.nanoTime(); tChol += t3 - t2
       val xn = new Array[Double](n * k)
       var vv = 0
       while (vv < n) {
@@ -492,7 +476,6 @@ object SpectralInit {
         vv += 1
       }
       x = xn
-      tXn += System.nanoTime() - t3
       val delta = prevGram.map(pg => gramMaxAbsDelta(gm, Some(pg), k))
         .getOrElse(Double.MaxValue)
       val scale = gramMaxAbsDelta(gm, None, k)
@@ -500,13 +483,10 @@ object SpectralInit {
       prevGram = Some(gm)
       iter += 1
     }
-    if (dbg) System.err.println(
-      f"[runLocal] loop: ${(System.nanoTime()-loopT0)/1e9}%.3f s, iters=$iter " +
-      f"(spmv ${tSpmv/1e9}%.3f gram ${tGram/1e9}%.3f chol ${tChol/1e9}%.3f xn ${tXn/1e9}%.3f)")
     import spark.implicits._
     val xf = x
-    ph2("toDF")(ids.indices.map(v =>
+    ids.indices.map(v =>
       (ids(v), java.util.Arrays.copyOfRange(xf, v * k + 1, (v + 1) * k)))
-      .toDF("id", "pos"))
+      .toDF("id", "pos")
   }
 }

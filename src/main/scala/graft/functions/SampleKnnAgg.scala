@@ -78,28 +78,7 @@ case class SampleKnnAgg(
       val m = new Array[Double](dims)
       var j = 0
       while (j < dims) { m(j) = arr.getDouble(j); j += 1 }
-      var q = 0
-      val nq = qids.length
-      while (q < nq) {
-        val qv = qvecs(q)
-        // left-to-right per-dimension sum — bit-identical to the
-        // unrolled column expression it replaces
-        var d2 = 0.0
-        var i = 0
-        while (i < dims) { val diff = qv(i) - m(i); d2 += diff * diff; i += 1 }
-        // cheap reject before the insert call (the CosineTopKAgg
-        // pattern): a full heap only replaces its root when
-        // (d2, eid) < (root, rootTie) — the exact complement of this
-        // test, so no candidate that could enter is ever skipped and
-        // the heap contents stay bit-identical. Once the heap is warm
-        // almost every row fails here, skipping the call + sift.
-        if (k > 0 && (buf.n(q) < k || {
-            val kk = buf.keys(q)
-            d2 < kk(0) || (d2 == kk(0) && eid < buf.ties(q)(0))
-          }))
-          buf.insert(q, d2, eid)
-        q += 1
-      }
+      buf.offerAll(qvecs, m, eid)
     }
     buf
   }
@@ -326,32 +305,43 @@ object SampleKnnAgg {
   }
 
   /** Q bounded max-heaps on (key, tie) — [[BoundedTopKAgg.Buf]]'s
-    * comparator, flattened into per-query arrays (no row payloads: the
-    * winners re-join their vectors from the cached frame afterwards).
+    * comparator, flattened into per-query arrays. Each entry may carry
+    * a Long payload in `aux` that moves with it (ForceLayout's
+    * broadcast-state superstep packs a candidate edge's endpoints
+    * there); the aggregate buffers leave it 0 and [[serializeBufs]]
+    * does not write it — their winners re-join their vectors from the
+    * cached frame afterwards.
     */
-  final class Bufs(val q: Int, val k: Int) {
+  final class Bufs(val q: Int, val k: Int) extends Serializable {
     val n = new Array[Int](q)
     val keys: Array[Array[Double]] = Array.fill(q)(new Array[Double](k))
     val ties: Array[Array[Long]] = Array.fill(q)(new Array[Long](k))
+    val aux: Array[Array[Long]] = Array.fill(q)(new Array[Long](k))
 
     private def less(kk: Array[Double], tt: Array[Long], i: Int, j: Int): Boolean =
       kk(i) > kk(j) || (kk(i) == kk(j) && tt(i) > tt(j)) // max-heap: "less" = worse
 
-    def insert(qi: Int, d: Double, t: Long): Unit = {
+    private def swap(qi: Int, i: Int, j: Int): Unit = {
+      val kk = keys(qi); val tt = ties(qi); val aa = aux(qi)
+      val kd = kk(i); kk(i) = kk(j); kk(j) = kd
+      val td = tt(i); tt(i) = tt(j); tt(j) = td
+      val ad = aa(i); aa(i) = aa(j); aa(j) = ad
+    }
+
+    def insert(qi: Int, d: Double, t: Long, a: Long = 0L): Unit = {
       val kk = keys(qi); val tt = ties(qi)
       var m = n(qi)
       if (m < k) {
-        kk(m) = d; tt(m) = t
+        kk(m) = d; tt(m) = t; aux(qi)(m) = a
         n(qi) = m + 1
         // sift up
         while (m > 0 && less(kk, tt, m, (m - 1) / 2)) {
           val p = (m - 1) / 2
-          val kd = kk(m); kk(m) = kk(p); kk(p) = kd
-          val td = tt(m); tt(m) = tt(p); tt(p) = td
+          swap(qi, m, p)
           m = p
         }
       } else if (k > 0 && !(d > kk(0) || (d == kk(0) && t > tt(0)))) {
-        kk(0) = d; tt(0) = t
+        kk(0) = d; tt(0) = t; aux(qi)(0) = a
         // sift down
         var i = 0
         var done = false
@@ -362,33 +352,68 @@ object SampleKnnAgg {
           if (r < n(qi) && less(kk, tt, r, mm)) mm = r
           if (mm == i) done = true
           else {
-            val kd = kk(i); kk(i) = kk(mm); kk(mm) = kd
-            val td = tt(i); tt(i) = tt(mm); tt(mm) = td
+            swap(qi, i, mm)
             i = mm
           }
         }
       }
     }
 
+    /** Offers the point at `m(mo until mo + qv.length)` (tie `t`,
+      * payload `a`) to the heap of query `qi` at `qv`. The squared
+      * distance sums per-dimension terms left to right — bit-identical
+      * to the unrolled `(q1-m1)*(q1-m1) + ...` column the aggregate
+      * replaced. Cheap reject before the insert call (the CosineTopKAgg
+      * pattern): a full heap only replaces its root when (d2, t) <
+      * (root, rootTie) — the exact complement of this test, so no
+      * candidate that could enter is ever skipped and the heap contents
+      * stay bit-identical. Once a heap is warm almost every point fails
+      * here, skipping the call + sift.
+      */
+    def offer(qi: Int, qv: Array[Double], m: Array[Double], mo: Int, t: Long, a: Long): Unit = {
+      var d2 = 0.0
+      var i = 0
+      while (i < qv.length) { val diff = qv(i) - m(mo + i); d2 += diff * diff; i += 1 }
+      if (k > 0 && (n(qi) < k || {
+          val kk = keys(qi)
+          d2 < kk(0) || (d2 == kk(0) && t < ties(qi)(0))
+        }))
+        insert(qi, d2, t, a)
+    }
+
+    /** [[offer]] of point `m` (tie `t`) to every query heap. */
+    def offerAll(qvecs: Array[Array[Double]], m: Array[Double], t: Long): Unit = {
+      var qi = 0
+      while (qi < q) { offer(qi, qvecs(qi), m, 0, t, 0L); qi += 1 }
+    }
+
+    /** True if query `qi`'s heap is full and its root beats every
+      * squared distance of at least `d2`.
+      */
+    def closed(qi: Int, d2: Double): Boolean = n(qi) == k && d2 > keys(qi)(0)
+
     def absorb(b: Bufs): Unit = {
       var qi = 0
       while (qi < q) {
         var j = 0
-        while (j < b.n(qi)) { insert(qi, b.keys(qi)(j), b.ties(qi)(j)); j += 1 }
+        while (j < b.n(qi)) {
+          insert(qi, b.keys(qi)(j), b.ties(qi)(j), b.aux(qi)(j)); j += 1
+        }
         qi += 1
       }
     }
 
-    /** Entries of query `qi` ascending by (key, tie). */
-    def sorted(qi: Int): Array[(Double, Long)] = {
-      val m = n(qi)
-      val out = new Array[(Double, Long)](m)
-      var j = 0
-      while (j < m) { out(j) = (keys(qi)(j), ties(qi)(j)); j += 1 }
-      scala.util.Sorting.stableSort(out,
-        (a: (Double, Long), b: (Double, Long)) =>
-          a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
+    /** Slots of query `qi`'s entries, ascending by (key, tie). */
+    def order(qi: Int): Array[Int] = {
+      val kk = keys(qi); val tt = ties(qi)
+      val out = Array.range(0, n(qi))
+      scala.util.Sorting.stableSort(out, (a: Int, b: Int) =>
+        kk(a) < kk(b) || (kk(a) == kk(b) && tt(a) < tt(b)))
       out
     }
+
+    /** Entries of query `qi` ascending by (key, tie). */
+    def sorted(qi: Int): Array[(Double, Long)] =
+      order(qi).map(j => (keys(qi)(j), ties(qi)(j)))
   }
 }

@@ -59,34 +59,37 @@ class CheckpointSpec extends SparkSuite {
   test("ForceLayout resumes mid-layout to identical radii") {
     val e = Generators.ba(spark, 80, 2, 3L)
     val init = graft.embed.SpectralInit.run(spark, e, d = 2, maxIter = 10)
-    val cfg = graft.embed.ForceLayout.Config(d = 2)
+    // both routes: broadcast state (default) and relational (no vertex
+    // frame is broadcast at 0)
+    for (cfg <- Seq(graft.embed.ForceLayout.Config(d = 2),
+        graft.embed.ForceLayout.Config(d = 2, broadcastVertices = 0L))) {
+      // uninterrupted reference run WITH per-iteration checkpoints (the
+      // parquet roundtrip is on both paths; compare within float-merge
+      // jitter — Spark's partial-aggregate merge order varies run to
+      // run, so double sums are reproducible only to ~1e-12 relative)
+      val dirFull = Files.createTempDirectory("graft-fl-full").toString
+      val full = graft.embed.ForceLayout.run(spark, e, init, 4,
+        cfg.copy(checkpoint = Some(new CheckpointManager(spark, dirFull)),
+          checkpointInterval = 1))
+      val expect = graft.embed.ForceLayout.radii(full).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
-    // uninterrupted reference run WITH per-iteration checkpoints (the
-    // parquet roundtrip is on both paths; compare within float-merge
-    // jitter — Spark's partial-aggregate merge order varies run to run,
-    // so double sums are reproducible only to ~1e-12 relative)
-    val dirFull = Files.createTempDirectory("graft-fl-full").toString
-    val full = graft.embed.ForceLayout.run(spark, e, init, 4,
-      cfg.copy(checkpoint = Some(new CheckpointManager(spark, dirFull)),
-        checkpointInterval = 1))
-    val expect = graft.embed.ForceLayout.radii(full).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-
-    // killed after 2 iterations, resumed to 4 from the same dir
-    val dir = Files.createTempDirectory("graft-fl-ckpt").toString
-    graft.embed.ForceLayout.run(spark, e, init, 2,
-      cfg.copy(checkpoint = Some(new CheckpointManager(spark, dir)),
-        checkpointInterval = 1))
-    val cm2 = new CheckpointManager(spark, dir)
-    assert(cm2.latestIteration().contains(1))
-    val resumed = graft.embed.ForceLayout.run(spark, e, init, 4,
-      cfg.copy(checkpoint = Some(cm2), checkpointInterval = 1))
-    val got = graft.embed.ForceLayout.radii(resumed).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got.size == expect.size)
-    expect.foreach { case (id, v) =>
-      assert(math.abs(got(id) - v) <= 1e-9 * math.max(1.0, math.abs(v)),
-        s"vertex $id: ${got(id)} vs $v")
+      // killed after 2 iterations, resumed to 4 from the same dir
+      val dir = Files.createTempDirectory("graft-fl-ckpt").toString
+      graft.embed.ForceLayout.run(spark, e, init, 2,
+        cfg.copy(checkpoint = Some(new CheckpointManager(spark, dir)),
+          checkpointInterval = 1))
+      val cm2 = new CheckpointManager(spark, dir)
+      assert(cm2.latestIteration().contains(1))
+      val resumed = graft.embed.ForceLayout.run(spark, e, init, 4,
+        cfg.copy(checkpoint = Some(cm2), checkpointInterval = 1))
+      val got = graft.embed.ForceLayout.radii(resumed).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(got.size == expect.size)
+      expect.foreach { case (id, v) =>
+        assert(math.abs(got(id) - v) <= 1e-9 * math.max(1.0, math.abs(v)),
+          s"broadcastVertices ${cfg.broadcastVertices}, vertex $id: ${got(id)} vs $v")
+      }
     }
   }
 
