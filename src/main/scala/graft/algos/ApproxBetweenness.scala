@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Route
 import graft.graph.Edges
 
 /** Sampled-source betweenness centrality — the SCALE path for the
@@ -46,7 +47,8 @@ object ApproxBetweenness {
     * in double under any order.
     *
     * Below `localNbrRowCap` neighbor rows (= 2E) the whole estimator
-    * runs driver-locally ([[PathCentralitySmall.betweennessLocal]]):
+    * runs driver-locally ([[Route.gate]],
+    * [[PathCentralitySmall.betweennessLocal]]):
     * the two level-synchronous join loops cost ~6 tiny jobs per BFS
     * level in scheduling overhead on benchmark-scale graphs. The local
     * twin replicates the portable quantization points exactly, so on
@@ -58,27 +60,29 @@ object ApproxBetweenness {
           normalized: Boolean = true,
           explicitSources: Option[DataFrame] = None,
           portableSum: Boolean = false,
-          localNbrRowCap: Long = ApproxCloseness.LocalNbrRowThreshold): DataFrame = {
+          localNbrRowCap: Long = Route.NbrRowCap): DataFrame = {
+    // held across the gate, so a source frame derived from the same
+    // input reads this cache on either route; the gate's own hold finds
+    // the cache and leaves its release to this one
+    val held = Route.hold(edges)
+    try Route.gate(edges, ApproxCloseness.edgeCap(localNbrRowCap)) match {
+      case Route.Local(s, d) =>
+        val (adj, n, srcs) = ApproxCloseness.localInput(s, d, k, seed, explicitSources)
+        PathCentralitySmall.betweennessLocal(spark, adj, srcs, n, srcs.length.toLong,
+          maxLevels, normalized, portableSum)
+      case Route.Distributed(h, _) =>
+        distributed(h.edges, k, seed, maxLevels, normalized, explicitSources, portableSum)
+    } finally held.release()
+  }
+
+  /** Forward and backward level loops over `edges`, which the caller
+    * holds cached.
+    */
+  private def distributed(edges: DataFrame, k: Int, seed: Long, maxLevels: Int,
+                          normalized: Boolean, explicitSources: Option[DataFrame],
+                          portableSum: Boolean): DataFrame = {
     def sumD(c: org.apache.spark.sql.Column) =
       if (portableSum) graft.core.PortableSum.fixedSum(c, 1e12) else sum(c)
-    // cache the edge pipeline once — shared by nbrs/verts/explicitSources
-    // (same rationale as ApproxCloseness.run)
-    edges.persist(StorageLevel.MEMORY_AND_DISK)
-    // explicit-source local short-circuit: one pass over the cached
-    // edges derives everything (see ApproxCloseness.run for the
-    // equivalence argument — n is the adjacency endpoint count, kEff
-    // the collected source count)
-    if (explicitSources.isDefined &&
-        2L * edges.count() <= localNbrRowCap) {
-      val adjRows = ApproxCloseness.collectAdjCanonical(edges)
-      val srcs = ApproxCloseness.collectSources(explicitSources.get)
-      val nLocal = ApproxCloseness.localVertexCount(adjRows)
-      val out = PathCentralitySmall.betweennessLocal(
-        spark, adjRows, srcs, nLocal, srcs.length.toLong, maxLevels,
-        normalized, portableSum)
-      edges.unpersist(false)
-      return out
-    }
     val nbrs = Edges.neighbors(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val verts = Edges.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val n = verts.count()
@@ -87,18 +91,6 @@ object ApproxBetweenness {
       verts.orderBy(xxhash64(col("id"), lit(seed)), col("id"))
         .limit(math.min(k.toLong, n).toInt).select(col("id").as("s"))))
     val kEff = sources.count()
-
-    if (nbrs.count() <= localNbrRowCap) {
-      val out = PathCentralitySmall.betweennessLocal(
-        spark, ApproxCloseness.collectAdj(nbrs),
-        ApproxCloseness.collectSources(sources), n, kEff, maxLevels,
-        normalized, portableSum)
-      graft.core.Lineage.release(sources)
-      nbrs.unpersist(false)
-      verts.unpersist(false)
-      edges.unpersist(false)
-      return out
-    }
 
     // ---- forward: (s, id, dist, sigma), one frame per level ----------
     var levels = List(graft.core.Lineage.truncate(
@@ -186,7 +178,6 @@ object ApproxBetweenness {
     graft.core.Lineage.release(sources)
     nbrs.unpersist(false)
     verts.unpersist(false)
-    edges.unpersist(false)
     out
   }
 }

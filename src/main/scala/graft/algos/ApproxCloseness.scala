@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Route
 import graft.graph.Edges
 
 /** Sampled-source closeness centrality — the SCALE path for the
@@ -45,52 +46,40 @@ import graft.graph.Edges
   */
 object ApproxCloseness {
 
-  /** Below this many neighbor rows (= 2E) the whole estimator runs
-    * driver-locally: the level-synchronous loop costs ~4 tiny jobs per
-    * BFS level in pure scheduling overhead on benchmark-scale graphs,
-    * while a 1M-edge adjacency collects in ~30 MB and k BFS passes run
-    * in milliseconds. Same gated-local-path pattern as SpectralInit and
-    * Correlation.spearman: the distributed plan — the one that matters
-    * at 100 TB — engages above the threshold, and the two paths are
-    * BIT-IDENTICAL (the estimator is a long distance-sum plus a fixed
-    * double expression, both order-independent), which the parity test
-    * asserts with exact equality.
-    */
-  private[graft] val LocalNbrRowThreshold = 2000000L
-
   /** `explicitSources`: caller-chosen source vertex set (one `s`
     * column) overriding the hash sample — used by the SQL-mirrored
     * driver query, whose oracle cannot reproduce xxhash64.
+    *
+    * Below `localNbrRowCap` neighbor rows (= 2E) the whole estimator runs
+    * driver-locally ([[Route.gate]]): the level-synchronous loop costs ~4
+    * tiny jobs per BFS level in pure scheduling overhead on
+    * benchmark-scale graphs, while k BFS passes over the collected
+    * adjacency run in milliseconds. The two paths are BIT-IDENTICAL (the
+    * estimator is a long distance-sum plus a fixed double expression,
+    * both order-independent), which the parity tests assert with exact
+    * equality.
     */
   def run(spark: SparkSession, edges: DataFrame, k: Int,
           seed: Long = 42, maxLevels: Int = 128,
           explicitSources: Option[DataFrame] = None,
-          localNbrRowCap: Long = LocalNbrRowThreshold): DataFrame = {
-    // Cache the edge pipeline itself (optimization round 6): nbrs,
-    // verts AND any caller-supplied source frame all contain it as a
-    // subtree — the old code re-executed the scan+distinct once per
-    // derived frame (2-3x per run). CacheManager plan-matching also
-    // covers the caller's explicitSources expression.
-    edges.persist(StorageLevel.MEMORY_AND_DISK)
-    // Explicit-source local short-circuit: with caller-chosen sources
-    // nothing distributed is needed beyond ONE pass over the cached
-    // edges — the vertex count is the adjacency's endpoint count
-    // (identical to Edges.vertices on a canonical table) and kEff is
-    // the collected source count, so the verts/nbrs frames, their
-    // caches and their counting jobs (a dozen scheduler round-trips on
-    // benchmark-scale graphs) are skipped entirely. The hash-sample
-    // path below still derives its sample from the distributed verts
-    // frame (Spark xxhash64 ordering is not replicated driver-side).
-    if (explicitSources.isDefined &&
-        2L * edges.count() <= localNbrRowCap) {
-      val adjRows = collectAdjCanonical(edges)
-      val srcs = collectSources(explicitSources.get)
-      val nLocal = localVertexCount(adjRows)
-      val out = PathCentralitySmall.closenessLocal(
-        spark, adjRows, srcs, nLocal, srcs.length.toLong, maxLevels)
-      edges.unpersist(false)
-      return out
-    }
+          localNbrRowCap: Long = Route.NbrRowCap): DataFrame = {
+    // held across the gate, so a source frame derived from the same
+    // input reads this cache on either route; the gate's own hold finds
+    // the cache and leaves its release to this one
+    val held = Route.hold(edges)
+    try Route.gate(edges, edgeCap(localNbrRowCap)) match {
+      case Route.Local(s, d) =>
+        val (adj, n, srcs) = localInput(s, d, k, seed, explicitSources)
+        PathCentralitySmall.closenessLocal(spark, adj, srcs, n, srcs.length.toLong, maxLevels)
+      case Route.Distributed(h, _) => distributed(h.edges, k, seed, maxLevels, explicitSources)
+    } finally held.release()
+  }
+
+  /** The level-synchronous BFS over `edges`, which the caller holds
+    * cached.
+    */
+  private def distributed(edges: DataFrame, k: Int, seed: Long, maxLevels: Int,
+                          explicitSources: Option[DataFrame]): DataFrame = {
     val nbrs = Edges.neighbors(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val verts = Edges.vertices(edges).persist(StorageLevel.MEMORY_AND_DISK)
     val n = verts.count()
@@ -100,16 +89,6 @@ object ApproxCloseness {
       verts.orderBy(xxhash64(col("id"), lit(seed)), col("id"))
         .limit(math.min(k.toLong, n).toInt).select(col("id").as("s"))))
     val kEff = sources.count()
-
-    if (nbrs.count() <= localNbrRowCap) {
-      val out = PathCentralitySmall.closenessLocal(
-        spark, collectAdj(nbrs), collectSources(sources), n, kEff, maxLevels)
-      graft.core.Lineage.release(sources)
-      nbrs.unpersist(false)
-      verts.unpersist(false)
-      edges.unpersist(false)
-      return out
-    }
 
     var dist = graft.core.Lineage.truncate(
       sources.select(col("s"), col("s").as("id"), lit(0L).as("dist")))
@@ -155,63 +134,43 @@ object ApproxCloseness {
     graft.core.Lineage.release(sources)
     nbrs.unpersist(false)
     verts.unpersist(false)
-    edges.unpersist(false)
     out
   }
 
-  /** Collect the 2-column neighbor table into two primitive long
-    * arrays (no per-row tuple boxing — round-5 advice item: at the 2M
-    * local-gate cap the old Array[(Long, Long)] held ~2M boxed tuples).
+  /** The gate's edge cap for a neighbor-row cap: 2E <= cap iff
+    * E <= floor(cap / 2).
     */
-  private[algos] def collectAdj(nbrs: DataFrame): (Array[Long], Array[Long]) = {
-    val rows = nbrs.collect()
-    val s = new Array[Long](rows.length)
-    val d = new Array[Long](rows.length)
-    var i = 0
-    while (i < rows.length) {
-      val r = rows(i); s(i) = r.getLong(0); d(i) = r.getLong(1); i += 1
+  private[algos] def edgeCap(nbrRowCap: Long): Long = Math.floorDiv(nbrRowCap, 2L)
+
+  /** What the local estimators start from, given the collected edges:
+    * the neighbor rows (every edge, then every edge mirrored — the row
+    * order `Edges.neighbors` collects in, which the non-portable
+    * betweenness float sums follow), the vertex count, and the sources.
+    */
+  private[algos] def localInput(s: Array[Long], d: Array[Long], k: Int, seed: Long,
+                                explicitSources: Option[DataFrame])
+      : ((Array[Long], Array[Long]), Long, Array[Long]) = {
+    val ids = Route.distinct(s, d)
+    val srcs = explicitSources match {
+      case Some(x) => x.collect().map(_.getLong(0))
+      case None => hashSample(ids, math.min(k.toLong, ids.length).toInt, seed)
     }
-    (s, d)
+    ((s ++ d, d ++ s), ids.length.toLong, srcs)
   }
 
-  /** [[collectAdj]] from the CANONICAL edge table: collects E rows and
-    * mirrors both directions on the driver — half the rows crossing the
-    * driver boundary, and no Spark-side symmetrize union. Row ORDER is
-    * preserved too, not just the multiset: `Edges.neighbors` is
-    * union(forward, mirrored) and a union concatenates its children's
-    * partitions, so `collectAdj(neighbors(e))` also yields all forward
-    * rows in scan order followed by all mirrored rows — the exact
-    * sequence built here. [[PathCentralitySmall.Adj]] therefore sees
-    * identical input (order matters for the non-portable betweenness
-    * float accumulation; the portable/oracle path is order-independent
-    * regardless).
+  /** The distributed route's source sample on the driver: the k ids
+    * with the smallest (xxhash64(id, seed), id), in that order.
+    * xxhash64 over two columns chains XXH64.hashLong from seed 42
+    * through the id, then through `seed`.
     */
-  private[algos] def collectAdjCanonical(edges: DataFrame): (Array[Long], Array[Long]) = {
-    val rows = edges.select("src", "dst").collect()
-    val n = rows.length
-    val s = new Array[Long](2 * n)
-    val d = new Array[Long](2 * n)
-    var i = 0
-    while (i < n) {
-      val r = rows(i)
-      val a = r.getLong(0); val b = r.getLong(1)
-      s(i) = a; d(i) = b
-      s(n + i) = b; d(n + i) = a
-      i += 1
-    }
-    (s, d)
-  }
-
-  private[algos] def collectSources(sources: DataFrame): Array[Long] =
-    sources.collect().map(_.getLong(0))
-
-  /** Distinct endpoint count of a collected adjacency — identical to
-    * Edges.vertices(edges).count() on a canonical edge table.
-    */
-  private[algos] def localVertexCount(adj: (Array[Long], Array[Long])): Long = {
-    val s = new java.util.HashSet[java.lang.Long](adj._1.length * 2)
-    var i = 0
-    while (i < adj._1.length) { s.add(adj._1(i)); s.add(adj._2(i)); i += 1 }
-    s.size.toLong
+  private def hashSample(ids: Array[Long], k: Int, seed: Long): Array[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    if (k <= 0) return Array.empty[Long]
+    val h = ids.map(id => XXH64.hashLong(seed, XXH64.hashLong(id, 42L)))
+    val cut = { val c = h.clone(); java.util.Arrays.sort(c); c(k - 1) }
+    // ids ascend, so index order breaks hash ties by id
+    val below = ids.indices.filter(h(_) < cut)
+    (below ++ ids.indices.filter(h(_) == cut).take(k - below.length))
+      .sortBy(i => (h(i), i)).map(ids(_)).toArray
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.CheckpointManager
+import graft.core.{CheckpointManager, Route}
 
 /** Connected components via alternating small-star / large-star
   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -60,39 +60,37 @@ object ConnectedComponents {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Below this edge count the assignment is computed by a driver-local
-    * union-find over the collected edge list (same local-gate posture —
-    * and the same 5M-row collect bound — as SpectralInit.LocalEdgeCap
-    * and PathCentralitySmall): the output contract "component = min
-    * vertex id of the component" is ALGORITHM-INDEPENDENT, so the local
-    * kernel's rows are identical to the star-contraction loop's by
-    * construction (integer equality, no float jitter; parity-tested).
-    * At bench scale the distributed loop's ~6 rounds are pure scheduler
-    * floor (~2.5 s for a graph whose edge list is 5 MB); above the cap
-    * — the 100 TB regime — the small-star/large-star loop runs
+  /** Run to convergence. Returns (id, component) with component = min
+    * vertex id of the component; every vertex of `edges` appears.
+    *
+    * Below `localEdgeCap` edges the assignment is computed by a
+    * driver-local union-find over the collected edge list
+    * ([[Route.gate]]): the output contract "component = min vertex id of
+    * the component" is ALGORITHM-INDEPENDENT, so the local kernel's rows
+    * are identical to the star-contraction loop's by construction
+    * (integer equality, no float jitter; parity-tested). At bench scale
+    * the distributed loop's ~6 rounds are pure scheduler floor; above the
+    * cap — the 100 TB regime — the small-star/large-star loop runs
     * unchanged. Checkpointed runs always take the distributed loop (the
     * resume contract lives there).
     */
-  val LocalEdgeCap = 5000000L
-
-  /** Run to convergence. Returns (id, component) with component = min
-    * vertex id of the component; every vertex of `edges` appears.
-    */
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 50,
           checkpoint: Option[CheckpointManager] = None,
-          localEdgeCap: Long = LocalEdgeCap): DataFrame = {
-    var e = edges.select(col("src").as("u"), col("dst").as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var firstE = true // initial e is dataset-persisted; successors are truncated
-    def dropE(df: DataFrame): Unit =
-      if (firstE) { df.unpersist(false); firstE = false }
-      else graft.core.Lineage.release(df)
-    var sig = checksum(e)
-    if (checkpoint.isEmpty && sig._1 <= localEdgeCap) {
-      val out = runLocal(spark, e)
-      e.unpersist(false)
-      return out
+          localEdgeCap: Long = Route.LocalEdgeCap): DataFrame =
+    // no count is at most -1, so a checkpointed run never goes local
+    Route.gate(edges, if (checkpoint.isEmpty) localEdgeCap else -1L) match {
+      case Route.Local(s, d) => runLocal(spark, s, d)
+      case Route.Distributed(held, rows) => starLoop(spark, held, rows, maxRounds, checkpoint)
     }
+
+  private def starLoop(spark: SparkSession, held: Route.Held, rows: Long,
+                       maxRounds: Int,
+                       checkpoint: Option[CheckpointManager]): DataFrame = {
+    var e = held.edges.select(col("src").as("u"), col("dst").as("v"))
+    var firstE = true // initial e reads the held projection; successors are truncated
+    def dropE(df: DataFrame): Unit =
+      if (firstE) { held.release(); firstE = false }
+      else graft.core.Lineage.release(df)
     // vertex set from the CACHED edge table, materialized eagerly while
     // that cache is still alive (the rounds below release it): deriving
     // it from the caller's `edges` frame re-executed the whole upstream
@@ -104,10 +102,15 @@ object ConnectedComponents {
     verts.count()
     var round = 0
     var done = false
+    // no signature for the input: the first round never counts as
+    // converged (canonical u < v rows are never the u > v star edges a
+    // round emits, and one more round at a fixpoint changes nothing)
+    var sig: Option[(Long, Long)] = None
+    var eRows = rows
     // Fixed-shape round tuning: AQE off + data-sized shuffle width in
     // the small regime (graft.core.LoopConf; data-derived gate — at
     // scale AQE stays on for its skew-join splitting of star-root keys)
-    val small = graft.core.LoopConf.smallRegime(spark, 2L * sig._1,
+    val small = graft.core.LoopConf.smallRegime(spark, 2L * rows,
       rowsPerPartition = 62500L)
     graft.core.LoopConf.withLoop(spark, small) {
     while (!done && round < maxRounds) {
@@ -119,14 +122,15 @@ object ConnectedComponents {
       // two.
       var next = smallStar(largeStar(e))
       next = checkpoint match {
-        case Some(cm) => cm.commit(round, next, Map("edges" -> sig._1.toDouble))
+        case Some(cm) => cm.commit(round, next, Map("edges" -> eRows.toDouble))
         case None => graft.core.Lineage.truncateLazy(next)
       }
       val nsig = checksum(next)
       dropE(e)
       e = next
-      done = nsig == sig
-      sig = nsig
+      done = sig.contains(nsig)
+      sig = Some(nsig)
+      eRows = nsig._1
       round += 1
     }
     }
@@ -142,15 +146,15 @@ object ConnectedComponents {
     assign
   }
 
-  /** Driver-local union-find (path halving) over the collected (u, v)
+  /** Driver-local union-find (path halving) over the collected (src, dst)
     * rows — two primitive long arrays, sorted-id binary search instead
     * of a boxed hash map (the ApproxCloseness advice pattern). Emits
     * (id, component = min id of the component), exactly the distributed
     * loop's rows.
     */
-  private def runLocal(spark: SparkSession, e: DataFrame): DataFrame = {
-    val (srcA, dstA) = graft.core.LocalGraph.collectPairs(e, "u", "v")
-    val (ids, sIdx, dIdx) = graft.core.LocalGraph.dense(srcA, dstA)
+  private def runLocal(spark: SparkSession, srcA: Array[Long],
+                       dstA: Array[Long]): DataFrame = {
+    val (ids, sIdx, dIdx) = Route.dense(srcA, dstA)
     val n = ids.length
     val parent = new Array[Int](n)
     var i = 0

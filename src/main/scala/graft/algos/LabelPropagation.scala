@@ -2,8 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.core.Route
 import graft.graph.Edges
 
 /** Synchronous label propagation (north_rule addition; not in the
@@ -22,40 +22,29 @@ import graft.graph.Edges
   */
 object LabelPropagation {
 
-  /** Below this edge count the identical synchronous update runs on the
-    * driver over a collected CSR (same local-gate posture and collect
-    * bound as SpectralInit.LocalEdgeCap and ConnectedComponents): the
-    * update is PURE INTEGER arithmetic — per vertex, the most frequent
-    * neighbor label with min-label ties — so the local rows are
-    * bit-identical to the distributed loop's by construction
-    * (parity-tested). Above the cap the join+agg supersteps run
-    * unchanged — the 100 TB path.
+  /** Below `localEdgeCap` edges the identical synchronous update runs on
+    * the driver over a collected CSR ([[Route.gate]]): the update is PURE
+    * INTEGER arithmetic — per vertex, the most frequent neighbor label
+    * with min-label ties — so the local rows are bit-identical to the
+    * distributed loop's by construction (parity-tested). Above the cap
+    * the join+agg supersteps run unchanged — the 100 TB path.
     */
-  val LocalEdgeCap = 5000000L
-
   def run(spark: SparkSession, edges: DataFrame, iterations: Int,
-          localEdgeCap: Long = LocalEdgeCap): DataFrame = {
+          localEdgeCap: Long = Route.LocalEdgeCap): DataFrame = {
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // one materialization of the edge pipeline serves the gate count
-    // AND whichever path runs (the local collect or the adjacency
-    // build). A PRIVATE projection is cached, not the caller's frame:
-    // unpersisting the caller's own reference at the end would evict a
-    // cache the caller may have established on that exact plan.
-    val e0 = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eCount = e0.count()
-    if (eCount <= localEdgeCap) {
-      val out = runLocal(spark, e0, iterations)
-      e0.unpersist(false)
-      return out
+    // the gate's held projection serves the adjacency build too, so the
+    // edge pipeline runs once whichever path runs
+    val (e0, eCount) = Route.gate(edges, localEdgeCap) match {
+      case Route.Local(s, d) => return runLocal(spark, s, d, iterations)
+      case Route.Distributed(held, rows) => (held, rows)
     }
     // adjacency pre-shuffled ONCE on the per-iteration join key and
     // materialized: each superstep's join then only shuffles the V-row
     // label state (the old persist left nbrs scan-partitioned, so the
     // 2E-row side was re-shuffled every iteration)
     val nbrs = graft.core.Lineage.truncatePartitioned(
-      Edges.neighbors(e0).repartition(p, col("nbr")))
-    e0.unpersist(false)
+      Edges.neighbors(e0.edges).repartition(p, col("nbr")))
+    e0.release()
     // initial labels from the materialized adjacency — same vertex set
     // as Edges.vertices on a canonical edge table, without a second
     // pass over the edge pipeline
@@ -93,12 +82,11 @@ object LabelPropagation {
     * search, primitive arrays; per-vertex work is independent, so the
     * chunk-parallel loop cannot change any result.
     */
-  private def runLocal(spark: SparkSession, e: DataFrame,
-                       iterations: Int): DataFrame = {
-    val (srcA, dstA) = graft.core.LocalGraph.collectPairs(e, "src", "dst")
-    val (ids, sIdx, dIdx) = graft.core.LocalGraph.dense(srcA, dstA)
+  private def runLocal(spark: SparkSession, srcA: Array[Long],
+                       dstA: Array[Long], iterations: Int): DataFrame = {
+    val (ids, sIdx, dIdx) = Route.dense(srcA, dstA)
     val n = ids.length
-    val (rowPtr, colIdx) = graft.core.LocalGraph.undirectedCsr(n, sIdx, dIdx)
+    val (rowPtr, colIdx) = Route.undirectedCsr(n, sIdx, dIdx)
     var i = 0
     var labels: Array[Long] = Array.tabulate(n)(v => ids(v))
     var it = 0

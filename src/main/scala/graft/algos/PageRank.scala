@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.CheckpointManager
+import graft.core.{CheckpointManager, Route}
 import graft.graph.{Edges, Skew}
 
 /** Distributed PageRank with NetworkX-compatible semantics (the
@@ -44,13 +44,10 @@ object PageRank {
       // join+agg superstep (parity tests, ScalingBench's `rel` rows,
       // and any caller that wants the shuffle plan regardless of size)
       engine: String = "auto",
-      // broadcast-state vertex cap for the auto route: the per-superstep
-      // broadcast is n doubles (64 MB at the default), held once per
-      // executor — guide-§3.1 "a few hundred MB is usually fine" with
-      // margin. Data-derived, not core-count derived: on a cluster the
-      // same cap applies and a 10^9-vertex web graph routes to the
-      // relational/zip plans unchanged.
-      csrMaxVertices: Long = 8000000L)
+      // broadcast-state vertex cap for the auto route (Route.CsrVertexCap):
+      // data-derived, not core-count derived, so on a cluster a
+      // 10^9-vertex web graph routes to the relational plan unchanged
+      csrMaxVertices: Long = Route.CsrVertexCap)
 
   case class Result(ranks: DataFrame, iterations: Int, err: Double,
                     edgesPerSecPerSuperstep: Double,
@@ -70,8 +67,11 @@ object PageRank {
     * spaces (n enters the teleport base, so density is semantic),
     * checkpointed/resumable runs, salted aggregation, explicit
     * partitioning, or V beyond the broadcast cap. The gate costs one
-    * column-pruned max() pass over the edge table; the density check
-    * rides the CSR build itself (falls back if any id slot is empty).
+    * column-pruned max() pass over the held edge projection
+    * ([[Route.hold]]), which the CSR build and the relational fallback
+    * read too, so an uncached caller pipeline runs once; the density
+    * check rides the CSR build itself (falls back if any id slot is
+    * empty).
     */
   def runUndirected(spark: SparkSession, edges: DataFrame,
                     cfg: Config = Config()): Result = {
@@ -79,21 +79,22 @@ object PageRank {
       s"""Config.engine must be "auto" or "rel", got "${cfg.engine}"""")
     val tryRoute = cfg.engine != "rel" && cfg.checkpoint.isEmpty &&
       !cfg.saltedAgg && cfg.numPartitions.isEmpty
-    val routed: Option[Result] = if (!tryRoute) None else {
+    if (!tryRoute) return run(spark, Edges.neighbors(edges).toDF("src", "dst"), cfg)
+    val held = Route.hold(edges)
+    try {
       // one column-pruned pass gives both gate bounds: maxId under the
       // broadcast cap AND no negative ids (a negative id would index
       // outside the CSR arrays; the relational plan handles any id)
-      val mx = edges.agg(max(greatest(col("src"), col("dst"))),
+      val mx = held.edges.agg(max(greatest(col("src"), col("dst"))),
         min(least(col("src"), col("dst")))).head()
-      if (mx.isNullAt(0) || mx.getLong(0) >= cfg.csrMaxVertices ||
-          mx.getLong(1) < 0L) None
-      else PageRankCsr.runIfDense(spark, edges, cfg.maxIter, cfg.tol,
-          cfg.alpha)
-        .map(c => Result(c.ranks, c.iterations, c.err,
+      val csr =
+        if (mx.isNullAt(0) || mx.getLong(0) >= cfg.csrMaxVertices ||
+            mx.getLong(1) < 0L) None
+        else PageRankCsr.runIfDense(spark, held.edges, cfg.maxIter, cfg.tol, cfg.alpha)
+      csr.map(c => Result(c.ranks, c.iterations, c.err,
           c.edgesPerSecPerSuperstep, engine = "csr"))
-    }
-    routed.getOrElse(
-      run(spark, Edges.neighbors(edges).toDF("src", "dst"), cfg))
+        .getOrElse(run(spark, Edges.neighbors(held.edges).toDF("src", "dst"), cfg))
+    } finally held.release()
   }
 
   /** Directed PageRank over a (src, dst) link table (duplicates allowed =
@@ -237,11 +238,10 @@ object PageRank {
     * path is order-independent (bit-identical results) and the native
     * path differs only in float add order (parity-tested at 1e-12
     * against the CSR engines, same as before).
-    */
-  /** Below this edge count the PORTABLE-sum fixed-iteration chain runs
-    * on the driver over a collected CSR (local-gate posture of
-    * SpectralInit / ConnectedComponents / the path centralities). The
-    * portable path quantizes every gather addend through
+    *
+    * Below `localEdgeCap` edges the PORTABLE-sum chain runs on the
+    * driver over a collected CSR ([[Route.gate]]). The portable path
+    * quantizes every gather addend through
     * [[graft.functions.PortableRound]] and sums LONGS — the per-vertex
     * sum is order-INDEPENDENT by construction, so the local kernel that
     * replays the identical double ops (rank/deg, halfUp(c*scale),
@@ -251,34 +251,22 @@ object PageRank {
     * run); above the cap the pre-shuffled relational chain runs
     * unchanged — the 100 TB path.
     */
-  val FixedIterLocalEdgeCap = 5000000L
-
   def fixedIterUndirected(edges: DataFrame, iters: Int,
                           alpha: Double = 0.85,
                           portableSum: Boolean = false,
-                          localEdgeCap: Long = FixedIterLocalEdgeCap): DataFrame = {
+                          localEdgeCap: Long = Route.LocalEdgeCap): DataFrame = {
     val spark = edges.sparkSession
-    // one materialization of the edge pipeline serves the gate count
-    // and whichever path runs (local collect or adjacency build). A
-    // PRIVATE projection is cached, not the caller's frame — see the
-    // LabelPropagation note on caller-cache eviction.
-    var src = edges
-    var srcCached = false
-    if (portableSum) {
-      val e0 = edges.select(col("src"), col("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (e0.count() <= localEdgeCap) {
-        val out = fixedIterPortableLocal(spark, e0, iters, alpha)
-        e0.unpersist(false)
-        return out
-      }
-      src = e0
-      srcCached = true
+    // the gate's held projection serves the adjacency build too, so the
+    // edge pipeline runs once whichever path runs
+    var held: Option[Route.Held] = None
+    if (portableSum) Route.gate(edges, localEdgeCap) match {
+      case Route.Local(s, d) => return fixedIterPortableLocal(spark, s, d, iters, alpha)
+      case Route.Distributed(h, _) => held = Some(h)
     }
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val nbrs = graft.core.Lineage.truncatePartitioned(
-      Edges.neighbors(src).repartition(p, col("id")))
-    if (srcCached) src.unpersist(false)
+      Edges.neighbors(held.fold(edges)(_.edges)).repartition(p, col("id")))
+    held.foreach(_.release())
     // deg inherits the id-hash partitioning (no exchange); materialized
     // so the per-iteration joins scan a pinned RDD instead of
     // re-aggregating
@@ -318,12 +306,12 @@ object PageRank {
     * Chunk-parallelism cannot perturb anything: the only reductions are
     * exact integer sums. Sorted-id binary search, primitive arrays.
     */
-  private def fixedIterPortableLocal(spark: SparkSession, e: DataFrame,
-                                     iters: Int, alpha: Double): DataFrame = {
-    val (srcA, dstA) = graft.core.LocalGraph.collectPairs(e, "src", "dst")
-    val (ids, sIdx, dIdx) = graft.core.LocalGraph.dense(srcA, dstA)
+  private def fixedIterPortableLocal(spark: SparkSession, srcA: Array[Long],
+                                     dstA: Array[Long], iters: Int,
+                                     alpha: Double): DataFrame = {
+    val (ids, sIdx, dIdx) = Route.dense(srcA, dstA)
     val n = ids.length
-    val (rowPtr, colIdx) = graft.core.LocalGraph.undirectedCsr(n, sIdx, dIdx)
+    val (rowPtr, colIdx) = Route.undirectedCsr(n, sIdx, dIdx)
     // degree of v = its undirected CSR row length — the identical
     // integer the relational count() produced
     val degI = Array.tabulate(n)(v => rowPtr(v + 1) - rowPtr(v))

@@ -28,42 +28,21 @@ private[algos] object PathCentralitySmall {
     * neighbor table.
     */
   final class Adj(srcA: Array[Long], dstA: Array[Long]) {
-    val ids: Array[Long] = {
-      val all = new Array[Long](srcA.length + dstA.length)
-      System.arraycopy(srcA, 0, all, 0, srcA.length)
-      System.arraycopy(dstA, 0, all, srcA.length, dstA.length)
-      java.util.Arrays.sort(all)
-      // in-place dedup of the sorted ids
-      var w = 0
-      var i = 0
-      while (i < all.length) {
-        if (w == 0 || all(i) != all(w - 1)) { all(w) = all(i); w += 1 }
-        i += 1
-      }
-      java.util.Arrays.copyOf(all, w)
-    }
-    private val idx = {
-      val m = new java.util.HashMap[java.lang.Long, Integer](ids.length * 2)
-      var i = 0; while (i < ids.length) { m.put(ids(i), i); i += 1 }
-      m
-    }
+    private val (idArr, sIdx, dIdx) = graft.core.Route.dense(srcA, dstA)
+    val ids: Array[Long] = idArr
     def nV: Int = ids.length
-    def indexOf(id: Long): Int = {
-      val v = idx.get(id)
-      if (v == null) -1 else v.intValue()
-    }
+    def indexOf(id: Long): Int = math.max(-1, java.util.Arrays.binarySearch(ids, id))
     val (offsets, targets) = {
       val deg = new Array[Int](nV)
       var i = 0
-      while (i < srcA.length) { deg(idx.get(srcA(i)).intValue()) += 1; i += 1 }
+      while (i < sIdx.length) { deg(sIdx(i)) += 1; i += 1 }
       val off = new Array[Int](nV + 1)
       i = 0; while (i < nV) { off(i + 1) = off(i) + deg(i); i += 1 }
       val pos = off.clone()
-      val tgt = new Array[Int](srcA.length)
+      val tgt = new Array[Int](sIdx.length)
       i = 0
-      while (i < srcA.length) {
-        val ia = idx.get(srcA(i)).intValue()
-        tgt(pos(ia)) = idx.get(dstA(i)).intValue(); pos(ia) += 1
+      while (i < sIdx.length) {
+        tgt(pos(sIdx(i))) = dIdx(i); pos(sIdx(i)) += 1
         i += 1
       }
       (off, tgt)

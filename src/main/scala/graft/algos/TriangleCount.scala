@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.core.Route
 import graft.graph.Edges
 
 /** Triangle counting via the degree-oriented edge-iterator join
@@ -53,33 +54,30 @@ object TriangleCount {
     * wedge formulation instead shuffled the FULL wedge stream (O(sum
     * d_out^2) rows — 245M at sf0.1's dense graph) into a semi-join.
     * Counts eagerly so the adjacency cache is released before returning.
+    *
+    * Below `localEdgeCap` edges the same degree-oriented intersection
+    * count runs on the driver over a collected CSR ([[Route.gate]]). The
+    * count is an EXACT integer property of the graph — any correct
+    * algorithm returns the same number — so the local kernel is
+    * trivially result-identical (parity-tested). Its cap
+    * ([[Route.TriangleEdgeCap]]) is tighter than the collect bound
+    * because intersection work grows ~E^1.5; above it the distributed
+    * join+agg plan runs unchanged.
     */
-  /** Below this edge count the same degree-oriented intersection count
-    * runs on the driver over a collected CSR (local-gate posture of
-    * SpectralInit / ConnectedComponents). The count is an EXACT integer
-    * property of the graph — any correct algorithm returns the same
-    * number — so the local kernel is trivially result-identical
-    * (parity-tested). The cap is tighter than the 5M-row collect bound
-    * because intersection work grows ~E^1.5 (O(sqrt m) out-degrees):
-    * ~2G merge steps at 1M edges is the driver's comfortable ceiling;
-    * above it the distributed join+agg plan runs unchanged.
-    */
-  val LocalEdgeCap = 1000000L
-
   def globalCount(spark: SparkSession, edges: DataFrame,
-                  localEdgeCap: Long = LocalEdgeCap): DataFrame = {
+                  localEdgeCap: Long = Route.TriangleEdgeCap): DataFrame = {
     import spark.implicits._
-    // materialize the edge pipeline and the oriented table ONCE
-    // (optimization round 6): the final aggregate's plan references the
-    // orient subtree three times (adjacency build + both attach joins),
-    // each copy re-executing the edge scan+distinct and both degree
-    // joins — checkpointing `e` and `o` pins them to single executions
-    val e = graft.core.Lineage.truncate(edges.select("src", "dst"))
-    if (e.count() <= localEdgeCap) {
-      val n = countLocal(e)
-      graft.core.Lineage.release(e)
-      return Seq(n).toDF("triangles")
+    val held = Route.gate(edges, localEdgeCap) match {
+      case Route.Local(s, d) => return Seq(countLocal(s, d)).toDF("triangles")
+      case Route.Distributed(h, _) => h
     }
+    // checkpoint the edges and the oriented table (optimization round
+    // 6): the final aggregate's plan references the orient subtree three
+    // times (adjacency build + both attach joins), each copy re-executing
+    // the edge scan and both degree joins — checkpointing `e` and `o`
+    // pins them to single executions
+    val e = graft.core.Lineage.truncate(held.edges)
+    held.release()
     val o = graft.core.Lineage.truncate(orient(spark, e))
     // adjacency arrays SORTED at build so the per-edge intersection is a
     // zero-allocation two-pointer merge (SortedIntersectCount codegen
@@ -108,9 +106,8 @@ object TriangleCount {
     * per oriented edge; chunk-parallel over vertices (per-edge counts
     * are independent, summed exactly as longs).
     */
-  private def countLocal(e: DataFrame): Long = {
-    val (srcA, dstA) = graft.core.LocalGraph.collectPairs(e, "src", "dst")
-    val (ids, sIdx, dIdx) = graft.core.LocalGraph.dense(srcA, dstA)
+  private def countLocal(srcA: Array[Long], dstA: Array[Long]): Long = {
+    val (ids, sIdx, dIdx) = Route.dense(srcA, dstA)
     val n = ids.length
     val deg = new Array[Int](n)
     var i = 0

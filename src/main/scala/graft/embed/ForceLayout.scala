@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{CheckpointManager, Ids, Lineage}
+import graft.core.{CheckpointManager, Ids, Lineage, Route}
 import graft.functions.SampleKnnAgg
 import graft.graph.{CsrBlocks, PackedCsr}
 
@@ -61,10 +61,9 @@ object ForceLayout {
       nNeighbors: Int = 10,
       sampleSize: Int = 256,
       // picks the route: a position frame of at most this many rows
-      // (~16 MB of driver state at d=2 for the default 1M) runs the
-      // broadcast-state superstep; a larger one runs the relational
-      // superstep, whose joins shuffle
-      broadcastVertices: Long = 1000000L,
+      // runs the broadcast-state superstep; a larger one runs the
+      // relational superstep, whose joins shuffle
+      broadcastVertices: Long = Route.LayoutVertexCap,
       checkpoint: Option[CheckpointManager] = None,
       checkpointInterval: Int = 5,
       // caller-pluggable per-iteration progress callback — the engine's
@@ -74,17 +73,16 @@ object ForceLayout {
       // state is materialized with (completed iteration index, metrics);
       // deliberately free of extra Spark actions.
       progress: Option[(Int, Map[String, Double]) => Unit] = None,
-      // below this edge count the INIT bookkeeping — dense edge
+      // up to this edge count the INIT bookkeeping — dense edge
       // ordinals and the fixed-sample identity — is computed on the
-      // driver from one collected edge list (the SpectralInit /
-      // ConnectedComponents local-gate posture and the same 5M-row
-      // collect bound): the eids are the identical (src, dst)-sort
-      // dense ranks Ids.dense produces and the sample is the identical
-      // smallest-(xxhash64(eid), eid) set (XXH64.hashLong replica, same
-      // bits), so positions are unchanged. The LAYOUT LOOP itself is
-      // never local-gated — the supersteps stay distributed at every
-      // scale. Above the cap the Ids.dense + top-k jobs run unchanged.
-      localInitEdgeCap: Long = 5000000L)
+      // driver from the edge list Route.gate collects: the eids are the
+      // identical (src, dst)-sort dense ranks Ids.dense produces and the
+      // sample is the identical smallest-(xxhash64(eid), eid) set
+      // (XXH64.hashLong replica, same bits), so positions are
+      // unchanged. The LAYOUT LOOP itself is never local-gated — the
+      // supersteps stay distributed at every scale. Above the cap the
+      // Ids.dense + top-k jobs run unchanged.
+      localInitEdgeCap: Long = Route.LocalEdgeCap)
 
   /** What both routes start from: the edges with their ordinals, and the
     * fixed sample's (eid, src, dst), ascending by eid. `release` frees
@@ -149,82 +147,72 @@ object ForceLayout {
     */
   private def initOf(spark: SparkSession, edges: DataFrame, cfg: Config,
                      cacheEdges: Boolean): Init = {
-    val edgeCount = edges.count()
     val sessP = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sampleSize = math.min(cfg.sampleSize, edgeCount).toInt
-    if (edgeCount <= cfg.localInitEdgeCap) {
-      val rows = edges.select("src", "dst").collect()
-      val n = rows.length
-      val srcs = new Array[Long](n)
-      val dsts = new Array[Long](n)
-      var i = 0
-      while (i < n) { srcs(i) = rows(i).getLong(0); dsts(i) = rows(i).getLong(1); i += 1 }
-      // dense eids in (src, dst) sort order — exactly Ids.dense's
-      // two-phase range rank (rows are distinct, so the order is total).
-      // Each pair is keyed by (rank of src among the srcs) << 32 | (rank
-      // of dst among the dsts): the keys sort in the pairs' order, and
-      // ranks < n < 2^31, so one primitive sort replaces a boxed one.
-      def distinctSorted(a: Array[Long]): Array[Long] = {
-        val s = a.clone()
-        java.util.Arrays.sort(s)
-        var w = 0
-        var j = 0
-        while (j < s.length) { if (w == 0 || s(j) != s(w - 1)) { s(w) = s(j); w += 1 }; j += 1 }
-        java.util.Arrays.copyOf(s, w)
-      }
-      val us = distinctSorted(srcs)
-      val ud = distinctSorted(dsts)
-      val keys = Array.tabulate(n)(e =>
-        (java.util.Arrays.binarySearch(us, srcs(e)).toLong << 32) |
-          java.util.Arrays.binarySearch(ud, dsts(e)).toLong)
-      java.util.Arrays.sort(keys)
-      val srcSorted = keys.map(k => us((k >>> 32).toInt))
-      val dstSorted = keys.map(k => ud(k.toInt))
-      // ship the sorted edge list as TWO PRIMITIVE ARRAYS behind a
-      // broadcast + range map: parallelize of (Long,Long,Long) tuples
-      // would pin hundreds of MB of boxed tuples on the driver for the
-      // whole layout run at the 5M-edge cap (ParallelCollectionRDD
-      // keeps its seq alive for cache rebuilds); the broadcast holds
-      // ~16 B/edge and is released with the run
-      import spark.implicits._
-      val bc = spark.sparkContext.broadcast((srcSorted, dstSorted))
-      val df = spark.sparkContext
-        .parallelize(0 until n, math.max(1, sessP))
-        .map(i => (bc.value._1(i), bc.value._2(i), i.toLong))
-        .toDF("src", "dst", "eid")
-      if (cacheEdges) df.persist(StorageLevel.MEMORY_AND_DISK)
-      // sample: the sampleSize smallest (xxhash64(eid), eid) —
-      // XXH64.hashLong(eid, 42) is Spark's xxhash64(col) bit-for-bit
-      // (the DetRandom.uniformLocal replica argument). Every eid hashing
-      // below the sampleSize-th smallest hash is in; at that hash the
-      // smallest eids fill the rest.
-      import org.apache.spark.sql.catalyst.expressions.XXH64
-      val hashes = Array.tabulate(n)(e => XXH64.hashLong(e.toLong, 42L))
-      val picked = new Array[Int](sampleSize)
-      if (sampleSize > 0) {
-        val cut = { val h = hashes.clone(); java.util.Arrays.sort(h); h(sampleSize - 1) }
-        var atCut = sampleSize - hashes.count(_ < cut)
-        var w = 0
-        var e = 0
-        while (w < sampleSize) {
-          if (hashes(e) < cut || (hashes(e) == cut && atCut > 0)) {
-            if (hashes(e) == cut) atCut -= 1
-            picked(w) = e
-            w += 1
+    Route.gate(edges, cfg.localInitEdgeCap) match {
+      case Route.Local(srcs, dsts) =>
+        val n = srcs.length
+        val sampleSize = math.min(cfg.sampleSize, n)
+        // dense eids in (src, dst) sort order — exactly Ids.dense's
+        // two-phase range rank (rows are distinct, so the order is total).
+        // Each pair is keyed by (rank of src among the srcs) << 32 | (rank
+        // of dst among the dsts): the keys sort in the pairs' order, and
+        // ranks < n < 2^31, so one primitive sort replaces a boxed one.
+        val us = Route.distinct(srcs)
+        val ud = Route.distinct(dsts)
+        val keys = Array.tabulate(n)(e =>
+          (java.util.Arrays.binarySearch(us, srcs(e)).toLong << 32) |
+            java.util.Arrays.binarySearch(ud, dsts(e)).toLong)
+        java.util.Arrays.sort(keys)
+        val srcSorted = keys.map(k => us((k >>> 32).toInt))
+        val dstSorted = keys.map(k => ud(k.toInt))
+        // ship the sorted edge list as TWO PRIMITIVE ARRAYS behind a
+        // broadcast + range map: parallelize of (Long,Long,Long) tuples
+        // would pin hundreds of MB of boxed tuples on the driver for the
+        // whole layout run at the 5M-edge cap (ParallelCollectionRDD
+        // keeps its seq alive for cache rebuilds); the broadcast holds
+        // ~16 B/edge and is released with the run
+        import spark.implicits._
+        val bc = spark.sparkContext.broadcast((srcSorted, dstSorted))
+        val df = spark.sparkContext
+          .parallelize(0 until n, math.max(1, sessP))
+          .map(i => (bc.value._1(i), bc.value._2(i), i.toLong))
+          .toDF("src", "dst", "eid")
+        if (cacheEdges) df.persist(StorageLevel.MEMORY_AND_DISK)
+        // sample: the sampleSize smallest (xxhash64(eid), eid) —
+        // XXH64.hashLong(eid, 42) is Spark's xxhash64(col) bit-for-bit
+        // (the DetRandom.uniformLocal replica argument). Every eid hashing
+        // below the sampleSize-th smallest hash is in; at that hash the
+        // smallest eids fill the rest.
+        import org.apache.spark.sql.catalyst.expressions.XXH64
+        val hashes = Array.tabulate(n)(e => XXH64.hashLong(e.toLong, 42L))
+        val picked = new Array[Int](sampleSize)
+        if (sampleSize > 0) {
+          val cut = { val h = hashes.clone(); java.util.Arrays.sort(h); h(sampleSize - 1) }
+          var atCut = sampleSize - hashes.count(_ < cut)
+          var w = 0
+          var e = 0
+          while (w < sampleSize) {
+            if (hashes(e) < cut || (hashes(e) == cut && atCut > 0)) {
+              if (hashes(e) == cut) atCut -= 1
+              picked(w) = e
+              w += 1
+            }
+            e += 1
           }
-          e += 1
         }
-      }
-      Init(df, edgeCount, picked.map(_.toLong), picked.map(srcSorted(_)),
-        picked.map(dstSorted(_)), () => { df.unpersist(false); bc.unpersist(false) })
-    } else {
-      val df = Ids.dense(spark, edges.select("src", "dst"),
-        Seq("src", "dst"), "eid")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val s = df.orderBy(xxhash64(col("eid")), col("eid")).limit(sampleSize)
-        .select("eid", "src", "dst").collect().sortBy(_.getLong(0))
-      Init(df, edgeCount, s.map(_.getLong(0)), s.map(_.getLong(1)), s.map(_.getLong(2)),
-        () => df.unpersist(false))
+        Init(df, n.toLong, picked.map(_.toLong), picked.map(srcSorted(_)),
+          picked.map(dstSorted(_)), () => { df.unpersist(false); bc.unpersist(false) })
+      case Route.Distributed(held, edgeCount) =>
+        val sampleSize = math.min(cfg.sampleSize, edgeCount).toInt
+        // Ids.dense returns a materialized checkpoint, so the held
+        // projection is read for the last time here
+        val df = try Ids.dense(spark, held.edges, Seq("src", "dst"), "eid")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          finally held.release()
+        val s = df.orderBy(xxhash64(col("eid")), col("eid")).limit(sampleSize)
+          .select("eid", "src", "dst").collect().sortBy(_.getLong(0))
+        Init(df, edgeCount, s.map(_.getLong(0)), s.map(_.getLong(1)), s.map(_.getLong(2)),
+          () => df.unpersist(false))
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.DetRandom
+import graft.core.{DetRandom, Route}
 import graft.graph.Edges
 
 /** Spectral initialization: the d+1 smallest eigenvectors of the
@@ -29,25 +29,6 @@ import graft.graph.Edges
   */
 object SpectralInit {
 
-  /** Below this vertex count the SAME orthogonal iteration runs on the
-    * driver (the reference's own spectral init is host-local ARPACK,
-    * embedder.py:141, and PathCentralities takes the same posture): the
-    * V x (d+1) state is megabytes while the distributed loop pays
-    * ~0.6 s of job latency per superstep — 60 supersteps of pure
-    * O(E(d+1)) array math finish in well under a second. Identical
-    * algorithm, init hashes, Gram stop, and per-row arithmetic, so the
-    * two paths agree to float-merge jitter (parity-tested).
-    */
-  val LocalCap = 100000
-
-  /** The local path also collects the EDGE list, so it is additionally
-    * gated on edge count: a dense graph under the vertex cap (100k
-    * vertices with average degree in the thousands — a near-clique
-    * community subgraph) would otherwise pull hundreds of millions of
-    * rows onto the driver. Above either cap the distributed loop runs.
-    */
-  val LocalEdgeCap = 5000000L
-
   /** Returns (id, pos: array<double>[d]).
     *
     * `gramTol` is the relative Gram-matrix-delta stop: 1e-9 drives the
@@ -55,47 +36,47 @@ object SpectralInit {
     * embeddings); callers that feed a force-layout REFINEMENT loop can
     * pass ~1e-6 — the layout iterations dominate the final geometry and
     * the extra spectral supersteps past 1e-6 are pure fixed cost.
+    *
+    * Up to `localEdgeCap` edges and `localCap` vertices the SAME
+    * orthogonal iteration runs on the driver (the reference's own
+    * spectral init is host-local ARPACK, embedder.py:141): the V x (d+1)
+    * state is megabytes while the distributed loop pays ~0.6 s of job
+    * latency per superstep. Identical algorithm, init hashes, Gram stop,
+    * and per-row arithmetic, so the two paths agree to float-merge
+    * jitter (parity-tested). The edge list is collected by [[Route.gate]]
+    * first and the vertex count derived from it; a graph with more than
+    * `localCap` vertices under the edge cap runs the distributed loop.
     */
   def run(spark: SparkSession, edges: DataFrame, d: Int,
           maxIter: Int = 60, seed: Long = 42,
-          gramTol: Double = 1e-9, localCap: Int = LocalCap,
-          localEdgeCap: Long = LocalEdgeCap): DataFrame = {
+          gramTol: Double = 1e-9, localCap: Int = Route.SpectralVertexCap,
+          localEdgeCap: Long = Route.LocalEdgeCap): DataFrame = {
+    import spark.implicits._
+    // empty edge table: the distributed loop's Gram aggregate over zero
+    // rows returns an all-null row and NPEs on getDouble — return the
+    // empty positions frame
+    def empty = Seq.empty[(Long, Seq[Double])].toDF("id", "pos")
+    val (input, eCount, held) = Route.gate(edges, localEdgeCap) match {
+      case Route.Local(s, t) =>
+        if (s.isEmpty) return empty
+        val (ids, sIdx, tIdx) = Route.dense(s, t)
+        if (ids.length <= localCap)
+          return runLocal(spark, ids, sIdx, tIdx, d, maxIter, seed, gramTol)
+        (edges, s.length.toLong, None)
+      case Route.Distributed(h, rows) =>
+        if (rows == 0) { h.release(); return empty }
+        (h.edges, rows, Some(h))
+    }
+    distributed(spark, input, eCount, d, maxIter, seed, gramTol, held)
+  }
+
+  /** The distributed orthogonal iteration over `edges` (`eCount` rows);
+    * `held`, if any, is released once the adjacency is cached.
+    */
+  private def distributed(spark: SparkSession, edges: DataFrame, eCount: Long,
+                          d: Int, maxIter: Int, seed: Long, gramTol: Double,
+                          held: Option[Route.Held]): DataFrame = {
     val k = d + 1
-    // Gate on the CHEAP count first (optimization round 6): the old
-    // order materialized a distributed degree table just to learn the
-    // vertex count, then threw it away on the local path — ~1/3 of the
-    // local route's wall. Under the edge cap the edge list is collected
-    // once and the vertex count derived from it; only if that reveals
-    // more than localCap vertices (possible only in the narrow band
-    // 100k < V <= 2E) does the distributed loop run, with deg built
-    // below as before.
-    val eCount = edges.count()
-    if (eCount == 0) {
-      // empty edge table: the distributed loop's Gram aggregate over
-      // zero rows returns an all-null row and NPEs on getDouble —
-      // return the empty positions frame
-      import spark.implicits._
-      return Seq.empty[(Long, Seq[Double])].toDF("id", "pos")
-    }
-    if (eCount <= localEdgeCap) {
-      // two primitive long arrays — no per-row tuple boxing (same
-      // posture as PathCentralitySmall.Adj)
-      val rows = edges.select("src", "dst").collect()
-      val srcA = new Array[Long](rows.length)
-      val dstA = new Array[Long](rows.length)
-      var i = 0
-      while (i < rows.length) {
-        val r = rows(i); srcA(i) = r.getLong(0); dstA(i) = r.getLong(1); i += 1
-      }
-      val nV = {
-        val s = new java.util.HashSet[java.lang.Long](rows.length * 2)
-        var j = 0
-        while (j < srcA.length) { s.add(srcA(j)); s.add(dstA(j)); j += 1 }
-        s.size
-      }
-      if (nV <= localCap)
-        return runLocal(spark, srcA, dstA, d, maxIter, seed, gramTol)
-    }
     val nbrs = Edges.neighbors(edges)
     val deg = Edges.degrees(edges)
       .select(col("id"), col("degree").cast("double").as("deg"))
@@ -117,6 +98,7 @@ object SpectralInit {
       .repartition(pEff, col("nbr"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     adj.count()
+    held.foreach(_.release())
 
     // deterministic random init, column 0 seeded toward the trivial
     // eigenvector direction (sqrt(deg)) to speed convergence
@@ -210,10 +192,6 @@ object SpectralInit {
     out
   }
 
-  /** Driver-local execution of the identical orthogonal iteration (see
-    * LocalCap): same sqrt(deg)/hash init, same y = (x + Mx)/2 update,
-    * same Gram/Cholesky orthonormalization and stop.
-    */
   /** (L^-1)^T for G = L L^T — the orthonormalization coefficient matrix
     * both iteration paths apply. Hand-rolled k x k (k = d+1, tiny)
     * Cholesky + forward-substitution inverse: the breeze
@@ -290,55 +268,18 @@ object SpectralInit {
     out
   }
 
-  private def runLocal(spark: SparkSession, srcA: Array[Long],
-                       dstA: Array[Long], d: Int,
+  /** Driver-local execution of the identical orthogonal iteration over
+    * the dense collected edges: same sqrt(deg)/hash init, same
+    * y = (x + Mx)/2 update, same Gram/Cholesky orthonormalization and
+    * stop.
+    */
+  private def runLocal(spark: SparkSession, ids: Array[Long], sIdx: Array[Int],
+                       dIdx: Array[Int], d: Int,
                        maxIter: Int, seed: Long, gramTol: Double): DataFrame = {
     val k = d + 1
-    val ids: Array[Long] = {
-      val all = new Array[Long](srcA.length * 2)
-      System.arraycopy(srcA, 0, all, 0, srcA.length)
-      System.arraycopy(dstA, 0, all, srcA.length, dstA.length)
-      java.util.Arrays.sort(all)
-      var w = 0
-      var j = 0
-      while (j < all.length) {
-        if (w == 0 || all(j) != all(w - 1)) { all(w) = all(j); w += 1 }
-        j += 1
-      }
-      java.util.Arrays.copyOf(all, w)
-    }
-    val idx = {
-      val m = new java.util.HashMap[java.lang.Long, Integer](ids.length * 2)
-      var j = 0; while (j < ids.length) { m.put(ids(j), j); j += 1 }
-      m
-    }
     val n = ids.length
-    val degA: Array[Int] = {
-      val dA = new Array[Int](n)
-      var j = 0
-      while (j < srcA.length) {
-        dA(idx.get(srcA(j)).intValue()) += 1
-        dA(idx.get(dstA(j)).intValue()) += 1
-        j += 1
-      }
-      dA
-    }
-    val rowPtr = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { rowPtr(i + 1) = rowPtr(i) + degA(i); i += 1 }
-    val colIdx: Array[Int] = {
-      val cIdx = new Array[Int](rowPtr(n))
-      val cursor = rowPtr.clone()
-      var j = 0
-      while (j < srcA.length) {
-        val ia = idx.get(srcA(j)).intValue()
-        val ib = idx.get(dstA(j)).intValue()
-        cIdx(cursor(ia)) = ib; cursor(ia) += 1
-        cIdx(cursor(ib)) = ia; cursor(ib) += 1
-        j += 1
-      }
-      cIdx
-    }
+    val (rowPtr, colIdx) = Route.undirectedCsr(n, sIdx, dIdx)
+    val degA = Array.tabulate(n)(v => rowPtr(v + 1) - rowPtr(v))
     // NOTE: 1/sqrt(deg_v * deg_u) as ONE sqrt, exactly like the
     // distributed path's `w` column (sqrt(a*b) != sqrt(a)*sqrt(b) in
     // the last ulp; parity matters for the cross-path test). The weight
