@@ -1,6 +1,7 @@
 package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -13,42 +14,40 @@ import graft.core.{CheckpointManager, Route}
   * (/root/reference/run_benchmarks.py:255-272); assignments must match
   * exactly: component id = minimum vertex id in the component.
   *
-  * Each round is two join+aggregate supersteps over the shrinking edge
-  * set; convergence in O(log^2 n) rounds. Every op is an equi-join or
-  * hash aggregation — Catalyst plans them with partial aggregation and
-  * AQE handles the (heavily skewed) star-root keys.
+  * Each round is two star supersteps over the shrinking edge set;
+  * convergence in O(log^2 n) rounds. A star step is one window min
+  * partitioned by its key over the rows it already has: one hash
+  * exchange and a sort, no join. A star root's rows all sort inside one
+  * window task (there is no join for AQE to split), which the trace
+  * reports as `task_skew`.
   */
 object ConnectedComponents {
 
   /** large-star: for every u, connect its larger neighbors to
     * m = min(N(u) ∪ {u}).
     */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val sym = e.select(col("u"), col("v"))
-      .union(e.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy("u").agg(min(least(col("v"), col("u"))).as("m"))
+  private def largeStar(e: DataFrame): DataFrame =
     // No distinct here (one Exchange of up-to-2E rows saved per round):
     // smallStar's terminal distinct dedups the composed output, and its
-    // min-aggregations are duplicate-insensitive, so the round's result
-    // is unchanged; the intermediate stays bounded by 2E rows.
-    sym.join(mins, "u").where(col("v") > col("u"))
+    // window mins are duplicate-insensitive, so the round's result is
+    // unchanged; the intermediate stays bounded by 2E rows.
+    e.select(col("u"), col("v"))
+      .union(e.select(col("v").as("u"), col("u").as("v")))
+      .withColumn("m", min(least(col("v"), col("u"))).over(Window.partitionBy("u")))
+      .where(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
       .where(col("u") =!= col("v"))
-  }
 
   /** small-star: for every u, connect its smaller-or-equal neighbors
-    * (and u itself) to m = min(N_small(u) ∪ {u}).
+    * (and u itself) to m = min(N_small(u) ∪ {u}). Every row emits both
+    * (v, m) and (u, m); the distinct drops the repeated (u, m).
     */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val keyed = e.select(greatest(col("u"), col("v")).as("u"),
-      least(col("u"), col("v")).as("v"))
-    val mins = keyed.groupBy("u").agg(min(col("v")).as("m"))
-    keyed.join(mins, "u")
-      .select(col("v").as("u"), col("m").as("v"))
-      .union(mins.select(col("u"), col("m").as("v")))
+  private def smallStar(e: DataFrame): DataFrame =
+    e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+      .withColumn("m", min(col("v")).over(Window.partitionBy("u")))
+      .select(explode(array(col("v"), col("u"))).as("u"), col("m").as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-  }
 
   // Convergence signature of the (distinct) star-edge set: row count +
   // order-independent XOR of per-row hashes. Replaces the decimal(38,0)
@@ -91,6 +90,19 @@ object ConnectedComponents {
     def dropE(df: DataFrame): Unit =
       if (firstE) { held.release(); firstE = false }
       else graft.core.Lineage.release(df)
+    var round = 0
+    var done = false
+    // no signature for the input: the first round never counts as
+    // converged (canonical u < v rows are never the u > v star edges a
+    // round emits, and one more round at a fixpoint changes nothing)
+    var sig: Option[(Long, Long)] = None
+    var eRows = rows
+    // Fixed-shape round tuning: AQE off + data-sized shuffle width in
+    // the small regime (graft.core.LoopConf; data-derived gate). At
+    // scale AQE stays on; a star step has no join for it to split.
+    val small = graft.core.LoopConf.smallRegime(spark, 2L * rows,
+      rowsPerPartition = 62500L)
+    val verts = graft.core.LoopConf.withLoop(spark, small) {
     // vertex set from the CACHED edge table, materialized eagerly while
     // that cache is still alive (the rounds below release it): deriving
     // it from the caller's `edges` frame re-executed the whole upstream
@@ -100,26 +112,12 @@ object ConnectedComponents {
       .union(e.select(col("v").as("id"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     verts.count()
-    var round = 0
-    var done = false
-    // no signature for the input: the first round never counts as
-    // converged (canonical u < v rows are never the u > v star edges a
-    // round emits, and one more round at a fixpoint changes nothing)
-    var sig: Option[(Long, Long)] = None
-    var eRows = rows
-    // Fixed-shape round tuning: AQE off + data-sized shuffle width in
-    // the small regime (graft.core.LoopConf; data-derived gate — at
-    // scale AQE stays on for its skew-join splitting of star-root keys)
-    val small = graft.core.LoopConf.smallRegime(spark, 2L * rows,
-      rowsPerPartition = 62500L)
-    graft.core.LoopConf.withLoop(spark, small) {
     while (!done && round < maxRounds) {
-      // largeStar/smallStar each reference the edge set twice (the
-      // symmetrize union + the min join) — truncate lineage every round
-      // or the plan grows 4x per round. The checksum aggregate is the
-      // materializing action on the lazily-truncated frame, so each
-      // round runs ONE job (star passes + convergence signature), not
-      // two.
+      // largeStar's symmetrize union references the edge set twice —
+      // truncate lineage every round or the plan grows 2x per round.
+      // The checksum aggregate is the materializing action on the
+      // lazily-truncated frame, so each round runs ONE job (star passes
+      // + convergence signature), not two.
       var next = smallStar(largeStar(e))
       next = checkpoint match {
         case Some(cm) => cm.commit(round, next, Map("edges" -> eRows.toDouble))
@@ -133,6 +131,7 @@ object ConnectedComponents {
       eRows = nsig._1
       round += 1
     }
+    verts
     }
     // Final star edges point v -> root (root < v). Roots / isolated
     // vertices map to themselves. Materialize eagerly so the vertex and

@@ -32,8 +32,8 @@ object LoopConf {
     * leave the session configuration alone.
     *
     * `rowsPerPartition` defaults to the guide-sized 250k; loops whose
-    * superstep does SEVERAL sort/join passes over every row (e.g. the
-    * CC star rounds: symmetrize + two min-join supersteps + distinct)
+    * superstep does SEVERAL sort passes over every row (e.g. the CC
+    * star rounds: two window-min supersteps + distinct)
     * pass a smaller target so each task's repeated sorts stay short —
     * still a DATA-derived width, never core-count derived.
     */

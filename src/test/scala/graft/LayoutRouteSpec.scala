@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 
 import graft.embed.{ForceLayout, SpectralInit}
@@ -78,21 +76,8 @@ class LayoutRouteSpec extends SparkSuite {
     e.count()
     val init = SpectralInit.run(spark, e, d = 2, maxIter = 10).cache()
     init.count()
-    @volatile var stages = 0
-    val listener = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages += 1
-    }
-    def stagesOf(iterations: Int): Int = {
-      ListenerBusDrain(spark.sparkContext)
-      spark.sparkContext.addSparkListener(listener)
-      stages = 0
-      try ForceLayout.run(spark, e, init, iterations).count()
-      finally {
-        ListenerBusDrain(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      stages
-    }
+    def stagesOf(iterations: Int): Int =
+      stagesRun(ForceLayout.run(spark, e, init, iterations).count())
     val one = stagesOf(1)
     val three = stagesOf(3)
     assert((three - one) / 2.0 <= 2.0, s"1 superstep: $one stages, 3 supersteps: $three")

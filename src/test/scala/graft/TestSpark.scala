@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +21,22 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   def edgesOf(pairs: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._
     graft.graph.Edges.canonicalize(pairs.toDF("src", "dst"))
+  }
+
+  /** Stages Spark completes while `body` runs. */
+  def stagesRun(body: => Any): Int = {
+    @volatile var stages = 0
+    val listener = new SparkListener {
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages += 1
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      ListenerBusDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    stages
   }
 
   /** Reference fixtures (/root/reference/tests/conftest.py:16-27 and
