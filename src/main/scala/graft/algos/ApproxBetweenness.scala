@@ -62,12 +62,11 @@ object ApproxBetweenness {
           portableSum: Boolean = false,
           localNbrRowCap: Long = Route.NbrRowCap): DataFrame = {
     // held across the gate, so a source frame derived from the same
-    // input reads this cache on either route; the gate's own hold finds
-    // the cache and leaves its release to this one
+    // input reads this cache on either route
     val held = Route.hold(edges)
-    try Route.gate(edges, ApproxCloseness.edgeCap(localNbrRowCap)) match {
-      case Route.Local(s, d) =>
-        val (adj, n, srcs) = ApproxCloseness.localInput(s, d, k, seed, explicitSources)
+    try Route.gate(held, ApproxCloseness.edgeCap(localNbrRowCap)) match {
+      case l: Route.Local =>
+        val (adj, n, srcs) = ApproxCloseness.localInput(l, k, seed, explicitSources)
         PathCentralitySmall.betweennessLocal(spark, adj, srcs, n, srcs.length.toLong,
           maxLevels, normalized, portableSum)
       case Route.Distributed(h, _) =>

@@ -64,12 +64,11 @@ object ApproxCloseness {
           explicitSources: Option[DataFrame] = None,
           localNbrRowCap: Long = Route.NbrRowCap): DataFrame = {
     // held across the gate, so a source frame derived from the same
-    // input reads this cache on either route; the gate's own hold finds
-    // the cache and leaves its release to this one
+    // input reads this cache on either route
     val held = Route.hold(edges)
-    try Route.gate(edges, edgeCap(localNbrRowCap)) match {
-      case Route.Local(s, d) =>
-        val (adj, n, srcs) = localInput(s, d, k, seed, explicitSources)
+    try Route.gate(held, edgeCap(localNbrRowCap)) match {
+      case l: Route.Local =>
+        val (adj, n, srcs) = localInput(l, k, seed, explicitSources)
         PathCentralitySmall.closenessLocal(spark, adj, srcs, n, srcs.length.toLong, maxLevels)
       case Route.Distributed(h, _) => distributed(h.edges, k, seed, maxLevels, explicitSources)
     } finally held.release()
@@ -147,10 +146,11 @@ object ApproxCloseness {
     * order `Edges.neighbors` collects in, which the non-portable
     * betweenness float sums follow), the vertex count, and the sources.
     */
-  private[algos] def localInput(s: Array[Long], d: Array[Long], k: Int, seed: Long,
+  private[algos] def localInput(local: Route.Local, k: Int, seed: Long,
                                 explicitSources: Option[DataFrame])
       : ((Array[Long], Array[Long]), Long, Array[Long]) = {
-    val ids = Route.distinct(s, d)
+    val (s, d) = (local.src, local.dst)
+    val ids = local.dense._1
     val srcs = explicitSources match {
       case Some(x) => x.collect().map(_.getLong(0))
       case None => hashSample(ids, math.min(k.toLong, ids.length).toInt, seed)

@@ -78,7 +78,7 @@ object ConnectedComponents {
           localEdgeCap: Long = Route.LocalEdgeCap): DataFrame =
     // no count is at most -1, so a checkpointed run never goes local
     Route.gate(edges, if (checkpoint.isEmpty) localEdgeCap else -1L) match {
-      case Route.Local(s, d) => runLocal(spark, s, d)
+      case l: Route.Local => runLocal(spark, l)
       case Route.Distributed(held, rows) => starLoop(spark, held, rows, maxRounds, checkpoint)
     }
 
@@ -151,9 +151,8 @@ object ConnectedComponents {
     * (id, component = min id of the component), exactly the distributed
     * loop's rows.
     */
-  private def runLocal(spark: SparkSession, srcA: Array[Long],
-                       dstA: Array[Long]): DataFrame = {
-    val (ids, sIdx, dIdx) = Route.dense(srcA, dstA)
+  private def runLocal(spark: SparkSession, local: Route.Local): DataFrame = {
+    val (ids, sIdx, dIdx) = local.dense
     val n = ids.length
     val parent = new Array[Int](n)
     var i = 0
@@ -167,7 +166,7 @@ object ConnectedComponents {
       x
     }
     i = 0
-    while (i < srcA.length) {
+    while (i < sIdx.length) {
       val a = find(sIdx(i))
       val b = find(dIdx(i))
       // union toward the smaller INDEX = smaller id (ids ascending), so

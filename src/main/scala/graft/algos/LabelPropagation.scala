@@ -35,7 +35,7 @@ object LabelPropagation {
     // the gate's held projection serves the adjacency build too, so the
     // edge pipeline runs once whichever path runs
     val (e0, eCount) = Route.gate(edges, localEdgeCap) match {
-      case Route.Local(s, d) => return runLocal(spark, s, d, iterations)
+      case l: Route.Local => return runLocal(spark, l, iterations)
       case Route.Distributed(held, rows) => (held, rows)
     }
     // adjacency pre-shuffled ONCE on the per-iteration join key and
@@ -82,11 +82,11 @@ object LabelPropagation {
     * search, primitive arrays; per-vertex work is independent, so the
     * chunk-parallel loop cannot change any result.
     */
-  private def runLocal(spark: SparkSession, srcA: Array[Long],
-                       dstA: Array[Long], iterations: Int): DataFrame = {
-    val (ids, sIdx, dIdx) = Route.dense(srcA, dstA)
+  private def runLocal(spark: SparkSession, local: Route.Local,
+                       iterations: Int): DataFrame = {
+    val ids = local.dense._1
     val n = ids.length
-    val (rowPtr, colIdx) = Route.undirectedCsr(n, sIdx, dIdx)
+    val (rowPtr, colIdx) = local.csr
     var i = 0
     var labels: Array[Long] = Array.tabulate(n)(v => ids(v))
     var it = 0

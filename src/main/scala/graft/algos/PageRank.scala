@@ -66,12 +66,13 @@ object PageRank {
     * everything the route cannot prove cheap-and-equivalent: sparse id
     * spaces (n enters the teleport base, so density is semantic),
     * checkpointed/resumable runs, salted aggregation, explicit
-    * partitioning, or V beyond the broadcast cap. The gate costs one
-    * column-pruned max() pass over the held edge projection
-    * ([[Route.hold]]), which the CSR build and the relational fallback
-    * read too, so an uncached caller pipeline runs once; the density
-    * check rides the CSR build itself (falls back if any id slot is
-    * empty).
+    * partitioning, or V beyond the broadcast cap. The gate reads the
+    * held edge projection's [[Route.stats]] (one aggregate, or none when
+    * an earlier call on the same cached input ran it), and the CSR build
+    * and the relational fallback read the same projection
+    * ([[Route.hold]]), so an uncached caller pipeline runs once; the
+    * density check rides the CSR build itself (falls back if any id slot
+    * is empty).
     */
   def runUndirected(spark: SparkSession, edges: DataFrame,
                     cfg: Config = Config()): Result = {
@@ -82,15 +83,14 @@ object PageRank {
     if (!tryRoute) return run(spark, Edges.neighbors(edges).toDF("src", "dst"), cfg)
     val held = Route.hold(edges)
     try {
-      // one column-pruned pass gives both gate bounds: maxId under the
-      // broadcast cap AND no negative ids (a negative id would index
-      // outside the CSR arrays; the relational plan handles any id)
-      val mx = held.edges.agg(max(greatest(col("src"), col("dst"))),
-        min(least(col("src"), col("dst")))).head()
-      val csr =
-        if (mx.isNullAt(0) || mx.getLong(0) >= cfg.csrMaxVertices ||
-            mx.getLong(1) < 0L) None
-        else PageRankCsr.runIfDense(spark, held.edges, cfg.maxIter, cfg.tol, cfg.alpha)
+      // the id range gives both gate bounds: maxId under the broadcast
+      // cap AND no negative ids (a negative id would index outside the
+      // CSR arrays; the relational plan handles any id)
+      val csr = Route.stats(held).idRange match {
+        case Some((lo, hi)) if lo >= 0L && hi < cfg.csrMaxVertices =>
+          PageRankCsr.runIfDense(spark, held.edges, cfg.maxIter, cfg.tol, cfg.alpha)
+        case _ => None
+      }
       csr.map(c => Result(c.ranks, c.iterations, c.err,
           c.edgesPerSecPerSuperstep, engine = "csr"))
         .getOrElse(run(spark, Edges.neighbors(held.edges).toDF("src", "dst"), cfg))
@@ -121,13 +121,16 @@ object PageRank {
       .groupBy("id").agg(sum(col("o")).as("oc"))
       .select(col("id"), when(col("oc") > 0, col("oc").cast("double")).as("outdeg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // n + dangling detection folded into one materializing job (the old
-    // path ran a separate limit(1).count() pass just for anyDangling)
+    // n, dangling detection and the link count folded into one
+    // materializing job: every link row adds 1 to its src's outdeg, so
+    // the outdeg sum is the link count (an integer-valued double sum,
+    // exact below 2^53)
     val initRow = vertsDeg.agg(count(lit(1)),
-      count(when(col("outdeg").isNull, lit(1)))).head()
+      count(when(col("outdeg").isNull, lit(1))),
+      coalesce(sum(col("outdeg")), lit(0.0))).head()
     val n = initRow.getLong(0)
     val anyDangling = initRow.getLong(1) > 0
-    val edgeCount = links.count()
+    val edgeCount = initRow.getDouble(2).toLong
 
     // Resume from the latest committed snapshot if one exists.
     val (startIter, startState) = cfg.checkpoint.flatMap(_.resume()) match {
@@ -179,7 +182,7 @@ object PageRank {
           col("outdeg"), state("rank").as("old"))
 
       val prevState = state
-      var newState: DataFrame = null
+      var newState = stepped.select(col("id"), col("rank"), col("outdeg"))
       if (cfg.tol > 0) {
         // Materialize new state + convergence delta in ONE job: the err
         // aggregate is the first action on the lazily-checkpointed frame.
@@ -187,16 +190,17 @@ object PageRank {
         err = joinedOld.agg(sum(abs(col("rank") - col("old")))).head().getDouble(0)
         newState = joinedOld.select(col("id"), col("rank"), col("outdeg"))
         converged = err < n * cfg.tol
-      } else {
-        // fixed-superstep mode (tol <= 0): no convergence pass at all
-        newState = graft.core.Lineage.truncate(
-          stepped.select(col("id"), col("rank"), col("outdeg")))
       }
       val doCkpt = cfg.checkpoint.isDefined &&
         ((iter + 1) % cfg.checkpointInterval == 0 || converged)
       if (doCkpt) {
+        // the commit's re-read cuts the lineage, so in fixed-superstep
+        // mode (tol <= 0) the stepped frame is written directly
         newState = cfg.checkpoint.get.commit(iter,
           newState, Map("err" -> err, "n" -> n.toDouble))
+      } else if (cfg.tol <= 0) {
+        // fixed-superstep mode: no convergence pass at all
+        newState = graft.core.Lineage.truncate(newState)
       }
       state = newState
       graft.core.Lineage.release(prevState) // successor is materialized
@@ -260,7 +264,7 @@ object PageRank {
     // edge pipeline runs once whichever path runs
     var held: Option[Route.Held] = None
     if (portableSum) Route.gate(edges, localEdgeCap) match {
-      case Route.Local(s, d) => return fixedIterPortableLocal(spark, s, d, iters, alpha)
+      case l: Route.Local => return fixedIterPortableLocal(spark, l, iters, alpha)
       case Route.Distributed(h, _) => held = Some(h)
     }
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -306,12 +310,11 @@ object PageRank {
     * Chunk-parallelism cannot perturb anything: the only reductions are
     * exact integer sums. Sorted-id binary search, primitive arrays.
     */
-  private def fixedIterPortableLocal(spark: SparkSession, srcA: Array[Long],
-                                     dstA: Array[Long], iters: Int,
-                                     alpha: Double): DataFrame = {
-    val (ids, sIdx, dIdx) = Route.dense(srcA, dstA)
+  private def fixedIterPortableLocal(spark: SparkSession, local: Route.Local,
+                                     iters: Int, alpha: Double): DataFrame = {
+    val ids = local.dense._1
     val n = ids.length
-    val (rowPtr, colIdx) = Route.undirectedCsr(n, sIdx, dIdx)
+    val (rowPtr, colIdx) = local.csr
     // degree of v = its undirected CSR row length — the identical
     // integer the relational count() produced
     val degI = Array.tabulate(n)(v => rowPtr(v + 1) - rowPtr(v))

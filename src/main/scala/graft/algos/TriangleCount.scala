@@ -68,7 +68,7 @@ object TriangleCount {
                   localEdgeCap: Long = Route.TriangleEdgeCap): DataFrame = {
     import spark.implicits._
     val held = Route.gate(edges, localEdgeCap) match {
-      case Route.Local(s, d) => return Seq(countLocal(s, d)).toDF("triangles")
+      case l: Route.Local => return Seq(countLocal(l)).toDF("triangles")
       case Route.Distributed(h, _) => h
     }
     // checkpoint the edges and the oriented table (optimization round
@@ -106,18 +106,18 @@ object TriangleCount {
     * per oriented edge; chunk-parallel over vertices (per-edge counts
     * are independent, summed exactly as longs).
     */
-  private def countLocal(srcA: Array[Long], dstA: Array[Long]): Long = {
-    val (ids, sIdx, dIdx) = Route.dense(srcA, dstA)
+  private def countLocal(local: Route.Local): Long = {
+    val (ids, sIdx, dIdx) = local.dense
     val n = ids.length
     val deg = new Array[Int](n)
     var i = 0
-    while (i < srcA.length) { deg(sIdx(i)) += 1; deg(dIdx(i)) += 1; i += 1 }
+    while (i < sIdx.length) { deg(sIdx(i)) += 1; deg(dIdx(i)) += 1; i += 1 }
     // total order: (degree, id) ascending — ids(a) < ids(b) iff a < b
     def precedes(a: Int, b: Int): Boolean =
       deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
     val outDeg = new Array[Int](n)
     i = 0
-    while (i < srcA.length) {
+    while (i < sIdx.length) {
       if (precedes(sIdx(i), dIdx(i))) outDeg(sIdx(i)) += 1
       else outDeg(dIdx(i)) += 1
       i += 1
@@ -129,7 +129,7 @@ object TriangleCount {
     locally {
       val cursor = rowPtr.clone()
       var j = 0
-      while (j < srcA.length) {
+      while (j < sIdx.length) {
         val a = sIdx(j); val b = dIdx(j)
         if (precedes(a, b)) { out(cursor(a)) = b; cursor(a) += 1 }
         else { out(cursor(b)) = a; cursor(b) += 1 }

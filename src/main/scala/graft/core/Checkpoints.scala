@@ -4,7 +4,12 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Iceberg-style checkpoint/lineage layer over Parquet.
   *
@@ -19,10 +24,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   *
   * Manifest fields: iteration, parent iteration (lineage), per-partition
-  * file list with sizes (partition lineage), row count, and free-form
-  * convergence metrics. A manifest is written to a temp name and
-  * atomically renamed, so a killed run never leaves a half-committed
-  * snapshot: resume picks the largest K with a valid manifest.
+  * file list with sizes (partition lineage), row count (summed from the
+  * files' Parquet footers), the snapshot's schema, and free-form
+  * convergence metrics. A commit runs one Spark job, the write: the
+  * snapshot is re-read with the written frame's schema, and [[load]]
+  * reads it with the manifest's, so neither infers it (a manifest
+  * without a schema loads by inference). A manifest is written to a
+  * temp name and atomically renamed, so a killed run never leaves a
+  * half-committed snapshot: resume picks the largest K with a valid
+  * manifest.
   *
   * Checkpointing every iteration also truncates the logical plan of
   * iterative join/agg loops (plan size otherwise grows linearly and
@@ -48,13 +58,14 @@ final class CheckpointManager(spark: SparkSession, root: String) {
     */
   def commit(iter: Int, df: DataFrame, metrics: Map[String, Double]): DataFrame = {
     val dir = snapDir(iter)
+    val schema = df.schema
     df.write.mode("overwrite").parquet(dir)
-    val files = Files.list(Paths.get(dir)).iterator().asScala
+    val paths = Files.list(Paths.get(dir)).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(p => (p.getFileName.toString, Files.size(p)))
-      .toSeq.sortBy(_._1)
-    val reread = spark.read.parquet(dir)
-    val rows = reread.count()
+      .toSeq.sortBy(_.getFileName.toString)
+    val files = paths.map(p => (p.getFileName.toString, Files.size(p)))
+    val rows = paths.map(footerRows).sum
+    val reread = spark.read.schema(schema).parquet(dir)
     val parent = if (iter > 0) (iter - 1).toString else "null"
     val filesJson = files.map { case (f, sz) =>
       s"""{"file":"${esc(f)}","bytes":$sz}"""
@@ -64,6 +75,7 @@ final class CheckpointManager(spark: SparkSession, root: String) {
     }.mkString("{", ",", "}")
     val json =
       s"""{"iteration":$iter,"parent":$parent,"rows":$rows,
+         |"schema":${schema.json},
          |"partitions":$filesJson,
          |"metrics":$metricsJson,
          |"committed_utc":"${java.time.Instant.now()}"}""".stripMargin
@@ -86,8 +98,24 @@ final class CheckpointManager(spark: SparkSession, root: String) {
       .reduceOption(_ max _)
   }
 
-  /** Load the snapshot for a committed iteration. */
-  def load(iter: Int): DataFrame = spark.read.parquet(snapDir(iter))
+  /** Rows in one Parquet file, from its footer. */
+  private def footerRows(p: Path): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(p.toUri), conf))
+    try reader.getRecordCount finally reader.close()
+  }
+
+  /** Load the snapshot for a committed iteration, with the schema its
+    * manifest records (by inference when the manifest has none).
+    */
+  def load(iter: Int): DataFrame = {
+    val recorded =
+      if (!Files.exists(manifestPath(iter))) None
+      else Option(new ObjectMapper().readTree(manifestJson(iter)).get("schema"))
+    val reader = recorded.fold(spark.read)(s =>
+      spark.read.schema(DataType.fromJson(s.toString).asInstanceOf[StructType]))
+    reader.parquet(snapDir(iter))
+  }
 
   /** Resume point: (iteration, snapshot) for the latest commit. */
   def resume(): Option[(Int, DataFrame)] =

@@ -1,11 +1,13 @@
 package graft.core
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.lang.ref.WeakReference
 
 import org.apache.spark.SparkEnv
 import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.CachedData
+import org.apache.spark.sql.functions.{col, count, greatest, least, lit, max, min}
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
 
@@ -17,13 +19,17 @@ import org.apache.spark.storage.StorageLevel
   * each operator takes its cap as a parameter default, so a test or a
   * benchmark can still pin either route.
   *
-  * [[gate]] is the one local gate. The helpers after it build the
-  * driver-local kernels' index structures from the collected rows:
-  * sorted distinct ids, dense indices and an undirected CSR, all
-  * primitive arrays. Every output is a deterministic function of the
-  * collected rows (ids sorted, indices are ranks, CSR slots filled in
-  * row order), so kernels built on them inherit their callers' parity
-  * arguments.
+  * [[gate]] is the one local gate. It reads an input's count from
+  * [[stats]], one aggregate that PageRank's CSR gate reads too, and
+  * both keep what they compute for the input the caller cached last
+  * (see `Shared`): the operators that run one after another on one
+  * cached edge frame count it once and collect it once. The helpers
+  * after it build the driver-local kernels' index structures from the
+  * collected rows: sorted distinct ids, dense indices and an undirected
+  * CSR, all primitive arrays. Every output is a deterministic function
+  * of the collected rows (ids sorted, indices are ranks, CSR slots
+  * filled in row order), so kernels built on them inherit their
+  * callers' parity arguments.
   */
 object Route {
 
@@ -52,37 +58,119 @@ object Route {
   /** An input's (src, dst) projection, read through a cache: the
     * input's own if the session already caches it (or the projection),
     * else one [[hold]] made, which [[release]] drops. A cache someone
-    * else made is never dropped.
+    * else made is never dropped. `entry` is that someone else's cache
+    * entry, the key of the shared state; None when [[hold]] cached the
+    * input itself.
     */
-  final class Held private[Route] (val edges: DataFrame, cachedHere: Option[DataFrame]) {
+  final class Held private[Route] (val edges: DataFrame, cachedHere: Option[DataFrame],
+                                   private[Route] val entry: Option[CachedData]) {
     def release(): Unit = cachedHere.foreach(_.unpersist(false))
   }
 
   def hold(input: DataFrame): Held = {
-    def isCached(df: DataFrame) = input.sparkSession.sharedState.cacheManager
-      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
-    val cached = isCached(input) || isCached(input.select(col("src"), col("dst")))
-    if (!cached) input.persist(StorageLevel.MEMORY_AND_DISK)
-    // projected after the persist, so its plan reads the cache
-    new Held(input.select(col("src"), col("dst")), if (cached) None else Some(input))
+    val cacheManager = input.sparkSession.sharedState.cacheManager
+    def entryOf(df: DataFrame) =
+      cacheManager.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    entryOf(input).orElse(entryOf(input.select(col("src"), col("dst")))) match {
+      case Some(e) => new Held(input.select(col("src"), col("dst")), None, Some(e))
+      case None =>
+        input.persist(StorageLevel.MEMORY_AND_DISK)
+        // projected after the persist, so its plan reads the cache
+        new Held(input.select(col("src"), col("dst")), Some(input), None)
+    }
   }
 
+  /** An edge input's row count and (least, greatest) endpoint id; no
+    * range when no row has an id.
+    */
+  final case class Stats(count: Long, idRange: Option[(Long, Long)])
+
   sealed trait Gate
-  /** At or under the cap: the rows in `collect()` order; nothing held. */
-  final case class Local(src: Array[Long], dst: Array[Long]) extends Gate
+  /** At or under the cap: the rows in `collect()` order, with their
+    * dense index and undirected CSR built on first use. One value may
+    * serve many calls, so no reader writes to any of its arrays.
+    */
+  final class Local(val src: Array[Long], val dst: Array[Long]) extends Gate {
+    /** [[Route.dense]] of the rows. */
+    lazy val dense: (Array[Long], Array[Int], Array[Int]) = Route.dense(src, dst)
+    /** [[Route.undirectedCsr]] over [[dense]]. */
+    lazy val csr: (Array[Int], Array[Int]) = {
+      val (ids, s, d) = dense
+      undirectedCsr(ids.length, s, d)
+    }
+  }
+  object Local {
+    def unapply(l: Local): Some[(Array[Long], Array[Long])] = Some((l.src, l.dst))
+  }
   /** Above the cap: the held projection and its row count. The
     * distributed path releases it once it no longer reads it.
     */
   final case class Distributed(held: Held, count: Long) extends Gate
 
-  /** The local gate: holds the input's (src, dst) projection, counts
-    * it, and collects it when the count is at most `cap`.
+  /** The state of one caller-cached edge input: its [[Stats]] and, once
+    * a gate under its cap has collected it, its [[Local]].
+    *
+    * The key is the identity of the input's cache entry (the
+    * `CachedData` the session's cache manager returns for the input or
+    * its (src, dst) projection), held weakly. A different input, or the
+    * same one unpersisted and cached again (or recached by a refresh),
+    * finds a different entry and computes its state afresh, which then
+    * replaces this one: there is one entry at a time, and its arrays
+    * are kept only for an input of at most [[LocalEdgeCap]] edges, so
+    * the driver holds at most ~280 MB for it (the rows, index and CSR
+    * at the cap, what one local call allocates anyway). An input [[hold]] caches itself is never stored.
+    * Once its cache entry is gone the state is never served again; it
+    * is dropped when replaced, or at the next call after the entry is
+    * garbage-collected.
+    */
+  private final class Shared(val key: WeakReference[CachedData], val stats: Stats) {
+    @volatile var local: Option[Local] = None
+  }
+  private var shared: Option[Shared] = None // guarded by this
+
+  private def sharedFor(held: Held): Option[Shared] = held.entry.flatMap { e =>
+    synchronized {
+      if (shared.exists(_.key.get == null)) shared = None
+      shared.filter(_.key.get eq e)
+    }
+  }
+
+  /** The input's [[Stats]], from one aggregate, or from the shared state
+    * when it holds this input's cache entry.
+    */
+  def stats(held: Held): Stats = sharedFor(held).map(_.stats).getOrElse {
+    val r = held.edges.agg(count(lit(1)), min(least(col("src"), col("dst"))).cast("long"),
+      max(greatest(col("src"), col("dst"))).cast("long")).head()
+    val s = Stats(r.getLong(0), if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
+    held.entry.foreach(e => synchronized { shared = Some(new Shared(new WeakReference(e), s)) })
+    s
+  }
+
+  /** The local gate: holds the input's (src, dst) projection, and
+    * collects it when its count is at most `cap`.
     */
   def gate(input: DataFrame, cap: Long): Gate = {
     val held = hold(input)
-    val count = held.edges.count()
-    if (count > cap) Distributed(held, count)
-    else try { val (s, d) = collect(held.edges); Local(s, d) } finally held.release()
+    val routed = try gate(held, cap) catch { case t: Throwable => held.release(); throw t }
+    if (routed.isInstanceOf[Local]) held.release()
+    routed
+  }
+
+  /** The local gate over a projection the caller holds and releases:
+    * [[Distributed]] over `held` when its count is above `cap`, else
+    * the collected rows, read from the shared state when they are there.
+    */
+  def gate(held: Held, cap: Long): Gate = {
+    val rows = stats(held).count
+    if (rows > cap) return Distributed(held, rows)
+    val slot = sharedFor(held)
+    slot.flatMap(_.local).getOrElse {
+      val (s, d) = collect(held.edges)
+      val local = new Local(s, d)
+      // a caller's larger cap does not raise the bound on what is kept
+      if (rows <= LocalEdgeCap) slot.foreach(_.local = Some(local))
+      local
+    }
   }
 
   /** A frame of two bigint columns as two primitive arrays, in

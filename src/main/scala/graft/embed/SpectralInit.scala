@@ -57,12 +57,11 @@ object SpectralInit {
     // empty positions frame
     def empty = Seq.empty[(Long, Seq[Double])].toDF("id", "pos")
     val (input, eCount, held) = Route.gate(edges, localEdgeCap) match {
-      case Route.Local(s, t) =>
-        if (s.isEmpty) return empty
-        val (ids, sIdx, tIdx) = Route.dense(s, t)
-        if (ids.length <= localCap)
-          return runLocal(spark, ids, sIdx, tIdx, d, maxIter, seed, gramTol)
-        (edges, s.length.toLong, None)
+      case l: Route.Local =>
+        if (l.src.isEmpty) return empty
+        if (l.dense._1.length <= localCap)
+          return runLocal(spark, l, d, maxIter, seed, gramTol)
+        (edges, l.src.length.toLong, None)
       case Route.Distributed(h, rows) =>
         if (rows == 0) { h.release(); return empty }
         (h.edges, rows, Some(h))
@@ -273,12 +272,12 @@ object SpectralInit {
     * y = (x + Mx)/2 update, same Gram/Cholesky orthonormalization and
     * stop.
     */
-  private def runLocal(spark: SparkSession, ids: Array[Long], sIdx: Array[Int],
-                       dIdx: Array[Int], d: Int,
+  private def runLocal(spark: SparkSession, local: Route.Local, d: Int,
                        maxIter: Int, seed: Long, gramTol: Double): DataFrame = {
     val k = d + 1
+    val ids = local.dense._1
     val n = ids.length
-    val (rowPtr, colIdx) = Route.undirectedCsr(n, sIdx, dIdx)
+    val (rowPtr, colIdx) = local.csr
     val degA = Array.tabulate(n)(v => rowPtr(v + 1) - rowPtr(v))
     // NOTE: 1/sqrt(deg_v * deg_u) as ONE sqrt, exactly like the
     // distributed path's `w` column (sqrt(a*b) != sqrt(a)*sqrt(b) in

@@ -1,6 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 import graft.algos.PageRank
 import graft.core.CheckpointManager
@@ -102,5 +106,58 @@ class CheckpointSpec extends SparkSuite {
     val (iter, snap) = cm.resume().get
     assert(iter == 1)
     assert(snap.collect().head.getDouble(1) == 0.6)
+  }
+
+  private def manifestRows(json: String): Long =
+    "\"rows\":(\\d+)".r.findFirstMatchIn(json).get.group(1).toLong
+
+  test("commit runs one job and counts rows from the Parquet footers") {
+    val dir = Files.createTempDirectory("graft-ckpt4").toString
+    val cm = new CheckpointManager(spark, dir)
+    val df = spark.range(0, 40, 1, 4)
+      .where(col("id") < 10 || col("id") >= 30) // partitions 1 and 2 are empty
+      .select(col("id"), (col("id") * 0.5).as("rank"))
+    assert(df.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ == 0) == 2)
+    var reread: org.apache.spark.sql.DataFrame = null
+    assert(jobsRun { reread = cm.commit(0, df, Map("err" -> 1.0)) } == 1)
+    assert(manifestRows(cm.manifestJson(0)) == df.count())
+    assert(reread.schema.map(f => (f.name, f.dataType)) == df.schema.map(f => (f.name, f.dataType)))
+    assert(reread.collect().sortBy(_.getLong(0)).toSeq == df.collect().sortBy(_.getLong(0)).toSeq)
+  }
+
+  test("a manifest without its schema still resumes") {
+    val dir = Files.createTempDirectory("graft-ckpt5").toString
+    val cm = new CheckpointManager(spark, dir)
+    import spark.implicits._
+    cm.commit(0, Seq((1L, 0.5), (2L, 0.25)).toDF("id", "rank"), Map("err" -> 1.0))
+    val withSchema = cm.resume().get._2.collect().toSeq
+    val manifest = Paths.get(dir, "manifest-0.json")
+    val json = new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
+    val stripped = json.replaceAll("\"schema\":\\{.*\\},\n", "")
+    assert(stripped != json && !stripped.contains("schema"))
+    Files.write(manifest, stripped.getBytes(StandardCharsets.UTF_8))
+    val (iter, snap) = new CheckpointManager(spark, dir).resume().get
+    assert(iter == 0)
+    assert(snap.collect().toSeq == withSchema)
+  }
+
+  test("a checkpointed fixed-superstep PageRank superstep runs at most 11 jobs") {
+    val e = Generators.ba(spark, 2000, 3, 7L).persist(StorageLevel.MEMORY_AND_DISK)
+    e.count()
+    try {
+      def ranks(r: PageRank.Result) = r.ranks.collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+      val want = ranks(PageRank.runUndirected(spark, e,
+        PageRank.Config(tol = 0.0, maxIter = 1, engine = "rel")))
+      val cm = new CheckpointManager(spark, Files.createTempDirectory("graft-ckpt6").toString)
+      var r: PageRank.Result = null
+      val jobs = jobsRun {
+        r = PageRank.runUndirected(spark, e, PageRank.Config(tol = 0.0, maxIter = 1,
+          engine = "rel", checkpoint = Some(cm)))
+        r.ranks.count()
+      }
+      assert(jobs <= 11, s"$jobs jobs")
+      assert(cm.latestIteration().contains(0))
+      assert(ranks(r) == want)
+    } finally e.unpersist(false)
   }
 }

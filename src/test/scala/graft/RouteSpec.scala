@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.algos._
@@ -8,14 +10,129 @@ import graft.core.{Lineage, Route}
 import graft.embed.{ForceLayout, SpectralInit}
 
 /** The routing module: the local gate's cap boundary, its primitive
-  * collect, the caches it leaves alone, and the partitioning a
-  * truncatePartitioned frame keeps.
+  * collect, the state it shares between calls on one cached input, the
+  * caches it leaves alone, and the partitioning a truncatePartitioned
+  * frame keeps.
   */
 class RouteSpec extends SparkSuite {
 
   private def isCached(df: DataFrame): Boolean =
     spark.sharedState.cacheManager
       .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined
+
+  private def baPairs(n: Int, seed: Long): Seq[(Long, Long)] =
+    graft.generators.Generators.ba(spark, n, 3, seed)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+
+  private def cachedEdgesOf(pairs: Seq[(Long, Long)]): DataFrame = {
+    val e = edgesOf(pairs).persist()
+    e.count()
+    e
+  }
+
+  private def localOf(g: Route.Gate): Route.Local = g match {
+    case l: Route.Local => l
+    case other => fail(s"want the local route, got $other")
+  }
+
+  private def pairsOf(l: Route.Local): Seq[(Long, Long)] = l.src.zip(l.dst).sorted.toSeq
+
+  /** The rows `edgesOf(pairs)` holds, sorted. */
+  private def canonical(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    pairs.map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct.sorted
+
+  /** Every array a local kernel reads, hashed. */
+  private def checksum(l: Route.Local): Seq[Int] = {
+    val (ids, s, d) = l.dense
+    val (rowPtr, colIdx) = l.csr
+    import java.util.Arrays.{hashCode => h}
+    Seq(h(l.src), h(l.dst), h(ids), h(s), h(d), h(rowPtr), h(colIdx))
+  }
+
+  test("operators in sequence on one cached frame return what each returns alone") {
+    val g = baPairs(300, 11L)
+    def rows(df: DataFrame): Seq[Row] = df.collect().sortBy(_.getLong(0)).toSeq
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "pagerank" -> (e => PageRank.runUndirected(spark, e).ranks),
+      "cc" -> (e => ConnectedComponents.run(spark, e)),
+      "lpa" -> (e => LabelPropagation.run(spark, e, 3)),
+      "triangles" -> (e => TriangleCount.globalCount(spark, e)),
+      "spectral" -> (e => SpectralInit.run(spark, e, d = 2, maxIter = 10)),
+      "layout" -> (e => ForceLayout.run(spark, e,
+        SpectralInit.run(spark, e, d = 2, maxIter = 10), 1)))
+    val e = cachedEdgesOf(g)
+    val shared = try {
+      val local = localOf(Route.gate(e, Route.LocalEdgeCap))
+      val before = checksum(local)
+      val out = ops.map { case (name, op) => name -> rows(op(e)) }.toMap
+      // the same arrays served the whole sequence, and none was written
+      assert(Route.gate(e, Route.LocalEdgeCap) eq local)
+      assert(checksum(local) == before)
+      out
+    } finally e.unpersist(true)
+    ops.foreach { case (name, op) =>
+      // re-cached: a new cache entry, so this call computes its own state
+      val f = cachedEdgesOf(g)
+      try assert(rows(op(f)) == shared(name), name) finally f.unpersist(true)
+    }
+  }
+
+  test("the second gated operator on a cached input runs no job") {
+    val g = baPairs(200, 13L)
+    val e = cachedEdgesOf(g)
+    try {
+      assert(jobsRun(ConnectedComponents.run(spark, e)) > 0)
+      // another frame over the same cache entry reads the shared state
+      val same = edgesOf(g)
+      assert(jobsRun(LabelPropagation.run(spark, same, 2)) == 0)
+      assert(jobsRun(TriangleCount.globalCount(spark, same)) == 0)
+    } finally e.unpersist(true)
+  }
+
+  test("a re-persisted source is collected again; an uncached input is never stored") {
+    val dir = Files.createTempDirectory("graft-route").resolve("edges").toString
+    edgesOf(K4).write.parquet(dir)
+    val df = spark.read.parquet(dir).persist()
+    df.count()
+    assert(pairsOf(localOf(Route.gate(df, Route.LocalEdgeCap))) == canonical(K4))
+    df.unpersist(true)
+    edgesOf(K8).write.mode("overwrite").parquet(dir)
+    df.persist()
+    spark.catalog.refreshByPath(dir) // re-lists the source's files
+    try {
+      assert(df.count() == K8.size)
+      assert(pairsOf(localOf(Route.gate(df, Route.LocalEdgeCap))) == canonical(K8))
+    } finally df.unpersist(true)
+
+    val path = P10.map { case (a, b) => (a + 1000, b + 1000) }
+    val uncached = edgesOf(path)
+    assert(pairsOf(localOf(Route.gate(uncached, Route.LocalEdgeCap))) == path.sorted)
+    assert(!isCached(uncached))
+    assert(jobsRun(Route.gate(uncached, Route.LocalEdgeCap)) > 0)
+  }
+
+  test("a stored count above a smaller cap routes distributed") {
+    val g = baPairs(200, 17L)
+    val e = cachedEdgesOf(g)
+    try {
+      val n = e.count()
+      val local = localOf(Route.gate(e, Route.LocalEdgeCap))
+      var gate: Route.Gate = null
+      assert(jobsRun { gate = Route.gate(e, n - 1) } == 0)
+      gate match {
+        case Route.Distributed(held, count) =>
+          assert(count == n)
+          assert(held.edges.count() == n)
+          held.release()
+        case other => fail(s"count == cap + 1 should go distributed, got $other")
+      }
+      assert(isCached(e))
+      val distributed = TriangleCount.globalCount(spark, e, localEdgeCap = n - 1).head().getLong(0)
+      val local1 = TriangleCount.globalCount(spark, e).head().getLong(0)
+      assert(distributed == local1 && local1 > 0)
+      assert(Route.gate(e, Route.LocalEdgeCap) eq local)
+    } finally e.unpersist(true)
+  }
 
   test("gate: a count equal to the cap goes local, cap + 1 goes distributed") {
     val e = edgesOf(K8)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,9 +26,25 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   /** Stages Spark completes while `body` runs. */
   def stagesRun(body: => Any): Int = {
     @volatile var stages = 0
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages += 1
-    }
+    })(body)
+    stages
+  }
+
+  /** Jobs Spark ends while `body` runs. */
+  def jobsRun(body: => Any): Int = {
+    @volatile var jobs = 0
+    listening(new SparkListener {
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = jobs += 1
+    })(body)
+    jobs
+  }
+
+  /** Runs `body` with `listener` on the listener bus; the drains before
+    * and after make it see exactly the events `body` posts.
+    */
+  private def listening(listener: SparkListener)(body: => Any): Unit = {
     ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try body
@@ -36,7 +52,6 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
       ListenerBusDrain(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
     }
-    stages
   }
 
   /** Reference fixtures (/root/reference/tests/conftest.py:16-27 and
