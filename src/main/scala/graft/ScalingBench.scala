@@ -29,10 +29,9 @@ object ScalingBench {
     */
   /** Returns (edges, median wall secs, median wall eps, median ENGINE
     * superstep eps). The engine eps excludes the one-time index build
-    * (CSR assembly / target resolution / link pre-shuffle) — the number
-    * the north rule's "edges/sec per superstep" names, and the one that
-    * is amortized at 100 TB where supersteps dominate. Wall secs keep
-    * the build visible.
+    * (CSR assembly / link pre-shuffle) — the number the north rule's
+    * "edges/sec per superstep" names, and the one that is amortized at
+    * 100 TB where supersteps dominate. Wall secs keep the build visible.
     */
   private def runAt(cores: Int, nVerts: Long, p: Double,
                     supersteps: Int, engine: String = "rel"): (Long, Double, Double, Double) = {
@@ -55,23 +54,10 @@ object ScalingBench {
     val e = graft.generators.Generators.erSparse(spark, nVerts, p, 42)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val m = e.count()
-    // csrzip: the E-sized target-resolution index is built ONCE per
-    // level and reused by every pass — the deployment posture (index a
-    // graph snapshot once, iterate many times); wall then measures the
-    // superstep runs, not repeated builds
-    val zipIndex =
-      if (engine == "csrzip") Some(graft.algos.PageRankCsrZip.buildIndex(spark, e))
-      else None
     def onePass(): (Double, Double) = {
       val t0 = System.nanoTime()
       val engineEps =
-        if (engine == "csrzip") {
-          // result already materialized inside run() (superstep chain
-          // ends in an eager truncate)
-          graft.algos.PageRankCsrZip.runIndexed(spark, zipIndex.get,
-            maxIter = supersteps, tol = 0.0, alpha = 0.85)
-            .edgesPerSecPerSuperstep
-        } else if (engine == "csr") {
+        if (engine == "csr") {
           val r = graft.algos.PageRankCsr.run(spark, e, maxIter = supersteps)
           r.ranks.agg(org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1))).head()
@@ -99,7 +85,6 @@ object ScalingBench {
     val epss = passes.map(_._2).sorted
     val secs = median(walls)
     val engineEps = median(epss)
-    zipIndex.foreach(_.release())
     spark.stop()
     System.err.println(f"[scaling] cores=$cores engine=$engine " +
       f"walls=${walls.map(p => f"$p%.1f").mkString(",")} " +
@@ -203,12 +188,13 @@ object ScalingBench {
     if (args.length >= 2) {
       val cores = args(1).toInt
       val engine = if (args.length >= 3) args(2) else "rel"
+      require(engine == "rel" || engine == "csr", s"engine must be rel or csr, got $engine")
       val (m, s, eps, engineEps) = runAt(cores, nVerts, p, supersteps, engine)
       println(s"""{"metric":"pagerank_fixed8","engine":"$engine","cores":$cores,""" +
         s""""n_vertices":$nVerts,"edges":$m,"secs":$s,"eps":$eps,""" +
         s""""superstep_eps":$engineEps}""")
     } else {
-      Seq("rel", "csr", "csrzip").foreach { engine =>
+      Seq("rel", "csr").foreach { engine =>
         val (m8, s8, eps8, se8) = runAt(8, nVerts, p, supersteps, engine)
         val (m32, s32, eps32, se32) = runAt(32, nVerts, p, supersteps, engine)
         val eff = se32 / (4.0 * se8)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.Route
+import graft.core.{DetRandom, Route}
 import graft.graph.Edges
 
 /** Sampled-source closeness centrality — the SCALE path for the
@@ -160,17 +160,10 @@ object ApproxCloseness {
 
   /** The distributed route's source sample on the driver: the k ids
     * with the smallest (xxhash64(id, seed), id), in that order.
-    * xxhash64 over two columns chains XXH64.hashLong from seed 42
-    * through the id, then through `seed`.
     */
   private def hashSample(ids: Array[Long], k: Int, seed: Long): Array[Long] = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    if (k <= 0) return Array.empty[Long]
-    val h = ids.map(id => XXH64.hashLong(seed, XXH64.hashLong(id, 42L)))
-    val cut = { val c = h.clone(); java.util.Arrays.sort(c); c(k - 1) }
+    val h = ids.map(id => DetRandom.xxhash64Local(id, seed))
     // ids ascend, so index order breaks hash ties by id
-    val below = ids.indices.filter(h(_) < cut)
-    (below ++ ids.indices.filter(h(_) == cut).take(k - below.length))
-      .sortBy(i => (h(i), i)).map(ids(_)).toArray
+    DetRandom.smallestByHash(h, k).sortBy(i => (h(i), i)).map(ids(_))
   }
 }

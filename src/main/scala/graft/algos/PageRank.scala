@@ -36,7 +36,6 @@ object PageRank {
       maxIter: Int = 100,
       checkpoint: Option[CheckpointManager] = None,
       checkpointInterval: Int = 1,
-      numPartitions: Option[Int] = None,
       saltedAgg: Boolean = false,
       salts: Int = 16,
       // "auto" routes dense-id graphs whose V-row state fits a broadcast
@@ -65,9 +64,9 @@ object PageRank {
     * parity 3e-20). The relational join+agg plan remains the engine for
     * everything the route cannot prove cheap-and-equivalent: sparse id
     * spaces (n enters the teleport base, so density is semantic),
-    * checkpointed/resumable runs, salted aggregation, explicit
-    * partitioning, or V beyond the broadcast cap. The gate reads the
-    * held edge projection's [[Route.stats]] (one aggregate, or none when
+    * checkpointed/resumable runs, salted aggregation, or V beyond the
+    * broadcast cap. The gate reads the held edge projection's
+    * [[Route.stats]] (one aggregate, or none when
     * an earlier call on the same cached input ran it), and the CSR build
     * and the relational fallback read the same projection
     * ([[Route.hold]]), so an uncached caller pipeline runs once; the
@@ -78,8 +77,7 @@ object PageRank {
                     cfg: Config = Config()): Result = {
     require(cfg.engine == "auto" || cfg.engine == "rel",
       s"""Config.engine must be "auto" or "rel", got "${cfg.engine}"""")
-    val tryRoute = cfg.engine != "rel" && cfg.checkpoint.isEmpty &&
-      !cfg.saltedAgg && cfg.numPartitions.isEmpty
+    val tryRoute = cfg.engine != "rel" && cfg.checkpoint.isEmpty && !cfg.saltedAgg
     if (!tryRoute) return run(spark, Edges.neighbors(edges).toDF("src", "dst"), cfg)
     val held = Route.hold(edges)
     try {
@@ -102,7 +100,7 @@ object PageRank {
     * links for exact nx parity).
     */
   def run(spark: SparkSession, linksRaw: DataFrame, cfg: Config): Result = {
-    val p = cfg.numPartitions.getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     // Pre-shuffle the big immutable side once; every superstep's gather
     // join then reuses this exchange.

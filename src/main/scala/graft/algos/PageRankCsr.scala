@@ -32,10 +32,8 @@ object PageRankCsr {
     * tol <= 0 runs exactly `maxIter` supersteps.
     */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int,
-          tol: Double = 0.0, alpha: Double = 0.85,
-          partitions: Int = 0): Result =
-    runImpl(spark, edges, maxIter, tol, alpha, partitions,
-      requireDense = false).get
+          tol: Double = 0.0, alpha: Double = 0.85): Result =
+    runImpl(spark, edges, maxIter, tol, alpha, requireDense = false).get
 
   /** Routing entry for PageRank.runUndirected's "auto" engine: runs only
     * if the vertex ids are verifiably DENSE 0..maxId (every slot has
@@ -47,17 +45,13 @@ object PageRankCsr {
     * nx.pagerank on the real vertex set.
     */
   def runIfDense(spark: SparkSession, edges: DataFrame, maxIter: Int,
-                 tol: Double = 0.0, alpha: Double = 0.85,
-                 partitions: Int = 0): Option[Result] =
-    runImpl(spark, edges, maxIter, tol, alpha, partitions,
-      requireDense = true)
+                 tol: Double = 0.0, alpha: Double = 0.85): Option[Result] =
+    runImpl(spark, edges, maxIter, tol, alpha, requireDense = true)
 
   private def runImpl(spark: SparkSession, edges: DataFrame, maxIter: Int,
-                      tol: Double, alpha: Double, partitions: Int,
+                      tol: Double, alpha: Double,
                       requireDense: Boolean): Option[Result] = {
-    // dense ids after densification fit 2^31 here (the general CsrBlock
-    // keeps Long ids for the 10^12-vertex regime)
-    val blocks = CsrBlocks.packed(spark, Edges.neighbors(edges), partitions)
+    val blocks = CsrBlocks.packed(spark, Edges.neighbors(edges))
     val sc = spark.sparkContext
 
     // n, m and the degree vector in one pass over the blocks

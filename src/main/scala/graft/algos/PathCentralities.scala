@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Route
+
 /** Path-based centralities (betweenness / closeness / load) as
   * SMALL-GRAPH ORACLES for the correlation harness — the reference
   * itself computes these with NetworkX on the host and SKIPS them for
@@ -29,21 +31,21 @@ object PathCentralities {
 
   private val MaxVertices = 20000
 
+  /** Sorted distinct ids and, per id index, its sorted neighbour
+    * indices (both directions of every row, duplicates kept).
+    */
   private def adjacency(edges: DataFrame): (Array[Long], Array[Array[Int]]) = {
-    val pairs = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val ids = pairs.flatMap(p => Seq(p._1, p._2)).distinct.sorted
+    val (s, d) = Route.collect(edges.select(col("src").cast("long"), col("dst").cast("long")))
+    val (ids, sIdx, dIdx) = Route.dense(s, d)
     require(ids.length <= MaxVertices,
       s"PathCentralities is a small-graph oracle (n <= $MaxVertices); " +
         "the reference skips path centralities at this scale too")
-    val idx = ids.zipWithIndex.toMap
-    val adj = Array.fill(ids.length)(mutable.ArrayBuffer[Int]())
-    pairs.foreach { case (a, b) =>
-      val (i, j) = (idx(a), idx(b))
-      adj(i) += j
-      adj(j) += i
-    }
-    (ids, adj.map(_.toArray.sorted))
+    val (rowPtr, colIdx) = Route.undirectedCsr(ids.length, sIdx, dIdx)
+    (ids, Array.tabulate(ids.length) { v =>
+      val nbrs = java.util.Arrays.copyOfRange(colIdx, rowPtr(v), rowPtr(v + 1))
+      java.util.Arrays.sort(nbrs)
+      nbrs
+    })
   }
 
   private def bfs(adj: Array[Array[Int]], s: Int):

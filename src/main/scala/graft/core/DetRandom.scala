@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 /** Deterministic, retry-safe randomness for distributed generation.
@@ -36,13 +37,41 @@ object DetRandom {
   def hash64(seed: Long, cols: Column*): Column =
     xxhash64((lit(seed) +: cols): _*)
 
-  /** Driver-local replica of `uniform(seed, lit(id))` for the
-    * small-graph fast paths: Spark's xxhash64 chains XXH64.hashLong
-    * over the row's fields starting from seed 42, so the column and
-    * this function produce IDENTICAL doubles for the same (seed, id).
+  /** Driver-local replica of Spark's `xxhash64(cols...)` over bigint
+    * columns: it chains XXH64.hashLong through the fields in order,
+    * starting from seed 42, so this returns the column's bits exactly.
     */
-  def uniformLocal(seed: Long, id: Long): Double = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    (XXH64.hashLong(id, XXH64.hashLong(seed, 42L)) & Mask52) * Inv52
+  def xxhash64Local(fields: Long*): Long =
+    fields.foldLeft(42L)((h, v) => XXH64.hashLong(v, h))
+
+  /** Driver-local replica of `uniform(seed, lit(id))` for the
+    * small-graph fast paths: the same bits as the column, so the same
+    * doubles for the same (seed, id).
+    */
+  def uniformLocal(seed: Long, id: Long): Double =
+    (xxhash64Local(seed, id) & Mask52) * Inv52
+
+  /** Indices of the k smallest `(hashes(i), i)` (k at most
+    * `hashes.length`), ascending by index: the driver-side set of
+    * `orderBy(hash, index).limit(k)`. Every index hashing below the k-th
+    * smallest hash is in; at that hash the smallest indices fill the
+    * rest.
+    */
+  def smallestByHash(hashes: Array[Long], k: Int): Array[Int] = {
+    if (k <= 0) return Array.empty[Int]
+    val cut = { val h = hashes.clone(); java.util.Arrays.sort(h); h(k - 1) }
+    var atCut = k - hashes.count(_ < cut)
+    val picked = new Array[Int](k)
+    var w = 0
+    var i = 0
+    while (w < k) {
+      if (hashes(i) < cut || (hashes(i) == cut && atCut > 0)) {
+        if (hashes(i) == cut) atCut -= 1
+        picked(w) = i
+        w += 1
+      }
+      i += 1
+    }
+    picked
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{CheckpointManager, Ids, Lineage, Route}
+import graft.core.{CheckpointManager, DetRandom, Ids, Lineage, Route}
 import graft.functions.SampleKnnAgg
 import graft.graph.{CsrBlocks, PackedCsr}
 
@@ -78,7 +78,7 @@ object ForceLayout {
       // driver from the edge list Route.gate collects: the eids are the
       // identical (src, dst)-sort dense ranks Ids.dense produces and the
       // sample is the identical smallest-(xxhash64(eid), eid) set
-      // (XXH64.hashLong replica, same bits), so positions are
+      // (DetRandom.xxhash64Local, same bits), so positions are
       // unchanged. The LAYOUT LOOP itself is never local-gated — the
       // supersteps stay distributed at every scale. Above the cap the
       // Ids.dense + top-k jobs run unchanged.
@@ -178,28 +178,9 @@ object ForceLayout {
           .map(i => (bc.value._1(i), bc.value._2(i), i.toLong))
           .toDF("src", "dst", "eid")
         if (cacheEdges) df.persist(StorageLevel.MEMORY_AND_DISK)
-        // sample: the sampleSize smallest (xxhash64(eid), eid) —
-        // XXH64.hashLong(eid, 42) is Spark's xxhash64(col) bit-for-bit
-        // (the DetRandom.uniformLocal replica argument). Every eid hashing
-        // below the sampleSize-th smallest hash is in; at that hash the
-        // smallest eids fill the rest.
-        import org.apache.spark.sql.catalyst.expressions.XXH64
-        val hashes = Array.tabulate(n)(e => XXH64.hashLong(e.toLong, 42L))
-        val picked = new Array[Int](sampleSize)
-        if (sampleSize > 0) {
-          val cut = { val h = hashes.clone(); java.util.Arrays.sort(h); h(sampleSize - 1) }
-          var atCut = sampleSize - hashes.count(_ < cut)
-          var w = 0
-          var e = 0
-          while (w < sampleSize) {
-            if (hashes(e) < cut || (hashes(e) == cut && atCut > 0)) {
-              if (hashes(e) == cut) atCut -= 1
-              picked(w) = e
-              w += 1
-            }
-            e += 1
-          }
-        }
+        // sample: the sampleSize smallest (xxhash64(eid), eid), by eid
+        val picked = DetRandom.smallestByHash(
+          Array.tabulate(n)(e => DetRandom.xxhash64Local(e.toLong)), sampleSize)
         Init(df, n.toLong, picked.map(_.toLong), picked.map(srcSorted(_)),
           picked.map(dstSorted(_)), () => { df.unpersist(false); bc.unpersist(false) })
       case Route.Distributed(held, edgeCount) =>

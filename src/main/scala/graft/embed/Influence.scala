@@ -3,7 +3,7 @@ package graft.embed
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.DetRandom
+import graft.core.{DetRandom, Route}
 import graft.graph.Edges
 
 /** Influence maximization — the Spark re-expression of
@@ -114,10 +114,14 @@ object Influence {
     * influence bench is likewise a host-local loop over an n=200 graph,
     * /root/reference/run_benchmarks.py:379-460).
     */
-  def collectNeighbors(edges: DataFrame): Map[Long, Array[Long]] =
-    edges.select("src", "dst").collect()
-      .flatMap(r => Seq(r.getLong(0) -> r.getLong(1), r.getLong(1) -> r.getLong(0)))
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+  def collectNeighbors(edges: DataFrame): Map[Long, Array[Long]] = {
+    val (s, d) = Route.collect(edges.select(col("src").cast("long"), col("dst").cast("long")))
+    val (ids, sIdx, dIdx) = Route.dense(s, d)
+    // the CSR fills each row's slots in collected row order
+    val (rowPtr, colIdx) = Route.undirectedCsr(ids.length, sIdx, dIdx)
+    ids.indices.map(v =>
+      ids(v) -> Array.tabulate(rowPtr(v + 1) - rowPtr(v))(j => ids(colIdx(rowPtr(v) + j)))).toMap
+  }
 
   /** Driver-local IC with the PORTABLE coin — returns counts identical
     * to icInfluence(portableHash = true) (both compute the reachability

@@ -6,7 +6,7 @@ import graft.ann.Ann
 import graft.text.Dedup
 
 /** Round-3 additions: SimHash scale guards, bounded-top-k ANN,
-  * multiprobe SRP-LSH, zip-join CSR PageRank, portable-coin IC.
+  * multiprobe SRP-LSH, portable-coin IC.
   */
 class Round3Spec extends SparkSuite {
 
@@ -157,32 +157,6 @@ class Round3Spec extends SparkSuite {
       .toDF("vec_id", "embedding")
     val capped = Ann.embeddingNearDups(same, threshold = 0.9, maxBucket = 10)
     assert(capped.count() == 0)
-  }
-
-  // --- zip-join CSR PageRank ------------------------------------------------
-
-  test("zip-join CSR PageRank matches the relational engine to 1e-12") {
-    val e = graft.generators.Generators.ba(spark, 300, 3, 13)
-    val rel = graft.algos.PageRank.fixedIterUndirected(e, 8)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val zip = graft.algos.PageRankCsrZip.run(spark, e, maxIter = 8)
-    assert(zip.iterations == 8)
-    val got = zip.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(got.keySet == rel.keySet)
-    got.foreach { case (id, v) =>
-      assert(math.abs(rel(id) - v) < 1e-12, s"v$id: ${rel(id)} vs $v")
-    }
-    // convergent mode agrees with the relational convergent engine
-    // engine pinned: cross-engine parity (relational vs zip), see
-    // Round2Spec note
-    val relC = graft.algos.PageRank.runUndirected(spark, e,
-      graft.algos.PageRank.Config(tol = 1e-8, maxIter = 100,
-        engine = "rel"))
-    val zipC = graft.algos.PageRankCsrZip.run(spark, e, maxIter = 100, tol = 1e-8)
-    val relM = relC.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    zipC.ranks.collect().foreach { r =>
-      assert(math.abs(relM(r.getLong(0)) - r.getDouble(1)) < 1e-9)
-    }
   }
 
   // --- spectral local/distributed parity -------------------------------------

@@ -2,47 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Round-4 receipts: bounded-memory csrzip superstep at a
-  * deliberately large V/P grid, plus the other scale-edge guards.
-  */
+/** Round-4 receipts: the scale-edge guards. */
 class Round4Spec extends SparkSuite {
-
-  test("zip-join CSR PageRank: V=2M at P=64 parity, O(V/P) live task memory") {
-    import spark.implicits._
-    val v = 2000000L
-    // deterministic chord graph: ring i--(i+1) plus chord i--(31i+7),
-    // all mod V — connected, degree-varying, built scan-side
-    val ids = spark.range(v).toDF("id")
-    val pairs = ids.select(col("id").as("src"), ((col("id") + 1) % v).as("dst"))
-      .union(ids.select(col("id").as("src"),
-        ((col("id") * 31 + 7) % v).as("dst")))
-    val e = graft.graph.Edges.canonicalize(pairs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val index = graft.algos.PageRankCsrZip.buildIndex(spark, e, partitions = 64)
-      try {
-        assert(index.n == v)
-        // live-memory receipt: the superstep holds ONE contrib array +
-        // ONE target accumulator, both bounded by the largest block —
-        // at V=2M / P=64 that is ~V/P doubles, NOT the old SigmaV
-        val maxBlock = index.sizes.max
-        assert(maxBlock < 2 * (v / 64).toInt,
-          s"block skew: maxBlock=$maxBlock")
-        val liveBytes = 2L * maxBlock * 8L
-        info(f"per-task live superstep memory <= ${liveBytes / 1024}%d KiB " +
-          f"(vs ${index.n * 8 / 1024 / 1024}%d MiB if all P partials were dense)")
-        val zip = graft.algos.PageRankCsrZip.runIndexed(spark, index, maxIter = 2,
-          tol = 0.0, alpha = 0.85)
-        assert(zip.iterations == 2)
-        val rel = graft.algos.PageRank.fixedIterUndirected(e, 2)
-        val d = rel.join(zip.ranks.withColumnRenamed("rank", "rank2"), "id")
-          .agg(max(abs(col("rank") - col("rank2"))).as("md"),
-            count(lit(1)).as("cnt")).head()
-        assert(d.getLong(1) == v, s"joined ${d.getLong(1)} of $v vertices")
-        assert(d.getDouble(0) < 1e-12, s"max |delta| = ${d.getDouble(0)}")
-      } finally index.release()
-    } finally e.unpersist()
-  }
 
   test("sorted_intersect_count: merge scan equals array_intersect semantics") {
     import spark.implicits._
@@ -197,34 +158,6 @@ class Round4Spec extends SparkSuite {
     assert(!plan.contains("Window"), "LPA argmax must not plan a window")
     assert(plan.contains("HashAggregate"), plan.take(400))
     assert(out.count() == 8)
-  }
-
-  test("csrzip PageRank resumes mid-algorithm to identical scores") {
-    import org.apache.spark.sql.functions._
-    val e = graft.generators.Generators.ba(spark, 300, 3, 13)
-    val full = graft.algos.PageRankCsrZip.run(spark, e, maxIter = 8)
-      .ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val dir = java.nio.file.Files.createTempDirectory("csrzip-ckpt").toString
-    val index = graft.algos.PageRankCsrZip.buildIndex(spark, e)
-    try {
-      // "killed" run: 4 of 8 supersteps, committing every 2 -> iter 3
-      graft.algos.PageRankCsrZip.runIndexed(spark, index, maxIter = 4, tol = 0.0,
-        alpha = 0.85, checkpoint = Some(new graft.core.CheckpointManager(spark, dir)),
-        checkpointInterval = 2)
-      val cm = new graft.core.CheckpointManager(spark, dir)
-      assert(cm.latestIteration().contains(3))
-      assert(cm.manifestJson(3).contains("\"partitions\""))
-      // fresh run resumes at iteration 4 and finishes the remaining 4
-      val resumed = graft.algos.PageRankCsrZip.runIndexed(spark, index, maxIter = 8,
-        tol = 0.0, alpha = 0.85, checkpoint = Some(cm), checkpointInterval = 2)
-      assert(resumed.iterations == 8)
-      val got = resumed.ranks.collect()
-        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(got.keySet == full.keySet)
-      got.foreach { case (id, v) =>
-        assert(math.abs(full(id) - v) < 1e-12, s"v$id: ${full(id)} vs $v")
-      }
-    } finally index.release()
   }
 
   test("embedding seed parameter: same seed reproduces, different seed diverges") {

@@ -7,8 +7,8 @@ import graft.algos.PageRank
 /** Optimization-round-6 routing contracts: PageRank.runUndirected's
   * "auto" engine must pick the CSR broadcast-vector plan exactly when
   * it is provably equivalent (dense ids, broadcastable V, no
-  * checkpoint/salt/explicit-partitioning), fall back to the relational
-  * plan otherwise, and agree with it numerically either way.
+  * checkpoint/salt), fall back to the relational plan otherwise, and
+  * agree with it numerically either way.
   */
 class Round6Spec extends SparkSuite {
 
@@ -113,13 +113,33 @@ class Round6Spec extends SparkSuite {
   test("XXH64.hashLong replicates the xxhash64 column bit-for-bit") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.catalyst.expressions.XXH64
+    import graft.core.DetRandom.xxhash64Local
     import spark.implicits._
     val vals = (0L until 500L) ++ Seq(Long.MaxValue, Long.MinValue, -1L)
-    val got = vals.toDF("v").select(col("v"), xxhash64(col("v")).as("h"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = vals.toDF("v").select(col("v"), xxhash64(col("v")).as("h"),
+        xxhash64(col("v"), lit(7L)).as("h2"), xxhash64(lit(-3L), col("v")).as("h3"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     vals.foreach { v =>
-      assert(got(v) == XXH64.hashLong(v, 42L), s"v=$v")
+      val (h, h2, h3) = got(v)
+      assert(h == XXH64.hashLong(v, 42L), s"v=$v")
+      assert(h == xxhash64Local(v), s"v=$v")
+      assert(h2 == xxhash64Local(v, 7L), s"v=$v, 7")
+      assert(h3 == xxhash64Local(-3L, v), s"-3, v=$v")
     }
+  }
+
+  test("smallestByHash picks what orderBy(hash, index).limit(k) picks") {
+    import graft.core.DetRandom
+    // sorted by (hash, index): 6, 1, 3, then the tie at hash 3 goes to 2
+    val h = Array(5L, 1L, 3L, 1L, 3L, 3L, 0L)
+    assert(DetRandom.smallestByHash(h, 4).toSeq == Seq(1, 2, 3, 6))
+    assert(DetRandom.smallestByHash(h, 0).isEmpty)
+    assert(DetRandom.smallestByHash(h, h.length).toSeq == h.indices)
+    val n = 300
+    val want = spark.range(n).toDF().orderBy(xxhash64(col("id")), col("id")).limit(20)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val hashes = Array.tabulate(n)(i => DetRandom.xxhash64Local(i.toLong))
+    assert(DetRandom.smallestByHash(hashes, 20).map(_.toLong).toSeq == want)
   }
 
   test("layout local-init gate picks the identical sample and radii") {

@@ -3,7 +3,7 @@
 # same fixed-8-superstep PageRank over the deterministic 40.8M-edge ER
 # graph; 2-core and 8-core levels pinned with taskset so the JVM really
 # owns only those CPUs, 32-core = full box. Engines: csr (broadcast
-# vector) and csrzip (co-partitioned zip-join, zero driver stage).
+# vector) and rel (relational join+agg superstep).
 # Each invocation prints one JSON line (1 warm-up + 3 timed passes,
 # median) -- appended to $OUT.
 set -u
@@ -11,7 +11,7 @@ cd /root/repo
 OUT=${1:-/tmp/scaling_r3.jsonl}
 : > "$OUT"
 N=${SPARK_GRAFT_SCALE_N:-2000000}
-for engine in csr csrzip; do
+for engine in csr rel; do
   for spec in "0-1:2" "0-7:8" ":32"; do
     cpus="${spec%%:*}"; cores="${spec##*:}"
     cmd=(sbt -batch "runMain graft.ScalingBench $N $cores $engine")
