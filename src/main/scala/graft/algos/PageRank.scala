@@ -58,20 +58,30 @@ object PageRank {
     * Engine routing (optimization round 6, guide §3.1 "broadcast the
     * small side"): when the per-vertex state is small enough to
     * broadcast (maxId < cfg.csrMaxVertices) and the id space is dense,
-    * the superstep needs NO shuffle at all — PageRankCsr streams the
-    * cached per-partition CSR blocks against a broadcast contribution
-    * vector (measured 4-5x the relational engine on the bench graph,
-    * parity 3e-20). The relational join+agg plan remains the engine for
-    * everything the route cannot prove cheap-and-equivalent: sparse id
-    * spaces (n enters the teleport base, so density is semantic),
-    * checkpointed/resumable runs, salted aggregation, or V beyond the
-    * broadcast cap. The gate reads the held edge projection's
-    * [[Route.stats]] (one aggregate, or none when
-    * an earlier call on the same cached input ran it), and the CSR build
-    * and the relational fallback read the same projection
-    * ([[Route.hold]]), so an uncached caller pipeline runs once; the
-    * density check rides the CSR build itself (falls back if any id slot
-    * is empty).
+    * the superstep needs NO shuffle at all — PageRankCsr streams
+    * per-partition CSR blocks against the contribution vector (measured
+    * 4-5x the relational engine on the bench graph, parity 3e-20). Three
+    * tiers, by the held edge projection's [[Route.stats]] (one
+    * aggregate, or none when an earlier call on the same cached or
+    * checkpointed input ran it):
+    *
+    *  - at most [[Route.LocalEdgeCap]] edges: [[Route.gate]] collects the
+    *    rows (or finds them shared by an earlier call), density is read
+    *    off their sorted ids, and the blocks are built and run on the
+    *    driver — no shuffle and no job per superstep, and the CC, LPA,
+    *    triangle and spectral calls that follow read the same collect;
+    *  - above it, up to `csrMaxVertices` vertices: the blocks are built
+    *    on the executors by one shuffle and each superstep is one job
+    *    (the density check rides the block build: it falls back if any
+    *    id slot is empty);
+    *  - everything else runs the relational join+agg plan: sparse id
+    *    spaces (n enters the teleport base, so density is semantic),
+    *    checkpointed/resumable runs, salted aggregation, or V beyond the
+    *    broadcast cap.
+    *
+    * Both CSR tiers give the same ranks to the bit. The CSR builds and
+    * the relational fallback read the same projection ([[Route.hold]]),
+    * so an uncached caller pipeline runs once.
     */
   def runUndirected(spark: SparkSession, edges: DataFrame,
                     cfg: Config = Config()): Result = {
@@ -86,7 +96,12 @@ object PageRank {
       // CSR arrays; the relational plan handles any id)
       val csr = Route.stats(held).idRange match {
         case Some((lo, hi)) if lo >= 0L && hi < cfg.csrMaxVertices =>
-          PageRankCsr.runIfDense(spark, held.edges, cfg.maxIter, cfg.tol, cfg.alpha)
+          Route.gate(held, Route.LocalEdgeCap) match {
+            case local: Route.Local =>
+              PageRankCsr.runLocalIfDense(spark, local, cfg.maxIter, cfg.tol, cfg.alpha)
+            case Route.Distributed(_, _) =>
+              PageRankCsr.runIfDense(spark, held.edges, cfg.maxIter, cfg.tol, cfg.alpha)
+          }
         case _ => None
       }
       csr.map(c => Result(c.ranks, c.iterations, c.err,

@@ -48,7 +48,11 @@ object Lineage {
 
   /** Free the cached blocks behind a truncated frame once a successor
     * state is materialized — long loops otherwise accumulate one cached
-    * RDD per superstep.
+    * RDD per superstep. Any routing state [[Route]] shares for the frame
+    * goes with them.
     */
-  def release(df: DataFrame): Unit = Bridge.releaseCheckpoint(df)
+  def release(df: DataFrame): Unit = {
+    Route.forget(df)
+    Bridge.releaseCheckpoint(df)
+  }
 }

@@ -6,7 +6,7 @@ import java.lang.ref.WeakReference
 import org.apache.spark.SparkEnv
 import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.CachedData
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, greatest, least, lit, max, min}
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
@@ -21,9 +21,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * [[gate]] is the one local gate. It reads an input's count from
   * [[stats]], one aggregate that PageRank's CSR gate reads too, and
-  * both keep what they compute for the input the caller cached last
-  * (see `Shared`): the operators that run one after another on one
-  * cached edge frame count it once and collect it once. The helpers
+  * both keep what they compute for the input the caller cached (or
+  * checkpointed) last (see `Shared`): the operators that run one after
+  * another on one cached or [[Lineage.truncate]]d edge frame count it
+  * once and collect it once. The helpers
   * after it build the driver-local kernels' index structures from the
   * collected rows: sorted distinct ids, dense indices and an undirected
   * CSR, all primitive arrays. Every output is a deterministic function
@@ -33,7 +34,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Route {
 
-  /** Edges a local kernel collects: two Long arrays, 80 MB at the cap. */
+  /** Edges a local kernel collects: two Long arrays, 80 MB at the cap.
+    * The CSR kernels that run on blocks built from them add ~8 B per
+    * entry (PageRank, ~80 MB at the cap) or ~16 B per entry (the layout,
+    * tagged, ~160 MB), two entries per edge, for the length of the run.
+    */
   val LocalEdgeCap = 5000000L
 
   /** Edges the local triangle count takes: its merge work grows ~E^1.5,
@@ -57,13 +62,14 @@ object Route {
 
   /** An input's (src, dst) projection, read through a cache: the
     * input's own if the session already caches it (or the projection),
-    * else one [[hold]] made, which [[release]] drops. A cache someone
-    * else made is never dropped. `entry` is that someone else's cache
-    * entry, the key of the shared state; None when [[hold]] cached the
-    * input itself.
+    * or the blocks of a materialized local checkpoint the input is
+    * ([[Lineage.truncate]]), else one [[hold]] made, which [[release]]
+    * drops. A cache someone else made is never dropped. `entry` is that
+    * someone else's cache entry or checkpoint RDD, the key of the shared
+    * state; None when [[hold]] cached the input itself.
     */
   final class Held private[Route] (val edges: DataFrame, cachedHere: Option[DataFrame],
-                                   private[Route] val entry: Option[CachedData]) {
+                                   private[Route] val entry: Option[AnyRef]) {
     def release(): Unit = cachedHere.foreach(_.unpersist(false))
   }
 
@@ -71,13 +77,31 @@ object Route {
     val cacheManager = input.sparkSession.sharedState.cacheManager
     def entryOf(df: DataFrame) =
       cacheManager.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-    entryOf(input).orElse(entryOf(input.select(col("src"), col("dst")))) match {
+    entryOf(input).orElse(entryOf(input.select(col("src"), col("dst"))))
+        .orElse(checkpointOf(input)) match {
       case Some(e) => new Held(input.select(col("src"), col("dst")), None, Some(e))
       case None =>
         input.persist(StorageLevel.MEMORY_AND_DISK)
         // projected after the persist, so its plan reads the cache
         new Held(input.select(col("src"), col("dst")), Some(input), None)
     }
+  }
+
+  /** The RDD behind a frame that is exactly a materialized checkpoint (a
+    * [[Lineage.truncate]] result): its rows are fixed and held by the
+    * block manager, as a cache entry's are, until [[Lineage.release]].
+    */
+  private def checkpointOf(df: DataFrame): Option[AnyRef] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD if l.rdd.isCheckpointed => Some(l.rdd)
+      case _ => None
+    }
+
+  /** Drops the shared state of a checkpoint frame whose blocks are being
+    * released, so it is never served for it again.
+    */
+  private[core] def forget(df: DataFrame): Unit = checkpointOf(df).foreach { rdd =>
+    synchronized { if (shared.exists(_.key.get eq rdd)) shared = None }
   }
 
   /** An edge input's row count and (least, greatest) endpoint id; no
@@ -107,15 +131,18 @@ object Route {
     */
   final case class Distributed(held: Held, count: Long) extends Gate
 
-  /** The state of one caller-cached edge input: its [[Stats]] and, once
-    * a gate under its cap has collected it, its [[Local]].
+  /** The state of one caller-cached (or checkpointed) edge input: its
+    * [[Stats]] and, once a gate under its cap has collected it, its
+    * [[Local]].
     *
     * The key is the identity of the input's cache entry (the
     * `CachedData` the session's cache manager returns for the input or
-    * its (src, dst) projection), held weakly. A different input, or the
-    * same one unpersisted and cached again (or recached by a refresh),
-    * finds a different entry and computes its state afresh, which then
-    * replaces this one: there is one entry at a time, and its arrays
+    * its (src, dst) projection), or of the RDD of the checkpoint the
+    * input is, held weakly. A different input, the same one unpersisted
+    * and cached again (or recached by a refresh), or a new checkpoint
+    * finds a different key and computes its state afresh, which then
+    * replaces this one; [[Lineage.release]] drops a checkpoint's state
+    * with its blocks: there is one entry at a time, and its arrays
     * are kept only for an input of at most [[LocalEdgeCap]] edges, so
     * the driver holds at most ~280 MB for it (the rows, index and CSR
     * at the cap, what one local call allocates anyway). An input [[hold]] caches itself is never stored.
@@ -123,7 +150,7 @@ object Route {
     * is dropped when replaced, or at the next call after the entry is
     * garbage-collected.
     */
-  private final class Shared(val key: WeakReference[CachedData], val stats: Stats) {
+  private final class Shared(val key: WeakReference[AnyRef], val stats: Stats) {
     @volatile var local: Option[Local] = None
   }
   private var shared: Option[Shared] = None // guarded by this

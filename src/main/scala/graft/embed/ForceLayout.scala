@@ -34,14 +34,18 @@ import graft.graph.{CsrBlocks, PackedCsr}
   *
   *  - broadcast state (V <= broadcastVertices): the driver holds the
   *    V x d positions. Int-packed per-partition CSR blocks of the edges
-  *    are built once per run and cached; each superstep broadcasts the
-  *    position array and makes ONE executor pass over the blocks
-  *    ([[CsrBlocks.pass]], the kernel PageRankCsr runs on), in which
-  *    every block gathers the spring force of its rows and fills the
-  *    sample's top-(k+1) midpoint heaps over its edges. The driver
-  *    merges the partials in partition order, scores the <= sample x k
-  *    candidate pairs, and applies the move and the z-score: O(V +
-  *    sample k) driver work, all O(E) work on the executors.
+  *    are built once per run, and each superstep makes ONE pass over
+  *    them ([[CsrBlocks.pass]], the kernel PageRankCsr runs on), in
+  *    which every block gathers the spring force of its rows and fills
+  *    the sample's top-(k+1) midpoint heaps over its edges. When the
+  *    init collected the edges (at most `localInitEdgeCap`), the blocks
+  *    are built on the driver from its sorted arrays (~16 B per entry,
+  *    two entries per edge) and the pass runs on the driver's cores: no
+  *    shuffle and no job. Otherwise they are built on the executors by
+  *    one shuffle and cached, and each pass broadcasts the positions and
+  *    runs one job. The same blocks either way, so the same positions.
+  *    The driver merges the partials in partition order, scores the <=
+  *    sample x k candidate pairs, and applies the move and the z-score.
   *  - relational (above it): 2 gather joins + fused kNN aggregate + 1
   *    scatter aggregation per superstep, all Catalyst-planned; positions
   *    are checkpointed (manifest lineage) or localCheckpoint'ed every
@@ -79,18 +83,28 @@ object ForceLayout {
       // identical (src, dst)-sort dense ranks Ids.dense produces and the
       // sample is the identical smallest-(xxhash64(eid), eid) set
       // (DetRandom.xxhash64Local, same bits), so positions are
-      // unchanged. The LAYOUT LOOP itself is never local-gated — the
-      // supersteps stay distributed at every scale. Above the cap the
-      // Ids.dense + top-k jobs run unchanged.
+      // unchanged, and the broadcast-state route builds its CSR blocks
+      // from the same arrays on the driver. Above the cap the Ids.dense
+      // + top-k jobs run unchanged and the blocks are built on the
+      // executors; cap 0 pins that route.
       localInitEdgeCap: Long = Route.LocalEdgeCap)
 
   /** What both routes start from: the edges with their ordinals, and the
-    * fixed sample's (eid, src, dst), ascending by eid. `release` frees
-    * what the edges frame holds.
+    * fixed sample's (eid, src, dst), ascending by eid. `sorted`, when
+    * the init ran on the driver, holds the edges as (src, dst) arrays in
+    * eid order, and `edges`, the cached (src, dst, eid) frame, is then
+    * built on first read. `release` frees what the frame holds.
     */
-  private case class Init(edges: DataFrame, edgeCount: Long,
-                          sEids: Array[Long], sSrcs: Array[Long], sDsts: Array[Long],
-                          release: () => Unit)
+  private final class Init(val edgeCount: Long, val sEids: Array[Long], val sSrcs: Array[Long],
+                           val sDsts: Array[Long], val sorted: Option[(Array[Long], Array[Long])],
+                           build: () => (DataFrame, () => Unit)) {
+    private var built: Option[(DataFrame, () => Unit)] = None
+    def edges: DataFrame = {
+      if (built.isEmpty) built = Some(build())
+      built.get._1
+    }
+    def release(): Unit = built.foreach(_._2())
+  }
 
   private def norm2(v: Column): Column =
     sqrt(aggregate(v, lit(0.0), (s, x) => s + x * x))
@@ -121,7 +135,7 @@ object ForceLayout {
     // the start frame unchanged
     if (state.isEmpty) return Lineage.truncate(startPos)
     val broadcastRoute = state.length <= cap && state.length.toLong * cfg.d < Int.MaxValue
-    val init = initOf(spark, edges, cfg, cacheEdges = !broadcastRoute)
+    val init = initOf(spark, edges, cfg)
     try {
       if (broadcastRoute) broadcastState(spark, init, state, startIter, iterations, cfg)
       else relational(spark, init, startPos, startIter, iterations, cfg)
@@ -141,12 +155,12 @@ object ForceLayout {
     * edges frame is built at the FULL session width: every pass over it
     * inherits its parallelism from its partitions, so the compute-bound
     * passes stay wide even when the relational loop narrows the shuffle
-    * width to the data. `cacheEdges` asks for it to be cached (the
-    * relational route reads it every superstep; the distributed init's
-    * frame is always cached, since the sample pick reads it too).
+    * width to the data. The frame is cached: the relational route reads
+    * it every superstep, and the distributed init's sample pick reads it
+    * too. The local init builds it only if a route reads it (the
+    * broadcast-state route builds its blocks from the sorted arrays).
     */
-  private def initOf(spark: SparkSession, edges: DataFrame, cfg: Config,
-                     cacheEdges: Boolean): Init = {
+  private def initOf(spark: SparkSession, edges: DataFrame, cfg: Config): Init = {
     val sessP = spark.conf.get("spark.sql.shuffle.partitions").toInt
     Route.gate(edges, cfg.localInitEdgeCap) match {
       case Route.Local(srcs, dsts) =>
@@ -171,18 +185,21 @@ object ForceLayout {
         // whole layout run at the 5M-edge cap (ParallelCollectionRDD
         // keeps its seq alive for cache rebuilds); the broadcast holds
         // ~16 B/edge and is released with the run
-        import spark.implicits._
-        val bc = spark.sparkContext.broadcast((srcSorted, dstSorted))
-        val df = spark.sparkContext
-          .parallelize(0 until n, math.max(1, sessP))
-          .map(i => (bc.value._1(i), bc.value._2(i), i.toLong))
-          .toDF("src", "dst", "eid")
-        if (cacheEdges) df.persist(StorageLevel.MEMORY_AND_DISK)
+        def frame() = {
+          import spark.implicits._
+          val bc = spark.sparkContext.broadcast((srcSorted, dstSorted))
+          val df = spark.sparkContext
+            .parallelize(0 until n, math.max(1, sessP))
+            .map(i => (bc.value._1(i), bc.value._2(i), i.toLong))
+            .toDF("src", "dst", "eid")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          (df, () => { df.unpersist(false); bc.unpersist(false) })
+        }
         // sample: the sampleSize smallest (xxhash64(eid), eid), by eid
         val picked = DetRandom.smallestByHash(
           Array.tabulate(n)(e => DetRandom.xxhash64Local(e.toLong)), sampleSize)
-        Init(df, n.toLong, picked.map(_.toLong), picked.map(srcSorted(_)),
-          picked.map(dstSorted(_)), () => { df.unpersist(false); bc.unpersist(false) })
+        new Init(n.toLong, picked.map(_.toLong), picked.map(srcSorted(_)),
+          picked.map(dstSorted(_)), Some((srcSorted, dstSorted)), () => frame())
       case Route.Distributed(held, edgeCount) =>
         val sampleSize = math.min(cfg.sampleSize, edgeCount).toInt
         // Ids.dense returns a materialized checkpoint, so the held
@@ -192,8 +209,10 @@ object ForceLayout {
           finally held.release()
         val s = df.orderBy(xxhash64(col("eid")), col("eid")).limit(sampleSize)
           .select("eid", "src", "dst").collect().sortBy(_.getLong(0))
-        Init(df, edgeCount, s.map(_.getLong(0)), s.map(_.getLong(1)), s.map(_.getLong(2)),
-          () => df.unpersist(false))
+        val init = new Init(edgeCount, s.map(_.getLong(0)), s.map(_.getLong(1)),
+          s.map(_.getLong(2)), None, () => (df, () => df.unpersist(false)))
+        init.edges // built: it holds the cache to release
+        init
     }
   }
 
@@ -236,18 +255,33 @@ object ForceLayout {
     val qSrc = live.map(i => indexOf(init.sSrcs(i)))
     val qDst = live.map(i => indexOf(init.sDsts(i)))
 
-    val idsBc = spark.sparkContext.broadcast(ids)
-    val entries = init.edges.select("src", "dst", "eid").as[(Long, Long, Long)]
-      .flatMap { case (s, t, e) =>
-        val a = java.util.Arrays.binarySearch(idsBc.value, s)
-        val b = java.util.Arrays.binarySearch(idsBc.value, t)
-        // an edge with an endpoint outside the position frame is
-        // dropped, as the relational route's inner gather joins drop it
-        if (a < 0 || b < 0) Nil
-        else Seq((a.toLong, b.toLong, e), (b.toLong, a.toLong, ~e))
-      }
-      .toDF("id", "nbr", "tag")
-    val blocks = CsrBlocks.packed(spark, entries)
+    // the blocks: on the driver from the local init's sorted arrays, else
+    // on the executors from the init's frame — the same blocks either way.
+    // An edge with an endpoint outside the position frame is dropped, as
+    // the relational route's inner gather joins drop it.
+    val (blocks, idsBc) = init.sorted match {
+      case Some((srcs, dsts)) =>
+        val (a, b, tags) = (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Long])
+        Seq(a, b, tags).foreach(_.sizeHint(2 * srcs.length))
+        var e = 0
+        while (e < srcs.length) {
+          val (x, y) = (indexOf(srcs(e)), indexOf(dsts(e)))
+          if (x >= 0 && y >= 0) { a += x; b += y; a += y; b += x; tags += e; tags += ~e.toLong }
+          e += 1
+        }
+        (Left(CsrBlocks.packed(spark, a.result(), b.result(), Some(tags.result()))), None)
+      case None =>
+        val idsBc = spark.sparkContext.broadcast(ids)
+        val entries = init.edges.select("src", "dst", "eid").as[(Long, Long, Long)]
+          .flatMap { case (s, t, e) =>
+            val a = java.util.Arrays.binarySearch(idsBc.value, s)
+            val b = java.util.Arrays.binarySearch(idsBc.value, t)
+            if (a < 0 || b < 0) Nil
+            else Seq((a.toLong, b.toLong, e), (b.toLong, a.toLong, ~e))
+          }
+          .toDF("id", "nbr", "tag")
+        (Right(CsrBlocks.packed(spark, entries)), Some(idsBc))
+    }
 
     // plain values for the kernel closure: `cfg` holds the
     // CheckpointManager, which is not serializable
@@ -262,9 +296,9 @@ object ForceLayout {
         // the relational route evaluates
         val qvecs = Array.tabulate(live.length)(q =>
           Array.tabulate(d)(j => (pos(qSrc(q) * d + j) + pos(qDst(q) * d + j)) * 0.5))
-        val parts = CsrBlocks.pass(blocks, pos) { (b, pv) =>
+        val kernel = (b: PackedCsr, pv: Array[Double]) =>
           ForceLayout.blockPass(b, pv, qvecs, k, d, kAttr, lMin)
-        }
+        val parts = blocks.fold(CsrBlocks.pass(_, pos)(kernel), CsrBlocks.pass(_, pos)(kernel))
         val force = new Array[Double](n * d)
         val heaps = new SampleKnnAgg.Bufs(live.length, k)
         parts.foreach { case (rowIds, f, h) =>
@@ -285,8 +319,9 @@ object ForceLayout {
         iter += 1
       }
     } finally {
-      blocks.unpersist(blocking = true) // ~20 B/entry of cache — release NOW, not at next GC
-      idsBc.unpersist(false)
+      // ~20 B/entry of cache — release NOW, not at next GC
+      blocks.foreach(_.unpersist(blocking = true))
+      idsBc.foreach(_.unpersist(false))
     }
     committed.getOrElse(frame(spark, ids, p, d))
   }
@@ -472,7 +507,8 @@ object ForceLayout {
   private def relational(spark: SparkSession, init: Init, start: DataFrame,
                          startIter: Int, iterations: Int, cfg: Config): DataFrame = {
     val d = cfg.d
-    val Init(eidEdges, edgeCount, sEids, sSrcs, sDsts, _) = init
+    val (eidEdges, edgeCount) = (init.edges, init.edgeCount)
+    val (sEids, sSrcs, sDsts) = (init.sEids, init.sSrcs, init.sDsts)
     val sampleSize = sEids.length
     var pos = Lineage.truncate(start)
     var iter = startIter

@@ -67,4 +67,68 @@ class CsrSpec extends SparkSuite {
     assert(messages.exists(_.contains(s"id ${1L << 31} is outside [0, 2^31)")),
       s"unexpected error: $err")
   }
+
+  /** Asserts the driver build of (ids, nbrs, tags) equals the executor
+    * build of the same entries as a frame, block for block.
+    */
+  private def assertDriverBuildMatches(session: org.apache.spark.sql.SparkSession,
+                                       ids: Array[Int], nbrs: Array[Int],
+                                       tags: Option[Array[Long]]): Unit = {
+    import session.implicits._
+    val entries = tags match {
+      case Some(t) => ids.indices.map(e => (ids(e).toLong, nbrs(e).toLong, t(e)))
+          .toDF("id", "nbr", "tag")
+      case None => ids.indices.map(e => (ids(e).toLong, nbrs(e).toLong)).toDF("id", "nbr")
+    }
+    val rdd = CsrBlocks.packed(session, entries)
+    val want = try rdd.collect() finally rdd.unpersist(blocking = false)
+    val got = CsrBlocks.packed(session, ids, nbrs, tags)
+    assert(got.map(_.partId).toSeq == want.map(_.partId).toSeq)
+    got.zip(want).foreach { case (g, w) =>
+      assert(g.vertexIds.toSeq == w.vertexIds.toSeq, s"vertexIds of block ${w.partId}")
+      assert(g.rowPtr.toSeq == w.rowPtr.toSeq, s"rowPtr of block ${w.partId}")
+      assert(g.colIdx.toSeq == w.colIdx.toSeq, s"colIdx of block ${w.partId}")
+      assert(g.tags.toSeq == w.tags.toSeq, s"tags of block ${w.partId}")
+    }
+  }
+
+  test("driver-built blocks equal the executor-built ones: ER(150, 0.05, 11), untagged") {
+    val pairs = graft.generators.Generators.er(spark, 150, 0.05, 11).collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt))
+    assert(pairs.length > 100)
+    // both directions of every edge, as Edges.neighbors has them
+    assertDriverBuildMatches(spark, pairs.map(_._1) ++ pairs.map(_._2),
+      pairs.map(_._2) ++ pairs.map(_._1), None)
+  }
+
+  test("driver-built blocks equal the executor-built ones: tagged, with repeated (id, nbr)") {
+    val rnd = new scala.util.Random(5L)
+    val m = 600
+    val ids = Array.fill(m)(rnd.nextInt(40))
+    val nbrs = Array.fill(m)(rnd.nextInt(40))
+    // signed tags, and runs of one (id, nbr) whose tags arrive unsorted
+    val tags = Array.tabulate(m)(e => if (e % 2 == 0) e.toLong * 7919 % 1000 else ~(e.toLong))
+    val dup = ids.indices.take(30).toArray
+    assertDriverBuildMatches(spark, ids ++ dup.map(ids(_)), nbrs ++ dup.map(nbrs(_)),
+      Some(tags ++ dup.map(e => -tags(e) - 1)))
+  }
+
+  test("driver-built blocks equal the executor-built ones at a width with empty partitions") {
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "16")
+    val ids = K4.flatMap { case (a, b) => Seq(a.toInt, b.toInt) }.toArray
+    val nbrs = K4.flatMap { case (a, b) => Seq(b.toInt, a.toInt) }.toArray
+    val blocks = CsrBlocks.packed(wide, ids, nbrs, None)
+    assert(blocks.length <= 4 && blocks.map(_.partId).distinct.length == blocks.length)
+    assertDriverBuildMatches(wide, ids, nbrs, None)
+    assertDriverBuildMatches(wide, ids, nbrs, Some(ids.indices.map(_.toLong).toArray))
+    // no entries: no blocks
+    assert(CsrBlocks.packed(wide, Array.emptyIntArray, Array.emptyIntArray, None).isEmpty)
+  }
+
+  test("driver-built blocks refuse a negative vertex index") {
+    val err = intercept[IllegalArgumentException](
+      CsrBlocks.packed(spark, Array(0, -1), Array(1, 0), None))
+    assert(err.getMessage.contains("id -1 is outside [0, 2^31)"))
+  }
 }

@@ -225,4 +225,37 @@ class RouteSpec extends SparkSuite {
     assert(j.count() == 1000)
     Lineage.release(t)
   }
+
+  test("a second gate on one Lineage.truncate frame runs no job") {
+    val t = Lineage.truncate(edgesOf(baPairs(300, 5L)))
+    try {
+      assert(jobsRun(Route.gate(t, Route.LocalEdgeCap)) > 0)
+      var second: Route.Gate = null
+      assert(jobsRun { second = Route.gate(t, Route.LocalEdgeCap) } == 0)
+      assert(pairsOf(localOf(second)) == canonical(baPairs(300, 5L)))
+      // the spectral init and the layout after it, as q_embed_radii runs
+      // them on its truncated frame, read the same collect
+      assert(jobsRun(ForceLayout.run(spark, t, SpectralInit.run(spark, t, d = 2, maxIter = 5),
+        1)) == 0)
+      // the checkpoint's blocks serve the reads: no copy was cached
+      assert(!isCached(t))
+    } finally Lineage.release(t)
+  }
+
+  test("a released checkpoint is never served stale") {
+    val t = Lineage.truncate(edgesOf(K8))
+    assert(pairsOf(localOf(Route.gate(t, Route.LocalEdgeCap))) == canonical(K8))
+    assert(jobsRun(Route.gate(t, Route.LocalEdgeCap)) == 0)
+    Lineage.release(t)
+    // its shared state went with its blocks: a gate reads the frame again
+    // (and fails if the blocks are gone, as any read of it does) rather
+    // than answer from the state
+    assert(jobsRun(scala.util.Try(Route.gate(t, Route.LocalEdgeCap))) > 0)
+    // a new checkpoint gets its own rows
+    val u = Lineage.truncate(edgesOf(K4))
+    try {
+      assert(pairsOf(localOf(Route.gate(u, Route.LocalEdgeCap))) == canonical(K4))
+      assert(jobsRun(Route.gate(u, Route.LocalEdgeCap)) == 0)
+    } finally Lineage.release(u)
+  }
 }
