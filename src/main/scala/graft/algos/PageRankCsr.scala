@@ -19,14 +19,16 @@ import graft.graph.{CsrBlocks, Edges, PackedCsr}
   * preferred when V is too large to broadcast.
   *
   * The blocks live in one of two places ([[CsrBlocks]]), with the same
-  * blocks, kernel and merge, so the same ranks to the bit:
+  * kernel, the same in-row order and a row-by-row merge, so the same
+  * ranks to the bit:
   *  - [[run]] / [[runIfDense]]: built on the executors by one shuffle and
   *    cached, each superstep one job — the route for inputs above
   *    [[Route.LocalEdgeCap]] edges (and ScalingBench's `csr` rows);
-  *  - [[runLocalIfDense]]: built on the driver from the rows a
-  *    [[Route.gate]] collected, each superstep a parallel pass on the
-  *    driver's cores — no shuffle and no job. The blocks add ~8 B per
-  *    entry (two entries per edge) to the driver at the cap.
+  *  - [[runLocalIfDense]]: row blocks of the shared undirected CSR of
+  *    the rows a [[Route.gate]] collected ([[Route.Local.csr]]), each
+  *    superstep a parallel pass on the driver's cores — no shuffle and
+  *    no job, and no entry array beyond the CSR the other local kernels
+  *    read.
   *
   * Semantics match PageRank.fixedIterUndirected / nx.pagerank on
   * canonical undirected edges (every vertex has degree >= 1, so no
@@ -59,17 +61,18 @@ object PageRankCsr {
     runRdd(spark, edges, maxIter, tol, alpha, requireDense = true)
 
   /** Routing entry for PageRank.runUndirected's "auto" engine under the
-    * local cap: the same run on blocks built on the driver from `local`,
-    * when its sorted distinct ids are exactly 0..n-1; None otherwise.
+    * local cap: the same run on row blocks of `local`'s CSR, when its
+    * sorted distinct ids are exactly 0..n-1; None otherwise.
     */
   def runLocalIfDense(spark: SparkSession, local: Route.Local, maxIter: Int,
                       tol: Double = 0.0, alpha: Double = 0.85): Option[Result] = {
-    val (ids, s, d) = local.dense
+    val ids = local.dense._1
     val n = ids.length
     if (n == 0 || ids(0) != 0L || ids(n - 1) != n - 1L) return None
     // the rows' dense indices are their ids; both directions of each
     // edge, as Edges.neighbors has them
-    val blocks = CsrBlocks.packed(spark, s ++ d, d ++ s, None)
+    val (rowPtr, colIdx) = local.csr
+    val blocks = CsrBlocks.rows(spark, rowPtr, colIdx, Array.emptyLongArray)
     val static = blocks.map(staticOf)
     Some(iterate(spark, degrees(n, static), static, maxIter, tol, alpha)(contrib =>
       CsrBlocks.pass(blocks, contrib)(PageRankCsr.gather)))

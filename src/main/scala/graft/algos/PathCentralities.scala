@@ -40,12 +40,9 @@ object PathCentralities {
     require(ids.length <= MaxVertices,
       s"PathCentralities is a small-graph oracle (n <= $MaxVertices); " +
         "the reference skips path centralities at this scale too")
-    val (rowPtr, colIdx) = Route.undirectedCsr(ids.length, sIdx, dIdx)
-    (ids, Array.tabulate(ids.length) { v =>
-      val nbrs = java.util.Arrays.copyOfRange(colIdx, rowPtr(v), rowPtr(v + 1))
-      java.util.Arrays.sort(nbrs)
-      nbrs
-    })
+    val (rowPtr, colIdx, _) = Route.undirectedCsr(ids.length, sIdx, dIdx)
+    (ids, Array.tabulate(ids.length)(v =>
+      java.util.Arrays.copyOfRange(colIdx, rowPtr(v), rowPtr(v + 1))))
   }
 
   private def bfs(adj: Array[Array[Int]], s: Int):

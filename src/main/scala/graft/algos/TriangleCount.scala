@@ -102,44 +102,34 @@ object TriangleCount {
   }
 
   /** Driver-local degree-oriented intersection count: same total order
-    * ((degree, id) ascending), sorted out-adjacency, two-pointer merge
-    * per oriented edge; chunk-parallel over vertices (per-edge counts
-    * are independent, summed exactly as longs).
+    * ((degree, id) ascending), out-adjacency kept from the shared
+    * undirected CSR's ascending rows (so sorted), two-pointer merge per
+    * oriented edge; chunk-parallel over vertices (per-edge counts are
+    * independent, summed exactly as longs). A self-loop keeps one of its
+    * two entries, as the oriented edge table has it once.
     */
   private def countLocal(local: Route.Local): Long = {
-    val (ids, sIdx, dIdx) = local.dense
-    val n = ids.length
-    val deg = new Array[Int](n)
-    var i = 0
-    while (i < sIdx.length) { deg(sIdx(i)) += 1; deg(dIdx(i)) += 1; i += 1 }
+    val n = local.dense._1.length
+    val (csrPtr, csrIdx) = local.csr
+    def deg(v: Int): Int = csrPtr(v + 1) - csrPtr(v)
     // total order: (degree, id) ascending — ids(a) < ids(b) iff a < b
-    def precedes(a: Int, b: Int): Boolean =
-      deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
-    val outDeg = new Array[Int](n)
-    i = 0
-    while (i < sIdx.length) {
-      if (precedes(sIdx(i), dIdx(i))) outDeg(sIdx(i)) += 1
-      else outDeg(dIdx(i)) += 1
-      i += 1
-    }
+    def keeps(u: Int, v: Int): Boolean =
+      deg(u) < deg(v) || (deg(u) == deg(v) && u < v)
     val rowPtr = new Array[Int](n + 1)
-    i = 0
-    while (i < n) { rowPtr(i + 1) = rowPtr(i) + outDeg(i); i += 1 }
-    val out = new Array[Int](rowPtr(n))
-    locally {
-      val cursor = rowPtr.clone()
-      var j = 0
-      while (j < sIdx.length) {
-        val a = sIdx(j); val b = dIdx(j)
-        if (precedes(a, b)) { out(cursor(a)) = b; cursor(a) += 1 }
-        else { out(cursor(b)) = a; cursor(b) += 1 }
-        j += 1
+    val out = new Array[Int](csrPtr(n))
+    var u = 0
+    while (u < n) {
+      var at = rowPtr(u)
+      var loops = 0
+      var e = csrPtr(u)
+      while (e < csrPtr(u + 1)) {
+        val v = csrIdx(e)
+        if (v == u) loops += 1
+        if (keeps(u, v) || (v == u && loops % 2 == 1)) { out(at) = v; at += 1 }
+        e += 1
       }
-    }
-    i = 0
-    while (i < n) {
-      java.util.Arrays.sort(out, rowPtr(i), rowPtr(i + 1))
-      i += 1
+      rowPtr(u + 1) = at
+      u += 1
     }
     val total = new java.util.concurrent.atomic.AtomicLong(0L)
     java.util.stream.IntStream.range(0, n).parallel().forEach { u =>

@@ -28,16 +28,18 @@ import org.apache.spark.storage.StorageLevel
   * after it build the driver-local kernels' index structures from the
   * collected rows: sorted distinct ids, dense indices and an undirected
   * CSR, all primitive arrays. Every output is a deterministic function
-  * of the collected rows (ids sorted, indices are ranks, CSR slots
-  * filled in row order), so kernels built on them inherit their
-  * callers' parity arguments.
+  * of the collected rows (ids sorted, indices are ranks, CSR rows
+  * ascending), so kernels built on them inherit their callers' parity
+  * arguments.
   */
 object Route {
 
   /** Edges a local kernel collects: two Long arrays, 80 MB at the cap.
-    * The CSR kernels that run on blocks built from them add ~8 B per
-    * entry (PageRank, ~80 MB at the cap) or ~16 B per entry (the layout,
-    * tagged, ~160 MB), two entries per edge, for the length of the run.
+    * PageRank's CSR kernel runs on row blocks of the shared
+    * [[Local.csr]] (4 B per entry, two entries per edge), which add
+    * ~8 B per vertex and no entry array; the layout builds a tagged CSR
+    * of its position-frame indices, ~12 B per entry (~120 MB at the
+    * cap), for the length of its run.
     */
   val LocalEdgeCap = 5000000L
 
@@ -117,10 +119,11 @@ object Route {
   final class Local(val src: Array[Long], val dst: Array[Long]) extends Gate {
     /** [[Route.dense]] of the rows. */
     lazy val dense: (Array[Long], Array[Int], Array[Int]) = Route.dense(src, dst)
-    /** [[Route.undirectedCsr]] over [[dense]]. */
+    /** [[Route.undirectedCsr]] over [[dense]], untagged. */
     lazy val csr: (Array[Int], Array[Int]) = {
       val (ids, s, d) = dense
-      undirectedCsr(ids.length, s, d)
+      val (rowPtr, colIdx, _) = undirectedCsr(ids.length, s, d)
+      (rowPtr, colIdx)
     }
   }
   object Local {
@@ -144,8 +147,12 @@ object Route {
     * replaces this one; [[Lineage.release]] drops a checkpoint's state
     * with its blocks: there is one entry at a time, and its arrays
     * are kept only for an input of at most [[LocalEdgeCap]] edges, so
-    * the driver holds at most ~280 MB for it (the rows, index and CSR
-    * at the cap, what one local call allocates anyway). An input [[hold]] caches itself is never stored.
+    * the driver holds at most ~280 MB for it at the cap: the rows
+    * (80 MB), the dense index (ids and two Int arrays, up to 120 MB)
+    * and the CSR (up to 80 MB), what one local call allocates anyway;
+    * the CSR's build briefly adds a 40 MB bucket array. PageRank's
+    * driver tier reads the same CSR. An input [[hold]] caches itself is
+    * never stored.
     * Once its cache entry is gone the state is never served again; it
     * is dropped when replaced, or at the next call after the entry is
     * garbage-collected.
@@ -263,24 +270,57 @@ object Route {
   }
 
   /** Undirected CSR over dense indices: both directions of every input
-    * row, slots filled in input row order. Degree of v is
-    * rowPtr(v+1) - rowPtr(v).
+    * row, each row's neighbours ascending. Degree of v is
+    * rowPtr(v+1) - rowPtr(v). With `eids`, one tag per input row, the
+    * third array holds each entry's tag: `eids(i)` on row i's src row
+    * and `~eids(i)` on its dst row (a self-loop has both on its row);
+    * without, it is empty. Two counting passes, O(n + E): the entries
+    * are bucketed by row in input order, then each bucket's entries are
+    * dealt, in ascending row order, to their neighbours' rows as the
+    * mirror entries, which fills every row in ascending neighbour order.
     */
-  def undirectedCsr(n: Int, sIdx: Array[Int], dIdx: Array[Int]): (Array[Int], Array[Int]) = {
-    val deg = new Array[Int](n)
-    var i = 0
-    while (i < sIdx.length) { deg(sIdx(i)) += 1; deg(dIdx(i)) += 1; i += 1 }
+  def undirectedCsr(n: Int, sIdx: Array[Int], dIdx: Array[Int],
+                    eids: Option[Array[Long]] = None): (Array[Int], Array[Int], Array[Long]) = {
+    require(eids.forall(_.length == sIdx.length), "one tag per input row")
     val rowPtr = new Array[Int](n + 1)
+    var i = 0
+    while (i < sIdx.length) { rowPtr(sIdx(i) + 1) += 1; rowPtr(dIdx(i) + 1) += 1; i += 1 }
     i = 0
-    while (i < n) { rowPtr(i + 1) = rowPtr(i) + deg(i); i += 1 }
-    val colIdx = new Array[Int](rowPtr(n))
+    while (i < n) { rowPtr(i + 1) += rowPtr(i); i += 1 }
+    val m = rowPtr(n)
+    val tagged = eids.isDefined
+    val tagOf = eids.getOrElse(Array.emptyLongArray)
+    val inOrder = new Array[Int](m)
+    val inTags = if (tagged) new Array[Long](m) else Array.emptyLongArray
     val cursor = rowPtr.clone()
     var j = 0
     while (j < sIdx.length) {
-      colIdx(cursor(sIdx(j))) = dIdx(j); cursor(sIdx(j)) += 1
-      colIdx(cursor(dIdx(j))) = sIdx(j); cursor(dIdx(j)) += 1
+      val s = sIdx(j)
+      val d = dIdx(j)
+      inOrder(cursor(s)) = d
+      if (tagged) inTags(cursor(s)) = tagOf(j)
+      cursor(s) += 1
+      inOrder(cursor(d)) = s
+      if (tagged) inTags(cursor(d)) = ~tagOf(j)
+      cursor(d) += 1
       j += 1
     }
-    (rowPtr, colIdx)
+    val colIdx = new Array[Int](m)
+    val tags = if (tagged) new Array[Long](m) else Array.emptyLongArray
+    System.arraycopy(rowPtr, 0, cursor, 0, n + 1)
+    var u = 0
+    while (u < n) {
+      var e = rowPtr(u)
+      while (e < rowPtr(u + 1)) {
+        // entry (u, v, t) is the mirror of (v, u, ~t)
+        val v = inOrder(e)
+        colIdx(cursor(v)) = u
+        if (tagged) tags(cursor(v)) = ~inTags(e)
+        cursor(v) += 1
+        e += 1
+      }
+      u += 1
+    }
+    (rowPtr, colIdx, tags)
   }
 }

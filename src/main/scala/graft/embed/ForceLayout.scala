@@ -33,19 +33,22 @@ import graft.graph.{CsrBlocks, PackedCsr}
   * Two routes run the supersteps, picked by `Config.broadcastVertices`:
   *
   *  - broadcast state (V <= broadcastVertices): the driver holds the
-  *    V x d positions. Int-packed per-partition CSR blocks of the edges
-  *    are built once per run, and each superstep makes ONE pass over
-  *    them ([[CsrBlocks.pass]], the kernel PageRankCsr runs on), in
-  *    which every block gathers the spring force of its rows and fills
-  *    the sample's top-(k+1) midpoint heaps over its edges. When the
-  *    init collected the edges (at most `localInitEdgeCap`), the blocks
-  *    are built on the driver from its sorted arrays (~16 B per entry,
-  *    two entries per edge) and the pass runs on the driver's cores: no
-  *    shuffle and no job. Otherwise they are built on the executors by
+  *    V x d positions. Int-packed CSR blocks of the edges are built once
+  *    per run, and each superstep makes ONE pass over them
+  *    ([[CsrBlocks.pass]], the kernel PageRankCsr runs on), in which
+  *    every block gathers the spring force of its rows and fills the
+  *    sample's top-(k+1) midpoint heaps over its edges. When the init
+  *    collected the edges (at most `localInitEdgeCap`), the blocks are
+  *    row blocks of a tagged [[Route.undirectedCsr]] built on the driver
+  *    from its sorted arrays (~12 B per entry, two entries per edge) and
+  *    the pass runs on the driver's cores: no shuffle and no job.
+  *    Otherwise they are per-partition blocks built on the executors by
   *    one shuffle and cached, and each pass broadcasts the positions and
-  *    runs one job. The same blocks either way, so the same positions.
-  *    The driver merges the partials in partition order, scores the <=
-  *    sample x k candidate pairs, and applies the move and the z-score.
+  *    runs one job. Rows ascend by neighbour either way, and the driver
+  *    copies each row's force and merges the heaps under the total
+  *    (d2, eid) order, so the same positions either way. It then scores
+  *    the <= sample x k candidate pairs, and applies the move and the
+  *    z-score.
   *  - relational (above it): 2 gather joins + fused kNN aggregate + 1
   *    scatter aggregation per superstep, all Catalyst-planned; positions
   *    are checkpointed (manifest lineage) or localCheckpoint'ed every
@@ -255,21 +258,24 @@ object ForceLayout {
     val qSrc = live.map(i => indexOf(init.sSrcs(i)))
     val qDst = live.map(i => indexOf(init.sDsts(i)))
 
-    // the blocks: on the driver from the local init's sorted arrays, else
-    // on the executors from the init's frame — the same blocks either way.
-    // An edge with an endpoint outside the position frame is dropped, as
-    // the relational route's inner gather joins drop it.
+    // the blocks: row blocks of a tagged CSR built on the driver from the
+    // local init's sorted arrays, else built on the executors from the
+    // init's frame — rows ascend by neighbour either way, so the same
+    // positions. An edge with an endpoint outside the position frame is
+    // dropped, as the relational route's inner gather joins drop it.
     val (blocks, idsBc) = init.sorted match {
       case Some((srcs, dsts)) =>
-        val (a, b, tags) = (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Long])
-        Seq(a, b, tags).foreach(_.sizeHint(2 * srcs.length))
+        val (a, b, eids) = (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Long])
+        Seq(a, b, eids).foreach(_.sizeHint(srcs.length))
         var e = 0
         while (e < srcs.length) {
           val (x, y) = (indexOf(srcs(e)), indexOf(dsts(e)))
-          if (x >= 0 && y >= 0) { a += x; b += y; a += y; b += x; tags += e; tags += ~e.toLong }
+          if (x >= 0 && y >= 0) { a += x; b += y; eids += e }
           e += 1
         }
-        (Left(CsrBlocks.packed(spark, a.result(), b.result(), Some(tags.result()))), None)
+        val (rowPtr, colIdx, tags) =
+          Route.undirectedCsr(n, a.result(), b.result(), Some(eids.result()))
+        (Left(CsrBlocks.rows(spark, rowPtr, colIdx, tags)), None)
       case None =>
         val idsBc = spark.sparkContext.broadcast(ids)
         val entries = init.edges.select("src", "dst", "eid").as[(Long, Long, Long)]
@@ -338,7 +344,7 @@ object ForceLayout {
                         k: Int, d: Int, kAttr: Double,
                         lMin: Double): (Array[Int], Array[Double], SampleKnnAgg.Bufs) = {
     val force = new Array[Double](b.vertexIds.length * d)
-    val edges = b.tags.count(_ >= 0)
+    val edges = (b.rowPtr(0) until b.rowPtr.last).count(e => b.tags(e) >= 0)
     val mids = new Array[Double](edges * d)
     val eids = new Array[Long](edges)
     val ends = new Array[Long](edges)

@@ -117,8 +117,8 @@ object Influence {
   def collectNeighbors(edges: DataFrame): Map[Long, Array[Long]] = {
     val (s, d) = Route.collect(edges.select(col("src").cast("long"), col("dst").cast("long")))
     val (ids, sIdx, dIdx) = Route.dense(s, d)
-    // the CSR fills each row's slots in collected row order
-    val (rowPtr, colIdx) = Route.undirectedCsr(ids.length, sIdx, dIdx)
+    // each row's neighbours ascend; the IC closure reads them as a set
+    val (rowPtr, colIdx, _) = Route.undirectedCsr(ids.length, sIdx, dIdx)
     ids.indices.map(v =>
       ids(v) -> Array.tabulate(rowPtr(v + 1) - rowPtr(v))(j => ids(colIdx(rowPtr(v) + j)))).toMap
   }

@@ -333,21 +333,7 @@ object SpectralInit {
     // the serial loop (the cross-path parity test pins this). Only the
     // SpMV is parallelized; the Gram reduction stays serial because a
     // partial-sum split WOULD change its addition order.
-    val chunkBounds: Array[Int] = {
-      val target = math.max(1L, rowPtr(n).toLong / 64L)
-      val b = Array.newBuilder[Int]
-      b += 0
-      var v = 0
-      var nextCut = target
-      while (v < n) {
-        if (rowPtr(v + 1).toLong >= nextCut && v + 1 < n) {
-          b += (v + 1); nextCut = rowPtr(v + 1).toLong + target
-        }
-        v += 1
-      }
-      b += n
-      b.result()
-    }
+    val chunkBounds = graft.graph.CsrBlocks.rowRanges(rowPtr, 64)
     while (iter < maxIter && !done) {
       // y = (x + Mx)/2, M = D^-1/2 A D^-1/2. k == 3 (d = 2) is the
       // engine's layout default — unrolled registers instead of the

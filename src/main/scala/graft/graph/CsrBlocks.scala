@@ -8,12 +8,15 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Int-packed CSR block over dense vertex indices (< 2^31): row `i` is
   * vertex `vertexIds(i)`, and its entries are `rowPtr(i) until
   * rowPtr(i + 1)` of `colIdx` (neighbour index) and, when the build was
-  * given a `tag` column, of `tags` (one Long per entry; empty otherwise).
+  * given tags, of `tags` (one Long per entry; empty otherwise). A block
+  * built on the executors owns its arrays and its `rowPtr` starts at 0;
+  * a row block of a driver-held CSR ([[CsrBlocks.rows]]) shares that
+  * CSR's `colIdx` and `tags`, and its `rowPtr` holds absolute offsets
+  * into them, so a kernel reads only `rowPtr(0) until rowPtr.last`.
   */
 final case class PackedCsr(partId: Int, vertexIds: Array[Int], rowPtr: Array[Int],
                            colIdx: Array[Int], tags: Array[Long])
@@ -23,28 +26,27 @@ final case class PackedCsr(partId: Int, vertexIds: Array[Int], rowPtr: Array[Int
   * Spark analogue of the reference's scipy CSR adjacency
   * (graphem/embedder.py:75-98).
   *
-  * Each block holds the adjacency rows of one hash partition of the
-  * vertex space as dense arrays (vertexIds / rowPtr / colIdx), giving
-  * gather-scatter kernels array locality inside a partition. A block
-  * set is built in one of two places, with the same result array for
-  * array:
+  * Each block holds a set of adjacency rows as dense arrays (vertexIds /
+  * rowPtr / colIdx), giving gather-scatter kernels array locality inside
+  * a block. A block set lives in one of two places:
   *
-  *  - on the executors ([[packed]] over a DataFrame): one shuffle (hash
-  *    on vertex id + in-partition sort), cached as RDD objects, each
+  *  - on the executors ([[packed]] over a DataFrame): one block per hash
+  *    partition of the vertex id, one shuffle (hash on vertex id +
+  *    in-partition sort by (id, nbr, tag)), cached as RDD objects, each
   *    superstep one broadcast-state pass ([[pass]] over the RDD) — the
   *    route for inputs the driver does not already hold;
-  *  - on the driver ([[packed]] over primitive arrays): the same hash
-  *    partition per entry, the same (id, nbr, tag) order and the same
-  *    per-partition assembly, from arrays the driver already holds (a
-  *    [[graft.core.Route.Local]] collect), and each superstep one
-  *    parallel pass on the driver's cores ([[pass]] over the array) — no
-  *    shuffle, no job. The blocks cost ~4 B per entry (Int column index)
-  *    plus ~8 B per row, and a tag adds 8 B per entry.
+  *  - on the driver ([[rows]] over a [[graft.core.Route.undirectedCsr]]):
+  *    contiguous row ranges of a CSR whose rows ascend, sharing its
+  *    entry arrays, each superstep one parallel pass on the driver's
+  *    cores ([[pass]] over the array) — no shuffle, no job. The blocks
+  *    add ~8 B per row to the CSR's 4 B per entry (Int column index) and
+  *    8 B per tag.
   *
-  * Kernels and merges are the same on both, and both return partials in
-  * partition order, so a run gives the same bits on either. PageRankCsr
-  * and the ForceLayout superstep run on them; state too large to
-  * broadcast runs on the relational join+agg engines instead.
+  * Either way a row's entries ascend by neighbour, and the kernels
+  * (PageRankCsr, the ForceLayout superstep) merge their partials row by
+  * row, so which block holds a row does not matter: a run gives the
+  * same bits on either. State too large to broadcast runs on the
+  * relational join+agg engines instead.
   */
 object CsrBlocks {
 
@@ -69,7 +71,7 @@ object CsrBlocks {
       .as[(Long, Long, Long)]
       .rdd
       .mapPartitionsWithIndex { (pid, it) =>
-        val block = new Assembly(tagged, 0)
+        val block = new Assembly(tagged)
         it.foreach { case (id, nbr, tag) => block.add(id, nbr, tag) }
         block.result(pid).iterator
       }
@@ -90,85 +92,51 @@ object CsrBlocks {
     finally bs.unpersist(false)
   }
 
-  /** The driver-side build: the blocks [[packed]] makes from an
-    * `entries` frame with columns `id`, `nbr` (and `tag` when `tags` is
-    * given), made here from primitive arrays, entry `e` being
-    * `(ids(e), nbrs(e), tags(e))`, with the same partition count `p`,
-    * the session's `spark.sql.shuffle.partitions`. Each entry goes to
-    * partition `pmod(Murmur3Hash(id), p)`, the partition
-    * `repartition(p, col("id"))` gives a bigint id, and each partition's
-    * entries are assembled in (id, nbr, tag) order by the same
-    * [[Assembly]], so the result equals `packed(...).collect()` array
-    * for array. Partitions are sorted and assembled in parallel on the
-    * driver's cores; the arrays given are not changed.
+  /** The row blocks of a driver-held CSR over rows `0 until
+    * rowPtr.length - 1`: the [[rowRanges]] of the session's
+    * `spark.sql.shuffle.partitions` (the executor build's block count),
+    * balanced by entry count. The blocks share `colIdx` and `tags` (no
+    * entry is copied), and each one's `rowPtr` is its slice of the
+    * CSR's, absolute offsets into them.
     */
-  def packed(spark: SparkSession, ids: Array[Int], nbrs: Array[Int],
-             tags: Option[Array[Long]]): Array[PackedCsr] = {
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val m = ids.length
-    require(nbrs.length == m && tags.forall(_.length == m), "entry arrays of unequal length")
-    val part = new Array[Int](m)
-    val start = new Array[Int](p + 1)
-    var e = 0
-    while (e < m) {
-      part(e) = Math.floorMod(Murmur3_x86_32.hashLong(packedId(ids(e)).toLong, HashSeed), p)
-      packedId(nbrs(e))
-      start(part(e) + 1) += 1
-      e += 1
+  def rows(spark: SparkSession, rowPtr: Array[Int], colIdx: Array[Int],
+           tags: Array[Long]): Array[PackedCsr] = {
+    val bounds = rowRanges(rowPtr, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    Array.tabulate(bounds.length - 1) { b =>
+      val (from, to) = (bounds(b), bounds(b + 1))
+      PackedCsr(b, Array.range(from, to), java.util.Arrays.copyOfRange(rowPtr, from, to + 1),
+        colIdx, tags)
     }
-    var q = 0
-    while (q < p) { start(q + 1) += start(q); q += 1 }
-    // entries bucketed by partition, in input order within a bucket
-    val order = new Array[Int](m)
-    val cursor = start.clone()
-    e = 0
-    while (e < m) { order(cursor(part(e))) = e; cursor(part(e)) += 1; e += 1 }
-    val out = new Array[Option[PackedCsr]](p)
-    IntStream.range(0, p).parallel().forEach { pid =>
-      val (from, to) = (start(pid), start(pid + 1))
-      // (id, nbr) as one key: both in [0, 2^31), so the keys sort as
-      // the pairs do
-      val keys = Array.tabulate(to - from) { j =>
-        val x = order(from + j)
-        (ids(x).toLong << 32) | nbrs(x)
-      }
-      // the tags' placement reads the keys in entry order too
-      val sorted = if (tags.isDefined) keys.clone() else keys
-      java.util.Arrays.sort(sorted)
-      // each entry's tag goes to the next free slot of its key's run;
-      // the run is then sorted, giving the (id, nbr, tag) order
-      val sortedTags = tags.map { t =>
-        val st = new Array[Long](keys.length)
-        val filled = new Array[Int](keys.length)
-        var j = 0
-        while (j < keys.length) {
-          val first = lowerBound(sorted, keys(j))
-          st(first + filled(first)) = t(order(from + j))
-          filled(first) += 1
-          j += 1
-        }
-        j = 0
-        while (j < keys.length) {
-          if (filled(j) > 1) java.util.Arrays.sort(st, j, j + filled(j))
-          j += math.max(1, filled(j))
-        }
-        st
-      }
-      val st = sortedTags.getOrElse(Array.emptyLongArray)
-      val block = new Assembly(tags.isDefined, sorted.length)
-      var j = 0
-      while (j < sorted.length) {
-        block.add(sorted(j) >>> 32, sorted(j) & 0xFFFFFFFFL, if (st.isEmpty) 0L else st(j))
-        j += 1
-      }
-      out(pid) = block.result(pid)
+  }
+
+  /** Cuts rows `0 until n` (n = rowPtr.length - 1) into at most `parts`
+    * contiguous ranges of about equal entry count: range `b` is rows
+    * `bounds(b) until bounds(b + 1)`; no range when n is 0. Each cut is
+    * the first row that starts at or past the next 1/parts of the
+    * entries.
+    */
+  def rowRanges(rowPtr: Array[Int], parts: Int): Array[Int] = {
+    val n = rowPtr.length - 1
+    if (n <= 0) return Array(0)
+    val total = rowPtr(n).toLong
+    val b = Array.newBuilder[Int]
+    b += 0
+    var last = 0
+    var v = 0
+    var k = 1
+    while (k < parts) {
+      val cut = total * k / parts
+      while (v < n && rowPtr(v) < cut) v += 1
+      if (v > last && v < n) { b += v; last = v }
+      k += 1
     }
-    out.flatten
+    b += n
+    b.result()
   }
 
   /** One pass over driver-held blocks: runs `kernel` on every block in
     * parallel on the driver's cores and returns the partials in
-    * partition order, as the executor [[pass]] does.
+    * block order, as the executor [[pass]] does.
     */
   def pass[S, R: ClassTag](blocks: Array[PackedCsr], state: S)(
       kernel: (PackedCsr, S) => R): Array[R] = {
@@ -177,9 +145,6 @@ object CsrBlocks {
     out
   }
 
-  /** The seed of `Murmur3Hash`, which hash partitioning uses. */
-  private val HashSeed = 42
-
   private def packedId(v: Long): Int = {
     require(v >= 0L && v < Int.MaxValue,
       s"CSR blocks pack vertex indices into Int: id $v is outside [0, 2^31) " +
@@ -187,25 +152,14 @@ object CsrBlocks {
     v.toInt
   }
 
-  /** First index of `key` in sorted `a`, which holds it. */
-  private def lowerBound(a: Array[Long], key: Long): Int = {
-    var lo = 0
-    var hi = a.length
-    while (lo < hi) { val mid = (lo + hi) >>> 1; if (a(mid) < key) lo = mid + 1 else hi = mid }
-    lo
-  }
-
   /** One partition's block, assembled from its entries in (id, nbr, tag)
-    * order: a row per run of equal ids. `entries`, when known (else 0),
-    * sizes the per-entry arrays, which are then not copied at the end.
+    * order: a row per run of equal ids.
     */
-  private final class Assembly(tagged: Boolean, entries: Int) {
+  private final class Assembly(tagged: Boolean) {
     private val vertexIds = scala.collection.mutable.ArrayBuilder.make[Int]
     private val rowPtr = scala.collection.mutable.ArrayBuilder.make[Int]
     private val colIdx = scala.collection.mutable.ArrayBuilder.make[Int]
     private val tags = scala.collection.mutable.ArrayBuilder.make[Long]
-    colIdx.sizeHint(entries)
-    if (tagged) tags.sizeHint(entries)
     private var current = -1
     private var n = 0
 

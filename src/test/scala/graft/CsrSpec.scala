@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.rdd.RDD
 
+import graft.core.Route
 import graft.graph.{CsrBlocks, Edges, PackedCsr}
 
 class CsrSpec extends SparkSuite {
@@ -68,27 +69,49 @@ class CsrSpec extends SparkSuite {
       s"unexpected error: $err")
   }
 
-  /** Asserts the driver build of (ids, nbrs, tags) equals the executor
-    * build of the same entries as a frame, block for block.
+  /** Per vertex, its neighbours in row order and its tags, over blocks
+    * whose row `i` holds entries `rowPtr(i) until rowPtr(i + 1)`; a
+    * vertex in two rows fails.
     */
-  private def assertDriverBuildMatches(session: org.apache.spark.sql.SparkSession,
-                                       ids: Array[Int], nbrs: Array[Int],
-                                       tags: Option[Array[Long]]): Unit = {
+  private def rowsOf(blocks: Seq[PackedCsr]): Map[Int, (Seq[Int], Seq[Long])] = {
+    val rows = for (b <- blocks; i <- b.vertexIds.indices if b.rowPtr(i) < b.rowPtr(i + 1))
+      yield {
+        val at = b.rowPtr(i) until b.rowPtr(i + 1)
+        b.vertexIds(i) -> (at.map(b.colIdx(_)), if (b.tags.isEmpty) Nil else at.map(b.tags(_)))
+      }
+    assert(rows.map(_._1).distinct.length == rows.length, "a vertex in two rows")
+    rows.toMap
+  }
+
+  /** Asserts the driver build of edges (src(i), dst(i)), tagged
+    * `eids(i)` when given — row blocks of [[Route.undirectedCsr]] — has
+    * the rows the executor build of both directions of every edge has:
+    * each vertex's neighbour sequence equal, and each (id, nbr) run
+    * holding the same tags.
+    */
+  private def assertDriverBuildMatches(session: org.apache.spark.sql.SparkSession, n: Int,
+                                       src: Array[Int], dst: Array[Int],
+                                       eids: Option[Array[Long]]): Unit = {
     import session.implicits._
-    val entries = tags match {
-      case Some(t) => ids.indices.map(e => (ids(e).toLong, nbrs(e).toLong, t(e)))
-          .toDF("id", "nbr", "tag")
-      case None => ids.indices.map(e => (ids(e).toLong, nbrs(e).toLong)).toDF("id", "nbr")
+    val both = src.indices.flatMap { e =>
+      val t = eids.fold(0L)(_(e))
+      Seq((src(e).toLong, dst(e).toLong, t), (dst(e).toLong, src(e).toLong, ~t))
     }
+    val entries = if (eids.isDefined) both.toDF("id", "nbr", "tag")
+      else both.map(t => (t._1, t._2)).toDF("id", "nbr")
     val rdd = CsrBlocks.packed(session, entries)
-    val want = try rdd.collect() finally rdd.unpersist(blocking = false)
-    val got = CsrBlocks.packed(session, ids, nbrs, tags)
-    assert(got.map(_.partId).toSeq == want.map(_.partId).toSeq)
-    got.zip(want).foreach { case (g, w) =>
-      assert(g.vertexIds.toSeq == w.vertexIds.toSeq, s"vertexIds of block ${w.partId}")
-      assert(g.rowPtr.toSeq == w.rowPtr.toSeq, s"rowPtr of block ${w.partId}")
-      assert(g.colIdx.toSeq == w.colIdx.toSeq, s"colIdx of block ${w.partId}")
-      assert(g.tags.toSeq == w.tags.toSeq, s"tags of block ${w.partId}")
+    val want = rowsOf(try rdd.collect().toSeq finally rdd.unpersist(blocking = false))
+    val (rowPtr, colIdx, tags) = Route.undirectedCsr(n, src, dst, eids)
+    val blocks = CsrBlocks.rows(session, rowPtr, colIdx, tags)
+    assert(blocks.length <= session.conf.get("spark.sql.shuffle.partitions").toInt)
+    assert(blocks.map(_.partId).distinct.length == blocks.length)
+    val got = rowsOf(blocks.toSeq)
+    assert(got.keySet == want.keySet)
+    want.foreach { case (v, (nbrs, ts)) =>
+      assert(got(v)._1 == nbrs, s"neighbours of vertex $v")
+      def runs(t: Seq[Long]) =
+        nbrs.zip(t).groupBy(_._1).map { case (u, r) => u -> r.map(_._2).sorted }
+      assert(runs(got(v)._2) == runs(ts), s"tags of vertex $v")
     }
   }
 
@@ -96,9 +119,7 @@ class CsrSpec extends SparkSuite {
     val pairs = graft.generators.Generators.er(spark, 150, 0.05, 11).collect()
       .map(r => (r.getLong(0).toInt, r.getLong(1).toInt))
     assert(pairs.length > 100)
-    // both directions of every edge, as Edges.neighbors has them
-    assertDriverBuildMatches(spark, pairs.map(_._1) ++ pairs.map(_._2),
-      pairs.map(_._2) ++ pairs.map(_._1), None)
+    assertDriverBuildMatches(spark, 150, pairs.map(_._1), pairs.map(_._2), None)
   }
 
   test("driver-built blocks equal the executor-built ones: tagged, with repeated (id, nbr)") {
@@ -109,26 +130,22 @@ class CsrSpec extends SparkSuite {
     // signed tags, and runs of one (id, nbr) whose tags arrive unsorted
     val tags = Array.tabulate(m)(e => if (e % 2 == 0) e.toLong * 7919 % 1000 else ~(e.toLong))
     val dup = ids.indices.take(30).toArray
-    assertDriverBuildMatches(spark, ids ++ dup.map(ids(_)), nbrs ++ dup.map(nbrs(_)),
+    assertDriverBuildMatches(spark, 40, ids ++ dup.map(ids(_)), nbrs ++ dup.map(nbrs(_)),
       Some(tags ++ dup.map(e => -tags(e) - 1)))
   }
 
   test("driver-built blocks equal the executor-built ones at a width with empty partitions") {
     val wide = spark.newSession()
     wide.conf.set("spark.sql.shuffle.partitions", "16")
-    val ids = K4.flatMap { case (a, b) => Seq(a.toInt, b.toInt) }.toArray
-    val nbrs = K4.flatMap { case (a, b) => Seq(b.toInt, a.toInt) }.toArray
-    val blocks = CsrBlocks.packed(wide, ids, nbrs, None)
+    val src = K4.map(_._1.toInt).toArray
+    val dst = K4.map(_._2.toInt).toArray
+    val (rowPtr, colIdx, _) = Route.undirectedCsr(4, src, dst)
+    val blocks = CsrBlocks.rows(wide, rowPtr, colIdx, Array.emptyLongArray)
     assert(blocks.length <= 4 && blocks.map(_.partId).distinct.length == blocks.length)
-    assertDriverBuildMatches(wide, ids, nbrs, None)
-    assertDriverBuildMatches(wide, ids, nbrs, Some(ids.indices.map(_.toLong).toArray))
-    // no entries: no blocks
-    assert(CsrBlocks.packed(wide, Array.emptyIntArray, Array.emptyIntArray, None).isEmpty)
-  }
-
-  test("driver-built blocks refuse a negative vertex index") {
-    val err = intercept[IllegalArgumentException](
-      CsrBlocks.packed(spark, Array(0, -1), Array(1, 0), None))
-    assert(err.getMessage.contains("id -1 is outside [0, 2^31)"))
+    assertDriverBuildMatches(wide, 4, src, dst, None)
+    assertDriverBuildMatches(wide, 4, src, dst, Some(src.indices.map(_.toLong).toArray))
+    // no rows: no blocks
+    val (none, _, _) = Route.undirectedCsr(0, Array.emptyIntArray, Array.emptyIntArray)
+    assert(CsrBlocks.rows(wide, none, Array.emptyIntArray, Array.emptyLongArray).isEmpty)
   }
 }

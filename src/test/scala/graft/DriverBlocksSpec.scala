@@ -89,4 +89,45 @@ class DriverBlocksSpec extends SparkSuite {
       assert(jobs == Seq(gateJobs, 0, 0, 0, 0))
     } finally e.unpersist(true)
   }
+
+  /** BA(200, 3) rows plus the reversed copy (b, a) of every fifth one,
+    * cached in a scrambled collect order.
+    */
+  private def scrambled(): DataFrame = {
+    import spark.implicits._
+    val pairs = Generators.ba(spark, 200, 3, 41L).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val rows = new scala.util.Random(3L)
+      .shuffle((pairs ++ pairs.indices.filter(_ % 5 == 0).map(i => pairs(i).swap)).toSeq)
+    val e = cached(spark.sparkContext.parallelize(rows, 4).toDF("src", "dst"))
+    val local = Route.gate(e, Route.LocalEdgeCap).asInstanceOf[Route.Local]
+    assert(local.src.zip(local.dst).toSeq != rows.sorted, "collect order is sorted")
+    e
+  }
+
+  test("PageRank on row blocks of the shared CSR equals PageRankCsr: scrambled rows, " +
+      "reversed copies") {
+    val e = scrambled()
+    try {
+      val local = PageRank.runUndirected(spark, e, PageRank.Config(tol = 1e-8))
+      val rdd = PageRankCsr.run(spark, e, maxIter = 100, tol = 1e-8)
+      assert(local.engine == "csr")
+      assert(local.iterations == rdd.iterations && local.iterations > 1)
+      assert(local.err == rdd.err)
+      assert(rows(local.ranks) == rows(rdd.ranks))
+    } finally e.unpersist(true)
+  }
+
+  test("ForceLayout on tagged driver row blocks equals it on executor blocks: scrambled rows, " +
+      "reversed copies") {
+    val e = scrambled()
+    try {
+      val init = SpectralInit.run(spark, e, d = 2, maxIter = 10)
+      def positions(cfg: ForceLayout.Config): Seq[(Long, Seq[Double])] =
+        ForceLayout.run(spark, e, init, 3, cfg).collect()
+          .map(r => r.getLong(0) -> r.getSeq[Double](1)).sortBy(_._1).toSeq
+      val driver = positions(ForceLayout.Config())
+      assert(driver.length == 200)
+      assert(driver == positions(ForceLayout.Config(localInitEdgeCap = 0L)))
+    } finally e.unpersist(true)
+  }
 }

@@ -258,4 +258,33 @@ class RouteSpec extends SparkSuite {
       assert(jobsRun(Route.gate(u, Route.LocalEdgeCap)) == 0)
     } finally Lineage.release(u)
   }
+
+  test("undirectedCsr: ascending rows, the input rows' entries, tags e and ~e") {
+    // shuffled rows over 6 vertices, with a pair and its reverse, a
+    // repeated row and a self-loop
+    val rows = new scala.util.Random(17L).shuffle(Seq((0, 3), (3, 0), (2, 5), (1, 1), (4, 2),
+      (5, 1), (2, 5), (0, 4), (3, 2)))
+    val (src, dst) = (rows.map(_._1).toArray, rows.map(_._2).toArray)
+    val eids = Array.tabulate(rows.length)(i => 100L + 7 * i)
+    val (rowPtr, colIdx, tags) = Route.undirectedCsr(6, src, dst, Some(eids))
+    val (untaggedPtr, untaggedIdx, none) = Route.undirectedCsr(6, src, dst)
+    assert(untaggedPtr.toSeq == rowPtr.toSeq && untaggedIdx.toSeq == colIdx.toSeq && none.isEmpty)
+    // the input-order build: each row's slots in input row order
+    val inOrder = Array.fill(6)(Seq.empty[(Int, Long)])
+    rows.indices.foreach { i =>
+      inOrder(src(i)) :+= (dst(i), eids(i))
+      inOrder(dst(i)) :+= (src(i), ~eids(i))
+    }
+    (0 until 6).foreach { v =>
+      val at = rowPtr(v) until rowPtr(v + 1)
+      val nbrs = at.map(colIdx(_))
+      assert(nbrs == nbrs.sorted, s"row $v ascends")
+      assert(nbrs.sorted == inOrder(v).map(_._1).sorted, s"row $v's neighbours")
+      assert(at.map(e => (colIdx(e), tags(e))).sorted == inOrder(v).sorted, s"row $v's tags")
+    }
+    // no rows
+    val (emptyPtr, emptyIdx, emptyTags) =
+      Route.undirectedCsr(0, Array.emptyIntArray, Array.emptyIntArray, Some(Array.emptyLongArray))
+    assert(emptyPtr.toSeq == Seq(0) && emptyIdx.isEmpty && emptyTags.isEmpty)
+  }
 }

@@ -7,7 +7,7 @@
 # Each invocation prints one JSON line (1 warm-up + 3 timed passes,
 # median) -- appended to $OUT.
 set -u
-cd /root/repo
+cd "$(dirname "$0")/.."
 OUT=${1:-/tmp/scaling_r3.jsonl}
 : > "$OUT"
 N=${SPARK_GRAFT_SCALE_N:-2000000}
