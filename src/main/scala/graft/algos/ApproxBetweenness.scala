@@ -66,9 +66,9 @@ object ApproxBetweenness {
     val held = Route.hold(edges)
     try Route.gate(held, ApproxCloseness.edgeCap(localNbrRowCap)) match {
       case l: Route.Local =>
-        val (adj, n, srcs) = ApproxCloseness.localInput(l, k, seed, explicitSources)
-        PathCentralitySmall.betweennessLocal(spark, adj, srcs, n, srcs.length.toLong,
-          maxLevels, normalized, portableSum)
+        PathCentralitySmall.betweennessLocal(spark, l,
+          ApproxCloseness.localSources(l, k, seed, explicitSources), maxLevels, normalized,
+          portableSum)
       case Route.Distributed(h, _) =>
         distributed(h.edges, k, seed, maxLevels, normalized, explicitSources, portableSum)
     } finally held.release()

@@ -53,11 +53,11 @@ object ApproxCloseness {
     * Below `localNbrRowCap` neighbor rows (= 2E) the whole estimator runs
     * driver-locally ([[Route.gate]]): the level-synchronous loop costs ~4
     * tiny jobs per BFS level in pure scheduling overhead on
-    * benchmark-scale graphs, while k BFS passes over the collected
-    * adjacency run in milliseconds. The two paths are BIT-IDENTICAL (the
-    * estimator is a long distance-sum plus a fixed double expression,
-    * both order-independent), which the parity tests assert with exact
-    * equality.
+    * benchmark-scale graphs, while k BFS passes over the gate's shared
+    * CSR ([[Route.Local.csr]]) run in milliseconds. The two paths are
+    * BIT-IDENTICAL (the estimator is a long distance-sum plus a fixed
+    * double expression, both order-independent), which the parity tests
+    * assert with exact equality.
     */
   def run(spark: SparkSession, edges: DataFrame, k: Int,
           seed: Long = 42, maxLevels: Int = 128,
@@ -68,8 +68,8 @@ object ApproxCloseness {
     val held = Route.hold(edges)
     try Route.gate(held, edgeCap(localNbrRowCap)) match {
       case l: Route.Local =>
-        val (adj, n, srcs) = localInput(l, k, seed, explicitSources)
-        PathCentralitySmall.closenessLocal(spark, adj, srcs, n, srcs.length.toLong, maxLevels)
+        PathCentralitySmall.closenessLocal(spark, l, localSources(l, k, seed, explicitSources),
+          maxLevels)
       case Route.Distributed(h, _) => distributed(h.edges, k, seed, maxLevels, explicitSources)
     } finally held.release()
   }
@@ -141,21 +141,16 @@ object ApproxCloseness {
     */
   private[algos] def edgeCap(nbrRowCap: Long): Long = Math.floorDiv(nbrRowCap, 2L)
 
-  /** What the local estimators start from, given the collected edges:
-    * the neighbor rows (every edge, then every edge mirrored — the row
-    * order `Edges.neighbors` collects in, which the non-portable
-    * betweenness float sums follow), the vertex count, and the sources.
+  /** The local estimators' sources over the collected edges: the
+    * explicit ones, else the distributed route's hash sample.
     */
-  private[algos] def localInput(local: Route.Local, k: Int, seed: Long,
-                                explicitSources: Option[DataFrame])
-      : ((Array[Long], Array[Long]), Long, Array[Long]) = {
-    val (s, d) = (local.src, local.dst)
+  private[algos] def localSources(local: Route.Local, k: Int, seed: Long,
+                                  explicitSources: Option[DataFrame]): Array[Long] = {
     val ids = local.dense._1
-    val srcs = explicitSources match {
+    explicitSources match {
       case Some(x) => x.collect().map(_.getLong(0))
       case None => hashSample(ids, math.min(k.toLong, ids.length).toInt, seed)
     }
-    ((s ++ d, d ++ s), ids.length.toLong, srcs)
   }
 
   /** The distributed route's source sample on the driver: the k ids

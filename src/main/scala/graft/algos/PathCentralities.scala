@@ -3,7 +3,6 @@ package graft.algos
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.core.Route
 
@@ -31,23 +30,25 @@ object PathCentralities {
 
   private val MaxVertices = 20000
 
-  /** Sorted distinct ids and, per id index, its sorted neighbour
-    * indices (both directions of every row, duplicates kept).
+  /** The rows' index ([[Route.local]], the shared one when a gate has
+    * already collected the cached input): sorted distinct ids and the
+    * undirected CSR (both directions of every row, duplicates kept, each
+    * row's neighbour indices ascending). The oracle's bound is on
+    * vertices, checked on the index.
     */
-  private def adjacency(edges: DataFrame): (Array[Long], Array[Array[Int]]) = {
-    val (s, d) = Route.collect(edges.select(col("src").cast("long"), col("dst").cast("long")))
-    val (ids, sIdx, dIdx) = Route.dense(s, d)
+  private def adjacency(edges: DataFrame): (Array[Long], (Array[Int], Array[Int])) = {
+    val local = Route.local(edges)
+    val ids = local.dense._1
     require(ids.length <= MaxVertices,
       s"PathCentralities is a small-graph oracle (n <= $MaxVertices); " +
         "the reference skips path centralities at this scale too")
-    val (rowPtr, colIdx, _) = Route.undirectedCsr(ids.length, sIdx, dIdx)
-    (ids, Array.tabulate(ids.length)(v =>
-      java.util.Arrays.copyOfRange(colIdx, rowPtr(v), rowPtr(v + 1))))
+    (ids, local.csr)
   }
 
-  private def bfs(adj: Array[Array[Int]], s: Int):
+  private def bfs(adj: (Array[Int], Array[Int]), s: Int):
       (Array[Int], Array[Double], Array[mutable.ArrayBuffer[Int]], Array[Int]) = {
-    val n = adj.length
+    val (rowPtr, colIdx) = adj
+    val n = rowPtr.length - 1
     val dist = Array.fill(n)(-1)
     val sigma = Array.fill(n)(0.0)
     val preds = Array.fill(n)(mutable.ArrayBuffer[Int]())
@@ -57,9 +58,12 @@ object PathCentralities {
     while (queue.nonEmpty) {
       val v = queue.dequeue()
       order += v
-      adj(v).foreach { w =>
+      var e = rowPtr(v)
+      while (e < rowPtr(v + 1)) {
+        val w = colIdx(e)
         if (dist(w) < 0) { dist(w) = dist(v) + 1; queue.enqueue(w) }
         if (dist(w) == dist(v) + 1) { sigma(w) += sigma(v); preds(w) += v }
+        e += 1
       }
     }
     (dist, sigma, preds, order.toArray)
@@ -69,7 +73,7 @@ object PathCentralities {
   def betweenness(spark: SparkSession, edges: DataFrame,
                   normalized: Boolean = true): DataFrame = {
     val (ids, adj) = adjacency(edges)
-    val n = adj.length
+    val n = ids.length
     val bc = Array.fill(n)(0.0)
     var s = 0
     while (s < n) {
@@ -96,7 +100,7 @@ object PathCentralities {
   /** nx.closeness_centrality (wf_improved) via per-source BFS. */
   def closeness(spark: SparkSession, edges: DataFrame): DataFrame = {
     val (ids, adj) = adjacency(edges)
-    val n = adj.length
+    val n = ids.length
     val cc = Array.tabulate(n) { s =>
       val (dist, _, _, order) = bfs(adj, s)
       val r = order.length // reachable incl. s
@@ -116,7 +120,7 @@ object PathCentralities {
   def load(spark: SparkSession, edges: DataFrame,
            normalized: Boolean = true): DataFrame = {
     val (ids, adj) = adjacency(edges)
-    val n = adj.length
+    val n = ids.length
     val lc = Array.fill(n)(0.0)
     var s = 0
     while (s < n) {

@@ -3,6 +3,8 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Route
+
 /** Driver-local kernels behind the gated small-graph fast paths of
   * [[ApproxCloseness]] and [[ApproxBetweenness]].
   *
@@ -16,46 +18,24 @@ import org.apache.spark.sql.SparkSession
   * aggregation order-independent. Parity is asserted with EXACT
   * equality in Round5Spec (portable path), so the driver oracle rows
   * keep verifying the same semantics whichever path the gate routes.
+  *
+  * Both run over the gate's shared index ([[Route.Local]]): its sorted
+  * ids and its undirected CSR, whose row v holds every entry of the
+  * distributed neighbor table with id v (both directions of each input
+  * row, duplicates kept, a self-loop twice), so sigma adds once per
+  * entry exactly as the frontier join adds once per joined row.
   */
 private[algos] object PathCentralitySmall {
 
-  /** Dense-index CSR adjacency over collected neighbor rows (two
-    * parallel primitive long arrays — no per-row tuple boxing, which at
-    * the 2M-row local-gate cap cost hundreds of MB of transient driver
-    * heap; round-5 advice item). The rows are a MULTISET — duplicates
-    * are kept because the betweenness sigma accumulation adds once per
-    * row, exactly like the distributed frontier join against the
-    * neighbor table.
+  /** Level-synchronous BFS over the rows of `csr`: returns (dist, levels)
+    * with dist(v) = -1 for unreached vertices and levels(l) = vertices at
+    * depth l. Depth is capped at maxLevels expansions like the
+    * distributed loop.
     */
-  final class Adj(srcA: Array[Long], dstA: Array[Long]) {
-    private val (idArr, sIdx, dIdx) = graft.core.Route.dense(srcA, dstA)
-    val ids: Array[Long] = idArr
-    def nV: Int = ids.length
-    def indexOf(id: Long): Int = math.max(-1, java.util.Arrays.binarySearch(ids, id))
-    val (offsets, targets) = {
-      val deg = new Array[Int](nV)
-      var i = 0
-      while (i < sIdx.length) { deg(sIdx(i)) += 1; i += 1 }
-      val off = new Array[Int](nV + 1)
-      i = 0; while (i < nV) { off(i + 1) = off(i) + deg(i); i += 1 }
-      val pos = off.clone()
-      val tgt = new Array[Int](sIdx.length)
-      i = 0
-      while (i < sIdx.length) {
-        tgt(pos(sIdx(i))) = dIdx(i); pos(sIdx(i)) += 1
-        i += 1
-      }
-      (off, tgt)
-    }
-  }
-
-  /** Level-synchronous BFS: returns (dist, levels) with dist(v) = -1
-    * for unreached vertices and levels(l) = vertices at depth l. Depth
-    * is capped at maxLevels expansions like the distributed loop.
-    */
-  private def bfs(adj: Adj, src: Int, maxLevels: Int,
+  private def bfs(csr: (Array[Int], Array[Int]), src: Int, maxLevels: Int,
                   sigma: Array[Double]): (Array[Int], Array[Array[Int]]) = {
-    val dist = Array.fill(adj.nV)(-1)
+    val (rowPtr, colIdx) = csr
+    val dist = Array.fill(rowPtr.length - 1)(-1)
     dist(src) = 0
     if (sigma ne null) sigma(src) = 1.0
     val levels = scala.collection.mutable.ArrayBuffer(Array(src))
@@ -64,11 +44,11 @@ private[algos] object PathCentralitySmall {
     while (frontier.nonEmpty && level < maxLevels) {
       val next = scala.collection.mutable.ArrayBuffer.empty[Int]
       frontier.foreach { v =>
-        var e = adj.offsets(v)
-        while (e < adj.offsets(v + 1)) {
-          val w = adj.targets(e)
+        var e = rowPtr(v)
+        while (e < rowPtr(v + 1)) {
+          val w = colIdx(e)
           if (dist(w) == -1) { dist(w) = level + 1; next += w }
-          // sigma(w) += sigma(v) once per neighbor ROW, for w exactly
+          // sigma(w) += sigma(v) once per neighbor ENTRY, for w exactly
           // one level deeper — the distributed join+sum shape
           if ((sigma ne null) && dist(w) == level + 1) sigma(w) += sigma(v)
           e += 1
@@ -81,21 +61,21 @@ private[algos] object PathCentralitySmall {
   }
 
   /** Driver-local twin of [[ApproxCloseness.run]]'s estimator. */
-  def closenessLocal(spark: SparkSession, adjRows: (Array[Long], Array[Long]),
-                     sources: Array[Long], n: Long, kEff: Long,
+  def closenessLocal(spark: SparkSession, local: Route.Local, sources: Array[Long],
                      maxLevels: Int): DataFrame = {
-    val adj = new Adj(adjRows._1, adjRows._2)
-    val sd = new Array[Long](adj.nV)
-    val r = new Array[Long](adj.nV)
+    val ids = local.dense._1
+    val (n, kEff) = (ids.length, sources.length.toLong)
+    val sd = new Array[Long](n)
+    val r = new Array[Long](n)
     sources.foreach { s =>
-      val si = adj.indexOf(s)
+      val si = java.util.Arrays.binarySearch(ids, s)
       // a source outside the vertex set only ever reaches itself; its
       // (s, s, 0) row is dropped by the verts join in the distributed
       // plan, so it contributes nothing here either (kEff still counts it)
       if (si >= 0) {
-        val (dist, _) = bfs(adj, si, maxLevels, null)
+        val (dist, _) = bfs(local.csr, si, maxLevels, null)
         var v = 0
-        while (v < adj.nV) {
+        while (v < n) {
           if (dist(v) >= 0) { sd(v) += dist(v); r(v) += 1L }
           v += 1
         }
@@ -104,15 +84,15 @@ private[algos] object PathCentralitySmall {
     // EXACT double shape of the distributed estimator expression
     val ratio = n.toDouble / math.max(kEff, 1L).toDouble
     val nm1 = (n - 1).toDouble
-    val out = new Array[(Long, Double)](adj.nV)
+    val out = new Array[(Long, Double)](n)
     var v = 0
-    while (v < adj.nV) {
+    while (v < n) {
       val c =
         if (sd(v) > 0) {
           val rhat = r(v).toDouble * ratio
           ((rhat - 1.0) / nm1) * ((rhat - 1.0) / (sd(v).toDouble * ratio))
         } else 0.0
-      out(v) = (adj.ids(v), c)
+      out(v) = (ids(v), c)
       v += 1
     }
     import spark.implicits._
@@ -123,11 +103,13 @@ private[algos] object PathCentralitySmall {
     * sigma (integer-valued double sums — exact under any order) and
     * identical backward quantization points on the portable path.
     */
-  def betweennessLocal(spark: SparkSession, adjRows: (Array[Long], Array[Long]),
-                       sources: Array[Long], n: Long, kEff: Long,
+  def betweennessLocal(spark: SparkSession, local: Route.Local, sources: Array[Long],
                        maxLevels: Int, normalized: Boolean,
                        portableSum: Boolean): DataFrame = {
-    val adj = new Adj(adjRows._1, adjRows._2)
+    val ids = local.dense._1
+    val (rowPtr, colIdx) = local.csr
+    val (nV, kEff) = (ids.length, sources.length.toLong)
+    val n = nV.toLong
     val SCALE = 1e12
     def quant(x: Double): BigInt =
       BigDecimal(graft.functions.PortableRound.halfUp(x * SCALE)).toBigInt
@@ -135,27 +117,27 @@ private[algos] object PathCentralitySmall {
       new java.math.BigDecimal(s.bigInteger).doubleValue() / SCALE
 
     // final per-vertex accumulation (one addend per (source, vertex))
-    val rawQ = Array.fill(adj.nV)(BigInt(0))
-    val rawD = new Array[Double](adj.nV)
-    val seen = new Array[Boolean](adj.nV)
+    val rawQ = Array.fill(nV)(BigInt(0))
+    val rawD = new Array[Double](nV)
+    val seen = new Array[Boolean](nV)
 
     sources.foreach { s =>
-      val si = adj.indexOf(s)
+      val si = java.util.Arrays.binarySearch(ids, s)
       if (si >= 0) {
-        val sigma = new Array[Double](adj.nV)
-        val (dist, levels) = bfs(adj, si, maxLevels, sigma)
-        val delta = new Array[Double](adj.nV)
+        val sigma = new Array[Double](nV)
+        val (dist, levels) = bfs(local.csr, si, maxLevels, sigma)
+        val delta = new Array[Double](nV)
         // backward: deepest level keeps delta = 0; each lower level's
-        // delta is the quantized sum over successor neighbor ROWS
+        // delta is the quantized sum over successor neighbor ENTRIES
         var l = levels.length - 2
         while (l >= 0) {
           val contribQ = new java.util.HashMap[Integer, BigInt]()
           val contribD = new java.util.HashMap[Integer, java.lang.Double]()
           levels(l + 1).foreach { w =>
             val inc = 1.0 + delta(w)
-            var e = adj.offsets(w)
-            while (e < adj.offsets(w + 1)) {
-              val v = adj.targets(e)
+            var e = rowPtr(w)
+            while (e < rowPtr(w + 1)) {
+              val v = colIdx(e)
               if (dist(v) == l) {
                 // (sigma_v / sigma_w) * inc — the distributed column order
                 val addend = sigma(v) / sigma(w) * inc
@@ -182,7 +164,7 @@ private[algos] object PathCentralitySmall {
         // fold this source's deltas into the final per-vertex sum,
         // excluding v == s exactly like the distributed filter
         var v = 0
-        while (v < adj.nV) {
+        while (v < nV) {
           if (dist(v) >= 0 && v != si) {
             seen(v) = true
             if (portableSum) rawQ(v) += quant(delta(v))
@@ -201,14 +183,14 @@ private[algos] object PathCentralitySmall {
     val scale = base
       .map(_ * (n.toDouble / math.max(kEff, 1L).toDouble))
       .getOrElse(1.0)
-    val out = new Array[(Long, Double)](adj.nV)
+    val out = new Array[(Long, Double)](nV)
     var v = 0
-    while (v < adj.nV) {
+    while (v < nV) {
       val raw =
         if (!seen(v)) 0.0
         else if (portableSum) fromQuant(rawQ(v))
         else rawD(v)
-      out(v) = (adj.ids(v), raw * scale)
+      out(v) = (ids(v), raw * scale)
       v += 1
     }
     import spark.implicits._

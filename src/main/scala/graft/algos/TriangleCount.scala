@@ -23,11 +23,12 @@ import graft.graph.Edges
 object TriangleCount {
 
   /** Degree-oriented edges with endpoint degrees attached:
-    * (src, dst, sdeg, ddeg) with (sdeg, src) < (ddeg, dst).
+    * (src, dst, sdeg, ddeg) with (sdeg, src) < (ddeg, dst). A self-loop
+    * closes no triangle (nx ignores it), so its rows are dropped.
     */
   def orient(spark: SparkSession, edges: DataFrame): DataFrame = {
     val deg = Edges.degrees(edges)
-    val withDeg = edges
+    val withDeg = edges.where(col("src") =!= col("dst"))
       .join(deg.select(col("id").as("src"), col("degree").as("d1")), "src")
       .join(deg.select(col("id").as("dst"), col("degree").as("d2")), "dst")
     val fwd = col("d1") < col("d2") ||
@@ -105,8 +106,8 @@ object TriangleCount {
     * ((degree, id) ascending), out-adjacency kept from the shared
     * undirected CSR's ascending rows (so sorted), two-pointer merge per
     * oriented edge; chunk-parallel over vertices (per-edge counts are
-    * independent, summed exactly as longs). A self-loop keeps one of its
-    * two entries, as the oriented edge table has it once.
+    * independent, summed exactly as longs). A self-loop keeps neither of
+    * its two entries, as the oriented edge table drops it.
     */
   private def countLocal(local: Route.Local): Long = {
     val n = local.dense._1.length
@@ -120,12 +121,10 @@ object TriangleCount {
     var u = 0
     while (u < n) {
       var at = rowPtr(u)
-      var loops = 0
       var e = csrPtr(u)
       while (e < csrPtr(u + 1)) {
         val v = csrIdx(e)
-        if (v == u) loops += 1
-        if (keeps(u, v) || (v == u && loops % 2 == 1)) { out(at) = v; at += 1 }
+        if (keeps(u, v)) { out(at) = v; at += 1 }
         e += 1
       }
       rowPtr(u + 1) = at

@@ -47,9 +47,10 @@ object LoopConf {
 
   /** Run `body` with AQE off + shuffle width `small.get` when in the
     * small regime, restoring the session afterwards. Session-global for
-    * the duration, like SpectralInit's loop overrides: graft entry
-    * points are single-driver-thread; host apps running concurrent
-    * queries should hand loops a dedicated `spark.newSession()`.
+    * the duration (every loop that tunes the session sets it here):
+    * graft entry points are single-driver-thread; host apps running
+    * concurrent queries should hand loops a dedicated
+    * `spark.newSession()`.
     */
   def withLoop[T](spark: SparkSession, small: Option[Int])(body: => T): T =
     small match {

@@ -24,13 +24,17 @@ import org.apache.spark.storage.StorageLevel
   * both keep what they compute for the input the caller cached (or
   * checkpointed) last (see `Shared`): the operators that run one after
   * another on one cached or [[Lineage.truncate]]d edge frame count it
-  * once and collect it once. The helpers
-  * after it build the driver-local kernels' index structures from the
-  * collected rows: sorted distinct ids, dense indices and an undirected
-  * CSR, all primitive arrays. Every output is a deterministic function
-  * of the collected rows (ids sorted, indices are ranks, CSR rows
+  * once and collect it once. [[Local]] is the one driver index of an
+  * edge input: its sorted distinct ids, the dense index of every row's
+  * endpoints and the undirected CSR, all primitive arrays, built once
+  * and read by every driver-local kernel (CC, LPA, triangles,
+  * PageRank's driver-block tier and portable kernel, the spectral and
+  * layout inits, the sampled path centralities, the nx oracles and
+  * Influence's adjacency). Every array is a deterministic function of
+  * the collected rows (ids sorted, indices are ranks, CSR rows
   * ascending), so kernels built on them inherit their callers' parity
-  * arguments.
+  * arguments. The one other driver CSR build is the layout's tagged CSR
+  * of position indices.
   */
 object Route {
 
@@ -51,7 +55,10 @@ object Route {
   /** Vertices the local spectral solve holds: V x (d+1) doubles. */
   val SpectralVertexCap = 100000
 
-  /** Neighbor rows (2E) the local path centralities collect, ~30 MB. */
+  /** Neighbor rows (2E) the local path centralities take: it bounds
+    * their BFS work, k x 2E neighbour-entry visits for k sources, on
+    * the driver's one thread.
+    */
   val NbrRowCap = 2000000L
 
   /** Vertices PageRank's CSR engine broadcasts: n doubles, 64 MB. */
@@ -75,18 +82,22 @@ object Route {
     def release(): Unit = cachedHere.foreach(_.unpersist(false))
   }
 
-  def hold(input: DataFrame): Held = {
+  def hold(input: DataFrame): Held = entryOf(input) match {
+    case Some(e) => new Held(input.select(col("src"), col("dst")), None, Some(e))
+    case None =>
+      input.persist(StorageLevel.MEMORY_AND_DISK)
+      // projected after the persist, so its plan reads the cache
+      new Held(input.select(col("src"), col("dst")), Some(input), None)
+  }
+
+  /** The cache entry of the input or its (src, dst) projection, or the
+    * checkpoint the input is: the key of its shared state.
+    */
+  private def entryOf(input: DataFrame): Option[AnyRef] = {
     val cacheManager = input.sparkSession.sharedState.cacheManager
-    def entryOf(df: DataFrame) =
+    def cached(df: DataFrame) =
       cacheManager.lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
-    entryOf(input).orElse(entryOf(input.select(col("src"), col("dst"))))
-        .orElse(checkpointOf(input)) match {
-      case Some(e) => new Held(input.select(col("src"), col("dst")), None, Some(e))
-      case None =>
-        input.persist(StorageLevel.MEMORY_AND_DISK)
-        // projected after the persist, so its plan reads the cache
-        new Held(input.select(col("src"), col("dst")), Some(input), None)
-    }
+    cached(input).orElse(cached(input.select(col("src"), col("dst")))).orElse(checkpointOf(input))
   }
 
   /** The RDD behind a frame that is exactly a materialized checkpoint (a
@@ -162,7 +173,7 @@ object Route {
   }
   private var shared: Option[Shared] = None // guarded by this
 
-  private def sharedFor(held: Held): Option[Shared] = held.entry.flatMap { e =>
+  private def sharedFor(entry: Option[AnyRef]): Option[Shared] = entry.flatMap { e =>
     synchronized {
       if (shared.exists(_.key.get == null)) shared = None
       shared.filter(_.key.get eq e)
@@ -172,7 +183,7 @@ object Route {
   /** The input's [[Stats]], from one aggregate, or from the shared state
     * when it holds this input's cache entry.
     */
-  def stats(held: Held): Stats = sharedFor(held).map(_.stats).getOrElse {
+  def stats(held: Held): Stats = sharedFor(held.entry).map(_.stats).getOrElse {
     val r = held.edges.agg(count(lit(1)), min(least(col("src"), col("dst"))).cast("long"),
       max(greatest(col("src"), col("dst"))).cast("long")).head()
     val s = Stats(r.getLong(0), if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
@@ -197,7 +208,7 @@ object Route {
   def gate(held: Held, cap: Long): Gate = {
     val rows = stats(held).count
     if (rows > cap) return Distributed(held, rows)
-    val slot = sharedFor(held)
+    val slot = sharedFor(held.entry)
     slot.flatMap(_.local).getOrElse {
       val (s, d) = collect(held.edges)
       val local = new Local(s, d)
@@ -207,13 +218,23 @@ object Route {
     }
   }
 
+  /** The input's [[Local]] whatever its size, for a caller bounded some
+    * other way: the shared one when a gate has collected this cached
+    * input, else its (src, dst) rows collected, with no count first and
+    * no cache made.
+    */
+  def local(input: DataFrame): Local = sharedFor(entryOf(input)).flatMap(_.local).getOrElse {
+    val (s, d) = collect(input.select(col("src"), col("dst")))
+    new Local(s, d)
+  }
+
   /** A frame of two bigint columns as two primitive arrays, in
     * `collect()` order (partition order, then row order). Each partition
     * packs its rows into one LZ4 byte block on the executor, as
     * `collect()` compresses its rows, so the driver never holds a `Row`
     * per edge.
     */
-  def collect(df: DataFrame): (Array[Long], Array[Long]) = {
+  private[graft] def collect(df: DataFrame): (Array[Long], Array[Long]) = {
     require(df.schema.map(_.dataType) == Seq(LongType, LongType),
       s"want two bigint columns, got ${df.schema.simpleString}")
     val parts = df.queryExecution.toRdd.mapPartitions { rows =>
@@ -239,7 +260,7 @@ object Route {
   private def lz4 = new LZ4CompressionCodec(SparkEnv.get.conf)
 
   /** Sorted distinct values of the given arrays (which are not changed). */
-  def distinct(arrays: Array[Long]*): Array[Long] = {
+  private[graft] def distinct(arrays: Array[Long]*): Array[Long] = {
     val all = new Array[Long](arrays.map(_.length).sum)
     var at = 0
     arrays.foreach { a => System.arraycopy(a, 0, all, at, a.length); at += a.length }
@@ -256,7 +277,8 @@ object Route {
   /** Sorted distinct endpoint ids plus the dense index of every row's
     * endpoints: ids(sIdx(i)) == srcA(i), ids(dIdx(i)) == dstA(i).
     */
-  def dense(srcA: Array[Long], dstA: Array[Long]): (Array[Long], Array[Int], Array[Int]) = {
+  private[graft] def dense(srcA: Array[Long], dstA: Array[Long])
+      : (Array[Long], Array[Int], Array[Int]) = {
     val ids = distinct(srcA, dstA)
     val sIdx = new Array[Int](srcA.length)
     val dIdx = new Array[Int](srcA.length)

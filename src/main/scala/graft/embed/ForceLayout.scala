@@ -40,7 +40,7 @@ import graft.graph.{CsrBlocks, PackedCsr}
   *    sample's top-(k+1) midpoint heaps over its edges. When the init
   *    collected the edges (at most `localInitEdgeCap`), the blocks are
   *    row blocks of a tagged [[Route.undirectedCsr]] built on the driver
-  *    from its sorted arrays (~12 B per entry, two entries per edge) and
+  *    from its sorted keys (~12 B per entry, two entries per edge) and
   *    the pass runs on the driver's cores: no shuffle and no job.
   *    Otherwise they are per-partition blocks built on the executors by
   *    one shuffle and cached, and each pass broadcasts the positions and
@@ -94,9 +94,10 @@ object ForceLayout {
 
   /** What both routes start from: the edges with their ordinals, and the
     * fixed sample's (eid, src, dst), ascending by eid. `sorted`, when
-    * the init ran on the driver, holds the edges as (src, dst) arrays in
-    * eid order, and `edges`, the cached (src, dst, eid) frame, is then
-    * built on first read. `release` frees what the frame holds.
+    * the init ran on the driver, holds the gate's sorted distinct ids
+    * and the edges in eid order as [[pairOf]] keys into them, and
+    * `edges`, the cached (src, dst, eid) frame, is then built on first
+    * read. `release` frees what the frame holds.
     */
   private final class Init(val edgeCount: Long, val sEids: Array[Long], val sSrcs: Array[Long],
                            val sDsts: Array[Long], val sorted: Option[(Array[Long], Array[Long])],
@@ -161,39 +162,38 @@ object ForceLayout {
     * width to the data. The frame is cached: the relational route reads
     * it every superstep, and the distributed init's sample pick reads it
     * too. The local init builds it only if a route reads it (the
-    * broadcast-state route builds its blocks from the sorted arrays).
+    * broadcast-state route builds its blocks from the sorted keys).
     */
   private def initOf(spark: SparkSession, edges: DataFrame, cfg: Config): Init = {
     val sessP = spark.conf.get("spark.sql.shuffle.partitions").toInt
     Route.gate(edges, cfg.localInitEdgeCap) match {
-      case Route.Local(srcs, dsts) =>
-        val n = srcs.length
+      case l: Route.Local =>
+        val (ids, sIdx, dIdx) = l.dense
+        val n = sIdx.length
         val sampleSize = math.min(cfg.sampleSize, n)
         // dense eids in (src, dst) sort order — exactly Ids.dense's
         // two-phase range rank (rows are distinct, so the order is total).
-        // Each pair is keyed by (rank of src among the srcs) << 32 | (rank
-        // of dst among the dsts): the keys sort in the pairs' order, and
-        // ranks < n < 2^31, so one primitive sort replaces a boxed one.
-        val us = Route.distinct(srcs)
-        val ud = Route.distinct(dsts)
-        val keys = Array.tabulate(n)(e =>
-          (java.util.Arrays.binarySearch(us, srcs(e)).toLong << 32) |
-            java.util.Arrays.binarySearch(ud, dsts(e)).toLong)
+        // Each pair is keyed by its endpoints' indices in the sorted ids,
+        // (src index) << 32 | (dst index): indices rank ids, so the keys
+        // sort in the pairs' order, and indices < 2^31, so one primitive
+        // sort replaces a boxed one.
+        val keys = Array.tabulate(n)(e => (sIdx(e).toLong << 32) | dIdx(e))
         java.util.Arrays.sort(keys)
-        val srcSorted = keys.map(k => us((k >>> 32).toInt))
-        val dstSorted = keys.map(k => ud(k.toInt))
         // ship the sorted edge list as TWO PRIMITIVE ARRAYS behind a
         // broadcast + range map: parallelize of (Long,Long,Long) tuples
         // would pin hundreds of MB of boxed tuples on the driver for the
         // whole layout run at the 5M-edge cap (ParallelCollectionRDD
         // keeps its seq alive for cache rebuilds); the broadcast holds
-        // ~16 B/edge and is released with the run
+        // the ids and ~8 B/edge and is released with the run
         def frame() = {
           import spark.implicits._
-          val bc = spark.sparkContext.broadcast((srcSorted, dstSorted))
+          val bc = spark.sparkContext.broadcast((ids, keys))
           val df = spark.sparkContext
             .parallelize(0 until n, math.max(1, sessP))
-            .map(i => (bc.value._1(i), bc.value._2(i), i.toLong))
+            .map { i =>
+              val (s, t) = ForceLayout.pairOf(bc.value._1, bc.value._2(i))
+              (s, t, i.toLong)
+            }
             .toDF("src", "dst", "eid")
             .persist(StorageLevel.MEMORY_AND_DISK)
           (df, () => { df.unpersist(false); bc.unpersist(false) })
@@ -201,8 +201,9 @@ object ForceLayout {
         // sample: the sampleSize smallest (xxhash64(eid), eid), by eid
         val picked = DetRandom.smallestByHash(
           Array.tabulate(n)(e => DetRandom.xxhash64Local(e.toLong)), sampleSize)
-        new Init(n.toLong, picked.map(_.toLong), picked.map(srcSorted(_)),
-          picked.map(dstSorted(_)), Some((srcSorted, dstSorted)), () => frame())
+        val sample = picked.map(e => pairOf(ids, keys(e)))
+        new Init(n.toLong, picked.map(_.toLong), sample.map(_._1), sample.map(_._2),
+          Some((ids, keys)), () => frame())
       case Route.Distributed(held, edgeCount) =>
         val sampleSize = math.min(cfg.sampleSize, edgeCount).toInt
         // Ids.dense returns a materialized checkpoint, so the held
@@ -218,6 +219,12 @@ object ForceLayout {
         init
     }
   }
+
+  /** The (src, dst) ids of a local-init key: (src index) << 32 | (dst
+    * index) into the sorted distinct ids.
+    */
+  private def pairOf(ids: Array[Long], key: Long): (Long, Long) =
+    (ids((key >>> 32).toInt), ids(key.toInt))
 
   private def progressMetrics(init: Init, iterations: Int, t0: Long): Map[String, Double] =
     Map(
@@ -259,17 +266,19 @@ object ForceLayout {
     val qDst = live.map(i => indexOf(init.sDsts(i)))
 
     // the blocks: row blocks of a tagged CSR built on the driver from the
-    // local init's sorted arrays, else built on the executors from the
+    // local init's sorted keys, else built on the executors from the
     // init's frame — rows ascend by neighbour either way, so the same
     // positions. An edge with an endpoint outside the position frame is
     // dropped, as the relational route's inner gather joins drop it.
     val (blocks, idsBc) = init.sorted match {
-      case Some((srcs, dsts)) =>
+      case Some((edgeIds, keys)) =>
+        // each collected id's position index, searched once per id
+        val posOf = edgeIds.map(indexOf)
         val (a, b, eids) = (Array.newBuilder[Int], Array.newBuilder[Int], Array.newBuilder[Long])
-        Seq(a, b, eids).foreach(_.sizeHint(srcs.length))
+        Seq(a, b, eids).foreach(_.sizeHint(keys.length))
         var e = 0
-        while (e < srcs.length) {
-          val (x, y) = (indexOf(srcs(e)), indexOf(dsts(e)))
+        while (e < keys.length) {
+          val (x, y) = (posOf((keys(e) >>> 32).toInt), posOf(keys(e).toInt))
           if (x >= 0 && y >= 0) { a += x; b += y; eids += e }
           e += 1
         }

@@ -109,16 +109,17 @@ object Influence {
     chosen.toSeq
   }
 
-  /** Collected adjacency of a small canonical edge table — the driver-
-    * local graph the harness-scale IC evaluators run on (the reference's
-    * influence bench is likewise a host-local loop over an n=200 graph,
+  /** Collected adjacency of a small canonical edge table, read from its
+    * [[Route.Local]] index — the driver-local graph the harness-scale IC
+    * evaluators run on (the reference's influence bench is likewise a
+    * host-local loop over an n=200 graph,
     * /root/reference/run_benchmarks.py:379-460).
     */
   def collectNeighbors(edges: DataFrame): Map[Long, Array[Long]] = {
-    val (s, d) = Route.collect(edges.select(col("src").cast("long"), col("dst").cast("long")))
-    val (ids, sIdx, dIdx) = Route.dense(s, d)
     // each row's neighbours ascend; the IC closure reads them as a set
-    val (rowPtr, colIdx, _) = Route.undirectedCsr(ids.length, sIdx, dIdx)
+    val local = Route.local(edges)
+    val ids = local.dense._1
+    val (rowPtr, colIdx) = local.csr
     ids.indices.map(v =>
       ids(v) -> Array.tabulate(rowPtr(v + 1) - rowPtr(v))(j => ids(colIdx(rowPtr(v) + j)))).toMap
   }

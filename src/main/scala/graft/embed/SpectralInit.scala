@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{DetRandom, Route}
+import graft.core.{DetRandom, LoopConf, Route}
 import graft.graph.Edges
 
 /** Spectral initialization: the d+1 smallest eigenvectors of the
@@ -113,25 +113,14 @@ object SpectralInit {
     // AQE re-plans and materializes every Exchange as its own job —
     // ~6 scheduler round-trips per superstep for a loop whose plan
     // shape never changes. Fixed-shape iterations run with AQE off
-    // (the adj side is already explicitly pre-partitioned); restored
-    // after the loop.
-    // with AQE off the loop's exchanges fall back to the session
-    // shuffle width — size them to the data too (AQE's coalescing is
-    // exactly what pEff precomputes here)
-    // NOTE: these are session-global mutations for the loop's duration
-    // (restored in the finally): this method assumes the single-driver-
-    // thread usage every graft entry point follows. A host app running
-    // concurrent queries on the same SparkSession should hand this loop
-    // a dedicated `spark.newSession()` so the overrides are scoped.
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val sppWas = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", pEff.toString)
+    // (the adj side is already explicitly pre-partitioned) and the
+    // loop's exchanges at the data-sized width pEff (AQE's coalescing
+    // is exactly what pEff precomputes here), through LoopConf.withLoop.
     // ONE job per iteration: y and the previous iteration's lazy x
     // checkpoint both materialize inside the Gram aggregate action;
     // frames superseded before that action are released right after it
     var toRelease: List[DataFrame] = Nil
-    try {
+    LoopConf.withLoop(spark, Some(pEff)) {
     while (iter < maxIter && !done) {
       // y = P x = (x + M x)/2 ; M x via gather join + agg
       val msgs = adj.join(x.withColumnRenamed("id", "nbr"), "nbr")
@@ -176,9 +165,6 @@ object SpectralInit {
       prevGram = Some(gm)
       iter += 1
     }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", sppWas)
     }
     // drop the trivial leading eigenvector: columns 1..d. Materialize
     // before releasing the frames the lazy x still depends on.
