@@ -60,7 +60,7 @@ object SparkEntry {
   /** The CTE chain alone (deg, r0..r5) for composition into other
     * oracles (e.g. the Spearman harness). The per-vertex gather sum is
     * the PortableSum fixed-point shape (scale 1e15), mirroring
-    * `PageRank.fixedIterUndirected(portableSum = true)` bit-for-bit —
+    * `PageRank.fixedIterUndirected` bit-for-bit —
     * order-independent in both engines, closing the nano-rounding
     * hazard documented in the header.
     */
@@ -171,8 +171,7 @@ object SparkEntry {
     }),
 
     "q_eigencentrality" -> ((s, dir) =>
-      graft.algos.EigenvectorCentrality.fixedIter(edges(s, dir), 5,
-          portableSum = true)
+      graft.algos.EigenvectorCentrality.fixedIter(edges(s, dir), 5)
         .select(col("id"),
           round(col("score") * 1e9, 0).cast("long").as("score_nano"))
         .orderBy("id")),
@@ -198,7 +197,7 @@ object SparkEntry {
       // than it pays in re-planning (2.47s -> 2.94s when forced off).
       val e = graft.core.Lineage.truncate(edges(s, dir))
       val deg = Edges.degrees(e)
-      val pr = PageRank.fixedIterUndirected(e, 5, portableSum = true)
+      val pr = PageRank.fixedIterUndirected(e, 5)
         .select(col("id"),
           round(col("rank") * 1e9, 0).cast("long").as("rank_nano"))
       graft.embed.Correlation.spearmanDf(
@@ -217,7 +216,7 @@ object SparkEntry {
         .orderBy(desc("degree"), col("id")).limit(20)),
 
     "q_pagerank" -> ((s, dir) =>
-      PageRank.fixedIterUndirected(edges(s, dir), 5, portableSum = true)
+      PageRank.fixedIterUndirected(edges(s, dir), 5)
         .select(col("id"),
           round(col("rank") * 1e9, 0).cast("long").as("rank_nano"))
         .orderBy("id")),
@@ -291,7 +290,7 @@ object SparkEntry {
         .union(links.select(col("dst_url").as("url")))
       val dict = UrlDictionary.build(s, urls)
       val e = Edges.canonicalize(UrlDictionary.densify(links, dict))
-      PageRank.fixedIterUndirected(e, 5, portableSum = true)
+      PageRank.fixedIterUndirected(e, 5)
         .select(col("id"),
           round(col("rank") * 1e9, 0).cast("long").as("rank_nano"))
         .orderBy("id")
@@ -347,12 +346,11 @@ object SparkEntry {
         .orderBy("id_a", "id_b")
     }),
 
-    // portable-hash variants (rolling-hash seeded instead of xxhash64)
-    // so the DuckDB oracle can mirror the full pipeline; production
-    // default stays xxhash64
+    // rolling-hash seeded MinHash, so the DuckDB oracle can mirror the
+    // full pipeline
     "q_minhash_dedup" -> ((s, dir) =>
       Dedup.minHashNearDups(dupCorpus(s, dir), "doc_id", "text",
-        threshold = 0.9, portableHash = true).orderBy("id_a", "id_b")),
+        threshold = 0.9).orderBy("id_a", "id_b")),
 
     "q_simhash" -> ((s, dir) =>
       docs(s, dir).select(col("doc_id"),
@@ -369,7 +367,7 @@ object SparkEntry {
     // the DuckDB oracle)
     "q_ann_lsh" -> ((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Ann.lshTopK(emb, emb.where(col("vec_id") < 10), 5, portableHash = true)
+      Ann.lshTopK(emb, emb.where(col("vec_id") < 10), 5)
         .orderBy("query_id", "rank")
     }),
     // IVF coarse-quantizer variant: training-free deterministic
@@ -393,8 +391,8 @@ object SparkEntry {
         .select((col("vec_id") + 1000000L).as("vec_id"),
           transform(col("embedding"), x => x * lit(1.001) + lit(0.01))
             .as("embedding"))
-      Ann.embeddingNearDups(emb.union(pert), threshold = 0.9,
-        portableHash = true).orderBy("id_a", "id_b")
+      Ann.embeddingNearDups(emb.union(pert), threshold = 0.9)
+        .orderBy("id_a", "id_b")
     }),
   )
 
@@ -676,7 +674,7 @@ object SparkEntry {
 
   private def eigenOracle: Map[String, String] = Map(
     // gather + L2-norm sums in the PortableSum fixed-point shape,
-    // mirroring EigenvectorCentrality.fixedIter(portableSum = true)
+    // mirroring EigenvectorCentrality.fixedIter
     "q_eigencentrality" -> {
       // MATERIALIZED: each e_k is referenced twice by the next step
       // (gather + self-join) and s_k twice by its own norm, so without

@@ -76,9 +76,9 @@ object EigenvectorCentrality {
   /** Fixed-iteration variant for the DuckDB oracle: k power-iteration
     * steps of x' = normalize(x + A x).
     *
-    * `portableSum = true` makes both order-dependent sums (neighbor
-    * gather, L2 norm) order-independent and engine-identical via
-    * [[graft.core.PortableSum]]: gather addends are normalized scores
+    * Both sums whose double result depends on add order (neighbor
+    * gather, L2 norm) run through [[graft.core.PortableSum]], so they are
+    * order-independent and engine-identical: gather addends are normalized scores
     * (<= 1 after the first step, exactly 1.0 at it — scale 1e15); norm
     * addends raw^2 <= (1+maxdeg)^2 ~ 1e5 — scale 1e10 keeps the rounded
     * product below 2^53 (see the round-5 advice note: above-2^53
@@ -93,11 +93,10 @@ object EigenvectorCentrality {
     * `raw`, folds the norm aggregate into the materializing action, and
     * divides by the collected scalar — one job per step, linear plan,
     * no recomputation. The norm double and the division are the
-    * identical expressions, so the portable path stays bit-identical to
-    * the DuckDB mirror.
+    * identical expressions, so the result stays bit-identical to the
+    * DuckDB mirror.
     */
-  def fixedIter(edges: DataFrame, iters: Int,
-                portableSum: Boolean = false): DataFrame = {
+  def fixedIter(edges: DataFrame, iters: Int): DataFrame = {
     val spark = edges.sparkSession
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val nbrs = graft.core.Lineage.truncatePartitioned(
@@ -108,17 +107,13 @@ object EigenvectorCentrality {
     for (_ <- 1 to iters) {
       val msgs = nbrs.join(x, Seq("id"))
         .select(col("nbr").as("mid"), col("score"))
-      val sumExpr =
-        if (portableSum) graft.core.PortableSum.fixedSum(col("score"), 1e15)
-        else sum(col("score"))
-      val gathered = msgs.groupBy(col("mid")).agg(sumExpr.as("s"))
+      val gathered = msgs.groupBy(col("mid"))
+        .agg(graft.core.PortableSum.fixedSum(col("score"), 1e15).as("s"))
       val raw = graft.core.Lineage.truncateLazy(
         x.join(gathered, x("id") === gathered("mid"), "left")
           .select(x("id"), (col("score") + coalesce(col("s"), lit(0.0))).as("raw")))
       val normExpr =
-        if (portableSum)
-          sqrt(graft.core.PortableSum.fixedSum(col("raw") * col("raw"), 1e10))
-        else sqrt(sum(col("raw") * col("raw")))
+        sqrt(graft.core.PortableSum.fixedSum(col("raw") * col("raw"), 1e10))
       // materializes `raw`; the previous step's frame is then dead.
       // Empty graph: the aggregate returns a null row — `raw` has no
       // rows either, so the (unused) scalar is irrelevant; guard the

@@ -233,11 +233,10 @@ object PageRank {
     * canonical edge table has degree >= 1, so dangling mass is zero by
     * construction).
     *
-    * `portableSum = true` quantizes each gather addend (rank/deg <= 1,
-    * scale 1e15) through [[graft.core.PortableSum]] so the per-vertex
-    * sums are order-independent and bit-identical to the DuckDB mirror
-    * — closing the latent nano-rounding hazard on the oracle queries.
-    * Production callers keep the native double sum.
+    * Each gather addend (rank/deg <= 1, scale 1e15) is quantized through
+    * [[graft.core.PortableSum]], so the per-vertex sums are
+    * order-independent and bit-identical to the DuckDB mirror — closing
+    * the latent nano-rounding hazard on the oracle queries.
     *
     * Plan shape (optimization round 6): the old formulation referenced
     * `ranks` TWICE per iteration (gather join + new-rank join), so the
@@ -251,39 +250,32 @@ object PageRank {
     * the state is referenced exactly once per step, the plan grows
     * linearly, and each superstep's only Exchange is the gather
     * aggregation itself (the state/deg joins reuse the id-hash
-    * partitioning end to end). Arithmetic is unchanged: the portable
-    * path is order-independent (bit-identical results) and the native
-    * path differs only in float add order (parity-tested at 1e-12
-    * against the CSR engines, same as before).
+    * partitioning end to end).
     *
-    * Below `localEdgeCap` edges the PORTABLE-sum chain runs on the
-    * driver over a collected CSR ([[Route.gate]]). The portable path
-    * quantizes every gather addend through
-    * [[graft.functions.PortableRound]] and sums LONGS — the per-vertex
-    * sum is order-INDEPENDENT by construction, so the local kernel that
-    * replays the identical double ops (rank/deg, halfUp(c*scale),
-    * long sum, base + alpha*(s/scale)) is bit-identical to the
-    * distributed plan, not merely close (parity-tested with ==). The
-    * native-double path is NOT routed (its sum order differs run to
-    * run); above the cap the pre-shuffled relational chain runs
-    * unchanged — the 100 TB path.
+    * Below `localEdgeCap` edges the chain runs on the driver over a
+    * collected CSR ([[Route.gate]]). Every gather addend is quantized
+    * through [[graft.functions.PortableRound]] and summed as a LONG — the
+    * per-vertex sum is order-INDEPENDENT by construction, so the local
+    * kernel that replays the identical double ops (rank/deg,
+    * halfUp(c*scale), long sum, base + alpha*(s/scale)) is bit-identical
+    * to the distributed plan, not merely close (parity-tested with ==).
+    * Above the cap the pre-shuffled relational chain runs — the 100 TB
+    * path.
     */
   def fixedIterUndirected(edges: DataFrame, iters: Int,
                           alpha: Double = 0.85,
-                          portableSum: Boolean = false,
                           localEdgeCap: Long = Route.LocalEdgeCap): DataFrame = {
     val spark = edges.sparkSession
     // the gate's held projection serves the adjacency build too, so the
     // edge pipeline runs once whichever path runs
-    var held: Option[Route.Held] = None
-    if (portableSum) Route.gate(edges, localEdgeCap) match {
+    val held = Route.gate(edges, localEdgeCap) match {
       case l: Route.Local => return fixedIterPortableLocal(spark, l, iters, alpha)
-      case Route.Distributed(h, _) => held = Some(h)
+      case Route.Distributed(h, _) => h
     }
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val nbrs = graft.core.Lineage.truncatePartitioned(
-      Edges.neighbors(held.fold(edges)(_.edges)).repartition(p, col("id")))
-    held.foreach(_.release())
+      Edges.neighbors(held.edges).repartition(p, col("id")))
+    held.release()
     // deg inherits the id-hash partitioning (no exchange); materialized
     // so the per-iteration joins scan a pinned RDD instead of
     // re-aggregating
@@ -297,10 +289,8 @@ object PageRank {
     for (_ <- 1 to iters) {
       val msgs = nbrs.join(ranks, Seq("id"))
         .select(col("nbr").as("mid"), (col("rank") / col("deg")).as("c"))
-      val sumExpr =
-        if (portableSum) graft.core.PortableSum.fixedSumLong(col("c"), 1e15)
-        else sum(col("c"))
-      val gathered = msgs.groupBy(col("mid")).agg(sumExpr.as("s"))
+      val gathered = msgs.groupBy(col("mid"))
+        .agg(graft.core.PortableSum.fixedSumLong(col("c"), 1e15).as("s"))
       ranks = deg.join(gathered.select(col("mid").as("id"), col("s")),
           Seq("id"), "left")
         .select(col("id"),

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * The scale path is LSH bucketing (signed random projections): corpus
   * and queries hash to buckets; only same-bucket pairs are scored — the
   * crossJoin becomes an equi-join on bucket id. Projection weights are
-  * deterministic xxhash64 functions of (plane, dim), not data, so the
+  * deterministic md5 functions of (seed, plane, dim), not data, so the
   * index is reproducible and needs no fit/training pass.
   */
 object Ann {
@@ -87,28 +87,11 @@ object Ann {
         (col("pos") + 1).cast("long").as("rank"))
   }
 
-  /** Signed-random-projection bucket id: `planes` sign bits packed into
-    * a long. Weight of (plane p, dim j) is ±1 from xxhash64 parity.
-    */
-  def srpBucket(vec: Column, planes: Int, seed: Column): Column = {
-    val projections = transform(sequence(lit(0), lit(planes - 1)), p =>
-      aggregate(
-        zip_with(vec,
-          sequence(lit(0), size(vec) - 1),
-          (x, j) => when(
-            xxhash64(seed, p, j).bitwiseAND(lit(1L)) === 1L, x)
-            .otherwise(-x)),
-        lit(0.0), (s, v) => s + v))
-    aggregate(
-      zip_with(projections, sequence(lit(0), lit(planes - 1)),
-        (proj, p) => when(proj > 0, graft.core.Cols.shiftLeftC(lit(1L), p))
-          .otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
-
-  /** DuckDB-mirrorable SRP bucket: the ±1 weight of (plane p, dim j) is
-    * the parity of the first hex digit of md5(seed + p*1009 + j) — both
-    * engines compute the identical digest (xxhash64 is Spark-only).
+  /** Signed-random-projection bucket id, the one LSH hash of `lshTopK`
+    * and `embeddingNearDups`: `planes` sign bits packed into a long. The
+    * ±1 weight of (plane p, dim j) is the parity of the first hex digit
+    * of md5(seed + p*1009 + j) — Spark and DuckDB compute the identical
+    * digest, so the oracle mirrors every bucket.
     * Signs are data-independent and cached per (seed, planes, dim), so
     * the per-row cost is the pure planes x dim multiply-add loop.
     * Projection sums fold left-to-right, matching DuckDB's list_reduce,
@@ -139,8 +122,7 @@ object Ann {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               planes: Int = 12, tables: Int = 8, probes: Int = -1,
-              idCol: String = "vec_id", vecCol: String = "embedding",
-              portableHash: Boolean = false): DataFrame = {
+              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val nProbes = math.min(if (probes < 0) planes else probes, planes)
     val c = corpus.select(col(idCol).as("neighbor_id"),
       asDouble(col(vecCol)).as("cv"))
@@ -150,10 +132,7 @@ object Ann {
     def bucketed(df: DataFrame, vc: String): DataFrame =
       df.select(col("*"), posexplode(
           transform(sequence(lit(0), lit(tables - 1)),
-            t =>
-              if (portableHash)
-                srpBucketPortable(col(vc), planes, lit(42L) + t.cast("long") * 1000L)
-              else srpBucket(col(vc), planes, lit(42L) + t * 1000L))))
+            t => srpBucketPortable(col(vc), planes, lit(42L) + t.cast("long") * 1000L))))
         .withColumnRenamed("pos", "t").withColumnRenamed("col", "b")
     val cb = bucketed(c, "cv")
     // multiprobe fan-out on the (small, broadcast) query side only:
@@ -330,16 +309,12 @@ object Ann {
   def embeddingNearDups(corpus: DataFrame, threshold: Double,
                         planes: Int = 12, tables: Int = 8,
                         maxBucket: Int = 10000,
-                        idCol: String = "vec_id", vecCol: String = "embedding",
-                        portableHash: Boolean = false): DataFrame = {
+                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val c = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = c.select(col("id"), posexplode(
         transform(sequence(lit(0), lit(tables - 1)),
-          t =>
-            if (portableHash)
-              srpBucketPortable(col("v"), planes, lit(42L) + t.cast("long") * 1000L)
-            else srpBucket(col("v"), planes, lit(42L) + t * 1000L))))
+          t => srpBucketPortable(col("v"), planes, lit(42L) + t.cast("long") * 1000L))))
       .select(col("id"), col("pos").as("t"), col("col").as("b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bucketCounts = cb.groupBy("t", "b").agg(count(lit(1)).as("_bc"))

@@ -28,8 +28,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the quantized sum is still one map-side-combinable
   * hash aggregation — decimal(38,0) partials are 16 bytes, and the
-  * round/cast are codegen'd scalar ops. Used only on oracle-facing
-  * query paths; production operators keep native double sums.
+  * round/cast are codegen'd scalar ops. It is the only sum of the
+  * fixed-iteration PageRank and eigenvector operators
+  * (`PageRank.fixedIterUndirected`, `EigenvectorCentrality.fixedIter`)
+  * and an opt-in one in `ApproxBetweenness`; the convergent engines
+  * keep native double sums.
   */
 object PortableSum {
 

@@ -69,6 +69,11 @@ object Route {
     */
   val LayoutVertexCap = 1000000L
 
+  /** (value, value) pairs Spearman ranks on the driver: 2M pairs
+    * collect in ~32 MB and rank in milliseconds.
+    */
+  val SpearmanPairCap = 2000000
+
   /** An input's (src, dst) projection, read through a cache: the
     * input's own if the session already caches it (or the projection),
     * or the blocks of a materialized local checkpoint the input is

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Route
+
 /** Spearman rank correlation — the reference's benchmark metric
   * (scipy.stats.spearmanr, /root/reference/graphem/benchmark.py:173-194):
   * average ranks for ties, Pearson correlation of the rank vectors.
@@ -89,26 +91,22 @@ object Correlation {
       .otherwise(cov / (sa * sb))
   }
 
-  /** Below this row count the whole computation runs driver-locally:
-    * the distributed two-phase rank costs ~8 tiny jobs of pure
-    * scheduling overhead on benchmark-scale frames (the #2 cost of
-    * every sf0.1 driver bench run on a 1,000-row input), while 2M
-    * (value, value) pairs collect in ~32 MB and rank in milliseconds.
-    * Same gated-local-path pattern as SpectralInit: the distributed
-    * plan — the one that matters at 100 TB — engages above the
-    * threshold, and a parity test pins the two paths to each other.
-    */
-  private[graft] val LocalThreshold = 2000000
-
   /** Spearman rho of (a, b) columns of `df`. Returns NaN when either
     * column is constant.
     */
   def spearman(df: DataFrame, a: String, b: String): Double =
     spearmanVia(df, a, b)._1
 
-  /** (rho, usedLocalPath) — threshold injectable for the routing test. */
+  /** (rho, usedLocalPath) — threshold injectable for the routing test.
+    * At or below `threshold` (value, value) pairs the whole computation
+    * runs driver-locally: the distributed two-phase rank costs ~8 tiny
+    * jobs of pure scheduling overhead on benchmark-scale frames. Same
+    * gated-local-path pattern as SpectralInit: the distributed plan —
+    * the one that matters at 100 TB — engages above the threshold, and
+    * a parity test pins the two paths to each other.
+    */
   private[graft] def spearmanVia(df: DataFrame, a: String, b: String,
-                                 threshold: Int = LocalThreshold): (Double, Boolean) =
+                                 threshold: Int = Route.SpearmanPairCap): (Double, Boolean) =
     probePairs(df, a, b, threshold) match {
       case Some(pairs) => (spearmanLocal(pairs), true)
       case None => (spearmanDistributed(df, a, b), false)
@@ -162,7 +160,7 @@ object Correlation {
     */
   def spearmanDf(df: DataFrame, a: String, b: String,
                  outName: String = "spearman_micro",
-                 threshold: Int = LocalThreshold): DataFrame = {
+                 threshold: Int = Route.SpearmanPairCap): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     probePairs(df, a, b, threshold) match {

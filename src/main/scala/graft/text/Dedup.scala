@@ -29,91 +29,65 @@ object Dedup {
     df.join(keep, df(idCol) === keep(idCol), "left_semi")
   }
 
-  /** MinHash signature: for each of `numHashes` seeded hash functions,
-    * the minimum xxhash64 over the document's shingles. Pure column
-    * expressions: one array column of size numHashes per row.
-    */
-  def minHashSignature(shingleCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      k => aggregate(shingleCol, lit(Long.MaxValue),
-        (acc, s) => least(acc, xxhash64(s, k))))
-
   /** Portable seeded hash over a precomputed rolling-hash fingerprint:
     * (fp * (2k+3) + k) mod 1e9+7 — exactly reproducible in DuckDB
     * BIGINT arithmetic (fp < 1e9+7, so no overflow), which xxhash64 is
-    * not. Weaker mixing than xxhash64 but fine for oracle-checked
-    * variants; production paths default to xxhash64.
+    * not. It is the one seeded hash of the MinHash pipeline and of
+    * `simHashPortable`; only `simHash` keeps xxhash64.
     */
   private[text] def seededPortable(fp: Column, k: Column): Column =
     (fp * (k.cast("long") * 2L + 3L) + k.cast("long")) % 1000000007L
 
-  /** DuckDB-mirrorable MinHash signature (see seededPortable). The
-    * per-shingle fingerprint is computed ONCE and reused across the
-    * numHashes seeded variants.
+  /** The one MinHash signature fold: for each of `numHashes` seeds k,
+    * the minimum seededPortable(f, k) over the per-shingle fingerprints
+    * `fps`. Pure column expressions: one array column of size numHashes
+    * per row.
     */
-  def minHashSignaturePortable(shingleCol: Column, numHashes: Int): Column = {
-    val fps = transform(shingleCol, s => TextOps.rollingHash(s))
+  private def signature(fps: Column, numHashes: Int): Column =
     transform(sequence(lit(0), lit(numHashes - 1)),
       k => aggregate(fps, lit(Long.MaxValue),
         (acc, f) => least(acc, seededPortable(f, k))))
-  }
 
-  /** LSH banding: (id, band, bucket) rows — documents sharing any
-    * (band, bucket) are near-dup candidates. Documents with an EMPTY
-    * shingle set (fewer than k tokens) are excluded: their signature is
-    * the all-MaxValue vector, so on a web corpus millions of near-empty
-    * docs would otherwise share ONE bucket in every band and the
-    * candidate self-join would go quadratic. They can only be exact
-    * duplicates of each other — `exactGroups` covers them.
+  /** DuckDB-mirrorable MinHash signature of a shingle array (see
+    * seededPortable). The fingerprint fold is inlined into every seed's
+    * lambda, so standalone it runs numHashes times per row; the
+    * near-dup pipeline materializes the fingerprints once instead (see
+    * the barrier note on bandedBuckets).
     */
-  def lshBuckets(df: DataFrame, idCol: String, textCol: String,
-                 numHashes: Int = 16, bands: Int = 8,
-                 portableHash: Boolean = false): DataFrame =
-    bandedBuckets(
-      df.select(col(idCol).as("id"), TextOps.shingles(col(textCol)).as("sh")),
-      numHashes, bands, portableHash)
+  def minHashSignaturePortable(shingleCol: Column, numHashes: Int): Column =
+    signature(transform(shingleCol, s => TextOps.rollingHash(s)), numHashes)
 
-  /** The one copy of the signature -> band-bucket pipeline, shared by
-    * [[lshBuckets]] and [[minHashNearDups]]. Input: an (id, sh) frame,
-    * optionally already carrying an `fps` column (the per-shingle
-    * rolling-hash fingerprints).
+  /** LSH banding of an (id, sh, fps) frame — `fps` the per-shingle
+    * rolling-hash fingerprints — into (id, band, bucket) rows: documents
+    * sharing any (band, bucket) are near-dup candidates. A band's
+    * bucket is the rolling hash (a * 31 + v) mod 1e9+7 of its signature
+    * slice, mirrored in DuckDB BIGINT arithmetic.
     *
-    * Portable-path evaluation-count note (optimization round 6):
-    * Catalyst COLLAPSES adjacent projections, re-inlining a derived
-    * column's expression into every use — a plain
-    * `.withColumn("fps", ...)` here ends up duplicated into each of the
-    * numHashes aggregate lambdas, so the per-character fingerprint fold
-    * runs numHashes times per document (and the shingle construction
-    * with it, measured 6x wall on the sf0.1 corpus). Only a
-    * MATERIALIZATION BARRIER stops the re-inlining: minHashNearDups
-    * passes a frame whose `fps` is a cached column; standalone callers
-    * without a cache (lshBuckets) accept the inline cost at their small
-    * scale.
+    * Documents with an EMPTY shingle set (fewer than k tokens) are
+    * excluded: their signature is the all-MaxValue vector, so on a web
+    * corpus millions of near-empty docs would otherwise share ONE bucket
+    * in every band and the candidate self-join would go quadratic. They
+    * can only be exact duplicates of each other — `exactGroups` covers
+    * them.
+    *
+    * Evaluation-count note (optimization round 6): Catalyst COLLAPSES
+    * adjacent projections, re-inlining a derived column's expression
+    * into every use — a plain `.withColumn("fps", ...)` ends up
+    * duplicated into each of the numHashes aggregate lambdas, so the
+    * per-character fingerprint fold runs numHashes times per document
+    * (and the shingle construction with it, measured 6x wall on the
+    * sf0.1 corpus). Only a MATERIALIZATION BARRIER stops the
+    * re-inlining: minHashNearDups passes a frame whose `fps` is a cached
+    * column.
     */
-  private def bandedBuckets(sh: DataFrame, numHashes: Int, bands: Int,
-                            portableHash: Boolean): DataFrame = {
+  private def bandedBuckets(sh: DataFrame, numHashes: Int,
+                            bands: Int): DataFrame = {
     val rowsPerBand = numHashes / bands
-    def bandBucket(b: Column): Column = {
-      val sl = slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))
-      if (portableHash)
-        aggregate(sl, lit(0L), (a, v) => (a * 31L + v) % 1000000007L)
-      else xxhash64(concat_ws(",", sl))
-    }
-    val withFps =
-      if (portableHash && !sh.columns.contains("fps"))
-        sh.withColumn("fps", transform(col("sh"), s => TextOps.rollingHash(s)))
-      else sh
-    val nonEmpty = withFps.where(size(col("sh")) > 0)
-    val sigged =
-      if (portableHash)
-        nonEmpty.select(col("id"),
-          transform(sequence(lit(0), lit(numHashes - 1)),
-            k => aggregate(col("fps"), lit(Long.MaxValue),
-              (acc, f) => least(acc, seededPortable(f, k)))).as("sig"))
-      else
-        nonEmpty.select(col("id"),
-          minHashSignature(col("sh"), numHashes).as("sig"))
-    sigged
+    def bandBucket(b: Column): Column =
+      aggregate(slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand)),
+        lit(0L), (a, v) => (a * 31L + v) % 1000000007L)
+    sh.where(size(col("sh")) > 0)
+      .select(col("id"), signature(col("fps"), numHashes).as("sig"))
       .select(col("id"), posexplode(
         transform(sequence(lit(0), lit(bands - 1)), b => bandBucket(b))))
       .select(col("id"), col("pos").as("band"), col("col").as("bucket"))
@@ -123,7 +97,7 @@ object Dedup {
     * shingle Jaccard >= threshold. Returns (id_a, id_b, jaccard_micro).
     *
     * Scale guards: docs with an empty shingle set are excluded from
-    * banding (see lshBuckets — they'd all share one hot bucket), and
+    * banding (see bandedBuckets — they'd all share one hot bucket), and
     * buckets larger than `maxBucket` are dropped before the candidate
     * self-join (a bucket of B docs contributes B^2/2 pairs; a single
     * boilerplate-heavy bucket would otherwise dominate the job). Pairs
@@ -133,8 +107,7 @@ object Dedup {
     */
   def minHashNearDups(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.7, numHashes: Int = 16,
-                      bands: Int = 8, maxBucket: Int = 10000,
-                      portableHash: Boolean = false): DataFrame = {
+                      bands: Int = 8, maxBucket: Int = 10000): DataFrame = {
     // The shingle/fingerprint evaluation is ~16 string hashes per
     // shingle — far heavier per row than the (id, text) scan feeding
     // it. A small corpus arrives as 1-2 scan splits, which would
@@ -148,19 +121,16 @@ object Dedup {
     val docs0 = df.select(col(idCol).as("id"), col(textCol).as("_text"))
     val docs = if (docs0.rdd.getNumPartitions < sessP)
       docs0.repartition(sessP) else docs0
-    // Shingles (and on the portable path the per-shingle fingerprints)
-    // are materialized ONCE into a cache: the cache is a hard
-    // materialization barrier, which is what actually guarantees
-    // single evaluation — see the collapse note on bandedBuckets. Both
-    // the banding and the candidate verification read this cache.
-    val sh = (if (portableHash)
-        docs.select(col("id"), TextOps.shingles(col("_text")).as("sh"))
-          .select(col("id"), col("sh"),
-            transform(col("sh"), s => TextOps.rollingHash(s)).as("fps"))
-      else
-        docs.select(col("id"), TextOps.shingles(col("_text")).as("sh")))
+    // Shingles and their per-shingle fingerprints are materialized ONCE
+    // into a cache: the cache is a hard materialization barrier, which
+    // is what actually guarantees single evaluation — see the collapse
+    // note on bandedBuckets. Both the banding and the candidate
+    // verification read this cache.
+    val sh = docs.select(col("id"), TextOps.shingles(col("_text")).as("sh"))
+      .select(col("id"), col("sh"),
+        transform(col("sh"), s => TextOps.rollingHash(s)).as("fps"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val buckets = bandedBuckets(sh, numHashes, bands, portableHash)
+    val buckets = bandedBuckets(sh, numHashes, bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bucketCounts = buckets.groupBy("band", "bucket")
       .agg(count(lit(1)).as("_bc"))

@@ -38,6 +38,27 @@ class AlgosSpec extends SparkSuite {
     assert(m(2L) > m(1L) && m(1L) > m(0L))
   }
 
+  test("salted PageRank aggregation matches the unsalted relational engine") {
+    val e = graft.generators.Generators.ba(spark, 2000, 3, 7)
+    def ranks(salted: Boolean) = PageRank.runUndirected(spark, e,
+        PageRank.Config(engine = "rel", saltedAgg = salted, tol = 0.0, maxIter = 5))
+      .ranks.collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    val plain = ranks(salted = false)
+    val salted = ranks(salted = true)
+    assert(salted.keySet == plain.keySet && plain.size == 2000)
+    salted.foreach { case (id, v) =>
+      assert(math.abs(v - plain(id)) < 1e-12, s"v$id: $v vs ${plain(id)}")
+    }
+  }
+
+  test("salted aggregation keeps the auto engine on the relational plan") {
+    val e = graft.generators.Generators.ba(spark, 2000, 3, 7)
+    val r = PageRank.runUndirected(spark, e,
+      PageRank.Config(saltedAgg = true, tol = 0.0, maxIter = 5))
+    assert(r.engine == "rel")
+    assert(r.ranks.count() == 2000)
+  }
+
   test("CC assigns min vertex id per component (two triangles)") {
     val cc = ConnectedComponents.run(spark, edgesOf(TwoTriangles))
     val m = cc.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap

@@ -173,14 +173,13 @@ class Round2Spec extends SparkSuite {
     val emb = Seq((0L, Array.fill(8)(0.5f)), (1L, Array.fill(8)(0.5f)),
       (2L, Array.tabulate(8)(i => if (i % 2 == 0) 1.0f else -1.0f)))
       .toDF("vec_id", "embedding")
-    val nn = Ann.lshTopK(emb, emb.where(col("vec_id") === 0), 1,
-      portableHash = true).collect()
+    val nn = Ann.lshTopK(emb, emb.where(col("vec_id") === 0), 1).collect()
     assert(nn.length == 1 && nn.head.getLong(1) == 1L)
   }
 
   test("CSR PageRank matches the relational engine to 1e-12") {
     val e = graft.generators.Generators.ba(spark, 300, 3, 13)
-    val rel = graft.algos.PageRank.fixedIterUndirected(e, 8)
+    val rel = graft.algos.PageRank.fixedIterUndirected(e, 8, localEdgeCap = 0L)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val csr = graft.algos.PageRankCsr.run(spark, e, maxIter = 8)
     csr.ranks.collect().foreach { r =>

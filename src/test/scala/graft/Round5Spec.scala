@@ -27,16 +27,16 @@ class Round5Spec extends SparkSuite {
 
   test("portable-sum PageRank/eigen match the native-double variants") {
     val e = graft.generators.Generators.ba(spark, 200, 3, 17)
-    val pr0 = graft.algos.PageRank.fixedIterUndirected(e, 5)
+    val pr0 = graft.algos.PageRankCsr.run(spark, e, maxIter = 5).ranks
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val pr1 = graft.algos.PageRank.fixedIterUndirected(e, 5, portableSum = true)
+    val pr1 = graft.algos.PageRank.fixedIterUndirected(e, 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     pr1.foreach { case (id, v) =>
       assert(math.abs(v - pr0(id)) < 1e-9, s"pagerank v$id: $v vs ${pr0(id)}")
     }
-    val eg0 = graft.algos.EigenvectorCentrality.fixedIter(e, 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val eg1 = graft.algos.EigenvectorCentrality.fixedIter(e, 5, portableSum = true)
+    val eg0 = graft.algos.EigenvectorCentrality.run(spark, e, maxIter = 5, tol = 0.0)
+      .scores.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val eg1 = graft.algos.EigenvectorCentrality.fixedIter(e, 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     eg1.foreach { case (id, v) =>
       assert(math.abs(v - eg0(id)) < 1e-7, s"eigen v$id: $v vs ${eg0(id)}")
@@ -114,8 +114,7 @@ class Round5Spec extends SparkSuite {
     val rnd = new scala.util.Random(5)
     val emb = (0L until 200L).map(i =>
       (i, Array.fill(16)(rnd.nextDouble() * 2 - 1))).toDF("vec_id", "embedding")
-    val out = graft.ann.Ann.lshTopK(emb, emb.where(col("vec_id") < 3), 5,
-      portableHash = true)
+    val out = graft.ann.Ann.lshTopK(emb, emb.where(col("vec_id") < 3), 5)
     // every distinct-shaped Aggregate (output == grouping) in the plan
     // must be array-free: the candidate dedup groups (query_id,
     // neighbor_id), never the embedding payloads

@@ -93,11 +93,10 @@ class Round6Spec extends SparkSuite {
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq);
         iters <- Seq(1, 5)) {
       val e = edgesOf(g)
-      val local = graft.algos.PageRank.fixedIterUndirected(e, iters,
-          portableSum = true)
+      val local = graft.algos.PageRank.fixedIterUndirected(e, iters)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       val dist = graft.algos.PageRank.fixedIterUndirected(e, iters,
-          portableSum = true, localEdgeCap = 0L)
+          localEdgeCap = 0L)
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(local.keySet == dist.keySet)
       local.foreach { case (id, v) =>

@@ -175,7 +175,7 @@ class RouteSpec extends SparkSuite {
       .select(col("id").as("s"))
     val ops: Seq[(String, DataFrame => Any)] = Seq(
       "pagerank auto" -> (e => PageRank.runUndirected(spark, e).ranks.count()),
-      "fixedIter portable" -> (e => PageRank.fixedIterUndirected(e, 3, portableSum = true).count()),
+      "fixedIter portable" -> (e => PageRank.fixedIterUndirected(e, 3).count()),
       "cc" -> (e => ConnectedComponents.run(spark, e).count()),
       "lpa" -> (e => LabelPropagation.run(spark, e, 2).count()),
       "triangles" -> (e => TriangleCount.globalCount(spark, e).head()),
