@@ -4,6 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
+
 /** Extra (non-contract) benchmark: per-query noop-sink isolation plus
   * job/stage counts — the guide §1.4/§1.5 measurement harness for the
   * optimization rounds. Does NOT replace graft.Bench (the frozen driver
@@ -41,6 +43,7 @@ object BenchExtra {
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
+      .config(GraftSession.CodegenCacheConf, GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val counter = new Counter

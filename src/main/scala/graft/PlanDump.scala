@@ -4,6 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
+
 /** Dump `.explain("formatted")` of every declared query to
   * plans/<tag>/<query>_<suffix>.txt — the committed evidence for plan
   * claims in OPTIMIZATION_r*.md.
@@ -27,6 +29,7 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
+      .config(GraftSession.CodegenCacheConf, GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = Paths.get(s"plans/$tag")

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.GraftSession
+
 /** Two-parallelism-level scaling evidence (north_rule: throughput
   * scaling efficiency >= 0.8 from N to 4N executors; no real cluster in
   * the sandbox, so the protocol from BASELINE.md applies: the same job
@@ -49,6 +51,7 @@ object ScalingBench {
       // per-superstep broadcast/shuffle is pure serial overhead here
       .config("spark.broadcast.compress", "false")
       .config("spark.shuffle.compress", "false")
+      .config(GraftSession.CodegenCacheConf, GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val e = graft.generators.Generators.erSparse(spark, nVerts, p, 42)
@@ -113,6 +116,7 @@ object ScalingBench {
       .config("spark.ui.enabled", "false")
       .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
+      .config(GraftSession.CodegenCacheConf, GraftSession.CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._

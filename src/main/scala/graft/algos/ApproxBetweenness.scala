@@ -100,12 +100,13 @@ object ApproxBetweenness {
     var done = false
     while (!done && level < maxLevels) {
       val frontier = levels.head
+      // dist comes from the frontier's own, not from `level`: a literal
+      // would change the generated code, and compile it anew, per level
       val expand = frontier.join(nbrs, "id")
-        .select(col("s"), col("nbr").as("id"), col("sigma"))
+        .select(col("s"), col("nbr").as("id"), (col("dist") + 1L).as("dist"), col("sigma"))
         .join(visited.select(col("s"), col("id")), Seq("s", "id"), "left_anti")
         .groupBy(col("s"), col("id"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .select(col("s"), col("id"), lit(level + 1L).as("dist"), col("sigma"))
+        .agg(min(col("dist")).as("dist"), sum(col("sigma")).as("sigma"))
       val nf = graft.core.Lineage.truncate(expand)
       if (nf.count() == 0) {
         graft.core.Lineage.release(nf)
@@ -161,7 +162,7 @@ object ApproxBetweenness {
       if (bcFrames.isEmpty)
         verts.select(col("id"), lit(0.0).as("betweenness"))
       else {
-        val allDelta = bcFrames.reduce(_ union _)
+        val allDelta = graft.core.Lineage.union(bcFrames)
           .where(col("id") =!= col("s"))
           .groupBy("id").agg(sumD(col("delta")).as("raw"))
         verts.join(allDelta, Seq("id"), "left")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.functions.DoubleParam
 import graft.graph.Edges
 
 /** Eigenvector centrality — the reference delegates to
@@ -41,8 +42,10 @@ object EigenvectorCentrality {
       val aggRow = raw.agg(
         sqrt(sum(col("raw") * col("raw"))).as("norm")).head()
       val norm = math.max(aggRow.getDouble(0), 1e-300)
+      // the norm changes every step: passed as data, so the step's code
+      // compiles once (a `lit` would compile new classes per step)
       val next = graft.core.Lineage.truncateLazy(
-        raw.select(col("id"), (col("raw") / norm).as("score"),
+        raw.select(col("id"), (col("raw") / DoubleParam(norm)).as("score"),
           col("old")))
       val err = next.agg(sum(abs(col("score") - col("old")))).head().getDouble(0)
       converged = err < n * tol
@@ -122,7 +125,7 @@ object EigenvectorCentrality {
       val nrm = if (nrmRow.isNullAt(0)) Double.NaN else nrmRow.getDouble(0)
       if (prevRaw != null) graft.core.Lineage.release(prevRaw)
       prevRaw = raw
-      x = raw.select(col("id"), (col("raw") / lit(nrm)).as("score"))
+      x = raw.select(col("id"), (col("raw") / DoubleParam(nrm)).as("score"))
     }
     x
   }

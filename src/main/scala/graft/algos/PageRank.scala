@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.{CheckpointManager, Route}
+import graft.functions.DoubleParam
 import graft.graph.{Edges, Skew}
 
 /** Distributed PageRank with NetworkX-compatible semantics (the
@@ -187,11 +188,12 @@ object PageRank {
       val base = cfg.alpha * dangleSum / n + (1.0 - cfg.alpha) / n
       // single join per superstep: state carries (id, old rank, outdeg),
       // so the gather output joins state directly — no second pass over
-      // a vertex table
+      // a vertex table. `base` moves with the dangling mass, so it is
+      // passed as data: a `lit` would compile new classes each superstep
       val stepped = state
         .join(gathered, state("id") === gathered("mid"), "left")
         .select(state("id"),
-          (lit(cfg.alpha) * coalesce(col("msum"), lit(0.0)) + lit(base)).as("rank"),
+          (lit(cfg.alpha) * coalesce(col("msum"), lit(0.0)) + DoubleParam(base)).as("rank"),
           col("outdeg"), state("rank").as("old"))
 
       val prevState = state

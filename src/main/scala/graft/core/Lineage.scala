@@ -46,6 +46,15 @@ object Lineage {
   def truncateLazy(df: DataFrame): DataFrame =
     Bridge.localCheckpointFresh(df, eager = false)
 
+  /** The rows of several truncated frames of one schema, in order, as
+    * one frame. A Dataset union plans one codegen stage per input and
+    * numbers every later stage after them, so a loop that unions one
+    * frame per iteration compiles new classes for each new count; this
+    * plan is one scan whatever the count. The inputs keep their blocks:
+    * release them once a frame read from this one is materialized.
+    */
+  def union(frames: Seq[DataFrame]): DataFrame = Bridge.unionCheckpoints(frames)
+
   /** Free the cached blocks behind a truncated frame once a successor
     * state is materialized — long loops otherwise accumulate one cached
     * RDD per superstep. Any routing state [[Route]] shares for the frame

@@ -71,6 +71,32 @@ object Bridge {
       .foreach(_.rdd.unpersist(false))
   }
 
+  /** The rows of `frames` — localCheckpointFresh frames of one schema —
+    * in order, as one frame whose plan is a single scan of the union of
+    * their checkpointed RDDs: the partitions a Dataset union of
+    * unknown-partitioned frames concatenates, without its one codegen
+    * stage per input. A column is nullable if it is in any input.
+    */
+  def unionCheckpoints(frames: Seq[org.apache.spark.sql.DataFrame]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.classic
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+    require(frames.nonEmpty, "unionCheckpoints needs at least one frame")
+    val rdds = frames.map(_.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
+      .queryExecution.analyzed match {
+        case l: LogicalRDD => l
+        case p => throw new IllegalArgumentException(
+          s"unionCheckpoints takes checkpointed frames, got ${p.nodeName}")
+      })
+    val output = rdds.head.output.indices.map { i =>
+      rdds.head.output(i).withNullability(rdds.exists(_.output(i).nullable)).newInstance()
+    }
+    val spark = frames.head.sparkSession.asInstanceOf[classic.SparkSession]
+    val all = LogicalRDD(output, spark.sparkContext.union(rdds.map(_.rdd)),
+      UnknownPartitioning(0), Nil, false, None)(spark, None, None)
+    classic.Dataset.ofRows(spark, all)
+  }
+
   /** eager=false marks the RDD for checkpointing but defers
     * materialization to the caller's FIRST action on the returned frame
     * — letting an iterative loop fold "materialize new state" and
