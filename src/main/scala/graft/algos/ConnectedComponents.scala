@@ -174,10 +174,9 @@ object ConnectedComponents {
       if (a != b) { if (a < b) parent(b) = a else parent(a) = b }
       i += 1
     }
-    import spark.implicits._
-    val out = new Array[(Long, Long)](n)
+    val component = new Array[Long](n)
     i = 0
-    while (i < n) { out(i) = (ids(i), ids(find(i))); i += 1 }
-    out.toSeq.toDF("id", "component")
+    while (i < n) { component(i) = ids(find(i)); i += 1 }
+    Route.frame(spark, ids, Route.Longs("component", component))
   }
 }

@@ -87,7 +87,6 @@ object LabelPropagation {
     val ids = local.dense._1
     val n = ids.length
     val (rowPtr, colIdx) = local.csr
-    var i = 0
     var labels: Array[Long] = Array.tabulate(n)(v => ids(v))
     var it = 0
     while (it < iterations) {
@@ -121,10 +120,6 @@ object LabelPropagation {
       labels = next
       it += 1
     }
-    import spark.implicits._
-    val out = new Array[(Long, Long)](n)
-    i = 0
-    while (i < n) { out(i) = (ids(i), labels(i)); i += 1 }
-    out.toSeq.toDF("id", "label")
+    Route.frame(spark, ids, Route.Longs("label", labels))
   }
 }

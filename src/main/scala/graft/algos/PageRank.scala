@@ -346,8 +346,6 @@ object PageRank {
       rank = next
       it += 1
     }
-    import spark.implicits._
-    val rf = rank
-    ids.indices.map(v => (ids(v), rf(v))).toDF("id", "rank")
+    Route.frame(spark, ids, Route.Doubles("rank", rank))
   }
 }

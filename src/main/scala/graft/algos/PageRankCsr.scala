@@ -189,18 +189,8 @@ object PageRankCsr {
     // m2 counts both directions; report canonical-edge throughput like
     // Bench.pagerankThroughput does
     val eps = if (iter > 0) (m2 / 2.0) * iter / secs else 0.0
-    Result(ranks(spark, x), iter, err, eps)
-  }
-
-  /** The (id, rank) frame of a rank vector, id = index: the array goes
-    * out once in a broadcast and each partition reads its index range
-    * from it, so no (id, rank) pair is boxed on the driver.
-    */
-  private def ranks(spark: SparkSession, x: Array[Double]): DataFrame = {
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(x)
-    spark.sparkContext.parallelize(0 until x.length, math.max(1, x.length / 500000))
-      .map(i => (i.toLong, bc.value(i)))
-      .toDF("id", "rank")
+    // (id, rank), id = index
+    val ranks = Route.frame(spark, Array.tabulate(n)(_.toLong), Route.Doubles("rank", x))
+    Result(ranks, iter, err, eps)
   }
 }

@@ -143,9 +143,6 @@ object PathCentralities {
     toDf(spark, ids, lc.map(_ * scale))
   }
 
-  private def toDf(spark: SparkSession, ids: Array[Long],
-                   scores: Array[Double]): DataFrame = {
-    import spark.implicits._
-    ids.zip(scores).toSeq.toDF("id", "score")
-  }
+  private def toDf(spark: SparkSession, ids: Array[Long], scores: Array[Double]): DataFrame =
+    Route.frame(spark, ids, Route.Doubles("score", scores))
 }

@@ -84,19 +84,16 @@ private[algos] object PathCentralitySmall {
     // EXACT double shape of the distributed estimator expression
     val ratio = n.toDouble / math.max(kEff, 1L).toDouble
     val nm1 = (n - 1).toDouble
-    val out = new Array[(Long, Double)](n)
+    val closeness = new Array[Double](n)
     var v = 0
     while (v < n) {
-      val c =
-        if (sd(v) > 0) {
-          val rhat = r(v).toDouble * ratio
-          ((rhat - 1.0) / nm1) * ((rhat - 1.0) / (sd(v).toDouble * ratio))
-        } else 0.0
-      out(v) = (ids(v), c)
+      if (sd(v) > 0) {
+        val rhat = r(v).toDouble * ratio
+        closeness(v) = ((rhat - 1.0) / nm1) * ((rhat - 1.0) / (sd(v).toDouble * ratio))
+      }
       v += 1
     }
-    import spark.implicits._
-    out.toSeq.toDF("id", "closeness")
+    Route.frame(spark, ids, Route.Doubles("closeness", closeness))
   }
 
   /** Driver-local twin of [[ApproxBetweenness.run]]: identical forward
@@ -183,17 +180,16 @@ private[algos] object PathCentralitySmall {
     val scale = base
       .map(_ * (n.toDouble / math.max(kEff, 1L).toDouble))
       .getOrElse(1.0)
-    val out = new Array[(Long, Double)](nV)
+    val betweenness = new Array[Double](nV)
     var v = 0
     while (v < nV) {
       val raw =
         if (!seen(v)) 0.0
         else if (portableSum) fromQuant(rawQ(v))
         else rawD(v)
-      out(v) = (ids(v), raw * scale)
+      betweenness(v) = raw * scale
       v += 1
     }
-    import spark.implicits._
-    out.toSeq.toDF("id", "betweenness")
+    Route.frame(spark, ids, Route.Doubles("betweenness", betweenness))
   }
 }

@@ -5,10 +5,13 @@ import java.lang.ref.WeakReference
 
 import org.apache.spark.SparkEnv
 import org.apache.spark.io.LZ4CompressionCodec
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, greatest, least, lit, max, min}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** The routing policy: an input small enough to solve on the driver, or
@@ -35,6 +38,12 @@ import org.apache.spark.storage.StorageLevel
   * ascending), so kernels built on them inherit their callers' parity
   * arguments. The one other driver CSR build is the layout's tagged CSR
   * of position indices.
+  *
+  * [[frame]] is the one way a driver-local result leaves the driver:
+  * every per-vertex output (components, labels, ranks, centralities,
+  * positions) is built by it from primitive arrays, and [[frameOf]]
+  * marks such a frame and returns its arrays, so the layout reads the
+  * spectral init's positions with no job.
   */
 object Route {
 
@@ -263,6 +272,76 @@ object Route {
   }
 
   private def lz4 = new LZ4CompressionCodec(SparkEnv.get.conf)
+
+  /** A value column of a [[frame]], one value per id: [[Longs]] and
+    * [[Doubles]] are not null, [[Vectors]] is array<double> of
+    * `d`-vectors stored flat, row i's at `values(i * d until (i + 1) * d)`.
+    */
+  sealed trait Column extends Serializable { def name: String }
+  final case class Longs(name: String, values: Array[Long]) extends Column
+  final case class Doubles(name: String, values: Array[Double]) extends Column
+  final case class Vectors(name: String, values: Array[Double], d: Int) extends Column
+
+  /** The arrays behind a [[frame]]. No reader writes to them. */
+  final class Frame private[Route] (val ids: Array[Long], val columns: Seq[Column])
+      extends Serializable {
+    private[Route] def row(i: Int): InternalRow = {
+      val values = new Array[Any](columns.length + 1)
+      values(0) = ids(i)
+      for (c <- columns.indices) values(c + 1) = columns(c) match {
+        case Longs(_, v) => v(i)
+        case Doubles(_, v) => v(i)
+        case Vectors(_, v, d) =>
+          UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOfRange(v, i * d, (i + 1) * d))
+      }
+      new GenericInternalRow(values)
+    }
+  }
+
+  /** The primitive output builder: an (id, columns…) frame over driver
+    * arrays, rows in their order. The arrays go out in one broadcast and
+    * each partition expands its slice of rows on the executor: one slice
+    * per 50,000 rows, at most one per core. One slice declares
+    * SinglePartition, so a `count()` plans no exchange and runs one job.
+    * The plan carries the row count and a LocalRelation's size for the
+    * same rows, so joins broadcast it as they would that relation.
+    * [[frameOf]] hands the arrays back to a driver-side reader, no job.
+    */
+  def frame(spark: SparkSession, ids: Array[Long], columns: Column*): DataFrame = {
+    val n = ids.length
+    // each column's field, its value count and the count n rows need
+    val fields = columns.map {
+      case Longs(c, v) => (StructField(c, LongType, nullable = false), v.length.toLong, n.toLong)
+      case Doubles(c, v) =>
+        (StructField(c, DoubleType, nullable = false), v.length.toLong, n.toLong)
+      case Vectors(c, v, d) =>
+        (StructField(c, ArrayType(DoubleType, containsNull = false)), v.length.toLong, n.toLong * d)
+    }
+    fields.foreach { case (f, got, want) =>
+      require(got == want, s"${f.name}: $got values, want $want")
+    }
+    val f = new Frame(ids, columns)
+    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 50000))
+    val bc = spark.sparkContext.broadcast(f)
+    val rdd = spark.sparkContext.parallelize(0 until slices, slices).flatMap { c =>
+      Iterator.range((n.toLong * c / slices).toInt, (n.toLong * (c + 1) / slices).toInt)
+        .map(bc.value.row)
+    }
+    frames.synchronized(frames.put(rdd, f))
+    val schema = StructType(StructField("id", LongType, nullable = false) +: fields.map(_._1))
+    Bridge.rddFrame(spark, schema, rdd, n)
+  }
+
+  /** The arrays of a frame that is exactly a [[frame]] result (its plan,
+    * not a query over it), held for as long as the frame's RDD lives.
+    */
+  def frameOf(df: DataFrame): Option[Frame] = df.queryExecution.analyzed match {
+    case l: LogicalRDD => frames.synchronized(Option(frames.get(l.rdd)))
+    case _ => None
+  }
+
+  // weak keys: an entry goes when its frame's RDD is collected
+  private val frames = new java.util.WeakHashMap[AnyRef, Frame]()
 
   /** Sorted distinct values of the given arrays (which are not changed). */
   private[graft] def distinct(arrays: Array[Long]*): Array[Long] = {

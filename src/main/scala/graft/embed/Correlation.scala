@@ -108,7 +108,7 @@ object Correlation {
   private[graft] def spearmanVia(df: DataFrame, a: String, b: String,
                                  threshold: Int = Route.SpearmanPairCap): (Double, Boolean) =
     probePairs(df, a, b, threshold) match {
-      case Some(pairs) => (spearmanLocal(pairs), true)
+      case Some((xs, ys)) => (spearmanLocal(xs, ys), true)
       case None => (spearmanDistributed(df, a, b), false)
     }
 
@@ -122,7 +122,7 @@ object Correlation {
     * before the distributed plan runs.
     */
   private def probePairs(df: DataFrame, a: String, b: String,
-                         threshold: Int): Option[Array[(Double, Double)]] =
+                         threshold: Int): Option[(Array[Double], Array[Double])] =
     if (threshold <= 0) None
     else {
       // null rows are dropped BEFORE the limit, matching the distributed
@@ -133,7 +133,7 @@ object Correlation {
         .where(col(a).isNotNull && col(b).isNotNull)
         .limit(threshold + 1).collect()
       if (rows.length <= threshold)
-        Some(rows.map(r => (r.getDouble(0), r.getDouble(1))))
+        Some((rows.map(_.getDouble(0)), rows.map(_.getDouble(1))))
       else None
     }
 
@@ -164,11 +164,11 @@ object Correlation {
     val spark = df.sparkSession
     import spark.implicits._
     probePairs(df, a, b, threshold) match {
-      case Some(pairs) =>
+      case Some((xs, ys)) =>
         // NaN (constant column / empty input) must become NULL like the
         // distributed pearson() guard — casting NaN to long THROWS under
         // ANSI, and the two routes must agree on degenerate input
-        Seq(spearmanLocal(pairs)).toDF("_rho")
+        Seq(spearmanLocal(xs, ys)).toDF("_rho")
           .select(when(isnan(col("_rho")), lit(null).cast("long"))
             .otherwise(round(col("_rho") * 1e6, 0).cast("long"))
             .as(outName))
@@ -184,27 +184,42 @@ object Correlation {
       .cast("long").as(outName))
   }
 
-  /** Driver-local Spearman over collected pairs: identical rank
-    * convention (#smaller + (#equal+1)/2) and the same two-pass Pearson
-    * the bootstrap harness uses; NaN on a constant column.
+  /** Driver-local Spearman over collected pairs (xs(i), ys(i)): identical
+    * rank convention (#smaller + (#equal+1)/2) and the same two-pass
+    * Pearson the bootstrap harness uses; NaN on a constant column.
     */
-  private[graft] def spearmanLocal(xs: Array[(Double, Double)]): Double = {
-    def avgRank(v: Array[Double]): Array[Double] = {
-      val groups = v.zipWithIndex.groupBy(_._1)
-      val ranks = new Array[Double](v.length)
-      var c = 0
-      groups.toSeq.sortBy(_._1).foreach { case (_, idxs) =>
-        val r = c + (idxs.length + 1) / 2.0
-        idxs.foreach { case (_, i) => ranks(i) = r }
-        c += idxs.length
-      }
-      ranks
+  private[graft] def spearmanLocal(xs: Array[Double], ys: Array[Double]): Double = {
+    val ra = avgRanks(xs); val rb = avgRanks(ys)
+    // each sum over i ascending, as the boxed `.sum`s added them
+    def sum(term: Int => Double): Double = {
+      var s = 0.0; var i = 0
+      while (i < ra.length) { s += term(i); i += 1 }
+      s
     }
-    val ra = avgRank(xs.map(_._1)); val rb = avgRank(xs.map(_._2))
-    val ma = ra.sum / ra.length; val mb = rb.sum / rb.length
-    val cov = ra.zip(rb).map { case (x, y) => (x - ma) * (y - mb) }.sum
-    val sa = math.sqrt(ra.map(x => (x - ma) * (x - ma)).sum)
-    val sb = math.sqrt(rb.map(y => (y - mb) * (y - mb)).sum)
+    val ma = sum(ra(_)) / ra.length; val mb = sum(rb(_)) / rb.length
+    val cov = sum(i => (ra(i) - ma) * (rb(i) - mb))
+    val sa = math.sqrt(sum(i => (ra(i) - ma) * (ra(i) - ma)))
+    val sb = math.sqrt(sum(i => (rb(i) - mb) * (rb(i) - mb)))
     if (sa == 0 || sb == 0) Double.NaN else cov / (sa * sb)
+  }
+
+  /** Each value's average rank, #smaller + (#equal + 1)/2, from one
+    * primitive sort of a copy: every run of equal values in it gets its
+    * rank, and each value finds its run by binary search (the sort's
+    * order: -0.0 below 0.0, NaNs equal and last).
+    */
+  private def avgRanks(v: Array[Double]): Array[Double] = {
+    val sorted = v.clone()
+    java.util.Arrays.sort(sorted)
+    val runRank = new Array[Double](sorted.length)
+    var start = 0
+    while (start < sorted.length) {
+      var end = start + 1
+      while (end < sorted.length && java.lang.Double.compare(sorted(end), sorted(start)) == 0)
+        end += 1
+      java.util.Arrays.fill(runRank, start, end, start + (end - start + 1) / 2.0)
+      start = end
+    }
+    v.map(x => runRank(java.util.Arrays.binarySearch(sorted, x)))
   }
 }

@@ -114,7 +114,7 @@ object CorrelationBench {
                   replicates: Int = 200, lo: Double = 2.5, hi: Double = 97.5,
                   seed: Long = 42): (Double, Double, Double) = {
     val rows = collectPairs(df, a, b)
-    val point = spearmanLocal(rows)
+    val point = Correlation.spearmanLocal(rows._1, rows._2)
     val reps = replicatesOf(rows, replicates, seed).sorted
     def pct(p: Double): Double =
       if (reps.isEmpty) Double.NaN
@@ -123,22 +123,22 @@ object CorrelationBench {
     (point, pct(lo), pct(hi))
   }
 
-  private def collectPairs(df: DataFrame, a: String, b: String): Array[(Double, Double)] =
-    df.select(col(a).cast("double"), col(b).cast("double"))
-      .collect().map(r => (r.getDouble(0), r.getDouble(1)))
+  private def collectPairs(df: DataFrame, a: String, b: String): (Array[Double], Array[Double]) = {
+    val rows = df.select(col(a).cast("double"), col(b).cast("double")).collect()
+    (rows.map(_.getDouble(0)), rows.map(_.getDouble(1)))
+  }
 
-  private def replicatesOf(rows: Array[(Double, Double)], replicates: Int,
+  private def replicatesOf(rows: (Array[Double], Array[Double]), replicates: Int,
                            seed: Long): Seq[Double] = {
+    val (xs, ys) = rows
     val rnd = new scala.util.Random(seed)
     (0 until replicates).map { _ =>
-      spearmanLocal(Array.fill(rows.length)(rows(rnd.nextInt(rows.length))))
+      val pick = Array.fill(xs.length)(rnd.nextInt(xs.length))
+      Correlation.spearmanLocal(pick.map(xs), pick.map(ys))
     }.filterNot(_.isNaN)
   }
 
   private def bootstrapReplicates(df: DataFrame, a: String, b: String,
                                   replicates: Int, seed: Long): Seq[Double] =
     replicatesOf(collectPairs(df, a, b), replicates, seed)
-
-  private def spearmanLocal(xs: Array[(Double, Double)]): Double =
-    Correlation.spearmanLocal(xs)
 }

@@ -1,6 +1,6 @@
 package graft.embed
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -127,24 +127,44 @@ object ForceLayout {
       case Some((k, snap)) => (math.min(k + 1, iterations), snap)
       case None => (0, positions)
     }
-    // The route: a start frame of at most broadcastVertices rows reaches
-    // the driver in this one collect (a local relation — SpectralInit's
-    // local output — needs no job for it); a larger one stops at cap + 1
-    // rows, which only say that it is larger.
+    // The route: a start frame of at most broadcastVertices rows takes
+    // the broadcast-state route, a larger one the relational route.
     val cap = math.max(0L, math.min(cfg.broadcastVertices, Int.MaxValue - 1L)).toInt
     val state =
-      if (startIter < iterations) startPos.select("id", "pos").limit(cap + 1).collect()
-      else Array.empty[Row]
+      if (startIter < iterations) startState(startPos, cap, cfg.d)
+      else Some((Array.emptyLongArray, Array.emptyDoubleArray))
     // empty layout or nothing left to run: no state to iterate; returns
     // the start frame unchanged
-    if (state.isEmpty) return Lineage.truncate(startPos)
-    val broadcastRoute = state.length <= cap && state.length.toLong * cfg.d < Int.MaxValue
+    if (state.exists(_._1.isEmpty)) return Lineage.truncate(startPos)
     val init = initOf(spark, edges, cfg)
-    try {
-      if (broadcastRoute) broadcastState(spark, init, state, startIter, iterations, cfg)
-      else relational(spark, init, startPos, startIter, iterations, cfg)
+    try state match {
+      case Some((ids, p)) => broadcastState(spark, init, ids, p, startIter, iterations, cfg)
+      case None => relational(spark, init, startPos, startIter, iterations, cfg)
     } finally init.release()
   }
+
+  /** The start positions as ids ascending and their flat d-vectors, or
+    * None when the frame holds more than `cap` rows. A [[Route.frame]]
+    * (SpectralInit's local output) hands over its arrays with no job;
+    * any other frame is collected once, stopping at cap + 1 rows, which
+    * only say that it is larger.
+    */
+  private def startState(start: DataFrame, cap: Int,
+                         d: Int): Option[(Array[Long], Array[Double])] =
+    Route.frameOf(start).map(f => (f.ids, f.columns)) match {
+      case Some((ids, Seq(Route.Vectors("pos", p, `d`))))
+          if (1 until ids.length).forall(i => ids(i - 1) < ids(i)) =>
+        if (ids.length <= cap) Some((ids, p)) else None
+      case _ =>
+        val rows = start.select("id", "pos").limit(cap + 1).collect().sortBy(_.getLong(0))
+        if (rows.length > cap || rows.length.toLong * d >= Int.MaxValue) None
+        else Some((rows.map(_.getLong(0)), rows.flatMap { r =>
+          val xs = r.getSeq[Double](1)
+          require(xs.length == d,
+            s"vertex ${r.getLong(0)} has a ${xs.length}-d position, want d = $d")
+          xs
+        }))
+    }
 
   /** Edge ordinals and the fixed sample. Stable edge ordinals are
     * deterministic across parallelism — the ids depend only on the
@@ -239,23 +259,13 @@ object ForceLayout {
     * the midpoint heaps see each edge once, in its (src, dst)
     * orientation.
     */
-  private def broadcastState(spark: SparkSession, init: Init, start: Array[Row],
-                             startIter: Int, iterations: Int, cfg: Config): DataFrame = {
+  private def broadcastState(spark: SparkSession, init: Init, ids: Array[Long],
+                             start: Array[Double], startIter: Int, iterations: Int,
+                             cfg: Config): DataFrame = {
     import spark.implicits._
     val d = cfg.d
-    val rows = start.sortBy(_.getLong(0))
-    val n = rows.length
-    val ids = new Array[Long](n)
-    var p = new Array[Double](n * d)
-    var v = 0
-    while (v < n) {
-      ids(v) = rows(v).getLong(0)
-      val xs = rows(v).getSeq[Double](1)
-      require(xs.length == d, s"vertex ${ids(v)} has a ${xs.length}-d position, want d = $d")
-      var j = 0
-      while (j < d) { p(v * d + j) = xs(j); j += 1 }
-      v += 1
-    }
+    val n = ids.length
+    var p = start
     def indexOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
     // a sampled edge with an endpoint outside the position frame is not
     // a query (the relational route's inner-join semantics)
@@ -327,7 +337,8 @@ object ForceLayout {
         val isLast = iter == iterations - 1
         committed = cfg.checkpoint match {
           case Some(cm) if (iter + 1) % cfg.checkpointInterval == 0 || isLast =>
-            Some(cm.commit(iter, frame(spark, ids, p, d), Map("iteration" -> iter.toDouble)))
+            Some(cm.commit(iter, Route.frame(spark, ids, Route.Vectors("pos", p, d)),
+              Map("iteration" -> iter.toDouble)))
           case _ => None
         }
         cfg.progress.foreach(_(iter, progressMetrics(init, iterations, t0)))
@@ -338,7 +349,7 @@ object ForceLayout {
       blocks.foreach(_.unpersist(blocking = true))
       idsBc.foreach(_.unpersist(false))
     }
-    committed.getOrElse(frame(spark, ids, p, d))
+    committed.getOrElse(Route.frame(spark, ids, Route.Vectors("pos", p, d)))
   }
 
   /** One block's share of a superstep: the spring force of each of its
@@ -494,26 +505,6 @@ object ForceLayout {
       j += 1
     }
     moved
-  }
-
-  /** The driver's state as an (id, pos) frame: a few partitions of
-    * primitive-array chunks, expanded to rows on the executors — one
-    * partition per 50k vertices, at most one per core, so a frame at the
-    * 1M cap is read in parallel and a small one is not split into
-    * near-empty tasks.
-    */
-  private def frame(spark: SparkSession, ids: Array[Long], p: Array[Double], d: Int): DataFrame = {
-    import spark.implicits._
-    val n = ids.length
-    val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 50000))
-    val chunks = (0 until slices).map { c =>
-      val lo = (n.toLong * c / slices).toInt
-      val hi = (n.toLong * (c + 1) / slices).toInt
-      (java.util.Arrays.copyOfRange(ids, lo, hi), java.util.Arrays.copyOfRange(p, lo * d, hi * d))
-    }
-    spark.sparkContext.parallelize(chunks, slices).flatMap { case (is, ps) =>
-      Iterator.tabulate(is.length)(i => (is(i), java.util.Arrays.copyOfRange(ps, i * d, (i + 1) * d)))
-    }.toDF("id", "pos")
   }
 
   /** The relational route: the superstep as DataFrame joins and

@@ -51,11 +51,11 @@ object SpectralInit {
           maxIter: Int = 60, seed: Long = 42,
           gramTol: Double = 1e-9, localCap: Int = Route.SpectralVertexCap,
           localEdgeCap: Long = Route.LocalEdgeCap): DataFrame = {
-    import spark.implicits._
     // empty edge table: the distributed loop's Gram aggregate over zero
     // rows returns an all-null row and NPEs on getDouble — return the
     // empty positions frame
-    def empty = Seq.empty[(Long, Seq[Double])].toDF("id", "pos")
+    def empty =
+      Route.frame(spark, Array.emptyLongArray, Route.Vectors("pos", Array.emptyDoubleArray, d))
     val (input, eCount, held) = Route.gate(edges, localEdgeCap) match {
       case l: Route.Local =>
         if (l.src.isEmpty) return empty
@@ -395,10 +395,10 @@ object SpectralInit {
       prevGram = Some(gm)
       iter += 1
     }
-    import spark.implicits._
-    val xf = x
-    ids.indices.map(v =>
-      (ids(v), java.util.Arrays.copyOfRange(xf, v * k + 1, (v + 1) * k)))
-      .toDF("id", "pos")
+    // drop the trivial column: row v's d coordinates, flat
+    val pos = new Array[Double](n * d)
+    var v = 0
+    while (v < n) { System.arraycopy(x, v * k + 1, pos, v * d, d); v += 1 }
+    Route.frame(spark, ids, Route.Vectors("pos", pos, d))
   }
 }

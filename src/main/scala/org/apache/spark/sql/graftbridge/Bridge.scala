@@ -97,6 +97,31 @@ object Bridge {
     classic.Dataset.ofRows(spark, all)
   }
 
+  /** A frame of `schema` whose plan is one scan of `rdd`, which yields
+    * `rows` rows: one partition declares SinglePartition, so a global
+    * aggregate over it plans no exchange. Its statistics are the row
+    * count and the size a LocalRelation of the same rows reports, so a
+    * join broadcasts it as it would broadcast that relation.
+    */
+  def rddFrame(spark: org.apache.spark.sql.SparkSession,
+               schema: org.apache.spark.sql.types.StructType,
+               rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+               rows: Long): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.classic
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    import org.apache.spark.sql.catalyst.plans.physical.{SinglePartition, UnknownPartitioning}
+    import org.apache.spark.sql.catalyst.types.DataTypeUtils
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val output = DataTypeUtils.toAttributes(schema)
+    val parts = rdd.getNumPartitions
+    val stats = Statistics(EstimationUtils.getSizePerRow(output) * rows, Some(BigInt(rows)))
+    classic.Dataset.ofRows(s, LogicalRDD(output, rdd,
+      if (parts == 1) SinglePartition else UnknownPartitioning(parts), Nil, false, None)(
+      s, Some(stats), None))
+  }
+
   /** eager=false marks the RDD for checkpointing but defers
     * materialization to the caller's FIRST action on the returned frame
     * — letting an iterative loop fold "materialize new state" and

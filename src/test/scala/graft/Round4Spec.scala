@@ -259,13 +259,13 @@ class Round4Spec extends SparkSuite {
     // V under the vertex cap but E over the (test-shrunk) edge cap must
     // NOT take the driver-local collect path. The paths are
     // value-equivalent (Round3Spec parity), so observe the routing via
-    // the output plan: runLocal yields a LocalRelation, the distributed
+    // the output plan: runLocal yields a Route.frame, the distributed
     // loop a lineage-truncated LogicalRDD.
     val e = graft.generators.Generators.ba(spark, 150, 4, 11)
     def planOf(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.getClass.getSimpleName
     val local = graft.embed.SpectralInit.run(spark, e, d = 2, maxIter = 5)
-    assert(planOf(local).contains("LocalRelation"), planOf(local))
+    assert(graft.core.Route.frameOf(local).isDefined, planOf(local))
     val dist = graft.embed.SpectralInit.run(spark, e, d = 2, maxIter = 5,
       localEdgeCap = 100) // E(=584) exceeds the shrunk cap -> distributed
     assert(planOf(dist).contains("LogicalRDD"), planOf(dist))

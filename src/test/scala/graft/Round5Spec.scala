@@ -317,7 +317,7 @@ class Round5Spec extends SparkSuite {
         explicitSources = Some(srcs))
       val cDist = graft.algos.ApproxCloseness.run(spark, e, k = 8,
         explicitSources = Some(srcs), localNbrRowCap = 0)
-      assert(planOf(cLocal).contains("LocalRelation"), planOf(cLocal))
+      assert(graft.core.Route.frameOf(cLocal).isDefined, planOf(cLocal))
       assert(!planOf(cDist).contains("LocalRelation"), planOf(cDist))
       val (cl, cd) = (asMap(cLocal), asMap(cDist))
       assert(cl.keySet == cd.keySet)
@@ -328,7 +328,7 @@ class Round5Spec extends SparkSuite {
         explicitSources = Some(srcs), portableSum = true)
       val bDist = graft.algos.ApproxBetweenness.run(spark, e, k = 8,
         explicitSources = Some(srcs), portableSum = true, localNbrRowCap = 0)
-      assert(planOf(bLocal).contains("LocalRelation"), planOf(bLocal))
+      assert(graft.core.Route.frameOf(bLocal).isDefined, planOf(bLocal))
       val (bl, bd) = (asMap(bLocal), asMap(bDist))
       assert(bl.keySet == bd.keySet)
       bl.foreach { case (id, v) => assert(v == bd(id), s"betweenness v$id: $v vs ${bd(id)}") }
