@@ -1,6 +1,7 @@
 package graft.core
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.lang.Double.{doubleToRawLongBits, longBitsToDouble}
 import java.lang.ref.WeakReference
 
 import org.apache.spark.SparkEnv
@@ -41,9 +42,11 @@ import org.apache.spark.storage.StorageLevel
   *
   * [[frame]] is the one way a driver-local result leaves the driver:
   * every per-vertex output (components, labels, ranks, centralities,
-  * positions) is built by it from primitive arrays, and [[frameOf]]
-  * marks such a frame and returns its arrays, so the layout reads the
-  * spectral init's positions with no job.
+  * positions) is built by it from primitive arrays. [[collect]] is the
+  * one way a frame reaches the driver, its inverse: the edge rows a gate
+  * reads, the layout's start positions and Spearman's pairs come back as
+  * the same primitive arrays, and a [[frame]] result hands back its own
+  * with no job.
   */
 object Route {
 
@@ -74,12 +77,14 @@ object Route {
   val CsrVertexCap = 8000000L
 
   /** Vertices the layout's broadcast-state superstep holds on the
-    * driver, ~16 MB of positions at d = 2.
+    * driver: its start read is 8 + 8d B per vertex (an id and d doubles),
+    * ~24 MB at d = 2.
     */
   val LayoutVertexCap = 1000000L
 
-  /** (value, value) pairs Spearman ranks on the driver: 2M pairs
-    * collect in ~32 MB and rank in milliseconds.
+  /** (value, value) pairs Spearman ranks on the driver: 16 B per pair
+    * (two doubles), so 2M pairs collect in ~32 MB and rank in
+    * milliseconds.
     */
   val SpearmanPairCap = 2000000
 
@@ -151,9 +156,6 @@ object Route {
       (rowPtr, colIdx)
     }
   }
-  object Local {
-    def unapply(l: Local): Some[(Array[Long], Array[Long])] = Some((l.src, l.dst))
-  }
   /** Above the cap: the held projection and its row count. The
     * distributed path releases it once it no longer reads it.
     */
@@ -224,8 +226,7 @@ object Route {
     if (rows > cap) return Distributed(held, rows)
     val slot = sharedFor(held.entry)
     slot.flatMap(_.local).getOrElse {
-      val (s, d) = collect(held.edges)
-      val local = new Local(s, d)
+      val local = localOf(held.edges)
       // a caller's larger cap does not raise the bound on what is kept
       if (rows <= LocalEdgeCap) slot.foreach(_.local = Some(local))
       local
@@ -237,65 +238,35 @@ object Route {
     * input, else its (src, dst) rows collected, with no count first and
     * no cache made.
     */
-  def local(input: DataFrame): Local = sharedFor(entryOf(input)).flatMap(_.local).getOrElse {
-    val (s, d) = collect(input.select(col("src"), col("dst")))
-    new Local(s, d)
+  def local(input: DataFrame): Local =
+    sharedFor(entryOf(input)).flatMap(_.local).getOrElse(localOf(input.select(col("src"), col("dst"))))
+
+  /** A (src, dst) projection's rows: the two-bigint case of [[collect]]. */
+  private def localOf(edges: DataFrame): Local = collect(edges) match {
+    case Some(Seq(Longs(_, s), Longs(_, d))) => new Local(s, d)
+    case _ => throw new IllegalArgumentException(s"want two bigint columns, got ${edges.schema}")
   }
 
-  /** A frame of two bigint columns as two primitive arrays, in
-    * `collect()` order (partition order, then row order). Each partition
-    * packs its rows into one LZ4 byte block on the executor, as
-    * `collect()` compresses its rows, so the driver never holds a `Row`
-    * per edge.
-    */
-  private[graft] def collect(df: DataFrame): (Array[Long], Array[Long]) = {
-    require(df.schema.map(_.dataType) == Seq(LongType, LongType),
-      s"want two bigint columns, got ${df.schema.simpleString}")
-    val parts = df.queryExecution.toRdd.mapPartitions { rows =>
-      val bytes = new ByteArrayOutputStream()
-      val out = new DataOutputStream(lz4.compressedOutputStream(bytes))
-      var n = 0
-      rows.foreach { r => out.writeLong(r.getLong(0)); out.writeLong(r.getLong(1)); n += 1 }
-      out.close()
-      Iterator.single((n, bytes.toByteArray))
-    }.collect()
-    val src = new Array[Long](parts.map(_._1).sum)
-    val dst = new Array[Long](src.length)
-    var at = 0
-    parts.foreach { case (n, block) =>
-      val in = new DataInputStream(lz4.compressedInputStream(new ByteArrayInputStream(block)))
-      var i = 0
-      while (i < n) { src(at) = in.readLong(); dst(at) = in.readLong(); at += 1; i += 1 }
-      in.close()
-    }
-    (src, dst)
-  }
-
-  private def lz4 = new LZ4CompressionCodec(SparkEnv.get.conf)
-
-  /** A value column of a [[frame]], one value per id: [[Longs]] and
-    * [[Doubles]] are not null, [[Vectors]] is array<double> of
-    * `d`-vectors stored flat, row i's at `values(i * d until (i + 1) * d)`.
+  /** A value column of a [[frame]] or a [[collect]], one value per row:
+    * [[Longs]] and [[Doubles]] are not null, [[Vectors]] is
+    * array<double> of `d`-vectors stored flat, row i's at
+    * `values(i * d until (i + 1) * d)`.
     */
   sealed trait Column extends Serializable { def name: String }
   final case class Longs(name: String, values: Array[Long]) extends Column
   final case class Doubles(name: String, values: Array[Double]) extends Column
   final case class Vectors(name: String, values: Array[Double], d: Int) extends Column
 
-  /** The arrays behind a [[frame]]. No reader writes to them. */
-  final class Frame private[Route] (val ids: Array[Long], val columns: Seq[Column])
-      extends Serializable {
-    private[Route] def row(i: Int): InternalRow = {
-      val values = new Array[Any](columns.length + 1)
-      values(0) = ids(i)
-      for (c <- columns.indices) values(c + 1) = columns(c) match {
-        case Longs(_, v) => v(i)
-        case Doubles(_, v) => v(i)
-        case Vectors(_, v, d) =>
-          UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOfRange(v, i * d, (i + 1) * d))
-      }
-      new GenericInternalRow(values)
+  /** Row i of a [[frame]]'s columns, the id column first. */
+  private def row(columns: Array[Column], i: Int): InternalRow = {
+    val values = new Array[Any](columns.length)
+    for (c <- columns.indices) values(c) = columns(c) match {
+      case Longs(_, v) => v(i)
+      case Doubles(_, v) => v(i)
+      case Vectors(_, v, d) =>
+        UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOfRange(v, i * d, (i + 1) * d))
     }
+    new GenericInternalRow(values)
   }
 
   /** The primitive output builder: an (id, columns…) frame over driver
@@ -305,12 +276,13 @@ object Route {
     * SinglePartition, so a `count()` plans no exchange and runs one job.
     * The plan carries the row count and a LocalRelation's size for the
     * same rows, so joins broadcast it as they would that relation.
-    * [[frameOf]] hands the arrays back to a driver-side reader, no job.
+    * [[collect]] hands the arrays back to a driver-side reader, no job.
     */
   def frame(spark: SparkSession, ids: Array[Long], columns: Column*): DataFrame = {
     val n = ids.length
+    val all = (Longs("id", ids) +: columns).toArray
     // each column's field, its value count and the count n rows need
-    val fields = columns.map {
+    val fields = all.toSeq.map {
       case Longs(c, v) => (StructField(c, LongType, nullable = false), v.length.toLong, n.toLong)
       case Doubles(c, v) =>
         (StructField(c, DoubleType, nullable = false), v.length.toLong, n.toLong)
@@ -320,28 +292,114 @@ object Route {
     fields.foreach { case (f, got, want) =>
       require(got == want, s"${f.name}: $got values, want $want")
     }
-    val f = new Frame(ids, columns)
     val slices = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 50000))
-    val bc = spark.sparkContext.broadcast(f)
+    val bc = spark.sparkContext.broadcast(all)
     val rdd = spark.sparkContext.parallelize(0 until slices, slices).flatMap { c =>
       Iterator.range((n.toLong * c / slices).toInt, (n.toLong * (c + 1) / slices).toInt)
-        .map(bc.value.row)
+        .map(row(bc.value, _))
     }
-    frames.synchronized(frames.put(rdd, f))
-    val schema = StructType(StructField("id", LongType, nullable = false) +: fields.map(_._1))
-    Bridge.rddFrame(spark, schema, rdd, n)
+    frames.synchronized(frames.put(rdd, all.toSeq))
+    Bridge.rddFrame(spark, StructType(fields.map(_._1)), rdd, n)
   }
 
-  /** The arrays of a frame that is exactly a [[frame]] result (its plan,
-    * not a query over it), held for as long as the frame's RDD lives.
+  // a frame's columns, id first; weak keys: an entry goes when its
+  // frame's RDD is collected
+  private val frames = new java.util.WeakHashMap[AnyRef, Seq[Column]]()
+
+  /** The one way a frame reaches the driver, the inverse of [[frame]]:
+    * its bigint, double and array<double> (of `d` values) columns as
+    * [[Longs]], [[Doubles]] and [[Vectors]], named as in the frame, rows
+    * in `collect()` order. A [[frame]] result hands back its arrays (no
+    * reader writes to them) with no job. Any other frame packs each
+    * partition into one LZ4 block on the executor, as `collect()`
+    * compresses rows, so no `Row` is built per element; a null fails
+    * naming its column (a primitive slot would read it as 0), and so does
+    * a vector of another width, naming the vertex in column 0. With a
+    * `bound` it is `limit(bound + 1).collect()`, kept only at `bound` rows
+    * or fewer, else None: partitions are scanned in order in growing
+    * batches, as Spark's `executeTake` scans them, each computed once.
     */
-  def frameOf(df: DataFrame): Option[Frame] = df.queryExecution.analyzed match {
-    case l: LogicalRDD => frames.synchronized(Option(frames.get(l.rdd)))
-    case _ => None
+  private[graft] def collect(df: DataFrame, bound: Option[Int] = None,
+                             d: Int = 0): Option[Seq[Column]] = {
+    val limit = bound.fold(Long.MaxValue)(_ + 1L)
+    df.queryExecution.optimizedPlan match {
+      case l: LogicalRDD if frames.synchronized(frames.containsKey(l.rdd)) =>
+        val cols @ Longs(_, ids) +: _ = frames.synchronized(frames.get(l.rdd))
+        for (Vectors(_, _, k) <- cols)
+          require(k == d || ids.isEmpty, s"vertex ${ids(0)} has a $k-d position, want d = $d")
+        return Some(cols).filter(_ => ids.length < limit)
+      case _ =>
+    }
+    val names = df.columns
+    // 0: bigint, 1: double, 2: array<double>, a position of the vertex in column 0
+    val kinds = df.schema.fields.map(_.dataType match {
+      case LongType => 0
+      case DoubleType => 1
+      case ArrayType(DoubleType, _) => 2
+      case _ => -1
+    })
+    require(!kinds.contains(-1) && (kinds.headOption.contains(0) || !kinds.contains(2)),
+      s"want bigint, double and array<double> columns, got ${df.schema.simpleString}")
+    val packed = df.queryExecution.toRdd.mapPartitions { rows =>
+      val bytes = new ByteArrayOutputStream()
+      val out = new DataOutputStream(lz4.compressedOutputStream(bytes))
+      var n = 0
+      while (n < limit && rows.hasNext) {
+        val r = rows.next()
+        for (c <- kinds.indices) {
+          require(!r.isNullAt(c), s"a null in column ${names(c)}")
+          if (kinds(c) == 0) out.writeLong(r.getLong(c))
+          else if (kinds(c) == 1) out.writeLong(doubleToRawLongBits(r.getDouble(c)))
+          else {
+            val v = r.getArray(c)
+            require(v.numElements() == d,
+              s"vertex ${r.getLong(0)} has a ${v.numElements()}-d position, want d = $d")
+            require(!(0 until d).exists(v.isNullAt), s"a null in column ${names(c)}")
+            for (j <- 0 until d) out.writeLong(doubleToRawLongBits(v.getDouble(j)))
+          }
+        }
+        n += 1
+      }
+      out.close()
+      Iterator.single((n, bytes.toByteArray))
+    }
+    // executeTake's batches: the first partitions, then scaleUp times as many (x / 0
+    // rows is infinite), or fewer when the rows so far say fewer will reach limit
+    val (conf, parts) = (df.sparkSession.conf, packed.getNumPartitions)
+    val scaleUp = math.max(conf.get("spark.sql.limit.scaleUpFactor").toInt, 2)
+    val blocks = scala.collection.mutable.ArrayBuffer.empty[(Int, Array[Byte])]
+    var rows = 0L
+    while (rows < limit && blocks.length < parts) {
+      val at = blocks.length
+      val batch =
+        if (limit == Long.MaxValue) parts
+        else if (at == 0) conf.get("spark.sql.limit.initialNumPartitions").toInt
+        else math.min(math.ceil(1.5 * (limit - rows) * at / rows).toInt, at * scaleUp)
+      blocks ++= df.sparkSession.sparkContext.runJob(packed,
+        (it: Iterator[(Int, Array[Byte])]) => it.next(), at until math.min(at + batch, parts))
+      rows = blocks.map(_._1.toLong).sum
+    }
+    if (rows >= limit) return None
+    val cols = names.indices.map(c => kinds(c) match {
+      case 0 => Longs(names(c), new Array[Long](rows.toInt))
+      case 1 => Doubles(names(c), new Array[Double](rows.toInt))
+      case _ => Vectors(names(c), new Array[Double](rows.toInt * d), d)
+    })
+    var at = 0
+    for ((k, block) <- blocks) {
+      val in = new DataInputStream(lz4.compressedInputStream(new ByteArrayInputStream(block)))
+      for (i <- at until at + k; c <- cols) c match {
+        case Longs(_, v) => v(i) = in.readLong()
+        case Doubles(_, v) => v(i) = longBitsToDouble(in.readLong())
+        case Vectors(_, v, _) => for (j <- i * d until (i + 1) * d) v(j) = longBitsToDouble(in.readLong())
+      }
+      in.close()
+      at += k
+    }
+    Some(cols)
   }
 
-  // weak keys: an entry goes when its frame's RDD is collected
-  private val frames = new java.util.WeakHashMap[AnyRef, Frame]()
+  private def lz4 = new LZ4CompressionCodec(SparkEnv.get.conf)
 
   /** Sorted distinct values of the given arrays (which are not changed). */
   private[graft] def distinct(arrays: Array[Long]*): Array[Long] = {

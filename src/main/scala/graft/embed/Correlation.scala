@@ -106,36 +106,46 @@ object Correlation {
     * a parity test pins the two paths to each other.
     */
   private[graft] def spearmanVia(df: DataFrame, a: String, b: String,
-                                 threshold: Int = Route.SpearmanPairCap): (Double, Boolean) =
-    probePairs(df, a, b, threshold) match {
-      case Some((xs, ys)) => (spearmanLocal(xs, ys), true)
-      case None => (spearmanDistributed(df, a, b), false)
-    }
+                                 threshold: Int = Route.SpearmanPairCap): (Double, Boolean) = {
+    val (rho, local) = rhoOf(df, a, b, threshold)
+    val r = rho.head()
+    (if (r.isNullAt(0)) Double.NaN else r.getDouble(0), local)
+  }
 
-  /** SINGLE-execution local-path gate: collect up to threshold+1
-    * projected (a, b) pairs and decide from their count. The previous
+  /** One row, `_rho`, and whether the driver computed it. The
+    * SINGLE-execution local-path gate reads [[pairs]] bounded by
+    * threshold, kept when there are at most threshold. The previous
     * gate ran `limit().count()` and then a separate full collect — two
     * executions of the entire upstream pipeline (for q_spearman_deg_pr
     * that pipeline is a 5-superstep PageRank, so the gate itself cost
     * more than the correlation). Above the threshold the wasted work is
-    * bounded by threshold+1 rows of two doubles (~32 MB), paid once,
-    * before the distributed plan runs.
+    * bounded by threshold+1 pairs of two doubles (~32 MB), paid once,
+    * before the one distributed finisher runs: the Pearson correlation
+    * of the pairwise-complete rows' average ranks, NULL when either
+    * column is constant.
     */
-  private def probePairs(df: DataFrame, a: String, b: String,
-                         threshold: Int): Option[(Array[Double], Array[Double])] =
-    if (threshold <= 0) None
-    else {
-      // null rows are dropped BEFORE the limit, matching the distributed
-      // path exactly: avgRanksBoth re-joins on value equality, which
-      // silently excludes null values — the local path must not NPE (or
-      // count toward the threshold) on rows the distributed path ignores
-      val rows = df.select(col(a).cast("double"), col(b).cast("double"))
-        .where(col(a).isNotNull && col(b).isNotNull)
-        .limit(threshold + 1).collect()
-      if (rows.length <= threshold)
-        Some((rows.map(_.getDouble(0)), rows.map(_.getDouble(1))))
-      else None
+  private def rhoOf(df: DataFrame, a: String, b: String,
+                    threshold: Int): (DataFrame, Boolean) = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    (if (threshold <= 0) None else pairs(df, a, b, Some(threshold))) match {
+      case Some((xs, ys)) => (Seq(spearmanLocal(xs, ys)).toDF("_rho"), true)
+      case None => (avgRanksBoth(pairwiseComplete(df, a, b), a, b)
+        .agg(pearson(col("_ra"), col("_rb")).as("_rho")), false)
     }
+  }
+
+  /** The pairwise-complete (a, b) pairs as two double arrays, through
+    * [[Route.collect]] with its `bound`. Null rows are dropped BEFORE
+    * the bound, matching the distributed path exactly: avgRanksBoth
+    * re-joins on value equality, which silently excludes null values —
+    * the local path must not fail (or count toward the threshold) on
+    * rows the distributed path ignores.
+    */
+  private[graft] def pairs(df: DataFrame, a: String, b: String,
+                           bound: Option[Int] = None): Option[(Array[Double], Array[Double])] =
+    Route.collect(pairwiseComplete(df, a, b).select(col(a).cast("double"), col(b).cast("double")),
+      bound).map { case Seq(Route.Doubles(_, xs), Route.Doubles(_, ys)) => (xs, ys) }
 
   /** Pairwise-complete rows only (scipy `nan_policy='omit'` semantics,
     * and what the local path's null-dropping probe computes): a row
@@ -147,12 +157,6 @@ object Correlation {
   private def pairwiseComplete(df: DataFrame, a: String, b: String): DataFrame =
     df.where(col(a).isNotNull && col(b).isNotNull)
 
-  private def spearmanDistributed(df: DataFrame, a: String, b: String): Double = {
-    val withBoth = avgRanksBoth(pairwiseComplete(df, a, b), a, b)
-    val r = withBoth.agg(pearson(col("_ra"), col("_rb"))).head()
-    if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
-  }
-
   /** DataFrame variant for oracle-checked queries: single row with the
     * correlation in integer micro-units. Routed through the same
     * local-path gate as [[spearman]]; the micro rounding runs through
@@ -160,29 +164,13 @@ object Correlation {
     */
   def spearmanDf(df: DataFrame, a: String, b: String,
                  outName: String = "spearman_micro",
-                 threshold: Int = Route.SpearmanPairCap): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    probePairs(df, a, b, threshold) match {
-      case Some((xs, ys)) =>
-        // NaN (constant column / empty input) must become NULL like the
-        // distributed pearson() guard — casting NaN to long THROWS under
-        // ANSI, and the two routes must agree on degenerate input
-        Seq(spearmanLocal(xs, ys)).toDF("_rho")
-          .select(when(isnan(col("_rho")), lit(null).cast("long"))
-            .otherwise(round(col("_rho") * 1e6, 0).cast("long"))
-            .as(outName))
-      case None =>
-        spearmanDfDistributed(df, a, b, outName)
-    }
-  }
-
-  private def spearmanDfDistributed(df: DataFrame, a: String, b: String,
-                                    outName: String): DataFrame = {
-    val withBoth = avgRanksBoth(pairwiseComplete(df, a, b), a, b)
-    withBoth.agg(round(pearson(col("_ra"), col("_rb")) * 1e6, 0)
-      .cast("long").as(outName))
-  }
+                 threshold: Int = Route.SpearmanPairCap): DataFrame =
+    // NaN (constant column / empty input) must become NULL like the
+    // distributed pearson() guard — casting NaN to long THROWS under
+    // ANSI, and the two routes must agree on degenerate input
+    rhoOf(df, a, b, threshold)._1.select(when(isnan(col("_rho")), lit(null).cast("long"))
+      .otherwise(round(col("_rho") * 1e6, 0).cast("long"))
+      .as(outName))
 
   /** Driver-local Spearman over collected pairs (xs(i), ys(i)): identical
     * rank convention (#smaller + (#equal+1)/2) and the same two-pass

@@ -96,7 +96,7 @@ object CorrelationBench {
     */
   def bootstrapP(df: DataFrame, a: String, b: String,
                  replicates: Int = 200, seed: Long = 42): Double = {
-    val reps = bootstrapReplicates(df, a, b, replicates, seed)
+    val reps = replicatesOf(Correlation.pairs(df, a, b).get, replicates, seed)
     if (reps.isEmpty) Double.NaN
     else {
       val le = reps.count(_ <= 0.0).toDouble / reps.length
@@ -108,12 +108,13 @@ object CorrelationBench {
   /** Bootstrap confidence interval for a Spearman correlation —
     * /root/reference/graphem/visualization.py:11-49: `replicates`
     * seeded resamples with replacement, percentile bounds. Test-scale
-    * (collects the two columns to the driver like the reference does).
+    * (collects the pairwise-complete pairs [[Correlation.spearman]] ranks
+    * to the driver, as the reference collects its columns).
     */
   def bootstrapCI(df: DataFrame, a: String, b: String,
                   replicates: Int = 200, lo: Double = 2.5, hi: Double = 97.5,
                   seed: Long = 42): (Double, Double, Double) = {
-    val rows = collectPairs(df, a, b)
+    val rows = Correlation.pairs(df, a, b).get
     val point = Correlation.spearmanLocal(rows._1, rows._2)
     val reps = replicatesOf(rows, replicates, seed).sorted
     def pct(p: Double): Double =
@@ -123,10 +124,6 @@ object CorrelationBench {
     (point, pct(lo), pct(hi))
   }
 
-  private def collectPairs(df: DataFrame, a: String, b: String): (Array[Double], Array[Double]) = {
-    val rows = df.select(col(a).cast("double"), col(b).cast("double")).collect()
-    (rows.map(_.getDouble(0)), rows.map(_.getDouble(1)))
-  }
 
   private def replicatesOf(rows: (Array[Double], Array[Double]), replicates: Int,
                            seed: Long): Seq[Double] = {
@@ -137,8 +134,4 @@ object CorrelationBench {
       Correlation.spearmanLocal(pick.map(xs), pick.map(ys))
     }.filterNot(_.isNaN)
   }
-
-  private def bootstrapReplicates(df: DataFrame, a: String, b: String,
-                                  replicates: Int, seed: Long): Seq[Double] =
-    replicatesOf(collectPairs(df, a, b), replicates, seed)
 }

@@ -127,9 +127,9 @@ object ForceLayout {
       case Some((k, snap)) => (math.min(k + 1, iterations), snap)
       case None => (0, positions)
     }
-    // The route: a start frame of at most broadcastVertices rows takes
-    // the broadcast-state route, a larger one the relational route.
-    val cap = math.max(0L, math.min(cfg.broadcastVertices, Int.MaxValue - 1L)).toInt
+    // The route: a start frame of at most broadcastVertices rows, positions
+    // in one flat array, takes the broadcast-state route, a larger one the relational.
+    val cap = math.max(0L, math.min(cfg.broadcastVertices, (Int.MaxValue - 1L) / cfg.d)).toInt
     val state =
       if (startIter < iterations) startState(startPos, cap, cfg.d)
       else Some((Array.emptyLongArray, Array.emptyDoubleArray))
@@ -144,27 +144,30 @@ object ForceLayout {
   }
 
   /** The start positions as ids ascending and their flat d-vectors, or
-    * None when the frame holds more than `cap` rows. A [[Route.frame]]
-    * (SpectralInit's local output) hands over its arrays with no job;
-    * any other frame is collected once, stopping at cap + 1 rows, which
-    * only say that it is larger.
+    * None when the frame holds more than `cap` rows: one [[Route.collect]],
+    * no job for a [[Route.frame]] (SpectralInit's local output), else one
+    * read stopping at cap + 1 rows, which only say that it is larger.
     */
   private def startState(start: DataFrame, cap: Int,
                          d: Int): Option[(Array[Long], Array[Double])] =
-    Route.frameOf(start).map(f => (f.ids, f.columns)) match {
-      case Some((ids, Seq(Route.Vectors("pos", p, `d`))))
-          if (1 until ids.length).forall(i => ids(i - 1) < ids(i)) =>
-        if (ids.length <= cap) Some((ids, p)) else None
-      case _ =>
-        val rows = start.select("id", "pos").limit(cap + 1).collect().sortBy(_.getLong(0))
-        if (rows.length > cap || rows.length.toLong * d >= Int.MaxValue) None
-        else Some((rows.map(_.getLong(0)), rows.flatMap { r =>
-          val xs = r.getSeq[Double](1)
-          require(xs.length == d,
-            s"vertex ${r.getLong(0)} has a ${xs.length}-d position, want d = $d")
-          xs
-        }))
+    Route.collect(start.select("id", "pos"), Some(cap), d).map {
+      case Seq(Route.Longs(_, ids), Route.Vectors(_, p, _)) => byId(ids, p, d)
     }
+
+  /** The rows by ascending id, a stable sort: each row goes to the next
+    * free slot of its id's run in a sorted copy of the ids.
+    */
+  private def byId(ids: Array[Long], p: Array[Double], d: Int): (Array[Long], Array[Double]) = {
+    if ((1 until ids.length).forall(i => ids(i - 1) <= ids(i))) return (ids, p)
+    val (sorted, out, taken) = (ids.sorted, new Array[Double](p.length), new Array[Int](ids.length))
+    for (i <- ids.indices) {
+      var r = java.util.Arrays.binarySearch(sorted, ids(i))
+      while (r > 0 && sorted(r - 1) == ids(i)) r -= 1
+      System.arraycopy(p, i * d, out, (r + taken(r)) * d, d)
+      taken(r) += 1
+    }
+    (sorted, out)
+  }
 
   /** Edge ordinals and the fixed sample. Stable edge ordinals are
     * deterministic across parallelism — the ids depend only on the

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.algos.EigenvectorCentrality
-import graft.embed.CorrelationBench
+import graft.embed.{Correlation, CorrelationBench}
 import graft.multimodal.Multimodal
 import graft.streaming.EventStreams
 
@@ -227,6 +227,21 @@ class ExtrasSpec extends SparkSuite {
     assert(lo <= point && point <= hi, s"($lo, $point, $hi)")
     assert(point > 0.8)
     assert(hi - lo < 0.3, s"CI too wide: ($lo, $hi)")
+  }
+
+  test("bootstrap reads the pairwise-complete pairs Spearman ranks, nulls dropped") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val rows = (0 until 60).map { i =>
+      val x = rnd.nextDouble()
+      (if (i == 7) None else Some(x), if (i == 30) None else Some(x + rnd.nextDouble()))
+    }
+    val df = rows.toDF("a", "b")
+    val (point, lo, hi) = CorrelationBench.bootstrapCI(df, "a", "b")
+    assert(point == Correlation.spearman(df, "a", "b"))
+    assert(lo <= point && point <= hi, s"($lo, $point, $hi)")
+    val p = CorrelationBench.bootstrapP(df, "a", "b")
+    assert(p >= 0.0 && p <= 0.05, s"p = $p")
   }
 
   test("SNAP fixture: facebook_combined end-to-end (if present)") {

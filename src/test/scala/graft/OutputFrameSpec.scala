@@ -25,12 +25,13 @@ class OutputFrameSpec extends SparkSuite {
   /** The boxed local relation of `out`'s arrays: tuples through `toDF`. */
   private def boxed(out: DataFrame): DataFrame = {
     import spark.implicits._
-    val f = Route.frameOf(out).getOrElse(fail("not a Route.frame"))
-    f.columns match {
-      case Seq(Route.Longs(c, v)) => f.ids.zip(v).toSeq.toDF("id", c)
-      case Seq(Route.Doubles(c, v)) => f.ids.zip(v).toSeq.toDF("id", c)
-      case Seq(Route.Vectors(c, v, d)) =>
-        f.ids.indices.map(i => (f.ids(i), v.slice(i * d, (i + 1) * d))).toDF("id", c)
+    var cols: Option[Seq[Route.Column]] = None
+    assert(jobsRun { cols = Route.collect(out, d = 2) } == 0, "not a Route.frame")
+    cols.get match {
+      case Seq(Route.Longs("id", ids), Route.Longs(c, v)) => ids.zip(v).toSeq.toDF("id", c)
+      case Seq(Route.Longs("id", ids), Route.Doubles(c, v)) => ids.zip(v).toSeq.toDF("id", c)
+      case Seq(Route.Longs("id", ids), Route.Vectors(c, v, d)) =>
+        ids.indices.map(i => (ids(i), v.slice(i * d, (i + 1) * d))).toDF("id", c)
       case other => fail(s"unexpected columns $other")
     }
   }

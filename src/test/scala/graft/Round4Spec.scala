@@ -265,7 +265,7 @@ class Round4Spec extends SparkSuite {
     def planOf(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.getClass.getSimpleName
     val local = graft.embed.SpectralInit.run(spark, e, d = 2, maxIter = 5)
-    assert(graft.core.Route.frameOf(local).isDefined, planOf(local))
+    assert(jobsRun(graft.core.Route.collect(local, d = 2)) == 0, planOf(local))
     val dist = graft.embed.SpectralInit.run(spark, e, d = 2, maxIter = 5,
       localEdgeCap = 100) // E(=584) exceeds the shrunk cap -> distributed
     assert(planOf(dist).contains("LogicalRDD"), planOf(dist))

@@ -317,7 +317,7 @@ class Round5Spec extends SparkSuite {
         explicitSources = Some(srcs))
       val cDist = graft.algos.ApproxCloseness.run(spark, e, k = 8,
         explicitSources = Some(srcs), localNbrRowCap = 0)
-      assert(graft.core.Route.frameOf(cLocal).isDefined, planOf(cLocal))
+      assert(jobsRun(graft.core.Route.collect(cLocal)) == 0, planOf(cLocal))
       assert(!planOf(cDist).contains("LocalRelation"), planOf(cDist))
       val (cl, cd) = (asMap(cLocal), asMap(cDist))
       assert(cl.keySet == cd.keySet)
@@ -328,7 +328,7 @@ class Round5Spec extends SparkSuite {
         explicitSources = Some(srcs), portableSum = true)
       val bDist = graft.algos.ApproxBetweenness.run(spark, e, k = 8,
         explicitSources = Some(srcs), portableSum = true, localNbrRowCap = 0)
-      assert(graft.core.Route.frameOf(bLocal).isDefined, planOf(bLocal))
+      assert(jobsRun(graft.core.Route.collect(bLocal)) == 0, planOf(bLocal))
       val (bl, bd) = (asMap(bLocal), asMap(bDist))
       assert(bl.keySet == bd.keySet)
       bl.foreach { case (id, v) => assert(v == bd(id), s"betweenness v$id: $v vs ${bd(id)}") }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -138,9 +140,9 @@ class RouteSpec extends SparkSuite {
     val e = edgesOf(K8)
     val n = e.count()
     Route.gate(e, n) match {
-      case Route.Local(s, d) =>
+      case l: Route.Local =>
         val want = e.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-        assert(s.zip(d).sorted.toSeq == want)
+        assert(l.src.zip(l.dst).sorted.toSeq == want)
       case other => fail(s"count == cap should go local, got $other")
     }
     Route.gate(e, n - 1) match {
@@ -152,7 +154,7 @@ class RouteSpec extends SparkSuite {
     }
     // cap 0 on an empty frame: 0 <= 0, the local route with no rows
     Route.gate(edgesOf(Seq.empty), 0L) match {
-      case Route.Local(s, d) => assert(s.isEmpty && d.isEmpty)
+      case l: Route.Local => assert(l.src.isEmpty && l.dst.isEmpty)
       case other => fail(s"an empty frame under cap 0 should go local, got $other")
     }
   }
@@ -163,9 +165,116 @@ class RouteSpec extends SparkSuite {
       .select(col("id").as("src"), ((col("id") * 7) % 13 - 6).as("dst"))
     assert(df.rdd.getNumPartitions == 4)
     assert(df.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ == 0) == 2)
-    val (s, d) = Route.collect(df)
+    val Some(Seq(Route.Longs("src", s), Route.Longs("dst", d))) = Route.collect(df)
     val want = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(s.zip(d).toSeq == want)
+  }
+
+  /** A column's values as bits, so NaN payloads and -0.0 compare too. */
+  private def bitsOf(c: Route.Column): (String, Seq[Long]) = c match {
+    case Route.Longs(n, v) => (n, v.toSeq)
+    case Route.Doubles(n, v) => (n, v.toSeq.map(java.lang.Double.doubleToRawLongBits))
+    case Route.Vectors(n, v, d) => (s"$n/$d", v.toSeq.map(java.lang.Double.doubleToRawLongBits))
+  }
+
+  test("collect: a Route.frame's columns come back bit-identical with no job") {
+    val odd = Array(-0.0, 0.0, Double.NaN, java.lang.Double.longBitsToDouble(0x7ff0000000000123L),
+      Double.NegativeInfinity, Double.MinPositiveValue)
+    val ids = Array(5L, -3L, Long.MaxValue, 0L, Long.MinValue, 7L)
+    val cols = Seq(Route.Longs("c", ids.map(_ * 31)), Route.Doubles("x", odd),
+      Route.Vectors("pos", odd ++ odd.reverse ++ odd, 3))
+    val f = Route.frame(spark, ids, cols: _*)
+    var got: Option[Seq[Route.Column]] = None
+    assert(jobsRun { got = Route.collect(f, d = 3) } == 0)
+    assert(got.get.map(bitsOf) == (Route.Longs("id", ids) +: cols).map(bitsOf))
+    // the bound applies with no job too
+    assert(jobsRun { got = Route.collect(f, Some(ids.length - 1), 3) } == 0)
+    assert(got.isEmpty)
+    // the same rows through the packed read: the frame under a projection
+    assert(jobsRun { got = Route.collect(f.limit(100), d = 3) } > 0)
+    assert(got.get.map(bitsOf) == (Route.Longs("id", ids) +: cols).map(bitsOf))
+  }
+
+  test("collect: unbounded, a multi-partition frame in collect() order in one job") {
+    val df = spark.range(0, 50, 1, 5).where(col("id") % 7 =!= 3)
+      .select((col("id") * 3 - 40).as("id"), (col("id") / 8.0 - 1).as("x"),
+        array(col("id") * 0.5, -col("id").cast("double")).as("pos"))
+    assert(df.rdd.getNumPartitions == 5)
+    var got: Option[Seq[Route.Column]] = None
+    assert(jobsRun { got = Route.collect(df, d = 2) } == 1)
+    val rows = df.collect()
+    val Some(Seq(Route.Longs("id", ids), Route.Doubles("x", xs), Route.Vectors("pos", pos, 2))) = got
+    assert(ids.toSeq == rows.map(_.getLong(0)).toSeq)
+    assert(xs.toSeq == rows.map(_.getDouble(1)).toSeq)
+    assert(pos.toSeq == rows.flatMap(_.getSeq[Double](2)).toSeq)
+  }
+
+  test("collect: a bound of n keeps n rows, n - 1 gives None, no partition computed twice") {
+    import spark.implicits._
+    val computed = spark.sparkContext.collectionAccumulator[Int]("partitions")
+    // 12 partitions, 5 rows in each but the empty 0, 1 and 6
+    val df = spark.sparkContext.parallelize(0 until 60, 12)
+      .mapPartitionsWithIndex { (p, it) =>
+        computed.add(p)
+        if (Set(0, 1, 6)(p)) Iterator.empty else it
+      }
+      .map(i => (i.toLong, i * 0.25)).toDF("id", "v")
+    val n = 45
+    def scanned[T](body: => T): (T, Seq[Int], Int) = {
+      computed.reset()
+      var out: Option[T] = None
+      val jobs = jobsRun { out = Some(body) }
+      (out.get, computed.value.asScala.toSeq, jobs)
+    }
+    val (all, parts, jobs) = scanned(Route.collect(df, Some(n)))
+    val Some(Seq(Route.Longs(_, ids), Route.Doubles(_, vs))) = all
+    assert(ids.toSeq == df.collect().map(_.getLong(0)).toSeq && vs.toSeq == ids.toSeq.map(_ * 0.25))
+    assert(parts.sorted == (0 until 12), "every partition once")
+    assert(jobs > 1, "scanned in batches")
+    val (none, parts1, _) = scanned(Route.collect(df, Some(n - 1)))
+    assert(none.isEmpty)
+    assert(parts1.sorted == (0 until 12), "every partition once")
+    // a small bound stops early: the empty head, then a scaled-up batch
+    val (few, parts2, _) = scanned(Route.collect(df, Some(2)))
+    assert(few.isEmpty)
+    assert(parts2.distinct == parts2 && parts2.length < 12, parts2.toString)
+  }
+
+  test("collect: an empty frame comes back empty, bounded or not") {
+    val df = spark.range(0, 10, 1, 3).where(col("id") > 99)
+      .select(col("id"), col("id").cast("double").as("x"))
+    for (bound <- Seq(None, Some(0), Some(5))) {
+      val Some(Seq(Route.Longs("id", ids), Route.Doubles("x", xs))) = Route.collect(df, bound)
+      assert(ids.isEmpty && xs.isEmpty, bound)
+    }
+    val Some(Seq(Route.Longs("id", ids), Route.Vectors("pos", p, 2))) =
+      Route.collect(Route.frame(spark, Array.emptyLongArray, Route.Vectors("pos", Array.emptyDoubleArray, 2)), d = 2)
+    assert(ids.isEmpty && p.isEmpty)
+  }
+
+  test("collect refuses a null edge endpoint, naming the column") {
+    import spark.implicits._
+    val e = Seq((1L, Some(2L)), (2L, None), (3L, Some(1L))).toDF("src", "dst")
+    val ex = intercept[Exception](Route.gate(e, Route.LocalEdgeCap))
+    assert(ex.getMessage.contains("a null in column dst"), ex.getMessage)
+  }
+
+  test("the layout's start read refuses a null coordinate and a wrong-width position") {
+    import spark.implicits._
+    val e = edgesOf(K4)
+    def startOf(rows: Seq[(Long, Seq[Option[Double]])]) = rows.toDF("id", "pos")
+    val good = (0 until 4).map(i => (i.toLong, Seq(Some(i * 1.0), Some(-i * 0.5))))
+    assert(ForceLayout.run(spark, e, startOf(good), 1).count() == 4)
+    val withNull = good.updated(2, (2L, Seq(Some(1.0), None)))
+    val ex = intercept[Exception](ForceLayout.run(spark, e, startOf(withNull), 1))
+    assert(ex.getMessage.contains("a null in column pos"), ex.getMessage)
+    val wide = good.updated(1, (1L, Seq(Some(1.0), Some(2.0), Some(3.0))))
+    val ex2 = intercept[Exception](ForceLayout.run(spark, e, startOf(wide), 1))
+    assert(ex2.getMessage.contains("vertex 1 has a 3-d position, want d = 2"), ex2.getMessage)
+    // a Route.frame start of another width fails the same way, with no job
+    val frame3 = Route.frame(spark, Array(0L, 1L, 2L, 3L), Route.Vectors("pos", Array.fill(12)(0.5), 3))
+    val ex3 = intercept[IllegalArgumentException](ForceLayout.run(spark, e, frame3, 1))
+    assert(ex3.getMessage.contains("vertex 0 has a 3-d position, want d = 2"), ex3.getMessage)
   }
 
   test("gated operators leave the caller's cached edge frame cached") {
