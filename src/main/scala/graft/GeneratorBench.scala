@@ -88,6 +88,7 @@ object GeneratorBench {
         graft.viz.Plots.CiRow(cfg.graphType, m, rho, lo, hi)
       }
     }.getOrElse(Nil)
+    graft.core.Lineage.release(perVertex)
     e.unpersist(false)
     // density / avg_degree exactly as the reference rows them
     // (run_benchmarks.py:155-162): m undirected edges over n vertices

@@ -62,19 +62,19 @@ object PageRank {
     * the superstep needs NO shuffle at all — PageRankCsr streams
     * per-partition CSR blocks against the contribution vector (measured
     * 4-5x the relational engine on the bench graph, parity 3e-20). Three
-    * tiers, by the held edge projection's [[Route.stats]] (one
-    * aggregate, or none when an earlier call on the same cached or
-    * checkpointed input ran it):
+    * tiers, by the held edge projection's [[Route.gate]]:
     *
-    *  - at most [[Route.LocalEdgeCap]] edges: [[Route.gate]] collects the
-    *    rows (or finds them shared by an earlier call), density is read
-    *    off their sorted ids, and the blocks are built and run on the
-    *    driver — no shuffle and no job per superstep, and the CC, LPA,
-    *    triangle and spectral calls that follow read the same collect;
-    *  - above it, up to `csrMaxVertices` vertices: the blocks are built
-    *    on the executors by one shuffle and each superstep is one job
-    *    (the density check rides the block build: it falls back if any
-    *    id slot is empty);
+    *  - at most [[Route.LocalEdgeCap]] edges: the gate collects the rows
+    *    (or finds them shared by an earlier call), density and the
+    *    `csrMaxVertices` bound are read off their sorted ids, and the
+    *    blocks are built and run on the driver — no shuffle and no job
+    *    per superstep, and the CC, LPA, triangle and spectral calls that
+    *    follow read the same collect;
+    *  - above it, up to `csrMaxVertices` vertices by [[Route.stats]]'
+    *    id range (the gate's aggregate, read again): the blocks are
+    *    built on the executors by one shuffle and each superstep is one
+    *    job (the density check rides the block build: it falls back if
+    *    any id slot is empty);
     *  - everything else runs the relational join+agg plan: sparse id
     *    spaces (n enters the teleport base, so density is semantic),
     *    checkpointed/resumable runs, salted aggregation, or V beyond the
@@ -92,18 +92,19 @@ object PageRank {
     if (!tryRoute) return run(spark, Edges.neighbors(edges).toDF("src", "dst"), cfg)
     val held = Route.hold(edges)
     try {
-      // the id range gives both gate bounds: maxId under the broadcast
+      // the id range gives both CSR bounds: maxId under the broadcast
       // cap AND no negative ids (a negative id would index outside the
-      // CSR arrays; the relational plan handles any id)
-      val csr = Route.stats(held).idRange match {
-        case Some((lo, hi)) if lo >= 0L && hi < cfg.csrMaxVertices =>
-          Route.gate(held, Route.LocalEdgeCap) match {
-            case local: Route.Local =>
-              PageRankCsr.runLocalIfDense(spark, local, cfg.maxIter, cfg.tol, cfg.alpha)
-            case Route.Distributed(_, _) =>
-              PageRankCsr.runIfDense(spark, held.edges, cfg.maxIter, cfg.tol, cfg.alpha)
-          }
-        case _ => None
+      // CSR arrays; the relational plan handles any id). Dense ids are
+      // 0..n-1, so on the driver n is the bound
+      val csr = Route.gate(held, Route.LocalEdgeCap) match {
+        case local: Route.Local if local.dense._1.length <= cfg.csrMaxVertices =>
+          PageRankCsr.runLocalIfDense(spark, local, cfg.maxIter, cfg.tol, cfg.alpha)
+        case _: Route.Local => None
+        case Route.Distributed(_, _) => Route.stats(held).idRange match {
+          case Some((lo, hi)) if lo >= 0L && hi < cfg.csrMaxVertices =>
+            PageRankCsr.runIfDense(spark, held.edges, cfg.maxIter, cfg.tol, cfg.alpha)
+          case _ => None
+        }
       }
       csr.map(c => Result(c.ranks, c.iterations, c.err,
           c.edgesPerSecPerSuperstep, engine = "csr"))

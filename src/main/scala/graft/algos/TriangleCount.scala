@@ -72,14 +72,12 @@ object TriangleCount {
       case l: Route.Local => return Seq(countLocal(l)).toDF("triangles")
       case Route.Distributed(h, _) => h
     }
-    // checkpoint the edges and the oriented table (optimization round
-    // 6): the final aggregate's plan references the orient subtree three
-    // times (adjacency build + both attach joins), each copy re-executing
-    // the edge scan and both degree joins — checkpointing `e` and `o`
-    // pins them to single executions
-    val e = graft.core.Lineage.truncate(held.edges)
-    held.release()
-    val o = graft.core.Lineage.truncate(orient(spark, e))
+    // checkpoint the oriented table (optimization round 6): the final
+    // aggregate's plan references the orient subtree three times
+    // (adjacency build + both attach joins), each copy re-executing both
+    // degree joins — checkpointing `o` pins them to one execution, which
+    // reads the held projection's cache; that cache is then released
+    val o = try graft.core.Lineage.truncate(orient(spark, held.edges)) finally held.release()
     // adjacency arrays SORTED at build so the per-edge intersection is a
     // zero-allocation two-pointer merge (SortedIntersectCount codegen
     // expression) instead of array_intersect's per-row hash set. The
@@ -98,7 +96,6 @@ object TriangleCount {
       .agg(coalesce(sum(col("t")), lit(0L))).head().getLong(0)
     adj.unpersist(false)
     graft.core.Lineage.release(o)
-    graft.core.Lineage.release(e)
     Seq(n).toDF("triangles")
   }
 

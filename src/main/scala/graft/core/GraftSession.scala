@@ -56,12 +56,14 @@ object GraftSession {
       // into sort-based mode and SORTS+SPILLS the whole candidate stream
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
       .config(CodegenCacheConf, CodegenCacheEntries.toString)
+      .withExtensions(_.injectOptimizerRule(_ => Route.FrameCount))
       .getOrCreate()
   }
 
   /** Tune an externally-created session (e.g. the driver's Verify/Bench
     * session) with the engine's preferred runtime confs — only the ones
-    * settable after session start. The codegen cache size is static:
+    * settable after session start — and [[Route.FrameCount]], which
+    * [[local]] injects as an extension. The codegen cache size is static:
     * when the session's is below [[CodegenCacheEntries]], one warning
     * names the conf to pass at submit time.
     */
@@ -70,6 +72,8 @@ object GraftSession {
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
     spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
+    val extra = spark.experimental.extraOptimizations
+    if (!extra.contains(Route.FrameCount)) spark.experimental.extraOptimizations = extra :+ Route.FrameCount
     codegenCacheWarning(spark.conf.get(CodegenCacheConf).toInt).foreach(w =>
       org.apache.logging.log4j.LogManager.getLogger(getClass).warn(w))
     spark

@@ -8,7 +8,11 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, GenericInternalRow, Literal,
+  UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, greatest, least, lit, max, min}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -23,12 +27,16 @@ import org.apache.spark.storage.StorageLevel
   * each operator takes its cap as a parameter default, so a test or a
   * benchmark can still pin either route.
   *
-  * [[gate]] is the one local gate. It reads an input's count from
-  * [[stats]], one aggregate that PageRank's CSR gate reads too, and
-  * both keep what they compute for the input the caller cached (or
+  * [[gate]] is the one local gate. On an input the caller cached and
+  * materialized, the cache's row count (an upper bound, kept by Spark as
+  * it stores each block) routes it with no job: at or under the cap one
+  * collect reads the rows, and their [[Stats]] come from the arrays.
+  * Any other input's count comes from [[stats]], one aggregate (count,
+  * least and greatest id), which PageRank's distributed CSR tier reads
+  * too. Both keep what they compute for the input the caller cached (or
   * checkpointed) last (see `Shared`): the operators that run one after
   * another on one cached or [[Lineage.truncate]]d edge frame count it
-  * once and collect it once. [[Local]] is the one driver index of an
+  * at most once and collect it once. [[Local]] is the one driver index of an
   * edge input: its sorted distinct ids, the dense index of every row's
   * endpoints and the undirected CSR, all primitive arrays, built once
   * and read by every driver-local kernel (CC, LPA, triangles,
@@ -46,7 +54,9 @@ import org.apache.spark.storage.StorageLevel
   * one way a frame reaches the driver, its inverse: the edge rows a gate
   * reads, the layout's start positions and Spearman's pairs come back as
   * the same primitive arrays, and a [[frame]] result hands back its own
-  * with no job.
+  * with no job. [[FrameCount]], an optimizer rule the engine's sessions
+  * carry, answers a `count()` of a [[frame]] result from its length,
+  * with no job either.
   */
 object Route {
 
@@ -99,6 +109,8 @@ object Route {
   final class Held private[Route] (val edges: DataFrame, cachedHere: Option[DataFrame],
                                    private[Route] val entry: Option[AnyRef]) {
     def release(): Unit = cachedHere.foreach(_.unpersist(false))
+    // the stats a call on these rows computed, read again by the calls after it
+    @volatile private[Route] var stats: Option[Stats] = None
   }
 
   def hold(input: DataFrame): Held = entryOf(input) match {
@@ -196,15 +208,31 @@ object Route {
     }
   }
 
-  /** The input's [[Stats]], from one aggregate, or from the shared state
-    * when it holds this input's cache entry.
+  /** The input's [[Stats]]: what a call on `held` or the shared state
+    * (when it holds this input's cache entry) already has, else one
+    * aggregate.
     */
-  def stats(held: Held): Stats = sharedFor(held.entry).map(_.stats).getOrElse {
+  def stats(held: Held): Stats = known(held).getOrElse {
     val r = held.edges.agg(count(lit(1)), min(least(col("src"), col("dst"))).cast("long"),
       max(greatest(col("src"), col("dst"))).cast("long")).head()
     val s = Stats(r.getLong(0), if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2))))
-    held.entry.foreach(e => synchronized { shared = Some(new Shared(new WeakReference(e), s)) })
+    share(held, s, None)
     s
+  }
+
+  private def known(held: Held): Option[Stats] =
+    held.stats.orElse(sharedFor(held.entry).map(_.stats))
+
+  /** Keeps `s` (and `local`) for `held` and, when a caller cached it, in
+    * the shared state.
+    */
+  private def share(held: Held, s: Stats, local: Option[Local]): Unit = {
+    held.stats = Some(s)
+    held.entry.foreach { e =>
+      val slot = new Shared(new WeakReference(e), s)
+      slot.local = local
+      synchronized { shared = Some(slot) }
+    }
   }
 
   /** The local gate: holds the input's (src, dst) projection, and
@@ -220,14 +248,30 @@ object Route {
   /** The local gate over a projection the caller holds and releases:
     * [[Distributed]] over `held` when its count is above `cap`, else
     * the collected rows, read from the shared state when they are there.
+    *
+    * With no [[Stats]] known yet, a caller's materialized cache gives a
+    * row count with no job: the rows its build stored, which a block
+    * rebuilt after a loss adds again, so never fewer than the entry
+    * holds. At or under `cap`, one collect reads the rows and their
+    * [[Stats]] come from the arrays; should the rows still pass `cap`,
+    * their exact count routes them distributed. An uncached input, a
+    * checkpoint, a cache not yet built or a count above `cap` is counted
+    * by the [[stats]] aggregate first.
     */
   def gate(held: Held, cap: Long): Gate = {
+    if (known(held).isEmpty && held.entry.flatMap(Bridge.cachedRows).exists(_ <= cap)) {
+      val local = localOf(held.edges)
+      val ids = local.dense._1
+      val s = Stats(local.src.length, ids.headOption.map((_, ids.last)))
+      // a caller's larger cap does not raise the bound on what is kept
+      share(held, s, Some(local).filter(_ => s.count <= LocalEdgeCap))
+      return if (s.count > cap) Distributed(held, s.count) else local
+    }
     val rows = stats(held).count
     if (rows > cap) return Distributed(held, rows)
     val slot = sharedFor(held.entry)
     slot.flatMap(_.local).getOrElse {
       val local = localOf(held.edges)
-      // a caller's larger cap does not raise the bound on what is kept
       if (rows <= LocalEdgeCap) slot.foreach(_.local = Some(local))
       local
     }
@@ -273,7 +317,8 @@ object Route {
     * arrays, rows in their order. The arrays go out in one broadcast and
     * each partition expands its slice of rows on the executor: one slice
     * per 50,000 rows, at most one per core. One slice declares
-    * SinglePartition, so a `count()` plans no exchange and runs one job.
+    * SinglePartition, so an aggregate over it plans no exchange; a
+    * `count()` reads the arrays' length and runs no job ([[FrameCount]]).
     * The plan carries the row count and a LocalRelation's size for the
     * same rows, so joins broadcast it as they would that relation.
     * [[collect]] hands the arrays back to a driver-side reader, no job.
@@ -305,6 +350,35 @@ object Route {
   // a frame's columns, id first; weak keys: an entry goes when its
   // frame's RDD is collected
   private val frames = new java.util.WeakHashMap[AnyRef, Seq[Column]]()
+
+  /** The rows of a plan that is exactly a [[frame]] result, under at most
+    * a projection of its columns: its arrays' length.
+    */
+  private def frameRows(plan: LogicalPlan): Option[Long] = plan match {
+    case Project(list, child) if list.forall(_.isInstanceOf[Attribute]) => frameRows(child)
+    case l: LogicalRDD =>
+      frames.synchronized(Option(frames.get(l.rdd))).collect { case Longs(_, ids) +: _ => ids.length.toLong }
+    case _ => None
+  }
+
+  /** The optimizer rule that answers a `count()` of a [[frame]] result
+    * with no job: the global `count(1)` aggregate a `count()` plans at
+    * the root, over the frame (pruned to no column, as the optimizer
+    * prunes it), becomes a one-row local relation of the arrays' length,
+    * so the driver never schedules the broadcast-and-expand it would
+    * read the rows through. Any other plan, a filter, limit, join or
+    * distinct over the frame included, is left as it is, and only the
+    * root is looked at. `GraftSession` adds it to the sessions it builds
+    * and tunes.
+    */
+  object FrameCount extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = plan match {
+      case a @ Aggregate(Nil, Seq(Alias(AggregateExpression(Count(Seq(one: Literal)), Complete, false,
+          None, _), _)), child, _) if one.value != null =>
+        frameRows(child).fold(plan)(n => LocalRelation(a.output, Seq(InternalRow(n))))
+      case _ => plan
+    }
+  }
 
   /** The one way a frame reaches the driver, the inverse of [[frame]]:
     * its bigint, double and array<double> (of `d` values) columns as

@@ -28,16 +28,21 @@ object CorrelationBench {
   def run(spark: SparkSession, edges: DataFrame,
           d: Int = 3, layoutIters: Int = 20,
           layoutCfg: ForceLayout.Config = null,
-      extraCentralities: Map[String, DataFrame] = Map()): Report =
-    runDetailed(spark, edges, d, layoutIters, layoutCfg, extraCentralities)._1
+      extraCentralities: Map[String, DataFrame] = Map()): Report = {
+    val (report, joined) = runDetailed(spark, edges, d, layoutIters, layoutCfg, extraCentralities)
+    graft.core.Lineage.release(joined)
+    report
+  }
 
   /** Like [[run]] but also returns the per-vertex
     * (id, radius, measure...) frame behind the correlations — the exact
     * input the reference hands to plot_radial_vs_centrality
     * (/root/reference/graphem/visualization.py:93-127); [[graft.viz.Plots]]
-    * renders it headlessly. The frame is small (one row per vertex) but
-    * still lazy — callers that unpersist `edges` must materialize (or
-    * plot) first.
+    * renders it headlessly. The frame is small (one row per vertex) and
+    * materialized once ([[graft.core.Lineage.truncate]]): every measure's
+    * rho and the row count read it, not the plan behind it, and it stays
+    * readable after `edges` is unpersisted, until the caller hands it to
+    * [[graft.core.Lineage.release]].
     */
   def runDetailed(spark: SparkSession, edges: DataFrame,
           d: Int = 3, layoutIters: Int = 20,
@@ -67,10 +72,10 @@ object CorrelationBench {
     val eig = EigenvectorCentrality.runWithFallback(spark, e)
       .withColumnRenamed("score", "eigenvector")
 
-    var joined = radii.join(deg, "id").join(pr, "id").join(eig, "id")
-    extraCentralities.foreach { case (name, df) =>
-      joined = joined.join(df.toDF("id", name), "id")
-    }
+    val joined = graft.core.Lineage.truncate(extraCentralities.foldLeft(
+      radii.join(deg, "id").join(pr, "id").join(eig, "id")) { case (j, (name, df)) =>
+      j.join(df.toDF("id", name), "id")
+    })
     val measures = Seq("degree", "pagerank", "eigenvector") ++
       extraCentralities.keys
     val corrs = measures.map(mname =>

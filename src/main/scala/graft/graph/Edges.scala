@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Canonical undirected edge. Invariants: src < dst, no self-loops,
   * distinct rows (semantics of the reference's symmetrize+dedup,
@@ -46,10 +47,18 @@ object Edges {
     * reproduce it exactly.
     */
   def fromLineitem(spark: SparkSession, sfDir: String, v: Long = 1000L): DataFrame = {
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = readParquet(spark, s"$sfDir/lineitem.parquet")
       .select((col("l_orderkey") % v).as("src"), (col("l_partkey") % v).as("dst"))
     canonicalize(li)
   }
+
+  /** `spark.read.parquet(path)`, with the schema Spark would infer read
+    * from the footer its inference reads, so building the frame runs no
+    * job ([[Bridge.parquetSchema]]); inferred by Spark where that does
+    * not apply.
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame =
+    Bridge.parquetSchema(spark, path).fold(spark.read)(spark.read.schema(_)).parquet(path)
 
   /** SQL fragment producing the same canonical edge table in DuckDB. */
   def lineitemEdgesSql(v: Long = 1000L): String =

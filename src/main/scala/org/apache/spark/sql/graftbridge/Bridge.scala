@@ -122,6 +122,58 @@ object Bridge {
       s, Some(stats), None))
   }
 
+  /** The rows of a session cache entry (a cache manager's `CachedData`)
+    * whose every partition is stored, from the cached relation's
+    * statistics: the rows its build counted as it stored each batch. A
+    * block rebuilt after a loss is counted again, so the figure never
+    * falls below the rows the entry holds. None for anything else, or a
+    * cache not yet built in full.
+    */
+  def cachedRows(entry: AnyRef): Option[Long] = entry match {
+    case c: org.apache.spark.sql.execution.CachedData
+        if c.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded =>
+      c.cachedRepresentation.computeStats().rowCount.map(_.toLong)
+    case _ => None
+  }
+
+  /** The schema Spark's inference gives the Parquet source at `path`,
+    * read from the same footer it reads when it does not merge schemas
+    * (its first data file by path, schema from Spark's row-metadata key
+    * when the file has it, else converted from the Parquet schema), with
+    * no job: inference reads that one footer in a job of its own. None
+    * where inference reads something else: schema merging on, summary
+    * files, partition directories, or no data file.
+    */
+  def parquetSchema(spark: org.apache.spark.sql.SparkSession,
+                    path: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.classic
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    val s = spark.asInstanceOf[classic.SparkSession]
+    if (s.sessionState.conf.isParquetSchemaMergingEnabled) return None
+    val conf = s.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val status = fs.getFileStatus(root)
+    val listed = if (status.isFile) Array(status) else fs.listStatus(root)
+    // the names Spark's file index skips; `_metadata` and `_common_metadata` are summaries
+    val files = listed.filterNot { f =>
+      val n = f.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    }
+    val summaries = listed.exists(f => Set("_metadata", "_common_metadata")(f.getPath.getName))
+    if (summaries || files.exists(_.isDirectory)) return None
+    files.sortBy(_.getPath.toString).headOption.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val footer = try new Footer(f.getPath, reader.getFooter) finally reader.close()
+      ParquetFileFormat.readSchemaFromFooter(footer,
+        new ParquetToSparkSchemaConverter(s.sessionState.conf))
+    }
+  }
+
   /** eager=false marks the RDD for checkpointing but defers
     * materialization to the caller's FIRST action on the returned frame
     * — letting an iterative loop fold "materialize new state" and

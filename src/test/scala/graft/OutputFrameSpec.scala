@@ -9,8 +9,8 @@ import graft.core.Route
 import graft.embed.{ForceLayout, SpectralInit}
 import graft.generators.Generators
 
-/** Every driver-local per-vertex output is a [[Route.frame]]: counted in
-  * one job, with the schema and the rows (same order) of the boxed
+/** Every driver-local per-vertex output is a [[Route.frame]]: counted with
+  * no job, with the schema and the rows (same order) of the boxed
   * `Seq.toDF` local relation built from the same arrays, broadcast in a
   * join as that relation is.
   */
@@ -49,7 +49,7 @@ class OutputFrameSpec extends SparkSuite {
     val rows = out.collect().toSeq
     assert(rows == ref.collect().toSeq)
     assert(rows.map(_.getLong(0)) == rows.map(_.getLong(0)).sorted, "ids ascend")
-    assert(jobsRun(out.count()) == 1)
+    assert(jobsRun(out.count()) == 0)
   }
 
   private val LongOut = (c: String) => Seq(("id", "bigint", false), (c, "bigint", false))
@@ -58,7 +58,7 @@ class OutputFrameSpec extends SparkSuite {
 
   private def sorted(df: DataFrame): Seq[Row] = df.collect().sortBy(_.getLong(0)).toSeq
 
-  test("CC and LPA outputs: one job to count, the distributed loops' rows") {
+  test("CC and LPA outputs: no job to count, the distributed loops' rows") {
     val e = cached(Generators.ba(spark, 300, 3, 37L))
     try {
       val cc = ConnectedComponents.run(spark, e)
@@ -116,7 +116,7 @@ class OutputFrameSpec extends SparkSuite {
     } finally e.unpersist(true)
   }
 
-  test("an empty output: zero rows, the same schema, one job to count") {
+  test("an empty output: zero rows, the same schema, no job to count") {
     val empty = edgesOf(Seq.empty)
     val init = SpectralInit.run(spark, empty, d = 2)
     check(init, VectorOut)
