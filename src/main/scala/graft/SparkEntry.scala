@@ -648,7 +648,8 @@ object SparkEntry {
          |              CAST((SELECT count(*) FROM verts WHERE id < 8) AS DOUBLE) AS k
          |       FROM verts)
          |SELECT v.id, CAST(round(coalesce(raw.raw, 0.0) *
-         |    ((1.0 / ((nk.n - 1.0) * (nk.n - 2.0))) * (nk.n / nk.k)) * 1e9, 0)
+         |    (CASE WHEN nk.n > 2 THEN (1.0 / ((nk.n - 1.0) * (nk.n - 2.0))) * (nk.n / nk.k)
+         |     ELSE 1.0 END) * 1e9, 0)
          |    AS BIGINT) AS betweenness_nano
          |FROM verts v LEFT JOIN raw ON raw.id = v.id CROSS JOIN nk
          |ORDER BY v.id""".stripMargin)

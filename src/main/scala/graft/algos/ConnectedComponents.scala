@@ -3,9 +3,8 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.core.{CheckpointManager, Route}
+import graft.core.{CheckpointManager, Lineage, LoopConf, Route}
 
 /** Connected components via alternating small-star / large-star
   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -49,16 +48,6 @@ object ConnectedComponents {
       .where(col("u") =!= col("v"))
       .distinct()
 
-  // Convergence signature of the (distinct) star-edge set: row count +
-  // order-independent XOR of per-row hashes. Replaces the decimal(38,0)
-  // hash SUM — same set-equality semantics and collision class, but a
-  // plain long accumulator instead of 16-byte decimal partials.
-  private def checksum(e: DataFrame): (Long, Long) = {
-    val r = e.agg(count(lit(1)),
-      coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
   /** Run to convergence. Returns (id, component) with component = min
     * vertex id of the component; every vertex of `edges` appears.
     *
@@ -82,68 +71,58 @@ object ConnectedComponents {
       case Route.Distributed(held, rows) => starLoop(spark, held, rows, maxRounds, checkpoint)
     }
 
+  /** The star rounds over the held projection, which has `rows` rows,
+    * in one loop scope sized by them (AQE off + data-sized shuffle width
+    * in the small regime, see [[LoopConf]]; at scale AQE stays on, and a
+    * star step has no join for it to split). Each round is ONE planned
+    * query and one job: the round's star edges, truncated, and their
+    * fingerprint (row count + XOR of row hashes) from the same job; a
+    * checkpointed run then commits them, a second job. The rounds end
+    * when a round's fingerprint equals the one before it. The vertex set
+    * is read from the hold in the final assignment's job, and the hold
+    * is released after it.
+    */
   private def starLoop(spark: SparkSession, held: Route.Held, rows: Long,
                        maxRounds: Int,
-                       checkpoint: Option[CheckpointManager]): DataFrame = {
-    var e = held.edges.select(col("src").as("u"), col("dst").as("v"))
-    var firstE = true // initial e reads the held projection; successors are truncated
-    def dropE(df: DataFrame): Unit =
-      if (firstE) { held.release(); firstE = false }
-      else graft.core.Lineage.release(df)
-    var round = 0
-    var done = false
-    // no signature for the input: the first round never counts as
-    // converged (canonical u < v rows are never the u > v star edges a
-    // round emits, and one more round at a fixpoint changes nothing)
-    var sig: Option[(Long, Long)] = None
-    var eRows = rows
-    // Fixed-shape round tuning: AQE off + data-sized shuffle width in
-    // the small regime (graft.core.LoopConf; data-derived gate). At
-    // scale AQE stays on; a star step has no join for it to split.
-    val small = graft.core.LoopConf.smallRegime(spark, 2L * rows,
-      rowsPerPartition = 62500L)
-    val verts = graft.core.LoopConf.withLoop(spark, small) {
-    // vertex set from the CACHED edge table, materialized eagerly while
-    // that cache is still alive (the rounds below release it): deriving
-    // it from the caller's `edges` frame re-executed the whole upstream
-    // edge pipeline (scan + distinct) a second time at the final join.
-    // Same ids by construction — e is edges renamed.
-    val verts = e.select(col("u").as("id"))
-      .union(e.select(col("v").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count()
-    while (!done && round < maxRounds) {
-      // largeStar's symmetrize union references the edge set twice —
-      // truncate lineage every round or the plan grows 2x per round.
-      // The checksum aggregate is the materializing action on the
-      // lazily-truncated frame, so each round runs ONE job (star passes
-      // + convergence signature), not two.
-      var next = smallStar(largeStar(e))
-      next = checkpoint match {
-        case Some(cm) => cm.commit(round, next, Map("edges" -> eRows.toDouble))
-        case None => graft.core.Lineage.truncateLazy(next)
+                       checkpoint: Option[CheckpointManager]): DataFrame =
+    try LoopConf.withLoop(spark, LoopConf.smallRegime(spark, 2L * rows,
+      rowsPerPartition = 62500L)) {
+      var e = held.edges.select(col("src").as("u"), col("dst").as("v"))
+      var round = 0
+      var done = false
+      // no fingerprint for the input: the first round never counts as
+      // converged (canonical u < v rows are never the u > v star edges a
+      // round emits, and one more round at a fixpoint changes nothing)
+      var sig: Option[(Long, Long)] = None
+      var eRows = rows
+      while (!done && round < maxRounds) {
+        // largeStar's symmetrize union references the edge set twice —
+        // truncate lineage every round or the plan grows 2x per round
+        val (star, nsig) = Lineage.fingerprinted(smallStar(largeStar(e)))
+        val next = checkpoint match {
+          case Some(cm) =>
+            try cm.commit(round, star, Map("edges" -> eRows.toDouble)) finally Lineage.release(star)
+          case None => star
+        }
+        // the first round's input is the hold, released below
+        if (round > 0) Lineage.release(e)
+        e = next
+        done = sig.contains(nsig)
+        sig = Some(nsig)
+        eRows = nsig._1
+        round += 1
       }
-      val nsig = checksum(next)
-      dropE(e)
-      e = next
-      done = sig.contains(nsig)
-      sig = Some(nsig)
-      eRows = nsig._1
-      round += 1
-    }
-    verts
-    }
-    // Final star edges point v -> root (root < v). Roots / isolated
-    // vertices map to themselves. Materialize eagerly so the vertex and
-    // star-edge caches can be released before returning.
-    val assign = graft.core.Lineage.truncate(
-      verts.join(e.select(col("u").as("id"), col("v").as("root")),
-          Seq("id"), "left")
-        .select(col("id"), coalesce(col("root"), col("id")).as("component")))
-    verts.unpersist(false)
-    dropE(e)
-    assign
-  }
+      // Final star edges point v -> root (root < v). Roots and vertices
+      // with no star edge (isolated, or with only a self-loop) map to
+      // themselves.
+      val verts = held.edges.select(col("src").as("id"))
+        .union(held.edges.select(col("dst").as("id"))).distinct()
+      val assign = Lineage.truncate(
+        verts.join(e.select(col("u").as("id"), col("v").as("root")), Seq("id"), "left")
+          .select(col("id"), coalesce(col("root"), col("id")).as("component")))
+      if (round > 0) Lineage.release(e)
+      assign
+    } finally held.release()
 
   /** Driver-local union-find (path halving) over the collected (src, dst)
     * rows — two primitive long arrays, sorted-id binary search instead

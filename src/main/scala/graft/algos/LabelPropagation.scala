@@ -3,7 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Route
+import graft.core.{Lineage, LoopConf, Route}
 import graft.graph.Edges
 
 /** Synchronous label propagation (north_rule addition; not in the
@@ -31,49 +31,44 @@ object LabelPropagation {
     */
   def run(spark: SparkSession, edges: DataFrame, iterations: Int,
           localEdgeCap: Long = Route.LocalEdgeCap): DataFrame = {
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // the gate's held projection serves the adjacency build too, so the
     // edge pipeline runs once whichever path runs
-    val (e0, eCount) = Route.gate(edges, localEdgeCap) match {
+    val (held, rows) = Route.gate(edges, localEdgeCap) match {
       case l: Route.Local => return runLocal(spark, l, iterations)
-      case Route.Distributed(held, rows) => (held, rows)
+      case Route.Distributed(h, r) => (h, r)
     }
-    // adjacency pre-shuffled ONCE on the per-iteration join key and
-    // materialized: each superstep's join then only shuffles the V-row
-    // label state (the old persist left nbrs scan-partitioned, so the
-    // 2E-row side was re-shuffled every iteration)
-    val nbrs = graft.core.Lineage.truncatePartitioned(
-      Edges.neighbors(e0.edges).repartition(p, col("nbr")))
-    e0.release()
-    // initial labels from the materialized adjacency — same vertex set
-    // as Edges.vertices on a canonical edge table, without a second
-    // pass over the edge pipeline
-    var labels = graft.core.Lineage.truncate(
-      nbrs.select(col("id")).distinct()
-        .select(col("id"), col("id").as("label")))
-    // fixed-shape loop tuning: AQE off + data-sized shuffle width in
-    // the small regime (graft.core.LoopConf; data-derived gate).
-    // 2 * eCount == nbrs row count (both directions), with no extra job.
-    val small = graft.core.LoopConf.smallRegime(spark, 2L * eCount)
-    graft.core.LoopConf.withLoop(spark, small) {
-    for (i <- 1 to iterations) {
-      // dataset aliases: the initial labels frame derives from nbrs, so
-      // its checkpointed attributes share expression ids with nbrs —
-      // unqualified column refs would be ambiguous on that first join
-      val counts = nbrs.as("n").join(labels.as("l"),
-          col("n.nbr") === col("l.id"))
-        .groupBy(col("n.id").as("vid"), col("l.label").as("label"))
-        .agg(count(lit(1)).as("cnt"))
-      val next = graft.core.Lineage.truncate(
-        counts.groupBy(col("vid").as("id"))
-          .agg(max(struct(col("cnt"), (-col("label")).as("neglabel"))).as("m"))
-          .select(col("id"), (-col("m.neglabel")).as("label")))
-      graft.core.Lineage.release(labels)
-      labels = next
+    // one loop scope for the call (LoopConf; data-derived gate): the
+    // adjacency has 2 * rows rows (both directions)
+    LoopConf.withLoop(spark, LoopConf.smallRegime(spark, 2L * rows)) {
+      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      // adjacency pre-shuffled ONCE on the per-iteration join key and
+      // materialized: each superstep's join then only shuffles the V-row
+      // label state (the old persist left nbrs scan-partitioned, so the
+      // 2E-row side was re-shuffled every iteration)
+      val nbrs = try Lineage.truncatePartitioned(
+        Edges.neighbors(held.edges).repartition(p, col("nbr"))) finally held.release()
+      // every vertex starts labeled with its own id: with no superstep
+      // that is the answer, and the first superstep's (vertex, label)
+      // pairs are the (id, nbr) rows themselves, with no join
+      var labels = if (iterations > 0) null else Lineage.truncate(
+        nbrs.select(col("id")).distinct().select(col("id"), col("id").as("label")))
+      for (i <- 1 to iterations) {
+        // dataset aliases keep the join's two sides apart: both read nbrs
+        val pairs =
+          if (i == 1) nbrs.select(col("id").as("vid"), col("nbr").as("label"))
+          else nbrs.as("n").join(labels.as("l"), col("n.nbr") === col("l.id"))
+            .select(col("n.id").as("vid"), col("l.label").as("label"))
+        val counts = pairs.groupBy(col("vid"), col("label")).agg(count(lit(1)).as("cnt"))
+        val next = Lineage.truncate(
+          counts.groupBy(col("vid").as("id"))
+            .agg(max(struct(col("cnt"), (-col("label")).as("neglabel"))).as("m"))
+            .select(col("id"), (-col("m.neglabel")).as("label")))
+        if (i > 1) Lineage.release(labels)
+        labels = next
+      }
+      Lineage.release(nbrs)
+      labels
     }
-    }
-    graft.core.Lineage.release(nbrs)
-    labels
   }
 
   /** Driver-local synchronous LPA over a collected CSR — the identical

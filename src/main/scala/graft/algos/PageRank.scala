@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{CheckpointManager, Route}
+import graft.core.{CheckpointManager, Lineage, LoopConf, Route}
 import graft.functions.DoubleParam
 import graft.graph.{Edges, Skew}
 
@@ -89,9 +89,12 @@ object PageRank {
     require(cfg.engine == "auto" || cfg.engine == "rel",
       s"""Config.engine must be "auto" or "rel", got "${cfg.engine}"""")
     val tryRoute = cfg.engine != "rel" && cfg.checkpoint.isEmpty && !cfg.saltedAgg
-    if (!tryRoute) return run(spark, Edges.neighbors(edges).toDF("src", "dst"), cfg)
     val held = Route.hold(edges)
+    // both directions of every edge: the relational plan's link rows
+    def relational() = run(spark, Edges.neighbors(held.edges).toDF("src", "dst"),
+      2L * Route.stats(held).count, cfg)
     try {
+      if (!tryRoute) return relational()
       // the id range gives both CSR bounds: maxId under the broadcast
       // cap AND no negative ids (a negative id would index outside the
       // CSR arrays; the relational plan handles any id). Dense ids are
@@ -108,15 +111,30 @@ object PageRank {
       }
       csr.map(c => Result(c.ranks, c.iterations, c.err,
           c.edgesPerSecPerSuperstep, engine = "csr"))
-        .getOrElse(run(spark, Edges.neighbors(held.edges).toDF("src", "dst"), cfg))
+        .getOrElse(relational())
     } finally held.release()
   }
 
   /** Directed PageRank over a (src, dst) link table (duplicates allowed =
     * parallel edges, matching nx.DiGraph after dedup — pass distinct
     * links for exact nx parity).
+    *
+    * The call runs in one [[LoopConf.withLoop]] scope sized by the link
+    * count: [[Route.stats]] of the held links, which a caller-cached
+    * input has after its first call and any other input gets from one
+    * aggregate that also fills the hold the link table is read from.
     */
   def run(spark: SparkSession, linksRaw: DataFrame, cfg: Config): Result = {
+    val held = Route.hold(linksRaw)
+    try run(spark, held.edges, Route.stats(held).count, cfg) finally held.release()
+  }
+
+  /** The relational supersteps over `linksRaw`, which has `linkRows`
+    * rows, in one loop scope sized by them.
+    */
+  private def run(spark: SparkSession, linksRaw: DataFrame, linkRows: Long,
+                  cfg: Config): Result =
+    LoopConf.withLoop(spark, LoopConf.smallRegime(spark, linkRows)) {
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     // Pre-shuffle the big immutable side once; every superstep's gather
@@ -136,22 +154,19 @@ object PageRank {
       .groupBy("id").agg(sum(col("o")).as("oc"))
       .select(col("id"), when(col("oc") > 0, col("oc").cast("double")).as("outdeg"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // n, dangling detection and the link count folded into one
-    // materializing job: every link row adds 1 to its src's outdeg, so
-    // the outdeg sum is the link count (an integer-valued double sum,
-    // exact below 2^53)
+    // n and dangling detection folded into one materializing job
     val initRow = vertsDeg.agg(count(lit(1)),
-      count(when(col("outdeg").isNull, lit(1))),
-      coalesce(sum(col("outdeg")), lit(0.0))).head()
+      count(when(col("outdeg").isNull, lit(1)))).head()
     val n = initRow.getLong(0)
     val anyDangling = initRow.getLong(1) > 0
-    val edgeCount = initRow.getDouble(2).toLong
 
-    // Resume from the latest committed snapshot if one exists.
+    // Start from the latest committed snapshot if one exists, else from
+    // the persisted vertex table itself: either is already held, so the
+    // first superstep reads it with no copy made
+    val start = vertsDeg.select(col("id"), lit(1.0 / n).as("rank"), col("outdeg"))
     val (startIter, startState) = cfg.checkpoint.flatMap(_.resume()) match {
       case Some((k, snap)) => (k + 1, snap)
-      case None => (0, vertsDeg.select(col("id"), lit(1.0 / n).as("rank"),
-        col("outdeg")))
+      case None => (0, start)
     }
 
     // Lineage discipline: the state DataFrame is referenced twice per
@@ -159,18 +174,13 @@ object PageRank {
     // logical plan DOUBLES every iteration — 2^k nodes by iteration k,
     // OOMing the driver long before the data does. Parquet checkpoints
     // truncate it; between them, eager localCheckpoint does.
-    var state = graft.core.Lineage.truncate(startState)
+    var state = startState
     var iter = startIter
     var err = Double.MaxValue
     var converged = false
     val t0 = System.nanoTime()
     var steps = 0
 
-    // Fixed-shape loop tuning: AQE off + data-sized shuffle width in
-    // the small regime (see graft.core.LoopConf — data-derived gate,
-    // nothing changes at scale, where AQE's skew-join splitting stays on)
-    val small = graft.core.LoopConf.smallRegime(spark, edgeCount)
-    graft.core.LoopConf.withLoop(spark, small) {
     while (!converged && iter < cfg.maxIter) {
       val dangleSum = if (!anyDangling) 0.0
         else state.where(col("outdeg").isNull)
@@ -202,7 +212,7 @@ object PageRank {
       if (cfg.tol > 0) {
         // Materialize new state + convergence delta in ONE job: the err
         // aggregate is the first action on the lazily-checkpointed frame.
-        val joinedOld = graft.core.Lineage.truncateLazy(stepped)
+        val joinedOld = Lineage.truncateLazy(stepped)
         err = joinedOld.agg(sum(abs(col("rank") - col("old")))).head().getDouble(0)
         newState = joinedOld.select(col("id"), col("rank"), col("outdeg"))
         converged = err < n * cfg.tol
@@ -216,16 +226,17 @@ object PageRank {
           newState, Map("err" -> err, "n" -> n.toDouble))
       } else if (cfg.tol <= 0) {
         // fixed-superstep mode: no convergence pass at all
-        newState = graft.core.Lineage.truncate(newState)
+        newState = Lineage.truncate(newState)
       }
       state = newState
-      graft.core.Lineage.release(prevState) // successor is materialized
+      Lineage.release(prevState) // successor is materialized
       iter += 1
       steps += 1
     }
-    }
     val secs = (System.nanoTime() - t0) / 1e9
-    val eps = if (steps > 0) edgeCount.toDouble * steps / secs else 0.0
+    val eps = if (steps > 0) linkRows.toDouble * steps / secs else 0.0
+    // no superstep ran from the start: copy it out of the caches released below
+    if (state eq start) state = Lineage.truncate(state)
     links.unpersist(false)
     vertsDeg.unpersist(false)
     Result(state.select(col("id"), col("rank")), iter, err, eps)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.Route
+import graft.core.{Lineage, LoopConf, Route}
 import graft.graph.Edges
 
 /** Triangle counting via the degree-oriented edge-iterator join
@@ -68,34 +68,37 @@ object TriangleCount {
   def globalCount(spark: SparkSession, edges: DataFrame,
                   localEdgeCap: Long = Route.TriangleEdgeCap): DataFrame = {
     import spark.implicits._
-    val held = Route.gate(edges, localEdgeCap) match {
+    val (held, rows) = Route.gate(edges, localEdgeCap) match {
       case l: Route.Local => return Seq(countLocal(l)).toDF("triangles")
-      case Route.Distributed(h, _) => h
+      case Route.Distributed(h, r) => (h, r)
     }
-    // checkpoint the oriented table (optimization round 6): the final
-    // aggregate's plan references the orient subtree three times
-    // (adjacency build + both attach joins), each copy re-executing both
-    // degree joins — checkpointing `o` pins them to one execution, which
-    // reads the held projection's cache; that cache is then released
-    val o = try graft.core.Lineage.truncate(orient(spark, held.edges)) finally held.release()
-    // adjacency arrays SORTED at build so the per-edge intersection is a
-    // zero-allocation two-pointer merge (SortedIntersectCount codegen
-    // expression) instead of array_intersect's per-row hash set. The
-    // groupBy leaves adj hash-partitioned on the vertex id, so BOTH
-    // attach joins below can consume that one exchange (Catalyst reuses
-    // it; under AQE a small adj broadcasts and drops the shuffles
-    // entirely).
-    val adj = o.groupBy(col("src").as("id"))
-      .agg(array_sort(collect_list(col("dst"))).as("nbrs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val joined = o.select(col("src"), col("dst"))
-      .join(adj.select(col("id").as("src"), col("nbrs").as("ns")), "src")
-      .join(adj.select(col("id").as("dst"), col("nbrs").as("nd")), "dst")
-    val n = joined
-      .select(graft.functions.SortedIntersectCount(col("ns"), col("nd")).as("t"))
-      .agg(coalesce(sum(col("t")), lit(0L))).head().getLong(0)
-    adj.unpersist(false)
-    graft.core.Lineage.release(o)
+    // one loop scope for the call (LoopConf; data-derived gate)
+    val n = LoopConf.withLoop(spark, LoopConf.smallRegime(spark, rows)) {
+      // checkpoint the oriented table (optimization round 6): the final
+      // aggregate's plan references the orient subtree three times
+      // (adjacency build + both attach joins), each copy re-executing both
+      // degree joins — checkpointing `o` pins them to one execution, which
+      // reads the held projection's cache; that cache is then released
+      val o = try Lineage.truncate(orient(spark, held.edges)) finally held.release()
+      // adjacency arrays SORTED at build so the per-edge intersection is a
+      // zero-allocation two-pointer merge (SortedIntersectCount codegen
+      // expression) instead of array_intersect's per-row hash set. The
+      // groupBy leaves adj hash-partitioned on the vertex id, so BOTH
+      // attach joins below can consume that one exchange (Catalyst reuses
+      // it; a small adj broadcasts and drops the shuffles entirely).
+      val adj = o.groupBy(col("src").as("id"))
+        .agg(array_sort(collect_list(col("dst"))).as("nbrs"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      val joined = o.select(col("src"), col("dst"))
+        .join(adj.select(col("id").as("src"), col("nbrs").as("ns")), "src")
+        .join(adj.select(col("id").as("dst"), col("nbrs").as("nd")), "dst")
+      val t = joined
+        .select(graft.functions.SortedIntersectCount(col("ns"), col("nd")).as("t"))
+        .agg(coalesce(sum(col("t")), lit(0L))).head().getLong(0)
+      adj.unpersist(false)
+      Lineage.release(o)
+      t
+    }
     Seq(n).toDF("triangles")
   }
 

@@ -34,6 +34,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * half-committed snapshot: resume picks the largest K with a valid
   * manifest.
   *
+  * The frames [[commit]] and [[load]] return carry the manifest's row
+  * count: a `count()` of one, under at most a projection of its columns,
+  * reads it with no job ([[Route.FrameCount]]).
+  *
   * Checkpointing every iteration also truncates the logical plan of
   * iterative join/agg loops (plan size otherwise grows linearly and
   * optimizer time super-linearly — the Spark-side analogue of the
@@ -54,7 +58,7 @@ final class CheckpointManager(spark: SparkSession, root: String) {
   }
 
   /** Write `df` as snapshot for `iter`, commit a manifest, and return the
-    * re-read DataFrame (fresh lineage).
+    * re-read DataFrame (fresh lineage), counted by its footers.
     */
   def commit(iter: Int, df: DataFrame, metrics: Map[String, Double]): DataFrame = {
     val dir = snapDir(iter)
@@ -66,6 +70,7 @@ final class CheckpointManager(spark: SparkSession, root: String) {
     val files = paths.map(p => (p.getFileName.toString, Files.size(p)))
     val rows = paths.map(footerRows).sum
     val reread = spark.read.schema(schema).parquet(dir)
+    Route.counted(reread, rows)
     val parent = if (iter > 0) (iter - 1).toString else "null"
     val filesJson = files.map { case (f, sz) =>
       s"""{"file":"${esc(f)}","bytes":$sz}"""
@@ -106,15 +111,18 @@ final class CheckpointManager(spark: SparkSession, root: String) {
   }
 
   /** Load the snapshot for a committed iteration, with the schema its
-    * manifest records (by inference when the manifest has none).
+    * manifest records (by inference when the manifest has none), counted
+    * by the manifest's rows.
     */
   def load(iter: Int): DataFrame = {
-    val recorded =
+    val manifest =
       if (!Files.exists(manifestPath(iter))) None
-      else Option(new ObjectMapper().readTree(manifestJson(iter)).get("schema"))
-    val reader = recorded.fold(spark.read)(s =>
+      else Some(new ObjectMapper().readTree(manifestJson(iter)))
+    val reader = manifest.flatMap(m => Option(m.get("schema"))).fold(spark.read)(s =>
       spark.read.schema(DataType.fromJson(s.toString).asInstanceOf[StructType]))
-    reader.parquet(snapDir(iter))
+    val snap = reader.parquet(snapDir(iter))
+    manifest.flatMap(m => Option(m.get("rows"))).foreach(r => Route.counted(snap, r.asLong))
+    snap
   }
 
   /** Resume point: (iteration, snapshot) for the latest commit. */

@@ -17,9 +17,30 @@ import org.apache.spark.sql.graftbridge.Bridge
   * Parquet checkpoints (CheckpointManager) also fix both and add
   * durability; use them at the cadence resumability needs, truncate()
   * in between.
+  *
+  * An eager truncate runs one job, Spark's own checkpoint job run by the
+  * engine, which returns the rows it stored: a `count()` of the frame,
+  * under at most a projection of its columns, reads them with no job
+  * ([[Route.FrameCount]]).
   */
 object Lineage {
-  def truncate(df: DataFrame): DataFrame = Bridge.localCheckpointFresh(df)
+  def truncate(df: DataFrame): DataFrame = counted(df, hashed = false)._1
+
+  /** truncate() whose one job also returns the frame's fingerprint: its
+    * row count and the XOR of its rows' `xxhash64` over every column —
+    * order-independent, so two frames of equal row sets match, with the
+    * collision odds of one 64-bit hash per row.
+    */
+  def fingerprinted(df: DataFrame): (DataFrame, (Long, Long)) = {
+    val (t, rows, xor) = counted(df, hashed = true)
+    (t, (rows, xor))
+  }
+
+  private def counted(df: DataFrame, hashed: Boolean): (DataFrame, Long, Long) = {
+    val got @ (t, rows, _) = Bridge.localCheckpointCounted(df, hashed)
+    Route.counted(t, rows)
+    got
+  }
 
   /** truncate() for frames that were EXPLICITLY pre-partitioned
     * (repartition(p, key)) so that downstream joins/aggregations can
@@ -35,7 +56,7 @@ object Lineage {
     val spark = df.sparkSession
     val was = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try Bridge.localCheckpointFresh(df)
+    try truncate(df)
     finally spark.conf.set("spark.sql.adaptive.enabled", was)
   }
 
@@ -43,8 +64,7 @@ object Lineage {
     * caller's first action — use when that action is an aggregate you
     * need anyway (e.g. a convergence delta), folding two jobs into one.
     */
-  def truncateLazy(df: DataFrame): DataFrame =
-    Bridge.localCheckpointFresh(df, eager = false)
+  def truncateLazy(df: DataFrame): DataFrame = Bridge.localCheckpointFresh(df)
 
   /** The rows of several truncated frames of one schema, in order, as
     * one frame. A Dataset union plans one codegen stage per input and
@@ -58,7 +78,9 @@ object Lineage {
   /** Free the cached blocks behind a truncated frame once a successor
     * state is materialized — long loops otherwise accumulate one cached
     * RDD per superstep. Any routing state [[Route]] shares for the frame
-    * goes with them.
+    * goes with them. Only a frame that is a truncate, under at most a
+    * projection of its columns, is released: a frame read from one (a
+    * join over it, a state derived from it) leaves its blocks alone.
     */
   def release(df: DataFrame): Unit = {
     Route.forget(df)

@@ -18,6 +18,14 @@ import org.apache.spark.sql.SparkSession
   * carried since round 4. Above the gate nothing changes: full session
   * width, AQE on (its runtime skew-join splitting is load-bearing for
   * hub-heavy production graphs).
+  *
+  * A distributed call opens ONE scope for all of its work, from its
+  * first plan until its output is materialized: PageRank's relational
+  * and checkpointed paths, CC's star loop, LPA's and the triangle
+  * count's distributed paths each size it from the row count their gate
+  * already holds. Outside a scope AQE plans every exchange as a job of
+  * its own, so set-up and assembly plans that ran outside the loop's
+  * scope cost several jobs each.
   */
 object LoopConf {
 
@@ -46,11 +54,13 @@ object LoopConf {
   }
 
   /** Run `body` with AQE off + shuffle width `small.get` when in the
-    * small regime, restoring the session afterwards. Session-global for
-    * the duration (every loop that tunes the session sets it here):
-    * graft entry points are single-driver-thread; host apps running
-    * concurrent queries should hand loops a dedicated
-    * `spark.newSession()`.
+    * small regime, restoring the session afterwards, also when `body`
+    * throws. Session-global for the duration, which is a whole call for
+    * the operators that scope their call (every loop that tunes the
+    * session sets it here): graft entry points are single-driver-thread,
+    * and no other query should run on the session while a call is in its
+    * scope; host apps running concurrent queries should hand the engine
+    * a dedicated `spark.newSession()`.
     */
   def withLoop[T](spark: SparkSession, small: Option[Int])(body: => T): T =
     small match {

@@ -4,6 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import java.lang.Double.{doubleToRawLongBits, longBitsToDouble}
 import java.lang.ref.WeakReference
 
+import com.google.common.collect.MapMaker
 import org.apache.spark.SparkEnv
 import org.apache.spark.io.LZ4CompressionCodec
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -14,6 +15,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, count, greatest, least, lit, max, min}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
@@ -55,8 +57,9 @@ import org.apache.spark.storage.StorageLevel
   * reads, the layout's start positions and Spearman's pairs come back as
   * the same primitive arrays, and a [[frame]] result hands back its own
   * with no job. [[FrameCount]], an optimizer rule the engine's sessions
-  * carry, answers a `count()` of a [[frame]] result from its length,
-  * with no job either.
+  * carry, answers a `count()` of a [[frame]] result from its length, and
+  * of an eager truncate or a checkpoint snapshot from the rows counted
+  * when it was written, with no job either.
   */
 object Route {
 
@@ -343,39 +346,68 @@ object Route {
       Iterator.range((n.toLong * c / slices).toInt, (n.toLong * (c + 1) / slices).toInt)
         .map(row(bc.value, _))
     }
-    frames.synchronized(frames.put(rdd, all.toSeq))
+    known(rdd, Leaf(n, all.toSeq))
     Bridge.rddFrame(spark, StructType(fields.map(_._1)), rdd, n)
   }
 
-  // a frame's columns, id first; weak keys: an entry goes when its
-  // frame's RDD is collected
-  private val frames = new java.util.WeakHashMap[AnyRef, Seq[Column]]()
-
-  /** The rows of a plan that is exactly a [[frame]] result, under at most
-    * a projection of its columns: its arrays' length.
+  /** What the engine knows of a leaf it built or materialized: its rows,
+    * and a [[frame]] result's columns, id first (none for any other).
     */
-  private def frameRows(plan: LogicalPlan): Option[Long] = plan match {
-    case Project(list, child) if list.forall(_.isInstanceOf[Attribute]) => frameRows(child)
-    case l: LogicalRDD =>
-      frames.synchronized(Option(frames.get(l.rdd))).collect { case Longs(_, ids) +: _ => ids.length.toLong }
+  private final case class Leaf(rows: Long, columns: Seq[Column])
+
+  // keyed by a LogicalRDD's RDD or a file scan's file index, by
+  // identity (a file index equals any other over the same paths, whose
+  // files may differ); weak keys: an entry goes when its frame's plan
+  // is collected
+  private val leaves = new MapMaker().weakKeys().makeMap[AnyRef, Leaf]()
+
+  private def known(key: AnyRef, leaf: Leaf): Unit = leaves.put(key, leaf)
+
+  /** The key of a leaf plan in [[leaves]]. */
+  private def keyOf(plan: LogicalPlan): Option[AnyRef] = plan match {
+    case l: LogicalRDD => Some(l.rdd)
+    case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => Some(h.location)
     case _ => None
   }
 
-  /** The optimizer rule that answers a `count()` of a [[frame]] result
-    * with no job: the global `count(1)` aggregate a `count()` plans at
-    * the root, over the frame (pruned to no column, as the optimizer
-    * prunes it), becomes a one-row local relation of the arrays' length,
-    * so the driver never schedules the broadcast-and-expand it would
-    * read the rows through. Any other plan, a filter, limit, join or
-    * distinct over the frame included, is left as it is, and only the
-    * root is looked at. `GraftSession` adds it to the sessions it builds
-    * and tunes.
+  private def leafOf(plan: LogicalPlan): Option[Leaf] =
+    keyOf(plan).flatMap(k => Option(leaves.get(k)))
+
+  /** Records that `df`, a frame whose plan is one materialized leaf (an
+    * eager [[Lineage.truncate]], a [[CheckpointManager]] snapshot read
+    * at the files its manifest counts), holds `rows` rows, so
+    * [[FrameCount]] answers a `count()` of it with no job. The rows must
+    * be what any read of the leaf returns.
+    */
+  private[core] def counted(df: DataFrame, rows: Long): Unit =
+    keyOf(df.queryExecution.analyzed).foreach(known(_, Leaf(rows, Nil)))
+
+  /** The rows of a plan that is exactly a leaf the engine counted (a
+    * [[frame]] result, an eager truncate, a checkpoint snapshot read),
+    * under at most a projection of its columns.
+    */
+  private def knownRows(plan: LogicalPlan): Option[Long] = plan match {
+    case Project(list, child) if list.forall(_.isInstanceOf[Attribute]) => knownRows(child)
+    case leaf => leafOf(leaf).map(_.rows)
+  }
+
+  /** The optimizer rule that answers a `count()` of a frame whose rows
+    * the engine already counted with no job: a [[frame]] result (its
+    * arrays' length), an eager [[Lineage.truncate]] (the rows its job
+    * stored) or a [[CheckpointManager]] commit's reread or load (the
+    * manifest's footer count). The global `count(1)` aggregate a
+    * `count()` plans at the root, over that leaf (pruned to no column,
+    * as the optimizer prunes it), becomes a one-row local relation of
+    * the count, so the driver never schedules the read. Any other plan,
+    * a filter, limit, join or distinct over the leaf, or a lazy truncate
+    * included, is left as it is, and only the root is looked at.
+    * `GraftSession` adds it to the sessions it builds and tunes.
     */
   object FrameCount extends Rule[LogicalPlan] {
     def apply(plan: LogicalPlan): LogicalPlan = plan match {
       case a @ Aggregate(Nil, Seq(Alias(AggregateExpression(Count(Seq(one: Literal)), Complete, false,
           None, _), _)), child, _) if one.value != null =>
-        frameRows(child).fold(plan)(n => LocalRelation(a.output, Seq(InternalRow(n))))
+        knownRows(child).fold(plan)(n => LocalRelation(a.output, Seq(InternalRow(n))))
       case _ => plan
     }
   }
@@ -396,9 +428,8 @@ object Route {
   private[graft] def collect(df: DataFrame, bound: Option[Int] = None,
                              d: Int = 0): Option[Seq[Column]] = {
     val limit = bound.fold(Long.MaxValue)(_ + 1L)
-    df.queryExecution.optimizedPlan match {
-      case l: LogicalRDD if frames.synchronized(frames.containsKey(l.rdd)) =>
-        val cols @ Longs(_, ids) +: _ = frames.synchronized(frames.get(l.rdd))
+    leafOf(df.queryExecution.optimizedPlan).map(_.columns) match {
+      case Some(cols @ Longs(_, ids) +: _) =>
         for (Vectors(_, _, k) <- cols)
           require(k == d || ids.isEmpty, s"vertex ${ids(0)} has a $k-d position, want d = $d")
         return Some(cols).filter(_ => ids.length < limit)

@@ -13,22 +13,6 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Eager localCheckpoint that does NOT inherit the origin plan's
-    * statistics.
-    *
-    * Dataset.localCheckpoint copies the source plan's sizeInBytes
-    * estimate into the resulting LogicalRDD (originStats). In an
-    * iterative join loop the join size estimate is the PRODUCT of its
-    * children's estimates, so the carried-over BigInt SQUARES every
-    * iteration — its digit count doubles, and Catalyst's stats visitor
-    * ends up multiplying million-digit BigInts on the driver (observed:
-    * iteration wall-time x3-4 per superstep from iteration ~18).
-    * Rebuilding the LogicalRDD with originStats = None resets the
-    * estimate to the default leaf size each iteration.
-    */
-  def localCheckpointFresh(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    localCheckpointFresh(df, eager = true)
-
   /** RDD.unpersist on ANY locally-checkpointed RDD logs a scary
     * "cannot be recomputed after unpersisting" WARN — even here, where
     * every release happens after the successor state is materialized
@@ -61,14 +45,31 @@ object Bridge {
 
   /** Unpersist the RDD behind a localCheckpointFresh frame — call once
     * the frame is provably dead (a successor checkpoint materialized).
+    * Only a frame that is a checkpoint, under at most a projection of its
+    * columns, is released: one merely read from a checkpoint (a join over
+    * it, a state derived from it) leaves that checkpoint's blocks alone.
     */
-  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit = {
-    muteLocalCheckpointWarn
-    import org.apache.spark.sql.classic
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    checkpointOf(df).foreach { rdd =>
+      muteLocalCheckpointWarn
+      rdd.unpersist(false)
+    }
+
+  /** The RDD of the local checkpoint `df` is, under at most a projection
+    * of its columns: marked by localCheckpointFresh, materialized or not.
+    */
+  private def checkpointOf(df: org.apache.spark.sql.DataFrame): Option[org.apache.spark.rdd.RDD[_]] = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
     import org.apache.spark.sql.execution.LogicalRDD
-    df.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
-      .queryExecution.analyzed.collectFirst { case l: LogicalRDD => l }
-      .foreach(_.rdd.unpersist(false))
+    def leaf(plan: LogicalPlan): Option[org.apache.spark.rdd.RDD[_]] = plan match {
+      case Project(list, child) if list.forall(_.isInstanceOf[Attribute]) => leaf(child)
+      case l: LogicalRDD
+          if l.rdd.checkpointData.exists(_.isInstanceOf[org.apache.spark.rdd.LocalRDDCheckpointData[_]]) =>
+        Some(l.rdd)
+      case _ => None
+    }
+    leaf(df.queryExecution.analyzed)
   }
 
   /** The rows of `frames` — localCheckpointFresh frames of one schema —
@@ -174,16 +175,28 @@ object Bridge {
     }
   }
 
-  /** eager=false marks the RDD for checkpointing but defers
-    * materialization to the caller's FIRST action on the returned frame
-    * — letting an iterative loop fold "materialize new state" and
-    * "compute convergence delta" into one job.
+  /** localCheckpoint that does NOT inherit the origin plan's
+    * statistics.
+    *
+    * Dataset.localCheckpoint copies the source plan's sizeInBytes
+    * estimate into the resulting LogicalRDD (originStats). In an
+    * iterative join loop the join size estimate is the PRODUCT of its
+    * children's estimates, so the carried-over BigInt SQUARES every
+    * iteration — its digit count doubles, and Catalyst's stats visitor
+    * ends up multiplying million-digit BigInts on the driver (observed:
+    * iteration wall-time x3-4 per superstep from iteration ~18).
+    * Rebuilding the LogicalRDD with originStats = None resets the
+    * estimate to the default leaf size each iteration.
+    *
+    * The RDD is marked for checkpointing and materialized by the
+    * caller's FIRST action on the returned frame — letting an iterative
+    * loop fold "materialize new state" and "compute convergence delta"
+    * into one job. [[localCheckpointCounted]] materializes it at once.
     */
-  def localCheckpointFresh(df: org.apache.spark.sql.DataFrame,
-                           eager: Boolean): org.apache.spark.sql.DataFrame = {
+  def localCheckpointFresh(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.classic
     import org.apache.spark.sql.execution.LogicalRDD
-    val cp = df.localCheckpoint(eager).asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
+    val cp = df.localCheckpoint(false).asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
     val spark = cp.sparkSession
     val lr = cp.queryExecution.analyzed.collectFirst {
       case l: LogicalRDD => l
@@ -192,5 +205,36 @@ object Bridge {
     val fresh = LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
       lr.outputOrdering, lr.isStreaming, None)(spark, None, None)
     classic.Dataset.ofRows(spark, fresh)
+  }
+
+  /** [[localCheckpointFresh]] materialized now, by one job that returns
+    * what it saw: the rows it stored, and with `hashed` the XOR of every
+    * row's `xxhash64` over all its columns (Spark's function, seed 42),
+    * an order-independent fingerprint of the rows; 0 without. The job is
+    * the one Dataset.localCheckpoint runs to store every partition, which
+    * counts each partition's rows and drops the counts: here it is run
+    * on the marked RDD directly, and the end of the job checkpoints the
+    * RDD, finding every block stored.
+    */
+  def localCheckpointCounted(df: org.apache.spark.sql.DataFrame,
+                             hashed: Boolean): (org.apache.spark.sql.DataFrame, Long, Long) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, XxHash64}
+    import org.apache.spark.sql.execution.LogicalRDD
+    val cp = localCheckpointFresh(df)
+    val lr = cp.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val hash: Option[Expression] =
+      if (hashed) Some(BindReferences.bindReference[Expression](XxHash64(lr.output, 42L), lr.output))
+      else None
+    val parts = cp.sparkSession.sparkContext.runJob(lr.rdd, (rows: Iterator[InternalRow]) => {
+      var n = 0L
+      var x = 0L
+      hash match {
+        case Some(h) => rows.foreach { r => n += 1; x ^= h.eval(r).asInstanceOf[Long] }
+        case None => rows.foreach { _ => n += 1 }
+      }
+      (n, x)
+    })
+    (cp, parts.map(_._1).sum, parts.foldLeft(0L)(_ ^ _._2))
   }
 }

@@ -14,12 +14,18 @@ its own engine (in its own `.bench_build`) on its first run.
 
 It prints one line per pair, then for `pass_s` and `setup_s` each side's
 median and interquartile range, the pairs in which the working tree is
-lower, and whether the median moved by more than the parent's IQR. Runs
-that fail are named and left out of the figures. It changes nothing in
-either checkout's sources.
+lower, and whether the median moved by more than the parent's IQR. A
+second line gives the median of the per-pair differences (tree minus
+parent) and a one-sided sign-test p for "the tree is lower": the chance
+of at least that many lower pairs if either side were as likely to be
+lower, tied pairs left out. On a host whose speed drifts between runs,
+pairs can agree on the sign of a gain smaller than one side's IQR.
+Runs that fail are named and left out of the figures. It changes
+nothing in either checkout's sources.
 """
 import argparse
 import json
+import math
 import statistics
 import subprocess
 import sys
@@ -56,6 +62,13 @@ def quartiles(xs):
         return (xs[0], xs[0]) if xs else (float("nan"), float("nan"))
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], q[2]
+
+
+def sign_test(diffs):
+    """One-sided sign-test p that negative differences are as likely as positive ones."""
+    lower = sum(d < 0 for d in diffs)
+    n = sum(d != 0 for d in diffs)
+    return sum(math.comb(n, i) for i in range(lower, n + 1)) / 2 ** n
 
 
 def main():
@@ -96,6 +109,9 @@ def main():
               f"(IQR {a3 - a1:.3f}); tree lower in {wins} of {len(pairs)}; "
               f"median moved {ma - mb:+.3f}, {'more' if abs(ma - mb) > b3 - b1 else 'not more'} "
               f"than the parent's IQR")
+        diffs = [a - b for a, b in zip(after, before)]
+        print(f"    per-pair tree - parent: median {statistics.median(diffs):+.3f}; "
+              f"sign test p = {sign_test(diffs):.4f} (one-sided, tree lower)")
 
 
 if __name__ == "__main__":
