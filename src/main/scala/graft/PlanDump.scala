@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.GraftSession
 
 /** Dump `.explain("formatted")` of every declared query to
@@ -18,19 +16,8 @@ object PlanDump {
     val suffix = if (args.length > 1) args(1) else "before"
     val only = args.drop(2).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark"))
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "4096")
-      .config(GraftSession.CodegenCacheConf, GraftSession.CodegenCacheEntries.toString)
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = Paths.get(s"plans/$tag")
     Files.createDirectories(dir)

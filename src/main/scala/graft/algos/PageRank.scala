@@ -130,11 +130,12 @@ object PageRank {
   }
 
   /** The relational supersteps over `linksRaw`, which has `linkRows`
-    * rows, in one loop scope sized by them.
+    * rows, in one loop scope sized by them; none when the latest
+    * checkpoint was committed at convergence ([[convergedResume]]).
     */
   private def run(spark: SparkSession, linksRaw: DataFrame, linkRows: Long,
                   cfg: Config): Result =
-    LoopConf.withLoop(spark, LoopConf.smallRegime(spark, linkRows)) {
+    convergedResume(cfg).getOrElse(LoopConf.withLoop(spark, LoopConf.smallRegime(spark, linkRows)) {
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
 
     // Pre-shuffle the big immutable side once; every superstep's gather
@@ -240,7 +241,19 @@ object PageRank {
     links.unpersist(false)
     vertsDeg.unpersist(false)
     Result(state.select(col("id"), col("rank")), iter, err, eps)
-  }
+  })
+
+  /** The result of a run whose latest snapshot was committed at
+    * convergence: its manifest's `err` is below `n * tol`, so resuming
+    * from it runs no superstep. Reads the manifest on the driver and
+    * builds no frame but the snapshot's; None with `tol <= 0`.
+    */
+  private def convergedResume(cfg: Config): Option[Result] = for {
+    cm <- cfg.checkpoint if cfg.tol > 0
+    k <- cm.latestIteration()
+    m = cm.metrics(k)
+    err <- m.get("err") if err < m.getOrElse("n", 0.0) * cfg.tol
+  } yield Result(cm.load(k).select(col("id"), col("rank")), k + 1, err, 0.0)
 
   /** Fixed-iteration undirected PageRank with no dangling handling —
     * the DuckDB-oracle-checkable query variant (every vertex in a

@@ -27,7 +27,13 @@ object TriangleCount {
     * closes no triangle (nx ignores it), so its rows are dropped.
     */
   def orient(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val deg = Edges.degrees(edges)
+    // one degree table for both endpoints: when it fits a broadcast, both
+    // joins broadcast it and the second reuses the first's exchange (left
+    // to the planner, the first join broadcasts the smaller edge side, a
+    // second broadcast job); above the threshold both joins shuffle
+    val degrees = Edges.degrees(edges)
+    val deg = if (degrees.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        spark.sessionState.conf.autoBroadcastJoinThreshold) broadcast(degrees) else degrees
     val withDeg = edges.where(col("src") =!= col("dst"))
       .join(deg.select(col("id").as("src"), col("degree").as("d1")), "src")
       .join(deg.select(col("id").as("dst"), col("degree").as("d2")), "dst")

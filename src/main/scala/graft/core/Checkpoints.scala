@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -115,9 +115,7 @@ final class CheckpointManager(spark: SparkSession, root: String) {
     * by the manifest's rows.
     */
   def load(iter: Int): DataFrame = {
-    val manifest =
-      if (!Files.exists(manifestPath(iter))) None
-      else Some(new ObjectMapper().readTree(manifestJson(iter)))
+    val manifest = this.manifest(iter)
     val reader = manifest.flatMap(m => Option(m.get("schema"))).fold(spark.read)(s =>
       spark.read.schema(DataType.fromJson(s.toString).asInstanceOf[StructType]))
     val snap = reader.parquet(snapDir(iter))
@@ -128,6 +126,17 @@ final class CheckpointManager(spark: SparkSession, root: String) {
   /** Resume point: (iteration, snapshot) for the latest commit. */
   def resume(): Option[(Int, DataFrame)] =
     latestIteration().map(k => (k, load(k)))
+
+  /** The metrics committed with the snapshot for `iter`, empty when it
+    * has no manifest.
+    */
+  def metrics(iter: Int): Map[String, Double] =
+    manifest(iter).flatMap(m => Option(m.get("metrics"))).fold(Map.empty[String, Double])(
+      _.properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap)
+
+  private def manifest(iter: Int): Option[JsonNode] =
+    if (!Files.exists(manifestPath(iter))) None
+    else Some(new ObjectMapper().readTree(manifestJson(iter)))
 
   def manifestJson(iter: Int): String =
     new String(Files.readAllBytes(manifestPath(iter)), StandardCharsets.UTF_8)

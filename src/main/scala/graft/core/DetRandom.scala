@@ -27,16 +27,6 @@ object DetRandom {
   def uniformLong(seed: Long, n: Long, cols: Column*): Column =
     pmod(xxhash64((lit(seed) +: cols): _*), lit(n))
 
-  /** Deterministic Bernoulli(p). */
-  def bernoulli(p: Double, seed: Long, cols: Column*): Column =
-    uniform(seed, cols: _*) < lit(p)
-
-  /** A stable 64-bit hash of arbitrary columns (for sampling order,
-    * salting, fingerprints).
-    */
-  def hash64(seed: Long, cols: Column*): Column =
-    xxhash64((lit(seed) +: cols): _*)
-
   /** Driver-local replica of Spark's `xxhash64(cols...)` over bigint
     * columns: it chains XXH64.hashLong through the fields in order,
     * starting from seed 42, so this returns the column's bits exactly.

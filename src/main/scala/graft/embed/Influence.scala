@@ -92,23 +92,6 @@ object Influence {
     total
   }
 
-  /** Greedy influence maximization baseline (influence.py:85-126) —
-    * test scale only: k passes over a candidate pool, each scoring
-    * marginal gain with `trials` IC runs.
-    */
-  def greedySeeds(spark: SparkSession, edges: DataFrame, k: Int, p: Double,
-                  candidates: Seq[Long], trials: Int = 3): Seq[Long] = {
-    val chosen = scala.collection.mutable.ArrayBuffer[Long]()
-    for (_ <- 0 until k) {
-      val best = candidates.filterNot(chosen.contains).maxBy { c =>
-        (0 until trials).map(t =>
-          icInfluence(spark, edges, (chosen :+ c).toSeq, p, trial = t)).sum
-      }
-      chosen += best
-    }
-    chosen.toSeq
-  }
-
   /** Collected adjacency of a small canonical edge table, read from its
     * [[Route.Local]] index — the driver-local graph the harness-scale IC
     * evaluators run on (the reference's influence bench is likewise a

@@ -39,15 +39,6 @@ object Datasets {
 
   def meta(name: String): Option[Meta] = registry.find(_.name == name)
 
-  /** Registry as a DataFrame (for ResultsSink / reporting parity with
-    * the reference's dataset-info table).
-    */
-  def registryDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    registry.map(m => (m.name, m.vertices, m.edges, m.directed, m.format))
-      .toDF("name", "vertices", "edges", "directed", "format")
-  }
-
   /** Path of the bundled offline copy, if present. */
   def localPath(name: String,
                 dataDir: String = "/root/reference/data"): Option[String] =

@@ -29,16 +29,4 @@ object LinkExtract {
       regexp_extract(col("html").cast("string"), "<p>(.*?)</p>", 1)
         .as("extracted_text"),
       col("text"))
-
-  /** Normalize a URL column: lower-case scheme+host, strip fragment,
-    * strip trailing slash. Pure string functions.
-    */
-  def normalizeUrl(urlCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val noFrag = regexp_replace(urlCol, "#.*$", "")
-    val noSlash = regexp_replace(noFrag, "/$", "")
-    // lower-case the scheme://host prefix, keep path case
-    concat(
-      lower(regexp_extract(noSlash, "^([a-zA-Z]+://[^/]+)", 1)),
-      regexp_extract(noSlash, "^[a-zA-Z]+://[^/]+(.*)$", 1))
-  }
 }

@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: media (image/audio/video) as opaque
   * binary columns with typed metadata, plus the Spark-side shape of
@@ -16,14 +15,6 @@ import org.apache.spark.sql.types._
   * changes.
   */
 object Multimodal {
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("kind", StringType),      // image | audio | video
-    StructField("content", BinaryType),   // opaque payload
-    StructField("width", IntegerType),    // -1 when unknown/not applicable
-    StructField("height", IntegerType),
-    StructField("duration_ms", LongType)))
 
   /** Deterministic synthetic media table: payload bytes derived from the
     * id, metadata consistent with `kind`. Stands in for a crawl's media

@@ -7,7 +7,7 @@ package graft.viz
   * Deliberately tiny: fixed-precision coordinates (2 decimals) so output
   * is byte-deterministic across JVMs, and only the primitives the plot
   * layer needs. Colors follow a validated colorblind-safe palette
-  * (series blue/orange/aqua pass all-pairs CVD checks; text wears text
+  * (series blue/orange pass all-pairs CVD checks; text wears text
   * tokens, never series colors).
   */
 object Svg {
@@ -19,7 +19,6 @@ object Svg {
   val Grid = "#e7e6e2"
   val Series1 = "#2a78d6" // blue
   val Series2 = "#eb6834" // orange
-  val Series3 = "#1baf7a" // aqua
 
   def f(v: Double): String = {
     val r = math.rint(v * 100) / 100

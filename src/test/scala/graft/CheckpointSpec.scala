@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import graft.algos.PageRank
-import graft.core.CheckpointManager
+import graft.core.{CheckpointManager, Route}
 import graft.generators.Generators
 
 /** Resumability contract (north_rule): kill at iteration k, resume,
@@ -42,6 +42,27 @@ class CheckpointSpec extends SparkSuite {
     expect.foreach { case (id, v) =>
       assert(math.abs(got(id) - v) < 1e-12, s"vertex $id: ${got(id)} vs $v")
     }
+  }
+
+  test("a converged PageRank run resumes as a no-op") {
+    val e = Generators.er(spark, 200, 0.04, 5L)
+    def ranks(r: PageRank.Result) = r.ranks.collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+    val dir = Files.createTempDirectory("graft-ckpt-done").toString
+    val full = PageRank.runUndirected(spark, e,
+      PageRank.Config(maxIter = 100, checkpoint = Some(new CheckpointManager(spark, dir))))
+    val want = ranks(full)
+    assert(full.iterations < 100, "the first run converged")
+    val cm = new CheckpointManager(spark, dir)
+    assert(cm.latestIteration().contains(full.iterations - 1))
+    var resumed: PageRank.Result = null
+    val jobs = jobsRun { resumed = PageRank.runUndirected(spark, e,
+      PageRank.Config(maxIter = 100, checkpoint = Some(cm))) }
+    // the input gate's row count is all it runs: no vertex table, no superstep
+    assert(jobs == jobsRun { val h = Route.hold(e); Route.stats(h); h.release() })
+    assert(resumed.iterations == full.iterations)
+    assert(resumed.err == full.err)
+    assert(cm.latestIteration().contains(full.iterations - 1), "no superstep was committed")
+    assert(ranks(resumed) == want)
   }
 
   test("manifest records lineage, partitions, metrics") {

@@ -94,10 +94,10 @@ class DistributedJobsSpec extends SparkSuite {
       // PageRank and its resume: the vertex table, the broadcast of the
       // start state (the persisted table or the loaded snapshot) and the
       // commit; CC: 4 rounds and the assignment; LPA: the adjacency and
-      // 2 supersteps; triangles: the degree broadcasts, the oriented
-      // table and the count. No count() of an output runs a job.
+      // 2 supersteps; triangles: the degree broadcast, the oriented table
+      // and the count. No count() of an output runs a job.
       assert(calls == mutable.LinkedHashMap("pagerank" -> 3, "resume" -> 3, "cc" -> 5, "lpa" -> 3,
-        "triangles" -> 4), calls)
+        "triangles" -> 3), calls)
       assert(pairs(cc, "component") == pairs(ConnectedComponents.run(spark, e), "component"))
       assert(pairs(lpa, "label") == pairs(LabelPropagation.run(spark, e, 2), "label"))
       assert(triangles == TriangleCount.globalCount(spark, e).head().getLong(0))
